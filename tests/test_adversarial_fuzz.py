@@ -39,6 +39,23 @@ _HOSTILE_TEXT = [
     "a | b | c | d | e",               # pipe menu -> dropped
 ]
 
+# ASCII-whitespace runs the kernel's collapse must rewrite, and the lone
+# spaces it may leave alone; each case alone (mostly dropped as empty or
+# short) and inside a sentence long enough to be kept
+_WS_CASES = [
+    "\t", "\t\t\t", "\x0b", " \t ", "  ", " ", "\r\n", "\x0c ",
+    "  \n leading and trailing runs around this text \t\n",
+    "before [[img_x_0]] after: the anchor leaves a double space.",
+    "[[img_x_0]] anchor first then words after it.",
+    "words then the anchor last [[img_x_0]]",
+]
+_WS_DOC = ("ws_cases", [
+    (kind, text, None, i)
+    for i, (kind, text) in enumerate(
+        [("text", c) for c in _WS_CASES]
+        + [("text", f"one{c}two three four five.") for c in _WS_CASES]
+        + [("heading", f"Title{c}here") for c in _WS_CASES])])
+
 _KINDS = ["text", "heading", "image", "table", "boilerplate", "link",
           "blob", None]
 _REFS = [None, "", "img_x_0", "tbl_y_1", "img_nope_9", "weird ref"]
@@ -59,7 +76,7 @@ def _gen_doc(rng: random.Random, n: int):
 def test_adversarial_corpus_matches_oracle(spark, seed):
     rng = random.Random(seed)
     docs = [(f"adv_{i}", _gen_doc(rng, rng.randint(1, 25)))
-            for i in range(60)]
+            for i in range(60)] + [_WS_DOC]
     golden = {d: [tuple(s) for s in extract_doc(sp)] for d, sp in docs}
     df = spark.createDataFrame(docs, DOCUMENTS_SCHEMA)
     for strat in ("fused", "fused_raw", "declarative"):

@@ -340,3 +340,30 @@ def test_extraction_diff_single_join_no_explode(spark):
     joins = [op for op in re.findall(r"\n\(\d+\) (\w+)", p)
              if "Join" in op]
     assert len(joins) == 1, joins       # exactly the full-outer id join
+
+
+def test_manifest_commit_one_scan_no_join(spark, tmp_path):
+    """commit_phase builds its manifest rows from ONE projection of the
+    run's output: the executed manifest write has no join node and scans
+    the output parquet exactly once."""
+    from vlm_ocr_doc_reader_spark.state.manifest import (commit_phase,
+                                                         manifest_path)
+    out_dir = str(tmp_path / "out")
+    state_dir = str(tmp_path / "state")
+    spark.createDataFrame(
+        [(f"d{i}", [("text", f"Sentence number {i} here.", None, 0)])
+         for i in range(20)],
+        "doc_id string, spans array<struct<kind:string,text:string,"
+        "media_ref:string,order:int>>").write.parquet(out_dir)
+    commit_phase(spark.read.parquet(out_dir), spark, state_dir, "extract")
+
+    target = manifest_path(state_dir)
+    execs = spark._jsparkSession.sharedState().statusStore() \
+        .executionsList()
+    plans = [p for p in (str(execs.apply(i).physicalPlanDescription())
+                         for i in range(execs.size()))
+             if "InsertIntoHadoopFsRelationCommand" in p and target in p]
+    assert len(plans) == 1
+    tree = plans[0].split("\n\n")[0]   # the operator tree, not the details
+    assert "Join" not in tree
+    assert tree.count("Scan parquet") == 1

@@ -228,3 +228,61 @@ def test_compaction_crash_window_recovers(spark, corpus_path, tmp_path):
     kept = compact_manifest(spark, state_dir)
     assert kept == docs.count()
     assert pending_docs(docs, spark, state_dir, "extract").count() == 0
+
+
+_OUT_SCHEMA = ("doc_id string, spans array<struct<kind:string,text:string,"
+               "media_ref:string,order:int>>")
+# (doc_id, content_hash, n_spans) of the rows below, as manifests already
+# on disk hold them: the hash expression must not change, or resume would
+# see every committed doc as new work
+_GOLDEN = [
+    ("a", "014a7e20037c2c71ee5821ce94178077af68fdfe04afc49d044580134a5f1834",
+     1),
+    ("a", "f9f04d6338907b4567aeffb69216d27405ba63652d17aad81eb8e1cbc6cf3f00",
+     2),
+    ("b", "d012e4a72d644e085a0e26fa2940a91cdaaa281a5e8bd3bc44c22c07ad5fe1af",
+     0),
+]
+
+
+def _processed_with_duplicate(spark):
+    return spark.createDataFrame([
+        ("a", [("text", "First kept sentence here.", None, 0)]),
+        ("a", [("heading", "Title", None, 0), ("image", "", "img_a_0", 1)]),
+        ("b", [])], _OUT_SCHEMA)
+
+
+def test_duplicated_doc_id_one_manifest_row_per_processed_row(spark,
+                                                              tmp_path):
+    """A doc_id repeated in ``processed`` (a replayed batch, a doc listed
+    twice in the input) gives one manifest row per processed row with that
+    row's own hash and span count; a self-join on doc_id would multiply the
+    rows (3 -> 5 here) and pair each hash with the other row's count."""
+    state_dir = str(tmp_path / "state")
+    commit_phase(_processed_with_duplicate(spark), spark, state_dir,
+                 "extract")
+    m = read_manifest(spark, state_dir, "extract")
+    assert sorted((r["doc_id"], r["content_hash"], r["n_spans"])
+                  for r in m.collect()) == _GOLDEN
+    docs_sum = read_metrics(spark, state_dir).groupBy().sum("docs") \
+        .collect()[0][0]
+    assert m.count() == docs_sum == 3
+
+
+def test_versioned_commit_one_row_per_processed_row(spark, tmp_path):
+    """With ``input_docs`` the hash is the INPUT version hash, joined once:
+    still one manifest row per processed row, each with its own count."""
+    from vlm_ocr_doc_reader_spark.sources.readers import DOCUMENTS_SCHEMA
+    from vlm_ocr_doc_reader_spark.state.manifest import input_hash
+    state_dir = str(tmp_path / "state")
+    inp = spark.createDataFrame(
+        [("a", [("text", "First kept sentence here.", None, 0)]),
+         ("b", [])], DOCUMENTS_SCHEMA)
+    commit_phase(_processed_with_duplicate(spark), spark, state_dir,
+                 "extract", input_docs=inp)
+    want = {r["doc_id"]: r["content_hash"]
+            for r in input_hash(inp).collect()}
+    got = sorted((r["doc_id"], r["content_hash"], r["n_spans"])
+                 for r in read_manifest(spark, state_dir).collect())
+    assert got == [("a", want["a"], 1), ("a", want["a"], 2),
+                   ("b", want["b"], 0)]

@@ -125,7 +125,10 @@ _BBOX_RE2 = (r"^@@bbox:(?P<x0>[0-9]+),(?P<y0>[0-9]+),"
 _BBOX_RE2_SUB = r"^@@bbox:[0-9]+,[0-9]+,[0-9]+,[0-9]+@@"
 _ANCHOR_RE2 = spec.ANCHOR_RE          # no \s/\d classes — RE2-identical
 _NAV_RE2 = spec.NAV_RE                # escaped ASCII literals
-_WS_RE2 = r"[ \t\n\r\f\v]+"
+# every ASCII-whitespace run except a lone " ", which is already collapsed:
+# a run starting with [\t\n\r\f\v], or a space followed by more whitespace.
+# Skipping lone spaces is most of the collapse's time on prose.
+_WS_RE2 = r"[\t\n\r\f\v][ \t\n\r\f\v]*| [ \t\n\r\f\v]+"
 
 
 _OUT_STRUCT_FIELDS = [("kind", "string"), ("text", "string"),

@@ -114,39 +114,38 @@ def commit_phase(processed: DataFrame, spark: SparkSession, state_dir: str,
     the reference's incremental save (auto_save=True,
     core/processor.py:179-181) generalized to partition granularity.
 
+    Manifest rows come from ONE projection of ``processed`` — one row per
+    processed row, one scan of the run's output, no self-join on doc_id.
+
     ``input_docs`` (when given) supplies the version hash from the INPUT
     spans so a later ``pending_docs(by_version=True)`` can detect changed
-    documents; without it the hash is of the processed row (sufficient for
-    doc_id-keyed resume).
+    documents — ``processed`` is joined to those hashes once; without it the
+    hash is of the processed row (sufficient for doc_id-keyed resume).
 
     Commit ORDER is the atomicity protocol (write outputs first, commit the
     manifest referencing ``run_id`` last): a crash between the two leaves
     orphan output rows that ``read_committed`` filters out, and the next run
     reprocesses those docs — no duplicates, no loss."""
+    n_spans = (F.size(F.col("spans")).cast("long")
+               if "spans" in processed.columns else F.lit(0).cast("long"))
     if input_docs is not None:
-        hashes = input_hash(input_docs)
-        entries = (processed.select("doc_id").join(hashes, "doc_id"))
+        entries = (processed.select("doc_id", n_spans.alias("n_spans"))
+                   .join(input_hash(input_docs), "doc_id"))
     else:
         entries = processed.select(
             "doc_id",
-            F.sha2(F.to_json(F.struct("*")), 256).alias("content_hash"))
-    n_spans = (processed.select(
-        "doc_id", (F.size(F.col("spans")).cast("long")
-                   if "spans" in processed.columns
-                   else F.lit(0).cast("long")).alias("n_spans")))
-    entries = (entries.join(n_spans, "doc_id")
-               .select("doc_id",
-                       F.lit(phase).alias("phase"),
-                       "content_hash", "n_spans",
-                       F.current_timestamp().alias("ts"),
-                       F.lit(run_id).cast("string").alias("run_id")))
+            F.sha2(F.to_json(F.struct("*")), 256).alias("content_hash"),
+            n_spans.alias("n_spans"))
+    entries = entries.select("doc_id",
+                             F.lit(phase).alias("phase"),
+                             "content_hash", "n_spans",
+                             F.current_timestamp().alias("ts"),
+                             F.lit(run_id).cast("string").alias("run_id"))
     entries.write.mode("append").parquet(manifest_path(state_dir))
 
     metrics = (processed
                .select(F.spark_partition_id().alias("partition_id"),
-                       (F.size(F.col("spans")).cast("long")
-                        if "spans" in processed.columns
-                        else F.lit(0).cast("long")).alias("nsp"))
+                       n_spans.alias("nsp"))
                .groupBy("partition_id")
                .agg(F.count("*").alias("docs"), F.sum("nsp").alias("spans"))
                .select(F.lit(phase).alias("phase"), "partition_id", "docs",
