@@ -87,3 +87,28 @@ def test_adversarial_corpus_matches_oracle(spark, seed):
         assert not bad, (
             f"{strat}: {len(bad)} docs diverge; first={bad[0]}: "
             f"got={got.get(bad[0])!r} want={golden[bad[0]]!r}")
+
+
+def test_dotted_capital_i_matches_oracle(spark):
+    """U+0130 'İ' lowers to 'i' + U+0307 in str.lower() but to a bare 'i'
+    in Arrow's utf8_lower, which turns "polİcy" into the NAV phrase
+    "privacy policy": the kernel must still keep what the oracle keeps."""
+    docs = [
+        ("dotted_i", [("text", "Read the privacy polİcy here today", None,
+                       0)]),
+        ("dotted_i_mixed", [
+            ("text", "İstanbul is a city on two continents.", None, 0),
+            ("text", "PRIVACY POLİCY", None, 1),
+            ("text", "privacy policy", None, 2),
+            ("heading", "Terms of use İ", None, 3)]),
+        ("no_dotted_i", [("text", "Read the privacy policy here today",
+                          None, 0)]),
+    ]
+    golden = {d: [tuple(s) for s in extract_doc(sp)] for d, sp in docs}
+    assert golden["dotted_i"] and not golden["no_dotted_i"]
+    df = spark.createDataFrame(docs, DOCUMENTS_SCHEMA)
+    for strat in ("fused", "fused_raw", "declarative"):
+        got = {r["doc_id"]: [(s["kind"], s["text"], s["media_ref"],
+                              s["order"]) for s in r["spans"]]
+               for r in extract(df, strategy=strat).collect()}
+        assert got == golden, strat

@@ -1,10 +1,17 @@
 """Session defaults: the driver heap fits the host unless the caller sets
-it (a fixed 16g overcommits a 15 GB machine)."""
+it (a fixed 16g overcommits a 15 GB machine), and local masters start
+their Python workers through the package's daemon module."""
+
+import os
 
 import pytest
 
+from vlm_ocr_doc_reader_spark import _pydaemon
 from vlm_ocr_doc_reader_spark.sources.session import (default_driver_memory,
                                                       session_conf)
+
+PACKAGE_ROOT = os.path.dirname(os.path.dirname(
+    os.path.abspath(_pydaemon.__file__)))
 
 
 def _meminfo(tmp_path, total_kb: int) -> str:
@@ -38,3 +45,58 @@ def test_meminfo_without_total_fails_loudly(tmp_path):
     p.write_text("MemFree: 1000 kB\n")
     with pytest.raises(RuntimeError):
         default_driver_memory(str(p))
+
+
+@pytest.mark.parametrize("master", ["local", "local[4]", "local[*]",
+                                    "local[2,3]"])
+def test_local_masters_start_workers_through_pydaemon(tmp_path, master):
+    conf = session_conf(master=master,
+                        meminfo=_meminfo(tmp_path, 15 * 1024 * 1024))
+    assert conf["spark.python.daemon.module"] == _pydaemon.__name__
+    paths = conf["spark.executorEnv.PYTHONPATH"].split(os.pathsep)
+    assert paths == [PACKAGE_ROOT]
+
+
+@pytest.mark.parametrize("master", [None, "yarn", "spark://h:7077",
+                                    "local-cluster[2,1,1024]", "k8s://h"])
+def test_other_masters_keep_sparks_daemon(tmp_path, master):
+    conf = session_conf(master=master,
+                        meminfo=_meminfo(tmp_path, 15 * 1024 * 1024))
+    assert "spark.python.daemon.module" not in conf
+    assert "spark.executorEnv.PYTHONPATH" not in conf
+
+
+def test_caller_worker_pythonpath_is_kept(tmp_path):
+    info = _meminfo(tmp_path, 15 * 1024 * 1024)
+    mine = os.pathsep.join(["/srv/a", "/srv/b"])
+    conf = session_conf(master="local[2]", meminfo=info,
+                        extra_conf={"spark.executorEnv.PYTHONPATH": mine})
+    assert conf["spark.executorEnv.PYTHONPATH"] == \
+        os.pathsep.join(["/srv/a", "/srv/b", PACKAGE_ROOT])
+    # the root is not added twice
+    conf = session_conf(master="local[2]", meminfo=info,
+                        extra_conf={"spark.executorEnv.PYTHONPATH":
+                                    PACKAGE_ROOT})
+    assert conf["spark.executorEnv.PYTHONPATH"] == PACKAGE_ROOT
+    # a caller's own daemon module wins, and its path is left alone
+    conf = session_conf(master="local[2]", meminfo=info,
+                        extra_conf={"spark.python.daemon.module": "mine",
+                                    "spark.executorEnv.PYTHONPATH": mine})
+    assert conf["spark.python.daemon.module"] == "mine"
+    assert conf["spark.executorEnv.PYTHONPATH"] == mine
+
+
+def test_session_workers_import_compiled_pyspark(spark):
+    """The test session is local: its workers import pyspark from the
+    installed package, not from SPARK_HOME's pyspark.zip."""
+    import pyarrow as pa
+
+    def where(batches):
+        import pyspark
+        for b in batches:
+            yield pa.RecordBatch.from_pydict(
+                {"file": [pyspark.__file__] * b.num_rows})
+
+    files = {r["file"] for r in spark.range(4, numPartitions=2)
+             .mapInArrow(where, "file string").collect()}
+    assert files and not any(".zip" in f for f in files), files

@@ -1,14 +1,17 @@
 """Adversarial parity fuzz: random strings over a hostile alphabet (unicode
-whitespace, unicode digits, partial markers) must classify and clean
-identically in the pure-Python spec and the Catalyst mirror — this is what
-makes the oracle a valid golden reference beyond the generator's dialect."""
+whitespace, unicode digits, case-folding traps, partial markers) must
+classify and clean identically in the pure-Python spec, the Catalyst mirror
+and the fused Arrow kernel — this is what makes the oracle a valid golden
+reference beyond the generator's dialect."""
 
 import random
 
 import pyspark.sql.functions as F
 
 from vlm_ocr_doc_reader_spark.extraction import spec
+from vlm_ocr_doc_reader_spark.extraction.oracle import extract_doc
 from vlm_ocr_doc_reader_spark.operators.classify import classify
+from vlm_ocr_doc_reader_spark.operators.fused import extract_batch
 
 ALPHABET = list(
     "ab z.|!?-0159"
@@ -16,11 +19,14 @@ ALPHABET = list(
     "\xa0  "      # unicode whitespace (must NOT collapse)
     "٣১"          # arabic-indic / bengali digits (must NOT be \d)
     "абв"
+    "İ\u212a"      # lowers to 'i' + U+0307 / to ASCII 'k' (Kelvin sign)
 ) + ["[[img_1]]", "[[tbl_", "]]", "@@bbox:", "@@bbox:1,2,3,4@@",
-     "copyright", "all rights reserved", "|||", ". "]
+     "copyright", "all rights reserved", "|||", ". ",
+     "COPYRIGHT", "Cookie", "PRIVACY POLİCY", "Coo\u212aie",
+     "BAC\u212a TO TOP"]
 
 
-def test_unicode_fuzz_parity(spark):
+def _rows():
     rng = random.Random(1234)
     rows = []
     kinds = ["text", "heading", "image", "table", "boilerplate", "link"]
@@ -29,6 +35,11 @@ def test_unicode_fuzz_parity(spark):
                     for _ in range(rng.randint(0, 14)))
         rows.append((f"d{i % 10}", rng.choice(kinds), s,
                      rng.choice([None, "", "img_1"]), i))
+    return rows
+
+
+def test_unicode_fuzz_parity(spark):
+    rows = _rows()
     df = spark.createDataFrame(
         rows,
         "doc_id string, kind string, text string, media_ref string, offset long")
@@ -46,4 +57,14 @@ def test_unicode_fuzz_parity(spark):
                                    spec.parse_bbox(r["text"]) is not None):
             bad.append((r["kind"], r["text"], r["cleaned"], cleaned,
                         r["keep"], keep))
+    assert not bad, f"{len(bad)} divergences; first: {bad[0]!r}"
+
+
+def test_unicode_fuzz_fused_kernel_parity():
+    """The fused kernel, run over each fuzzed span as a one-span document,
+    keeps and cleans exactly what the spec-built oracle does."""
+    spans = [(kind, text, mref, 0) for _, kind, text, mref, _ in _rows()]
+    got = extract_batch([[dict(zip(("kind", "text", "media_ref", "offset"),
+                                   sp))] for sp in spans])
+    bad = [(sp, g) for sp, g in zip(spans, got) if g != extract_doc([sp])]
     assert not bad, f"{len(bad)} divergences; first: {bad[0]!r}"

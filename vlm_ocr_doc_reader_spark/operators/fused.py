@@ -1,26 +1,29 @@
-"""Fused per-document extraction stage (scale/throughput path).
+"""Fused per-document extraction (scale/throughput path).
 
-The declarative pipeline (`operators/ordering` + `reconcile` + `assemble`)
-expresses ordering/reconciliation as joins + windows — the canonical
-Catalyst-visible form.  Measured at bench scale its wall time is dominated by
-the multi-branch stage graph, not by compute.  Everything after
-classification is, however, *per-document* logic with tiny per-doc state —
-the textbook case for one grouped Arrow stage:
+The default path, ``fused_extract_rows``, is a zero-shuffle ``mapInArrow``
+over the whole-document rows the input table already holds:
 
-    classified spans --(one shuffle by doc_id)--> applyInPandas(doc logic)
+    scan -> Arrow batch -> _extract_arrow_batch (Arrow kernel) -> write
 
-The per-doc logic below reuses the exact shared rules (`spec.xy_cut_order`,
-claim semantics) and is covered by the same golden tests plus an
-equivalence test against the declarative path, so the two strategies cannot
-drift.  Mega docs (10^4-10^5 spans) are a single group here — acceptable
-because the per-doc work is O(n log n) and the group payload is bounded by
-the largest document, mirroring the reference's one-document-per-process
-model (core/reader.py:37-48); the salted declarative path remains available
-when single-doc payloads exceed worker memory.
+Each row is one document, so the grouping the declarative pipeline
+(`operators/ordering` + `reconcile` + `assemble`) rebuilds with joins,
+windows and exchanges is free here.  The kernel runs the per-span stage
+(quarantine, bbox strip, cleaning, keep classification) in Arrow C++
+kernels; only documents that need reading-order work (media claims, full
+bbox cover for XY-cut) go through the shared pure-Python rules
+(`spec.xy_cut_order`, ``oracle.order_kept``).  Golden, adversarial and
+strategy-equality tests hold it to the oracle.  A mega doc is one row of
+one Arrow batch; ``plans.extract.extract`` routes docs above
+``fused_max_spans`` to the salted declarative path instead.
+
+The grouped ``applyInPandas`` forms below (``fused_extract_raw`` for
+pre-exploded spans, ``fused_extract_nested``, ``fused_reconcile_order``)
+shuffle once by doc_id and are not on the default path.
 """
 
 from __future__ import annotations
 
+import re
 from typing import Iterable
 
 import pandas as pd
@@ -129,6 +132,9 @@ _NAV_RE2 = spec.NAV_RE                # escaped ASCII literals
 # a run starting with [\t\n\r\f\v], or a space followed by more whitespace.
 # Skipping lone spaces is most of the collapse's time on prose.
 _WS_RE2 = r"[\t\n\r\f\v][ \t\n\r\f\v]*| [ \t\n\r\f\v]+"
+# U+0130 'İ' is the one code point str.lower() and utf8_lower disagree on:
+# 'i' + U+0307 against a bare 'i', which can complete a NAV phrase.
+_DOTTED_I_UTF8 = re.compile("\u0130".encode())
 
 
 _OUT_STRUCT_FIELDS = [("kind", "string"), ("text", "string"),
@@ -216,7 +222,12 @@ def _extract_arrow_batch(doc_ids, spans):
     is_media = pc.is_in(kind, value_set=pa.array(["image", "table"]))
     keep = pc.and_(is_media, mref_ok)
     keep = pc.or_(keep, pc.and_(pc.equal(kind, "heading"), nonempty))
-    low = pc.utf8_lower(cleaned)
+    data = cleaned.buffers()[2]
+    if data is not None and _DOTTED_I_UTF8.search(memoryview(data)):
+        low = pc.utf8_lower(
+            pc.replace_substring(cleaned, "\u0130", "i\u0307"))
+    else:
+        low = pc.utf8_lower(cleaned)
     nav = pc.match_substring_regex(low, _NAV_RE2)
     nwords = pc.add(pc.count_substring(cleaned, " "), 1)
     pipes = pc.count_substring(cleaned, "|")

@@ -121,8 +121,9 @@ def extract(documents: DataFrame, strategy: str = "fused",
     """Nested judged output: (doc_id, spans array<struct<kind,text,media_ref,order>>),
     one row per input doc (empty array when nothing survives).
 
-    strategy='fused' (default): classification in Catalyst, per-doc
-    ordering/reconciliation in one grouped Arrow stage — one shuffle total.
+    strategy='fused' (default): one zero-shuffle ``mapInArrow`` over the
+    whole-document rows; the Arrow kernel (``operators.fused``) classifies,
+    cleans and orders each batch of documents.
     strategy='fused_raw': the landing-shape plan — explode to raw spans,
     cheap JVM prefilter, ONE hash exchange on doc_id, grouped Arrow
     extraction (the path for inputs that arrive already exploded).

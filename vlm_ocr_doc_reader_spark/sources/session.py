@@ -3,11 +3,21 @@
 AQE on (runtime partition coalescing + skew-join splitting), Arrow on (all
 our UDFs are pandas/Arrow batched — never row-at-a-time Python), broadcast
 threshold left at default so small dims broadcast automatically.
+Local masters start their Python workers through ``_pydaemon``, which
+imports the installed, compiled pyspark instead of recompiling
+SPARK_HOME's ``pyspark.zip`` at every session start.
 """
 
 from __future__ import annotations
 
+import os
+import re
+
 from pyspark.sql import SparkSession
+
+from .. import _pydaemon
+
+_LOCAL_MASTER = re.compile(r"local(\[[^\]]*\])?")
 
 
 def default_driver_memory(meminfo: str = "/proc/meminfo") -> str:
@@ -24,10 +34,13 @@ def default_driver_memory(meminfo: str = "/proc/meminfo") -> str:
 
 def session_conf(shuffle_partitions: int | None = None,
                  extra_conf: dict | None = None,
-                 meminfo: str = "/proc/meminfo") -> dict:
+                 meminfo: str = "/proc/meminfo",
+                 master: str | None = None) -> dict:
     """The settings ``get_spark`` applies: the defaults below, then
     ``extra_conf``; the driver heap is derived from ``meminfo`` only when
-    neither sets it."""
+    neither sets it.  For a ``local[...]`` master the Python worker daemon
+    is ``_pydaemon``, and the package root is appended to the workers'
+    PYTHONPATH so they can import it; other masters keep Spark's daemon."""
     conf = {
         "spark.sql.adaptive.enabled": "true",
         "spark.sql.adaptive.coalescePartitions.enabled": "true",
@@ -47,6 +60,15 @@ def session_conf(shuffle_partitions: int | None = None,
         conf.update(extra_conf)
     if "spark.driver.memory" not in conf:
         conf["spark.driver.memory"] = default_driver_memory(meminfo)
+    if (master is not None and _LOCAL_MASTER.fullmatch(master)
+            and "spark.python.daemon.module" not in conf):
+        conf["spark.python.daemon.module"] = _pydaemon.__name__
+        root = os.path.dirname(os.path.dirname(
+            os.path.abspath(_pydaemon.__file__)))
+        key = "spark.executorEnv.PYTHONPATH"
+        paths = [p for p in conf.get(key, "").split(os.pathsep) if p]
+        if root not in paths:
+            conf[key] = os.pathsep.join(paths + [root])
     return conf
 
 
@@ -57,6 +79,7 @@ def get_spark(master: str | None = None,
     b = SparkSession.builder.appName(app_name)
     if master:
         b = b.master(master)
-    for k, v in session_conf(shuffle_partitions, extra_conf).items():
+    for k, v in session_conf(shuffle_partitions, extra_conf,
+                             master=master).items():
         b = b.config(k, v)
     return b.getOrCreate()
