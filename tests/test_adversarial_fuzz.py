@@ -56,6 +56,17 @@ _WS_DOC = ("ws_cases", [
         + [("text", f"one{c}two three four five.") for c in _WS_CASES]
         + [("heading", f"Title{c}here") for c in _WS_CASES])])
 
+# U+0130 'İ' lowers to 'i' + U+0307 in str.lower() but to a bare 'i' in
+# Arrow's utf8_lower, which would turn "polİcy" into the NAV phrase
+# "privacy policy".
+_DOTTED_I_DOC = ("dotted_i", [
+    ("text", "Read the privacy polİcy here today", None, 0),
+    ("text", "İstanbul is a city on two continents.", None, 1),
+    ("text", "PRIVACY POLİCY", None, 2),
+    ("text", "privacy policy", None, 3),
+    ("heading", "Terms of use İ", None, 4),
+    ("text", "Read the privacy policy here today", None, 5)])
+
 _KINDS = ["text", "heading", "image", "table", "boilerplate", "link",
           "blob", None]
 _REFS = [None, "", "img_x_0", "tbl_y_1", "img_nope_9", "weird ref"]
@@ -76,8 +87,12 @@ def _gen_doc(rng: random.Random, n: int):
 def test_adversarial_corpus_matches_oracle(spark, seed):
     rng = random.Random(seed)
     docs = [(f"adv_{i}", _gen_doc(rng, rng.randint(1, 25)))
-            for i in range(60)] + [_WS_DOC]
+            for i in range(60)] + [_WS_DOC, _DOTTED_I_DOC]
     golden = {d: [tuple(s) for s in extract_doc(sp)] for d, sp in docs}
+    # the oracle keeps the dotted-I span and drops its undotted NAV twin
+    kept = [s[1] for s in golden["dotted_i"]]
+    assert "Read the privacy polİcy here today" in kept
+    assert "Read the privacy policy here today" not in kept
     df = spark.createDataFrame(docs, DOCUMENTS_SCHEMA)
     for strat in ("fused", "fused_raw", "declarative"):
         got = {r["doc_id"]: [(s["kind"], s["text"], s["media_ref"],
@@ -87,28 +102,3 @@ def test_adversarial_corpus_matches_oracle(spark, seed):
         assert not bad, (
             f"{strat}: {len(bad)} docs diverge; first={bad[0]}: "
             f"got={got.get(bad[0])!r} want={golden[bad[0]]!r}")
-
-
-def test_dotted_capital_i_matches_oracle(spark):
-    """U+0130 'İ' lowers to 'i' + U+0307 in str.lower() but to a bare 'i'
-    in Arrow's utf8_lower, which turns "polİcy" into the NAV phrase
-    "privacy policy": the kernel must still keep what the oracle keeps."""
-    docs = [
-        ("dotted_i", [("text", "Read the privacy polİcy here today", None,
-                       0)]),
-        ("dotted_i_mixed", [
-            ("text", "İstanbul is a city on two continents.", None, 0),
-            ("text", "PRIVACY POLİCY", None, 1),
-            ("text", "privacy policy", None, 2),
-            ("heading", "Terms of use İ", None, 3)]),
-        ("no_dotted_i", [("text", "Read the privacy policy here today",
-                          None, 0)]),
-    ]
-    golden = {d: [tuple(s) for s in extract_doc(sp)] for d, sp in docs}
-    assert golden["dotted_i"] and not golden["no_dotted_i"]
-    df = spark.createDataFrame(docs, DOCUMENTS_SCHEMA)
-    for strat in ("fused", "fused_raw", "declarative"):
-        got = {r["doc_id"]: [(s["kind"], s["text"], s["media_ref"],
-                              s["order"]) for s in r["spans"]]
-               for r in extract(df, strategy=strat).collect()}
-        assert got == golden, strat

@@ -2,12 +2,17 @@
 it (a fixed 16g overcommits a 15 GB machine), and local masters start
 their Python workers through the package's daemon module."""
 
+import json
 import os
+import subprocess
+import sys
+import textwrap
 
 import pytest
 
 from vlm_ocr_doc_reader_spark import _pydaemon
 from vlm_ocr_doc_reader_spark.sources.session import (default_driver_memory,
+                                                      resolve_master,
                                                       session_conf)
 
 PACKAGE_ROOT = os.path.dirname(os.path.dirname(
@@ -84,6 +89,50 @@ def test_caller_worker_pythonpath_is_kept(tmp_path):
                                     "spark.executorEnv.PYTHONPATH": mine})
     assert conf["spark.python.daemon.module"] == "mine"
     assert conf["spark.executorEnv.PYTHONPATH"] == mine
+
+
+def test_resolve_master_follows_the_builder():
+    # the builder applies extra_conf after .master(), so spark.master wins
+    assert resolve_master("local[2]", {"spark.master": "yarn"}) == "yarn"
+    assert resolve_master("local[2]", {}) == "local[2]"
+    assert resolve_master(None, {"spark.master": "local[3]"}) == "local[3]"
+
+
+def test_no_master_session_starts_workers_through_pydaemon():
+    """``cli`` passes no master unless ``--master`` is given; spark-submit
+    then runs ``local[*]``, so a fresh process's session must still start
+    its workers through the daemon module and import compiled pyspark."""
+    script = textwrap.dedent("""
+        import json
+        import pyarrow as pa
+        from vlm_ocr_doc_reader_spark.sources.session import get_spark
+
+        def where(batches):
+            import pyspark
+            for b in batches:
+                yield pa.RecordBatch.from_pydict(
+                    {"file": [pyspark.__file__] * b.num_rows})
+
+        spark = get_spark(extra_conf={"spark.ui.enabled": "false",
+                                      "spark.driver.memory": "1g"})
+        conf = spark.sparkContext.getConf()
+        files = sorted({r["file"] for r in spark.range(2, numPartitions=1)
+                        .mapInArrow(where, "file string").collect()})
+        print(json.dumps([spark.sparkContext.master,
+                          conf.get("spark.python.daemon.module"), files]))
+        spark.stop()
+    """)
+    env = {k: v for k, v in os.environ.items()
+           if k not in ("PYSPARK_SUBMIT_ARGS", "MASTER")}
+    out = subprocess.run([sys.executable, "-c", script], cwd=PACKAGE_ROOT,
+                         env=env, capture_output=True, text=True,
+                         timeout=300)
+    assert out.returncode == 0, out.stderr[-2000:]
+    master, module, files = json.loads(
+        out.stdout.strip().splitlines()[-1])
+    assert master == "local[*]"
+    assert module == _pydaemon.__name__
+    assert files and not any(".zip" in f for f in files), files
 
 
 def test_session_workers_import_compiled_pyspark(spark):

@@ -23,7 +23,6 @@ shuffle once by doc_id and are not on the default path.
 
 from __future__ import annotations
 
-import re
 from typing import Iterable
 
 import pandas as pd
@@ -132,9 +131,6 @@ _NAV_RE2 = spec.NAV_RE                # escaped ASCII literals
 # a run starting with [\t\n\r\f\v], or a space followed by more whitespace.
 # Skipping lone spaces is most of the collapse's time on prose.
 _WS_RE2 = r"[\t\n\r\f\v][ \t\n\r\f\v]*| [ \t\n\r\f\v]+"
-# U+0130 'İ' is the one code point str.lower() and utf8_lower disagree on:
-# 'i' + U+0307 against a bare 'i', which can complete a NAV phrase.
-_DOTTED_I_UTF8 = re.compile("\u0130".encode())
 
 
 _OUT_STRUCT_FIELDS = [("kind", "string"), ("text", "string"),
@@ -222,12 +218,9 @@ def _extract_arrow_batch(doc_ids, spans):
     is_media = pc.is_in(kind, value_set=pa.array(["image", "table"]))
     keep = pc.and_(is_media, mref_ok)
     keep = pc.or_(keep, pc.and_(pc.equal(kind, "heading"), nonempty))
-    data = cleaned.buffers()[2]
-    if data is not None and _DOTTED_I_UTF8.search(memoryview(data)):
-        low = pc.utf8_lower(
-            pc.replace_substring(cleaned, "\u0130", "i\u0307"))
-    else:
-        low = pc.utf8_lower(cleaned)
+    # U+0130 'İ' is the one code point str.lower() and utf8_lower disagree
+    # on: 'i' + U+0307 against a bare 'i', which can complete a NAV phrase.
+    low = pc.utf8_lower(pc.replace_substring(cleaned, "\u0130", "i\u0307"))
     nav = pc.match_substring_regex(low, _NAV_RE2)
     nwords = pc.add(pc.count_substring(cleaned, " "), 1)
     pipes = pc.count_substring(cleaned, "|")

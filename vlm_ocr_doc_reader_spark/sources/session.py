@@ -72,6 +72,24 @@ def session_conf(shuffle_partitions: int | None = None,
     return conf
 
 
+def resolve_master(master: str | None, conf: dict) -> str | None:
+    """The master a session built from ``master`` and ``conf`` runs on.
+
+    A ``spark.master`` in ``conf`` wins, as it does in ``get_spark``'s
+    builder, then ``master``.  With neither, the master is the one the JVM
+    gateway starts with (spark-submit's default is ``local[*]``), so the
+    gateway is started here, with ``conf`` as its launch settings, exactly
+    as ``getOrCreate`` would start it."""
+    if conf.get("spark.master") or master:
+        return conf.get("spark.master") or master
+    from pyspark import SparkConf, SparkContext
+    launch = SparkConf()
+    for k, v in conf.items():
+        launch.set(k, v)
+    SparkContext._ensure_initialized(conf=launch)
+    return SparkConf().get("spark.master")
+
+
 def get_spark(master: str | None = None,
               app_name: str = "vlm-ocr-doc-reader-spark",
               shuffle_partitions: int | None = None,
@@ -79,6 +97,8 @@ def get_spark(master: str | None = None,
     b = SparkSession.builder.appName(app_name)
     if master:
         b = b.master(master)
+    master = resolve_master(master, session_conf(shuffle_partitions,
+                                                 extra_conf))
     for k, v in session_conf(shuffle_partitions, extra_conf,
                              master=master).items():
         b = b.config(k, v)
