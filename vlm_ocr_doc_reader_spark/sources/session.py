@@ -13,6 +13,7 @@ from __future__ import annotations
 import os
 import re
 
+from pyspark import SparkConf, SparkContext
 from pyspark.sql import SparkSession
 
 from .. import _pydaemon
@@ -80,9 +81,9 @@ def resolve_master(master: str | None, conf: dict) -> str | None:
     gateway starts with (spark-submit's default is ``local[*]``), so the
     gateway is started here, with ``conf`` as its launch settings, exactly
     as ``getOrCreate`` would start it."""
-    if conf.get("spark.master") or master:
-        return conf.get("spark.master") or master
-    from pyspark import SparkConf, SparkContext
+    known = conf.get("spark.master") or master
+    if known:
+        return known
     launch = SparkConf()
     for k, v in conf.items():
         launch.set(k, v)
