@@ -307,11 +307,11 @@ def main() -> None:
                       shuffle_partitions=2 * CPUS,
                       extra_conf={"spark.ui.enabled": "false"})
     try:
-        from vlm_ocr_doc_reader_spark.plans.extract import extract
+        from vlm_ocr_doc_reader_spark.plans.extract import extract_declarative
         df = spark.read.parquet(path)
         n1 = df.count()
         t0 = time.time()
-        extract(df, strategy="declarative").write.format("noop") \
+        extract_declarative(df).write.format("noop") \
             .mode("overwrite").save()
         extras["declarative_docs_per_sec"] = round(n1 / (time.time() - t0), 1)
     finally:

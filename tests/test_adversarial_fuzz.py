@@ -11,8 +11,10 @@ import random
 
 import pytest
 
+from vlm_ocr_doc_reader_spark.datapipe.cache import release_cached
 from vlm_ocr_doc_reader_spark.extraction.oracle import extract_doc
-from vlm_ocr_doc_reader_spark.plans.extract import extract
+from vlm_ocr_doc_reader_spark.plans.extract import (extract,
+                                                    extract_declarative)
 from vlm_ocr_doc_reader_spark.sources.readers import DOCUMENTS_SCHEMA
 
 _HOSTILE_TEXT = [
@@ -67,6 +69,12 @@ _DOTTED_I_DOC = ("dotted_i", [
     ("heading", "Terms of use İ", None, 4),
     ("text", "Read the privacy policy here today", None, 5)])
 
+# every span pruned by kind, and no spans at all: both docs must still
+# emit their row with an empty spans array
+_PRUNED_DOC = ("bp_only", [("boilerplate", "Copyright 2026.", None, 0),
+                           ("link", "home", None, 1)])
+_EMPTY_DOC = ("no_spans", [])
+
 _KINDS = ["text", "heading", "image", "table", "boilerplate", "link",
           "blob", None]
 _REFS = [None, "", "img_x_0", "tbl_y_1", "img_nope_9", "weird ref"]
@@ -87,18 +95,22 @@ def _gen_doc(rng: random.Random, n: int):
 def test_adversarial_corpus_matches_oracle(spark, seed):
     rng = random.Random(seed)
     docs = [(f"adv_{i}", _gen_doc(rng, rng.randint(1, 25)))
-            for i in range(60)] + [_WS_DOC, _DOTTED_I_DOC]
+            for i in range(60)] + [_WS_DOC, _DOTTED_I_DOC, _PRUNED_DOC,
+                                   _EMPTY_DOC]
     golden = {d: [tuple(s) for s in extract_doc(sp)] for d, sp in docs}
+    assert golden["bp_only"] == [] and golden["no_spans"] == []
     # the oracle keeps the dotted-I span and drops its undotted NAV twin
     kept = [s[1] for s in golden["dotted_i"]]
     assert "Read the privacy polİcy here today" in kept
     assert "Read the privacy policy here today" not in kept
     df = spark.createDataFrame(docs, DOCUMENTS_SCHEMA)
-    for strat in ("fused", "fused_raw", "declarative"):
+    for run in (extract, extract_declarative):
+        out = run(df)
         got = {r["doc_id"]: [(s["kind"], s["text"], s["media_ref"],
                               s["order"]) for s in r["spans"]]
-               for r in extract(df, strategy=strat).collect()}
+               for r in out.collect()}
+        release_cached(out)
         bad = [d for d in golden if got.get(d) != golden[d]]
         assert not bad, (
-            f"{strat}: {len(bad)} docs diverge; first={bad[0]}: "
+            f"{run.__name__}: {len(bad)} docs diverge; first={bad[0]}: "
             f"got={got.get(bad[0])!r} want={golden[bad[0]]!r}")

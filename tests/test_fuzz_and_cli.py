@@ -1,6 +1,7 @@
 """Fuzz: multiple random corpora (different seeds) must match the oracle
 exactly; CLI: end-to-end extract command over a tiny corpus."""
 
+import importlib
 import os
 
 import pytest
@@ -42,6 +43,30 @@ def test_cli_extract_end_to_end(spark, tmp_path):
     assert rc == 0
     assert spark.read.parquet(out).count() == 30
     assert os.path.isdir(state)
+
+
+def test_cli_extract_mega_doc_route_releases_cache(spark, tmp_path,
+                                                   monkeypatch):
+    """Docs over FUSED_MAX_SPANS go through the declarative plan, which
+    persists its classified spans; the CLI must free that cache once the
+    output is written, or a long-lived session keeps one cached frame per
+    run that holds a mega doc."""
+    from vlm_ocr_doc_reader_spark.datapipe.cache import (
+        outstanding_cached, release_all_cached)
+    # the module, not the package's re-exported extract() function
+    extract_mod = importlib.import_module(
+        "vlm_ocr_doc_reader_spark.plans.extract")
+    docs = generate_documents(20, seed=5, mega_spans=300, include_edge=False)
+    inp = str(tmp_path / "in.parquet")
+    out = str(tmp_path / "out")
+    write_documents_parquet(docs, inp)
+    monkeypatch.setattr(extract_mod, "FUSED_MAX_SPANS", 200)
+    release_all_cached()
+    rc = cli_main(["extract", "--input", inp, "--output", out,
+                   "--state", str(tmp_path / "state")])
+    assert rc == 0
+    assert spark.read.parquet(out).count() == 20
+    assert outstanding_cached() == []
 
 
 def test_cli_invalid_args_exit_code(tmp_path):

@@ -6,7 +6,8 @@ span must land after its host in READING order, not offset order."""
 import pytest
 
 from vlm_ocr_doc_reader_spark.extraction.oracle import extract_doc
-from vlm_ocr_doc_reader_spark.plans.extract import extract
+from vlm_ocr_doc_reader_spark.plans.extract import (extract,
+                                                    extract_declarative)
 from vlm_ocr_doc_reader_spark.sources.readers import DOCUMENTS_SCHEMA
 
 
@@ -29,8 +30,10 @@ def _doc():
     return [("lm1", spans)]
 
 
-@pytest.mark.parametrize("strategy", ["fused", "fused_raw", "declarative"])
-def test_layout_media_reconciliation_in_reading_order(spark, strategy):
+@pytest.mark.parametrize("run", [
+    pytest.param(extract, id="fused"),
+    pytest.param(extract_declarative, id="declarative")])
+def test_layout_media_reconciliation_in_reading_order(spark, run):
     docs = _doc()
     golden = [tuple(s) for s in extract_doc(docs[0][1])]
     # sanity on the golden itself: title first, then left column, image
@@ -48,5 +51,5 @@ def test_layout_media_reconciliation_in_reading_order(spark, strategy):
     df = spark.createDataFrame(docs, DOCUMENTS_SCHEMA)
     got = {r["doc_id"]: [(s["kind"], s["text"], s["media_ref"], s["order"])
                          for s in r["spans"]]
-           for r in extract(df, strategy=strategy).collect()}
-    assert got["lm1"] == golden, strategy
+           for r in run(df).collect()}
+    assert got["lm1"] == golden, run.__name__

@@ -51,10 +51,9 @@ def test_extract_fused_has_no_exchange(spark):
     write_documents_parquet(generate_documents(5, seed=1, mega_spans=50,
                                                include_edge=False), p_)
     df = spark.read.parquet(p_)
-    p = plan(extract(df, strategy="fused"))
+    p = plan(extract(df))
     assert "Exchange" not in p
-    assert ("MapInArrow" in p or "FlatMapsInPandas" in p
-            or "MapInPandas" in p)
+    assert "MapInArrow" in p
 
 
 def test_jaccard_candidates_prune_before_aggregate(spark):

@@ -19,6 +19,9 @@ from vlm_ocr_doc_reader_spark.state.manifest import (commit_phase,
                                                      read_manifest,
                                                      read_metrics)
 
+# subprocesses import the package from the checkout under test
+_REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 
 @pytest.fixture(scope="module")
 def corpus_path(tmp_path_factory):
@@ -122,10 +125,14 @@ def test_real_kill_then_resume(corpus_path, tmp_path):
            "--input", corpus_path, "--output", out_dir,
            "--state", state_dir]
     proc = subprocess.Popen(cmd, stdout=subprocess.DEVNULL,
-                            stderr=subprocess.DEVNULL, cwd="/root/repo")
+                            stderr=subprocess.DEVNULL, cwd=_REPO_ROOT,
+                            start_new_session=True)
     time.sleep(12)  # JVM boot ~8s; lands somewhere inside the job
     if proc.poll() is None:
-        proc.send_signal(signal.SIGKILL)
+        # the whole process group: the driver's JVM outlives a killed
+        # Python driver by ~2s and keeps writing checkpoint/output files,
+        # racing the resume below as a second writer
+        os.killpg(proc.pid, signal.SIGKILL)
         proc.wait()
 
     # resume in-process (same CLI code path)

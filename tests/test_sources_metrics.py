@@ -111,17 +111,19 @@ def test_consistency_vs_baseline(spark):
 
 def test_malformed_spans_dropped_consistently(spark):
     """Null offset/kind spans drop in BOTH strategies (defensive P5)."""
-    from vlm_ocr_doc_reader_spark.plans.extract import extract
+    from vlm_ocr_doc_reader_spark.plans.extract import (
+        extract, extract_declarative)
     rows = [("d1", [("text", "Good first sentence here today.", None, 0),
                     ("text", "orphan offset", None, None),
                     (None, "orphan kind", None, 1),
                     ("text", "Good second sentence here today.", None, 2)])]
     df = spark.createDataFrame(rows, DOCUMENTS_SCHEMA)
-    for strat in ("fused", "fused_raw", "declarative"):
+    for run in (extract, extract_declarative):
         out = {r["doc_id"]: [(s["text"], s["order"]) for s in r["spans"]]
-               for r in extract(df, strategy=strat).collect()}
+               for r in run(df).collect()}
         assert out["d1"] == [("Good first sentence here today.", 0),
-                             ("Good second sentence here today.", 1)], strat
+                             ("Good second sentence here today.", 1)], \
+            run.__name__
 
 
 def test_binary_landing_and_guarded_pdf_parser(spark, tmp_path):

@@ -1,12 +1,17 @@
-"""Fused (one grouped Arrow stage) and declarative (joins+windows) extraction
-strategies must produce byte-identical output — they share the spec but not
-the physical plan, so this is the drift guard."""
+"""The Arrow kernel (``extract``) and the declarative plan
+(``extract_declarative``: joins+windows) must produce byte-identical output
+— they share the spec but not the physical plan, so this is the drift
+guard; the kernel is also held to the scalar oracle document by document."""
+
+import importlib
 
 import pytest
 
+from vlm_ocr_doc_reader_spark.datapipe.cache import release_cached
 from vlm_ocr_doc_reader_spark.fixtures.generate import (
     generate_documents, write_documents_parquet)
-from vlm_ocr_doc_reader_spark.plans.extract import extract
+from vlm_ocr_doc_reader_spark.plans.extract import (extract,
+                                                    extract_declarative)
 
 
 @pytest.fixture(scope="module")
@@ -19,109 +24,84 @@ def corpus_df(spark, tmp_path_factory):
 
 def test_fused_equals_declarative(corpus_df):
     a = {r["doc_id"]: r["spans"]
-         for r in extract(corpus_df, strategy="fused").collect()}
-    b = {r["doc_id"]: r["spans"]
-         for r in extract(corpus_df, strategy="declarative").collect()}
+         for r in extract(corpus_df).collect()}
+    declarative = extract_declarative(corpus_df)
+    b = {r["doc_id"]: r["spans"] for r in declarative.collect()}
+    release_cached(declarative)
     assert set(a) == set(b)
     diff = [d for d in a if a[d] != b[d]]
     assert not diff, f"{len(diff)} docs differ; first: {diff[0]}"
 
 
-def test_fused_auto_fallback_routes_mega_docs(corpus_df):
+def test_fused_auto_fallback_routes_mega_docs(corpus_df, monkeypatch):
     """With a threshold below the corpus's mega-doc size, extract() must
     route the over-threshold docs through the declarative salted path at
     runtime and still produce byte-identical output — and the pure fused
     plan must remain zero-exchange when nothing exceeds the threshold."""
     import pyspark.sql.functions as F
+
+    from vlm_ocr_doc_reader_spark.operators.fused import fused_extract_rows
+    # the module, not the package's re-exported extract() function
+    extract_mod = importlib.import_module(
+        "vlm_ocr_doc_reader_spark.plans.extract")
     n_big = corpus_df.filter(F.size("spans") > 1000).count()
     assert n_big >= 1  # the fixture's mega doc exceeds the test threshold
 
-    a = {r["doc_id"]: r["spans"]
-         for r in extract(corpus_df, strategy="fused",
-                          fused_max_spans=None).collect()}
-    b = {r["doc_id"]: r["spans"]
-         for r in extract(corpus_df, strategy="fused",
-                          fused_max_spans=1000).collect()}
-    assert a == b
-
-    # routing engaged: the routed plan carries a union + exchanges
-    routed = extract(corpus_df, strategy="fused", fused_max_spans=1000)
-    plan = routed._sc._jvm.PythonSQLUtils.explainString(
-        routed._jdf.queryExecution(), "formatted")
-    assert "Union" in plan and "Exchange" in plan
-
     # nothing over the (default) threshold -> the pure zero-shuffle map
-    pure = extract(corpus_df, strategy="fused")
+    pure = extract(corpus_df)
     plan = pure._sc._jvm.PythonSQLUtils.explainString(
         pure._jdf.queryExecution(), "formatted")
     assert "Exchange" not in plan and "Union" not in plan
 
-
-def test_vectorized_fused_equals_scalar_oracle_form(corpus_df):
-    """The default fused strategy is Arrow-kernel vectorized
-    (fused.extract_batch / _extract_arrow_batch, RE2 regexes); the scalar
-    per-doc oracle form (fused_extract_rows_scalar) is the drift guard —
-    both must be byte-identical on the corpus including mega/edge docs."""
-    from vlm_ocr_doc_reader_spark.operators.fused import (
-        fused_extract_rows, fused_extract_rows_scalar)
+    monkeypatch.setattr(extract_mod, "FUSED_MAX_SPANS", 1000)
     a = {r["doc_id"]: r["spans"]
          for r in fused_extract_rows(corpus_df).collect()}
-    b = {r["doc_id"]: r["spans"]
-         for r in fused_extract_rows_scalar(corpus_df).collect()}
-    assert set(a) == set(b)
-    diff = [d for d in a if a[d] != b[d]]
-    assert not diff, f"{len(diff)} docs differ; first: {diff[0]}"
+    routed = extract(corpus_df)
+    b = {r["doc_id"]: r["spans"] for r in routed.collect()}
+    assert a == b
+
+    # routing engaged: the routed plan carries a union + exchanges
+    plan = routed._sc._jvm.PythonSQLUtils.explainString(
+        routed._jdf.queryExecution(), "formatted")
+    assert "Union" in plan and "Exchange" in plan
+    release_cached(routed)
 
 
-def test_fused_raw_equals_fused(corpus_df):
-    """The landing-shape (pre-exploded) strategy keeps the same contract —
-    including docs whose spans are all pruned before the exchange."""
-    a = {r["doc_id"]: r["spans"]
-         for r in extract(corpus_df, strategy="fused").collect()}
-    c = {r["doc_id"]: r["spans"]
-         for r in extract(corpus_df, strategy="fused_raw").collect()}
-    assert set(a) == set(c)
-    diff = [d for d in a if a[d] != c[d]]
-    assert not diff, f"{len(diff)} docs differ; first: {diff[0]}"
-
-
-def test_flat_fused_equals_flat_declarative(corpus_df):
-    """extract_flat_fused (Catalyst classify + ONE grouped Arrow stage) must
-    equal the declarative flat pipeline row-for-row."""
-    from vlm_ocr_doc_reader_spark.plans.extract import (extract_flat,
-                                                        extract_flat_fused)
-    a = sorted(map(tuple, extract_flat(corpus_df).collect()))
-    b = sorted(map(tuple, extract_flat_fused(corpus_df).collect()))
-    assert a == b and a
-
-
-def test_fused_nested_equals_default(corpus_df):
-    """fused_extract_nested (classified kept spans -> nested in one grouped
-    stage) must match the default whole-row fused strategy for docs that
-    survive classification (it has no empty-doc repair by design — callers
-    needing the empty-row contract use extract())."""
-    from vlm_ocr_doc_reader_spark.operators.fused import fused_extract_nested
-    from vlm_ocr_doc_reader_spark.plans.extract import _kept_spans
-    a = {r["doc_id"]: r["spans"]
-         for r in extract(corpus_df, strategy="fused").collect()}
-    b = {r["doc_id"]: r["spans"]
-         for r in fused_extract_nested(
-             _kept_spans(corpus_df, persist_parsed=False)).collect()}
-    assert set(b) == {d for d, s in a.items() if s}
-    diff = [d for d in b if a[d] != b[d]]
+def test_vectorized_fused_equals_scalar_oracle_form(corpus_df):
+    """The default extraction is Arrow-kernel vectorized
+    (fused._extract_arrow_batch, RE2 regexes); the scalar per-doc oracle
+    (``oracle.extract_doc``) is the drift guard — byte-identical on every
+    corpus row including mega/edge docs (null spans -> [])."""
+    from vlm_ocr_doc_reader_spark.extraction.oracle import extract_doc
+    rows = corpus_df.collect()
+    want = {r["doc_id"]: [] if r["spans"] is None else
+            [tuple(s) for s in extract_doc(
+                [(s["kind"], s["text"], s["media_ref"], s["offset"])
+                 for s in r["spans"]])]
+            for r in rows}
+    got = {r["doc_id"]: [(s["kind"], s["text"], s["media_ref"], s["order"])
+                         for s in r["spans"]]
+           for r in extract(corpus_df).collect()}
+    assert set(got) == set(want)
+    diff = [d for d in want if got[d] != want[d]]
     assert not diff, f"{len(diff)} docs differ; first: {diff[0]}"
 
 
 def test_fused_raw_keeps_all_pruned_docs(spark):
     """A doc whose spans are ALL boilerplate/link must still emit its row
-    with an empty spans array (the repair union after the prefilter)."""
+    with an empty spans array, on both remaining paths: the kernel maps
+    rows 1:1, the declarative plan repairs the row with ``with_empty_docs``
+    after the keep filter drops every span.  (The name predates the removal
+    of the ``fused_raw`` strategy, whose prefilter first raised the case.)"""
     rows = [("bp_only", [("boilerplate", "Copyright 2026.", None, 0),
                          ("link", "home", None, 1)]),
             ("normal", [("text", "A good long sentence right here.", None,
                          0)])]
     from vlm_ocr_doc_reader_spark.sources.readers import DOCUMENTS_SCHEMA
     df = spark.createDataFrame(rows, DOCUMENTS_SCHEMA)
-    out = {r["doc_id"]: r["spans"]
-           for r in extract(df, strategy="fused_raw").collect()}
-    assert out["bp_only"] == []
-    assert len(out["normal"]) == 1
+    declarative = extract_declarative(df)
+    for frame in (extract(df), declarative):
+        out = {r["doc_id"]: r["spans"] for r in frame.collect()}
+        assert out["bp_only"] == []
+        assert len(out["normal"]) == 1
+    release_cached(declarative)

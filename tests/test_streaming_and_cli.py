@@ -1,5 +1,7 @@
 """Structured-Streaming incremental mode + CLI arg parsing."""
 
+import os
+
 import pytest
 
 from vlm_ocr_doc_reader_spark.cli import parse_axes_arg, parse_pages_arg
@@ -7,6 +9,9 @@ from vlm_ocr_doc_reader_spark.fixtures.generate import (
     generate_documents, write_documents_parquet)
 from vlm_ocr_doc_reader_spark.plans.extract import extract
 from vlm_ocr_doc_reader_spark.streaming.incremental import run_incremental
+
+# subprocesses import the package from the checkout under test
+_REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def test_parse_pages_arg():
@@ -54,6 +59,33 @@ def test_incremental_stream_equals_batch(spark, tmp_path):
     batch = {r["doc_id"]: r["spans"]
              for r in extract(spark.read.parquet(in_dir)).collect()}
     assert streamed == batch
+
+
+def test_incremental_mega_doc_route_releases_cache(spark, tmp_path,
+                                                   monkeypatch):
+    """A micro-batch holding docs over FUSED_MAX_SPANS runs the declarative
+    plan, which persists its classified spans; process_batch must free that
+    cache after the batch's write, or a long-running stream keeps one more
+    cached frame per such micro-batch."""
+    import importlib
+    import os
+
+    from vlm_ocr_doc_reader_spark.datapipe.cache import (
+        outstanding_cached, release_all_cached)
+    extract_mod = importlib.import_module(
+        "vlm_ocr_doc_reader_spark.plans.extract")
+    in_dir = str(tmp_path / "in")
+    out_dir = str(tmp_path / "out")
+    os.makedirs(in_dir)
+    write_documents_parquet(
+        generate_documents(20, seed=5, mega_spans=300, include_edge=False),
+        f"{in_dir}/part.parquet")
+    monkeypatch.setattr(extract_mod, "FUSED_MAX_SPANS", 200)
+    release_all_cached()
+    run_incremental(spark, in_dir, out_dir, str(tmp_path / "state"),
+                    str(tmp_path / "ckpt"))
+    assert spark.read.parquet(out_dir).count() == 20
+    assert outstanding_cached() == []
 
 
 def test_incremental_refuses_legacy_partitioned_output(spark, tmp_path):
@@ -113,10 +145,14 @@ def test_streaming_kill_then_resume(spark, tmp_path):
         f"run_incremental(s, {in_dir!r}, {out_dir!r}, {state!r}, {ckpt!r})\n")
     proc = subprocess.Popen([sys.executable, "-c", code],
                             stdout=subprocess.DEVNULL,
-                            stderr=subprocess.DEVNULL, cwd="/root/repo")
+                            stderr=subprocess.DEVNULL, cwd=_REPO_ROOT,
+                            start_new_session=True)
     time.sleep(13)
     if proc.poll() is None:
-        proc.send_signal(signal.SIGKILL)
+        # the whole process group: the driver's JVM outlives a killed
+        # Python driver by ~2s and keeps writing checkpoint/output files,
+        # racing the resume below as a second writer
+        os.killpg(proc.pid, signal.SIGKILL)
         proc.wait()
 
     # resume with the same checkpoint+state in-process

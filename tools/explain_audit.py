@@ -35,7 +35,8 @@ def main():
     sf = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
     from vlm_ocr_doc_reader_spark.contract import QUERIES, STAGED_QUERIES
     from vlm_ocr_doc_reader_spark.sources.session import get_spark
-    from vlm_ocr_doc_reader_spark.plans.extract import extract
+    from vlm_ocr_doc_reader_spark.plans.extract import (
+        extract, extract_declarative)
     from vlm_ocr_doc_reader_spark.fixtures.generate import (
         generate_documents, write_documents_parquet)
     import tempfile, os
@@ -56,9 +57,9 @@ def main():
     write_documents_parquet(generate_documents(5, seed=1, mega_spans=50,
                                                include_edge=False), p)
     df = spark.read.parquet(p)
-    for strat in ("fused", "declarative"):
-        out += [f"## extract ({strat})", "", "```",
-                plan(extract(df, strategy=strat)).rstrip(), "```", ""]
+    for run in (extract, extract_declarative):
+        out += [f"## {run.__name__}", "", "```",
+                plan(run(df)).rstrip(), "```", ""]
     with open("PLANS.md", "w") as f:
         f.write("\n".join(out))
     print("wrote PLANS.md")

@@ -17,6 +17,7 @@ import sys
 
 from pyspark.sql import SparkSession
 
+from .datapipe.cache import release_cached
 from .plans.extract import extract
 from .plans.levels import resolve, scan, verify
 from .sources.session import get_spark
@@ -76,8 +77,13 @@ def _run_extract(spark: SparkSession, args) -> None:
     if args.state:
         docs = pending_docs(docs, spark, args.state, "extract")
     run_id = new_run_id()
-    out = extract(docs).withColumn("run_id", F.lit(run_id))
-    out.write.mode("append").parquet(args.output)
+    extracted = extract(docs)
+    try:
+        extracted.withColumn("run_id", F.lit(run_id)) \
+            .write.mode("append").parquet(args.output)
+    finally:
+        # the mega-doc route persists a classified frame (plans.extract)
+        release_cached(extracted)
     if args.state:
         processed = (spark.read.option("mergeSchema", "true")
                      .parquet(args.output)

@@ -1891,7 +1891,7 @@ def _derived_spans(spark, sf_dir):
 
 
 def q_extract_pipeline(spark, sf_dir):
-    """Full nested extraction pipeline (default fused strategy:
+    """Full nested extraction pipeline (``extract``, the Arrow kernel:
     classify+order+assemble in one Arrow stage), flattened via posexplode so
     the gate canonicalizer can hash it; oracle = the same extract_flat SQL
     (empty docs contribute zero exploded rows on both sides)."""

@@ -65,9 +65,9 @@ def order_kept(kept: List[dict]) -> List[OutSpan]:
     ``kept``: dicts with kind, text (cleaned), media_ref (None-normalized),
     offset (int), bbox (tuple|None), anchors (list) — MUST already be
     offset-sorted and classification-filtered.  This is the single
-    implementation of ordering semantics: the oracle and every fused Spark
-    strategy (scalar and vectorized) call THIS function, so the per-doc
-    stage cannot drift between them."""
+    implementation of ordering semantics: the oracle and the Arrow kernel
+    (``operators.fused``, for its slow docs) call THIS function, so the
+    per-doc stage cannot drift between them."""
     if not kept:
         return []
 

@@ -1,7 +1,7 @@
-"""Fused per-document extraction (scale/throughput path).
+"""Fused per-document extraction: the Arrow kernel.
 
-The default path, ``fused_extract_rows``, is a zero-shuffle ``mapInArrow``
-over the whole-document rows the input table already holds:
+``fused_extract_rows`` is a zero-shuffle ``mapInArrow`` over the
+whole-document rows the input table already holds:
 
     scan -> Arrow batch -> _extract_arrow_batch (Arrow kernel) -> write
 
@@ -14,103 +14,17 @@ bbox cover for XY-cut) go through the shared pure-Python rules
 (`spec.xy_cut_order`, ``oracle.order_kept``).  Golden, adversarial and
 strategy-equality tests hold it to the oracle.  A mega doc is one row of
 one Arrow batch; ``plans.extract.extract`` routes docs above
-``fused_max_spans`` to the salted declarative path instead.
-
-The grouped ``applyInPandas`` forms below (``fused_extract_raw`` for
-pre-exploded spans, ``fused_extract_nested``, ``fused_reconcile_order``)
-shuffle once by doc_id and are not on the default path.
+``FUSED_MAX_SPANS`` to the salted declarative path instead.
 """
 
 from __future__ import annotations
 
-from typing import Iterable
-
-import pandas as pd
 from pyspark.sql import DataFrame
 
 from ..extraction import spec
 
-_OUT_SCHEMA = ("doc_id string, kind string, text string, media_ref string, "
-               "order int")
-
-
-def _extract_one_doc(pdf: pd.DataFrame) -> pd.DataFrame:
-    """One document's kept spans -> ordered output spans.
-
-    Input columns: doc_id, kind, cleaned, media_ref, offset, anchors,
-    bx0..by1 (nullable).  Mirrors oracle.extract_doc exactly from the
-    post-classification point on.
-    """
-    pdf = pdf.sort_values("offset").reset_index(drop=True)
-    n = len(pdf)
-    kinds = pdf["kind"].tolist()
-    offsets = pdf["offset"].tolist()
-    media_refs = pdf["media_ref"].tolist()
-    anchors = pdf["anchors"].tolist()
-
-    # reading rank: XY-cut when every span has a bbox, else offset
-    if n and pdf["bx0"].notna().all():
-        boxes = list(zip(pdf["bx0"].astype(int), pdf["by0"].astype(int),
-                         pdf["bx1"].astype(int), pdf["by1"].astype(int)))
-        perm = spec.xy_cut_order(boxes)
-        rank = [0] * n
-        for r, i in enumerate(perm):
-            rank[i] = r
-    else:
-        rank = offsets
-
-    media_first: dict = {}
-    for i in range(n):
-        if kinds[i] in ("image", "table") and media_refs[i] not in media_first:
-            media_first[media_refs[i]] = i
-    claims: dict = {}
-    for i in range(n):
-        if kinds[i] in ("image", "table"):
-            continue
-        for pos, ref in enumerate(anchors[i] if anchors[i] is not None else ()):
-            if ref in media_first:
-                cand = (rank[i], pos)
-                if ref not in claims or cand < claims[ref]:
-                    claims[ref] = cand
-
-    def key(i: int):
-        if kinds[i] in ("image", "table"):
-            c = claims.get(media_refs[i])
-            if c is not None and media_first[media_refs[i]] == i:
-                return (c[0], 1, c[1], offsets[i])
-        return (rank[i], 0, 0, offsets[i])
-
-    order = sorted(range(n), key=key)
-    out = pdf.iloc[order][["doc_id", "kind", "cleaned", "media_ref"]].copy()
-    out.columns = ["doc_id", "kind", "text", "media_ref"]
-    out["order"] = range(n)
-    return out
-
-
 _NESTED_SCHEMA = ("doc_id string, spans array<struct<kind:string,"
                   "text:string,media_ref:string,order:int>>")
-
-
-def _oracle_one_doc(pdf: pd.DataFrame) -> pd.DataFrame:
-    """One document's RAW spans -> (doc_id, spans) by running the shared
-    single-node extraction (`extraction.oracle.extract_doc`) on the group.
-    Zero-drift by construction: the distributed path and the golden oracle
-    are the same function.
-
-    Arrow hands nullable int offsets to pandas as float NaN — map those back
-    to None so extract_doc's quarantine (not a float-cast crash) handles
-    them, exactly as the row-wise strategies do."""
-    from ..extraction.oracle import extract_doc
-    pdf = pdf.sort_values("offset")
-    offsets = [None if pd.isna(o) else int(o) for o in pdf["offset"]]
-    spans = list(zip(pdf["kind"].tolist(), pdf["text"].tolist(),
-                     pdf["media_ref"].tolist(), offsets))
-    out = extract_doc(spans)
-    return pd.DataFrame({
-        "doc_id": [pdf["doc_id"].iloc[0]],
-        "spans": [[{"kind": k, "text": t, "media_ref": m, "order": o}
-                   for k, t, m, o in out]],
-    })
 
 
 # --- RE2-safe twins of the spec regexes (Arrow compute kernels run RE2,
@@ -416,90 +330,3 @@ def fused_extract_rows(documents: DataFrame) -> DataFrame:
 
     return documents.select("doc_id", "spans").mapInArrow(
         batches, schema=_NESTED_SCHEMA)
-
-
-def fused_extract_rows_scalar(documents: DataFrame) -> DataFrame:
-    """Row-at-a-time reference form of ``fused_extract_rows``: calls the
-    scalar golden oracle per document.  Kept as the drift guard the
-    vectorized default is tested against (test_strategies_equal) and as the
-    fallback while debugging batch-shape issues."""
-    from ..extraction.oracle import extract_doc
-
-    def batches(it: "Iterable[pd.DataFrame]"):
-        for pdf in it:
-            out_spans = []
-            for spans in pdf["spans"]:
-                if spans is None:
-                    out_spans.append([])
-                    continue
-                lst = [(s["kind"], s["text"], s["media_ref"], s["offset"])
-                       for s in spans]
-                out = extract_doc(lst)
-                out_spans.append(
-                    [{"kind": k, "text": t, "media_ref": m, "order": o}
-                     for k, t, m, o in out])
-            yield pd.DataFrame({"doc_id": pdf["doc_id"],
-                                "spans": out_spans})
-
-    return documents.select("doc_id", "spans").mapInPandas(
-        batches, schema=_NESTED_SCHEMA)
-
-
-def fused_extract_raw(raw_spans: DataFrame) -> DataFrame:
-    """(doc_id, kind, text, media_ref, offset) RAW -> (doc_id, spans).
-
-    The throughput plan: one cheap JVM projection+prefilter (boilerplate and
-    link kinds drop row-wise before the exchange — same outcome as the full
-    classifier for those kinds, so the shuffle only carries candidate
-    spans), ONE hash exchange on doc_id, one grouped Arrow stage running the
-    shared per-doc extraction.  All heavy work is in the embarrassingly-
-    parallel grouped stage, which is what scales linearly with cores.
-
-    Contract repair: a doc whose spans are ALL pruned loses its group (no
-    input rows -> no output row), so the distinct doc_id set is unioned back
-    with empty span arrays — same (doc_id, empty spans) contract as the
-    fused-rows and declarative strategies (tested in test_strategies_equal).
-    The distinct is a narrow one-column agg, cheap next to the grouped stage.
-    """
-    from pyspark.sql import functions as F
-    pruned = raw_spans.filter(
-        F.col("kind").isNull() | ~F.col("kind").isin("boilerplate", "link"))
-    out = (pruned.groupBy("doc_id")
-           .applyInPandas(_oracle_one_doc, schema=_NESTED_SCHEMA))
-    ids = raw_spans.select("doc_id").distinct()
-    missing = (ids.join(out.select("doc_id"), "doc_id", "left_anti")
-               .withColumn(
-                   "spans",
-                   F.array().cast("array<struct<kind:string,text:string,"
-                                  "media_ref:string,order:int>>")))
-    return out.unionByName(missing)
-
-
-def _extract_one_doc_nested(pdf: pd.DataFrame) -> pd.DataFrame:
-    out = _extract_one_doc(pdf)
-    spans = [{"kind": k, "text": t, "media_ref": m, "order": o}
-             for k, t, m, o in zip(out["kind"], out["text"],
-                                   out["media_ref"], out["order"])]
-    return pd.DataFrame({"doc_id": [pdf["doc_id"].iloc[0]],
-                         "spans": [spans]})
-
-
-def fused_extract_nested(kept: DataFrame) -> DataFrame:
-    """(classified kept spans) -> (doc_id, spans) in ONE grouped Arrow
-    stage — ordering, reconciliation, and assembly fused per document."""
-    cols = ["doc_id", "kind", "cleaned", "media_ref", "offset", "anchors",
-            "bx0", "by0", "bx1", "by1"]
-    return (kept.select(*cols)
-            .groupBy("doc_id")
-            .applyInPandas(_extract_one_doc_nested, schema=_NESTED_SCHEMA))
-
-
-def fused_reconcile_order(kept: DataFrame) -> DataFrame:
-    """(classified kept spans) -> flat ordered spans, one grouped Arrow
-    stage.  Columns consumed: doc_id, kind, cleaned, media_ref, offset,
-    anchors, bx0, by0, bx1, by1."""
-    cols = ["doc_id", "kind", "cleaned", "media_ref", "offset", "anchors",
-            "bx0", "by0", "bx1", "by1"]
-    return (kept.select(*cols)
-            .groupBy("doc_id")
-            .applyInPandas(_extract_one_doc, schema=_OUT_SCHEMA))

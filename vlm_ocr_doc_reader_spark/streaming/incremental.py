@@ -18,6 +18,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ..datapipe.cache import release_cached
 from ..plans.extract import extract
 from ..state.manifest import check_output_layout, commit_phase, pending_docs
 
@@ -27,8 +28,7 @@ DOCS_SCHEMA = ("doc_id string, spans array<struct<kind:string,text:string,"
 
 def run_incremental(spark: SparkSession, input_dir: str, output_dir: str,
                     state_dir: str, checkpoint_dir: str,
-                    available_now: bool = True,
-                    fused_max_spans: int | None = 100_000):
+                    available_now: bool = True):
     """Stream documents from ``input_dir`` through extraction into
     ``output_dir`` with manifest commits per micro-batch.  Returns the
     streaming query (already awaited when ``available_now``).
@@ -38,11 +38,10 @@ def run_incremental(spark: SparkSession, input_dir: str, output_dir: str,
     extract path, applied up front so no micro-batch ever appends a flat
     file into a directory partition discovery would then reject.
 
-    ``fused_max_spans``: forwarded to :func:`extract`.  The default keeps
-    the mega-doc safety routing, which costs one extra JVM-only probe scan
-    of each micro-batch; pass ``None`` when the landing data is
-    pre-validated (size-bounded upstream) to keep each batch a single pure
-    Arrow map."""
+    Each micro-batch runs :func:`extract`, so it pays that function's
+    mega-doc probe (one JVM-only scan) and, when a doc is over
+    ``FUSED_MAX_SPANS``, frees the declarative side's cache after the
+    batch's output is written."""
     check_output_layout(output_dir)
 
     def process_batch(batch: DataFrame, batch_id: int) -> None:
@@ -57,9 +56,12 @@ def run_incremental(spark: SparkSession, input_dir: str, output_dir: str,
         run_id = new_run_id()
         # run_id as a normal column (one flat layout shared with legacy
         # outputs — see cli._run_extract)
-        out = extract(todo, fused_max_spans=fused_max_spans) \
-            .withColumn("run_id", F.lit(run_id))
-        out.write.mode("append").parquet(output_dir)
+        extracted = extract(todo)
+        try:
+            extracted.withColumn("run_id", F.lit(run_id)) \
+                .write.mode("append").parquet(output_dir)
+        finally:
+            release_cached(extracted)
         committed = (spark.read.option("mergeSchema", "true")
                      .parquet(output_dir)
                      .filter(F.col("run_id") == run_id).drop("run_id"))
