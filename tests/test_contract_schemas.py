@@ -25,7 +25,7 @@ def test_every_query_is_flat_and_oracled(spark):
 def test_rotation_rule_window_coverage():
     """The institutionalized gate-window rule (contract.py QUERIES note):
     the driver snapshots the FIRST 50 entries, so the union of the last
-    recorded round's rows and the current window must cover every
+    two recorded rounds' rows and the current window must cover every
     registry query — nothing ships two rounds on local-only green."""
     import glob
     import json

@@ -4585,83 +4585,27 @@ FROM best WHERE ra = 1 AND rb = 1
 # N's first-50 window must cover every registry entry — nothing ships two
 # rounds on local-only green.  Registry size must stay <= 100 (2x window).
 #
-# R7 STATE (this round's flip, VERDICT r6 item 1): r6 left 49 entries
-# without an r6 row + 11 staged flips = 60 window demand > 50, so the
-# flip CONSOLIDATED first — 18 single-purpose entries merged into 7
-# union-with-tag suites (scalar_suite, agg_suite, membership_joins,
-# norm_dedupe, sample_suite, levels_suite, extract_strategies) and
-# lsh_topk was absorbed by lsh_multiprobe (n_flip=0 equivalence proven in
-# tests/test_multiprobe.py).  Result: window demand 49 (7 suites + 11
-# flips + winsorize + 30 carried entries), registry 96.  Slot 50 holds
-# the r6-green flagship extract_text (free re-validation).  Every entry
-# BELOW the window marker holds a green r6 driver row and is byte-frozen
-# this round (including its oracle — the \s sweep touched window oracles
-# only; frozen oracles are covered by the gate-table \x0B pin in
-# tests/test_contract_schemas.py).
+# WINDOW STATE (last recorded round: r08).  r7 consolidated 18
+# single-purpose entries into 7 union-with-tag suites (scalar_suite,
+# agg_suite, membership_joins, norm_dedupe, sample_suite, levels_suite,
+# extract_strategies), and lsh_multiprobe absorbed lsh_topk (n_flip=0
+# equivalence proven in tests/test_multiprobe.py): registry 96.  Round 8
+# ran with the r7 window unchanged (CORRECTNESS_r08 holds the same 50
+# rows as CORRECTNESS_r07), so the 46 entries below the r7 window last
+# had driver rows in r06.  The window below is the rotation the r8 plan
+# called for: (1) those 46 re-entrants under rule (a); (2)
+# extract_strategies, whose code changed after r08 (plans/extract.py and
+# operators/fused.py were rewritten); (3) three slack slots, the
+# flagship extract_text first.  Every entry below the window marker holds
+# a green driver row in both r07 and r08 and is unchanged (code AND
+# oracle) since r08.  tests/test_contract_schemas.py (rotation coverage)
+# and tests/test_staged_contract.py (changed-since-r08 pin) enforce it.
 # ===========================================================================
 
 QUERIES = {
-    # ---- r7 window (first 50) ------------------------------------------
-    # (1) consolidation suites — new entries, must take a row
-    "scalar_suite": q_scalar_suite,
-    "agg_suite": q_agg_suite,
-    "membership_joins": q_membership_joins,
-    "norm_dedupe": q_norm_dedupe,
-    "sample_suite": q_sample_suite,
-    "levels_suite": q_levels_suite,
-    "extract_strategies": q_extract_strategies,
-    # (2) r6-staged flips — first official driver rows
-    "extract_diff": q_extract_diff,
-    "hybrid_search": q_hybrid_search,
-    "lsh_multiprobe": q_lsh_multiprobe,
-    "rake": q_rake,
-    "drift_report": q_drift_report,
-    "gopher_report": q_gopher_report,
-    "url_report": q_url_report,
-    "interleaved_report": q_interleaved_report,
-    "substring_dedup": q_substring_dedup,
-    "semdedup": q_semdedup,
-    "dsir_select": q_dsir_select,
-    # (3) behavior changed in r6 AFTER the window froze (quantile-bound
-    # rounding hardening, commit 88c0b82) — mandatory front-load
-    "winsorize": q_winsorize,
-    # (4) every remaining entry with no r6 driver row
-    "consistency": q_consistency,
-    "header_parse": q_header_parse,
-    "windowed_counts": q_windowed_counts,
-    "simhash": q_simhash,
-    "media_features": q_media_features,
-    "lsh_topk_multiband": q_lsh_topk_multiband,
-    "entity_id": q_entity_id,
-    "ordered_concat": q_ordered_concat,
-    "pricing_summary": q_pricing_summary,
-    "dim_join_rollup": q_dim_join_rollup,
-    "sessionize": q_sessionize,
-    "rollup_cube": q_rollup_cube,
-    "lm_score": q_lm_score,
-    "corpus_report": q_corpus_report,
-    "bm25": q_bm25,
-    "domain_cap": q_domain_cap,
-    "rolling_stats": q_rolling_stats,
-    "decayed_sum": q_decayed_sum,
-    "scd2": q_scd2,
-    "containment": q_containment,
-    "bigram_pmi": q_bigram_pmi,
-    "bpe_pairs": q_bpe_pairs,
-    "incremental_dedup": q_incremental_dedup,
-    "curriculum": q_curriculum,
-    "quality_clf": q_quality_clf,
-    "corpus_diff": q_corpus_diff,
-    "key_skew": q_key_skew,
-    "density_classify": q_density_classify,
-    "unicode_norm": q_unicode_norm,
-    "passage_dedup": q_passage_dedup,
-    # (5) slot 50: r6-green flagship — free re-validation
-    "extract_text": q_extract_text,
-    # ================ driver window boundary (50) ========================
-    # everything below holds a GREEN r6 driver row and is unchanged
-    # (code AND oracle) this round; all re-enter the r8 window under
-    # rule (a) unless r7's rows go green first
+    # ---- next window (first 50) ----------------------------------------
+    # (1) no row in r07 or r08 (last driver rows in r06): re-enter under
+    # rule (a)
     "time_rollup": q_time_rollup,
     "truncate_chunk": q_truncate_chunk,
     "bigram_lm": q_bigram_lm,
@@ -4708,10 +4652,69 @@ QUERIES = {
     "full_description": q_full_description,
     "pii_redact": q_pii_redact,
     "repetition": q_repetition,
+    # (2) changed since r08: q_extract_pipeline / q_extract_flat run
+    # plans.extract.extract / extract_flat, both rewritten after r08
+    "extract_strategies": q_extract_strategies,
+    # (3) slack: the flagship (free re-validation), the Levels suite
+    # (plans/levels.py builds on plans/extract.py) and the judged
+    # span-sequence invariant at scale
+    "extract_text": q_extract_text,
+    "levels_suite": q_levels_suite,
+    "extract_diff": q_extract_diff,
+    # ================ driver window boundary (50) ========================
+    # everything below holds a GREEN driver row in both r07 and r08 and
+    # is unchanged (code AND oracle) since r08
+    "scalar_suite": q_scalar_suite,
+    "agg_suite": q_agg_suite,
+    "membership_joins": q_membership_joins,
+    "norm_dedupe": q_norm_dedupe,
+    "sample_suite": q_sample_suite,
+    "hybrid_search": q_hybrid_search,
+    "lsh_multiprobe": q_lsh_multiprobe,
+    "rake": q_rake,
+    "drift_report": q_drift_report,
+    "gopher_report": q_gopher_report,
+    "url_report": q_url_report,
+    "interleaved_report": q_interleaved_report,
+    "substring_dedup": q_substring_dedup,
+    "semdedup": q_semdedup,
+    "dsir_select": q_dsir_select,
+    "winsorize": q_winsorize,
+    "consistency": q_consistency,
+    "header_parse": q_header_parse,
+    "windowed_counts": q_windowed_counts,
+    "simhash": q_simhash,
+    "media_features": q_media_features,
+    "lsh_topk_multiband": q_lsh_topk_multiband,
+    "entity_id": q_entity_id,
+    "ordered_concat": q_ordered_concat,
+    "pricing_summary": q_pricing_summary,
+    "dim_join_rollup": q_dim_join_rollup,
+    "sessionize": q_sessionize,
+    "rollup_cube": q_rollup_cube,
+    "lm_score": q_lm_score,
+    "corpus_report": q_corpus_report,
+    "bm25": q_bm25,
+    "domain_cap": q_domain_cap,
+    "rolling_stats": q_rolling_stats,
+    "decayed_sum": q_decayed_sum,
+    "scd2": q_scd2,
+    "containment": q_containment,
+    "bigram_pmi": q_bigram_pmi,
+    "bpe_pairs": q_bpe_pairs,
+    "incremental_dedup": q_incremental_dedup,
+    "curriculum": q_curriculum,
+    "quality_clf": q_quality_clf,
+    "corpus_diff": q_corpus_diff,
+    "key_skew": q_key_skew,
+    "density_classify": q_density_classify,
+    "unicode_norm": q_unicode_norm,
+    "passage_dedup": q_passage_dedup,
 }
 
 ORACLES = {
-    # r7 window
+    # keyed by name: the driver window follows QUERIES' order, not this
+    # dict's
     "scalar_suite": ORACLE_SCALAR_SUITE,
     "agg_suite": ORACLE_AGG_SUITE,
     "membership_joins": ORACLE_MEMBERSHIP,
@@ -4762,7 +4765,7 @@ ORACLES = {
     "unicode_norm": ORACLE_UNICODE_NORM,
     "passage_dedup": ORACLE_PASSAGE_DEDUP,
     "extract_text": oracle_extract_text(),
-    # frozen r6-green rows (oracles byte-identical to r6)
+    # the 46 re-entrants (no row in r07 or r08)
     "time_rollup": ORACLE_TIME_ROLLUP,
     "truncate_chunk": ORACLE_TRUNCATE_CHUNK,
     "bigram_lm": ORACLE_BIGRAM_LM,
@@ -4813,12 +4816,14 @@ ORACLES = {
 
 # Staging area: entries certified with the exact driver comparator
 # (check_contract.py --staged, tests/test_staged_contract.py) awaiting a
-# window slot.  The 11 r6-staged entries flipped into the registry above
-# this round.  R8 ARITHMETIC: the 46 entries below the r7 window marker
-# re-enter the r8 window under rule (a); 46 + the 3 staged flips below
-# = 49 demand against the 50-row window, leaving ONE slot of slack for
-# unplanned r8 changes — do NOT stage a 4th entry without consolidating.
-# Registry after the r8 flip: 99 <= 100.
+# window slot.  The 11 r6-staged entries flipped into the registry in r7.
+# The r8 plan was to flip the 3 below in beside the 46 re-entrants (49 of
+# 50 slots); round 8 ran with the r7 window unchanged and without that
+# flip.  The rotated window above spends its 50 slots on the 46
+# re-entrants, the changed extract_strategies and 3 slack entries, and
+# the registry is not growing this round, so these 3 stay staged.  A
+# later flip takes 3 window slots (the slack) and makes the registry
+# 99 <= 100 — do NOT stage a 4th entry without consolidating.
 STAGED_QUERIES: dict = {
     "pq_topk": q_pq_topk,
     "bloom_decontam": q_bloom_decontam,
