@@ -1,7 +1,6 @@
 """Fuzz: multiple random corpora (different seeds) must match the oracle
 exactly; CLI: end-to-end extract command over a tiny corpus."""
 
-import importlib
 import os
 
 import pytest
@@ -45,28 +44,42 @@ def test_cli_extract_end_to_end(spark, tmp_path):
     assert os.path.isdir(state)
 
 
-def test_cli_extract_mega_doc_route_releases_cache(spark, tmp_path,
-                                                   monkeypatch):
-    """Docs over FUSED_MAX_SPANS go through the declarative plan, which
-    persists its classified spans; the CLI must free that cache once the
-    output is written, or a long-lived session keeps one cached frame per
-    run that holds a mega doc."""
+def test_cli_extract_mega_doc_route_releases_cache(spark, tmp_path):
+    """Leak check: a CLI run over a corpus holding mega docs leaves no
+    cached frame behind, or a long-lived session would keep one per run.
+    Mega docs are where a persisted intermediate would be costliest."""
     from vlm_ocr_doc_reader_spark.datapipe.cache import (
         outstanding_cached, release_all_cached)
-    # the module, not the package's re-exported extract() function
-    extract_mod = importlib.import_module(
-        "vlm_ocr_doc_reader_spark.plans.extract")
     docs = generate_documents(20, seed=5, mega_spans=300, include_edge=False)
     inp = str(tmp_path / "in.parquet")
     out = str(tmp_path / "out")
     write_documents_parquet(docs, inp)
-    monkeypatch.setattr(extract_mod, "FUSED_MAX_SPANS", 200)
     release_all_cached()
     rc = cli_main(["extract", "--input", inp, "--output", out,
                    "--state", str(tmp_path / "state")])
     assert rc == 0
     assert spark.read.parquet(out).count() == 20
     assert outstanding_cached() == []
+
+
+def test_cli_resumed_extract_runs_four_jobs(spark, tmp_path, jobs_started):
+    """A resumed CLI extract is 4 Spark jobs: the input's schema read, the
+    pending anti-join's manifest broadcast, the output write and the
+    manifest commit.  No probe of the input before the write, no
+    footer-merge read of the output dir, no metrics append."""
+    docs = generate_documents(40, seed=6, mega_spans=200, include_edge=False)
+    half, full = str(tmp_path / "half.parquet"), str(tmp_path / "in.parquet")
+    out, state = str(tmp_path / "out"), str(tmp_path / "state")
+    write_documents_parquet(docs[:20], half)
+    write_documents_parquet(docs, full)
+    assert cli_main(["extract", "--input", half, "--output", out,
+                     "--state", state]) == 0
+    with jobs_started() as jobs:
+        rc = cli_main(["extract", "--input", full, "--output", out,
+                       "--state", state])
+    assert rc == 0
+    assert len(jobs) == 4
+    assert spark.read.parquet(out).count() == 40
 
 
 def test_cli_invalid_args_exit_code(tmp_path):

@@ -76,17 +76,38 @@ def test_mega_doc_salting_path(spark, corpus):
     assert a == b
 
 
-def test_single_100k_span_mega_doc(spark, tmp_path):
-    """One document at the 10^5-span ceiling must flow through the fused
-    path (one Arrow row) without memory incident and match the oracle."""
-    docs = generate_documents(1, seed=13, mega_spans=100_000,
-                              include_edge=False)
+def _media_mega(spans):
+    """Every 50th span becomes a media span whose anchor sits 30 spans
+    earlier, so the doc needs media reconciliation: the kernel's slow pool
+    (``oracle.order_kept``) orders it, not the offset-order fast path."""
+    spans = list(spans)
+    for i in range(49, len(spans), 50):
+        ref = f"img_m_{i}"
+        kind, text, _, off = spans[i - 30]
+        spans[i - 30] = (kind, f"{text} [[{ref}]]", None, off)
+        spans[i] = ("image", spans[i][1], ref, spans[i][3])
+    return spans
+
+
+@pytest.mark.parametrize("n_spans,slow", [(100_000, False), (150_000, True)],
+                         ids=["text", "media"])
+def test_single_100k_span_mega_doc(spark, tmp_path, n_spans, slow):
+    """One document at and above the 10^5-span scale flows through
+    ``extract`` (one Arrow row) without memory incident and matches the
+    oracle: a text doc on the kernel's fast path, and a 150k-span doc whose
+    media spans and anchors send it through the slow pool."""
+    doc_id, spans = generate_documents(1, seed=13, mega_spans=n_spans,
+                                       include_edge=False)[0]
+    if slow:
+        spans = _media_mega(spans)
     p = str(tmp_path / "mega.parquet")
-    write_documents_parquet(docs, p)
+    write_documents_parquet([(doc_id, spans)], p)
     out = extract(spark.read.parquet(p)).collect()
     assert len(out) == 1
-    golden = extract_doc(docs[0][1])
+    golden = extract_doc(spans)
     got = [(s["kind"], s["text"], s["media_ref"], s["order"])
            for s in out[0]["spans"]]
     assert got == [tuple(s) for s in golden]
     assert len(got) > 50_000
+    if slow:  # the media spans survive, so the doc took the slow pool
+        assert sum(g[0] == "image" for g in got) > 2_000

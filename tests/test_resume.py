@@ -293,3 +293,87 @@ def test_versioned_commit_one_row_per_processed_row(spark, tmp_path):
                  for r in read_manifest(spark, state_dir).collect())
     assert got == [("a", want["a"], 1), ("a", want["a"], 2),
                    ("b", want["b"], 0)]
+
+
+def test_commit_phase_runs_one_job(spark, tmp_path, jobs_started):
+    """A commit is ONE Spark job, the manifest write: the per-commit
+    counts are a view of the manifest (``read_metrics``), not a second
+    table appended by a second job."""
+    state_dir = str(tmp_path / "state")
+    processed = _processed_with_duplicate(spark)
+    with jobs_started() as jobs:
+        commit_phase(processed, spark, state_dir, "extract",
+                     run_id=new_run_id())
+    assert len(jobs) == 1
+    assert read_manifest(spark, state_dir).count() == 3
+
+
+def _halves(spark, corpus_path):
+    docs = spark.read.parquet(corpus_path)
+    half = docs.filter(docs.doc_id.substr(-1, 1).isin(*"02468"))
+    return docs, half, docs.subtract(half)
+
+
+def test_read_metrics_one_row_per_commit(spark, corpus_path, tmp_path):
+    """Two commits give two ``read_metrics`` rows, a null run_id included
+    (all rows of one commit share its ``ts``); their docs sum exactly to
+    the manifest's row count and their spans to its n_spans."""
+    import pyspark.sql.functions as F
+    state_dir = str(tmp_path / "state")
+    docs, half, rest = _halves(spark, corpus_path)
+    commit_phase(extract(half), spark, state_dir, "extract")
+    commit_phase(extract(rest), spark, state_dir, "extract",
+                 run_id=new_run_id())
+    rows = read_metrics(spark, state_dir).collect()
+    manifest = read_manifest(spark, state_dir)
+    assert len(rows) == 2
+    assert sorted(r["docs"] for r in rows) == sorted(
+        [half.count(), rest.count()])
+    assert sum(r["docs"] for r in rows) == manifest.count() == docs.count()
+    assert sum(r["spans"] for r in rows) == \
+        manifest.agg(F.sum("n_spans")).collect()[0][0]
+    assert sorted(r["run_id"] is None for r in rows) == [False, True]
+
+
+def test_legacy_metrics_dir_changes_nothing(spark, corpus_path, tmp_path):
+    """State dirs written before the metrics view hold a ``metrics/``
+    table next to the manifest.  It is not read, and a CLI resume over such
+    a state dir recomputes nothing and commits no doc twice."""
+    import datetime
+    import shutil
+
+    from vlm_ocr_doc_reader_spark.cli import main
+    docs, half, _ = _halves(spark, corpus_path)
+    inp_half = str(tmp_path / "half.parquet")
+    half.write.parquet(inp_half)
+    out_dir, state_dir = str(tmp_path / "out"), str(tmp_path / "state")
+    assert main(["extract", "--input", inp_half, "--output", out_dir,
+                 "--state", state_dir]) == 0
+    clean_state = str(tmp_path / "clean_state")
+    shutil.copytree(state_dir, clean_state)
+    legacy = os.path.join(state_dir, "metrics")
+    spark.createDataFrame(
+        [("extract", 0, 999, 9999, datetime.datetime(2020, 1, 1))],
+        "phase string, partition_id int, docs long, spans long, "
+        "ts timestamp").write.parquet(legacy)
+    legacy_files = sorted(os.listdir(legacy))
+
+    assert sorted(read_metrics(spark, state_dir).collect()) == \
+        sorted(read_metrics(spark, clean_state).collect())
+    n_half = half.count()
+    assert pending_docs(docs, spark, state_dir, "extract").count() == \
+        docs.count() - n_half
+
+    assert main(["extract", "--input", corpus_path, "--output", out_dir,
+                 "--state", state_dir]) == 0
+    n = docs.count()
+    manifest = read_manifest(spark, state_dir)
+    assert manifest.count() == manifest.select("doc_id").distinct().count() \
+        == n
+    committed = read_committed(spark, out_dir, state_dir, "extract")
+    assert committed.count() == committed.select("doc_id").distinct() \
+        .count() == n
+    assert spark.read.parquet(out_dir).count() == n  # nothing recomputed
+    assert sorted(r["docs"] for r in read_metrics(spark, state_dir)
+                  .collect()) == sorted([n_half, n - n_half])
+    assert sorted(os.listdir(legacy)) == legacy_files

@@ -17,7 +17,6 @@ import sys
 
 from pyspark.sql import SparkSession
 
-from .datapipe.cache import release_cached
 from .plans.extract import extract
 from .plans.levels import resolve, scan, verify
 from .sources.session import get_spark
@@ -65,9 +64,16 @@ def _run_extract(spark: SparkSession, args) -> None:
     subdirectories — one flat layout lets old and new files coexist
     (``read_committed`` merge-reads both).  A directory already written by
     the old partitioned layout is refused with a migration message rather
-    than corrupted in place."""
+    than corrupted in place.
+
+    A resumed run is 4 Spark jobs: the input's schema read, the output write
+    (the pending anti-join's manifest broadcast, then the write) and the
+    manifest commit.  Building the ``extract`` plan runs none, and the
+    run's rows are read back for the commit with their known schema, so no
+    footer-merge job runs over the growing output directory."""
     from pyspark.sql import functions as F
 
+    from .operators.fused import RUN_OUTPUT_SCHEMA
     from .state.manifest import check_output_layout, new_run_id
     try:
         check_output_layout(args.output)
@@ -77,15 +83,10 @@ def _run_extract(spark: SparkSession, args) -> None:
     if args.state:
         docs = pending_docs(docs, spark, args.state, "extract")
     run_id = new_run_id()
-    extracted = extract(docs)
-    try:
-        extracted.withColumn("run_id", F.lit(run_id)) \
-            .write.mode("append").parquet(args.output)
-    finally:
-        # the mega-doc route persists a classified frame (plans.extract)
-        release_cached(extracted)
+    extract(docs).withColumn("run_id", F.lit(run_id)) \
+        .write.mode("append").parquet(args.output)
     if args.state:
-        processed = (spark.read.option("mergeSchema", "true")
+        processed = (spark.read.schema(RUN_OUTPUT_SCHEMA)
                      .parquet(args.output)
                      .filter(F.col("run_id") == run_id).drop("run_id"))
         commit_phase(processed, spark, args.state, "extract", run_id=run_id)

@@ -13,8 +13,8 @@ kernels; only documents that need reading-order work (media claims, full
 bbox cover for XY-cut) go through the shared pure-Python rules
 (`spec.xy_cut_order`, ``oracle.order_kept``).  Golden, adversarial and
 strategy-equality tests hold it to the oracle.  A mega doc is one row of
-one Arrow batch; ``plans.extract.extract`` routes docs above
-``FUSED_MAX_SPANS`` to the salted declarative path instead.
+one Arrow batch, as it is one row of the scan; ``plans.extract.extract`` is
+this map for every document, whatever its size.
 """
 
 from __future__ import annotations
@@ -25,6 +25,10 @@ from ..extraction import spec
 
 _NESTED_SCHEMA = ("doc_id string, spans array<struct<kind:string,"
                   "text:string,media_ref:string,order:int>>")
+# the extract command's output files: the nested rows plus the run that
+# wrote them.  Reading them back with this schema (not mergeSchema) costs
+# no footer-merge job; legacy files without run_id read it as null.
+RUN_OUTPUT_SCHEMA = _NESTED_SCHEMA + ", run_id string"
 
 
 # --- RE2-safe twins of the spec regexes (Arrow compute kernels run RE2,

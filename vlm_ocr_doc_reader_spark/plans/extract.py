@@ -1,6 +1,8 @@
 """End-to-end extraction plan: documents(doc_id, spans) -> ordered spans.
 
-Pipeline (SURVEY §3.6):
+``extract`` is the Arrow kernel's zero-shuffle map (``operators.fused``).
+``extract_declarative`` is the Catalyst-visible reference plan
+(SURVEY §3.6):
   read documents -> posexplode spans -> classify (Catalyst, M1)
   -> keep filter -> XY-cut rank for layout docs (applyInPandas, W8)
   -> media-anchor reconciliation + order (joins/windows, M2)
@@ -18,6 +20,7 @@ from pyspark.sql import functions as F
 from ..datapipe.cache import attach_cached_deps
 from ..operators.assemble import assemble_spans, with_empty_docs
 from ..operators.classify import classify
+from ..operators.fused import fused_extract_rows
 from ..operators.ordering import assign_rank
 from ..operators.reconcile import reconcile_and_order
 
@@ -99,39 +102,18 @@ def extract_declarative(documents: DataFrame) -> DataFrame:
         with_empty_docs(assemble_spans(flat), documents), flat)
 
 
-# The kernel ships each document to a Python worker as ONE Arrow row, so a
-# document bigger than worker memory would OOM the stage; docs with more
-# spans than this go to ``extract_declarative`` instead.
-FUSED_MAX_SPANS = 100_000
-
-
 def extract(documents: DataFrame) -> DataFrame:
     """Nested judged output: (doc_id, spans array<struct<kind,text,media_ref,order>>),
     one row per input doc (empty array when nothing survives).
 
-    One zero-shuffle ``mapInArrow`` over the whole-document rows: the Arrow
-    kernel (``operators.fused``) classifies, cleans and orders each batch of
-    documents.  Docs with more than ``FUSED_MAX_SPANS`` spans are routed to
-    ``extract_declarative`` at runtime and the results unioned — a decision
-    made here, not by the caller.  The probe is one JVM-only scan with
-    limit-1 early exit; when no doc exceeds the threshold the plan stays the
-    pure zero-shuffle Arrow map.  On the routed plan the result carries the
-    declarative side's cached handle: free it with ``release_cached`` after
-    writing.
+    ``operators.fused.fused_extract_rows``: one zero-shuffle ``mapInArrow``
+    over the whole-document rows, in which the Arrow kernel classifies,
+    cleans and orders each batch of documents.  Building the plan starts no
+    Spark job.  A document of any size is one Arrow row: the scan already
+    holds each input row whole in the JVM, and any plan holds each output
+    row whole, so the kernel adds no per-row ceiling of its own
+    (``test_single_100k_span_mega_doc`` runs a 150k-span doc through the
+    slow pool).  ``extract_declarative`` is the Catalyst-visible reference
+    plan, held equal to this one by the tests.
     """
-    # rows are whole documents -> zero-shuffle map; rows map 1:1 so no
-    # empty-doc repair join is needed either
-    from ..operators.fused import fused_extract_rows
-    # probe only the offset leaf of the span struct: array length is the
-    # same whichever subfield is counted, and nested-schema pruning then
-    # skips the text payload — measured 6.5x cheaper than size(spans) on
-    # the bench corpus
-    big_cond = F.coalesce(
-        F.size(F.col("spans").getField("offset"))
-        > F.lit(FUSED_MAX_SPANS), F.lit(False))
-    if documents.filter(big_cond).isEmpty():
-        return fused_extract_rows(documents)
-    small = documents.filter(~big_cond)
-    big = extract_declarative(documents.filter(big_cond))
-    return attach_cached_deps(
-        fused_extract_rows(small).unionByName(big), big)
+    return fused_extract_rows(documents)

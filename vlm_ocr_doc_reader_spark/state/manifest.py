@@ -6,9 +6,12 @@ pending work from it on every call, so a rerun "does only what is not yet
 done" (decision_001_resolution_levels.md:48).  At 10^12 docs that state
 machine becomes an append-only manifest table:
 
-  (doc_id string, phase string, content_hash string, n_spans long, ts timestamp)
+  (doc_id string, phase string, content_hash string, n_spans long,
+   ts timestamp, run_id string)
 
-plus a per-partition metrics side table (lineage + throughput).  A restarted
+The table is its own changelog: each commit's rows share one ``run_id`` and
+one ``ts``, so per-commit lineage and throughput (``read_metrics``) are a
+grouping of it, not a second table written by a second job.  A restarted
 job anti-joins its input against the manifest (J7 — the backbone of
 resumability) and processes only the remainder; outputs are written
 partitioned, so completed work is never recomputed or rewritten.
@@ -29,8 +32,6 @@ from pyspark.sql import functions as F
 
 MANIFEST_SCHEMA = ("doc_id string, phase string, content_hash string, "
                    "n_spans long, ts timestamp, run_id string")
-METRICS_SCHEMA = ("phase string, partition_id int, docs long, spans long, "
-                  "ts timestamp")
 
 
 def manifest_path(state_dir: str) -> str:
@@ -49,10 +50,6 @@ def recover_manifest(state_dir: str) -> bool:
         os.rename(old, path)
         return True
     return False
-
-
-def metrics_path(state_dir: str) -> str:
-    return os.path.join(state_dir, "metrics")
 
 
 def _read_or_empty(spark: SparkSession, path: str, schema: str) -> DataFrame:
@@ -109,10 +106,11 @@ def new_run_id() -> str:
 def commit_phase(processed: DataFrame, spark: SparkSession, state_dir: str,
                  phase: str, input_docs: DataFrame | None = None,
                  run_id: str | None = None) -> None:
-    """Append (doc_id, phase, hash, n_spans, ts, run_id) for processed docs,
-    plus a per-partition metrics row (docs/spans counts + commit timestamp) —
-    the reference's incremental save (auto_save=True,
-    core/processor.py:179-181) generalized to partition granularity.
+    """Append (doc_id, phase, hash, n_spans, ts, run_id) for processed docs
+    — the reference's incremental save (auto_save=True,
+    core/processor.py:179-181) generalized to run granularity.  The commit
+    is ONE Spark job, the manifest write; ``read_metrics`` derives the
+    per-commit counts from these rows.
 
     Manifest rows come from ONE projection of ``processed`` — one row per
     processed row, one scan of the run's output, no self-join on doc_id.
@@ -143,18 +141,18 @@ def commit_phase(processed: DataFrame, spark: SparkSession, state_dir: str,
                              F.lit(run_id).cast("string").alias("run_id"))
     entries.write.mode("append").parquet(manifest_path(state_dir))
 
-    metrics = (processed
-               .select(F.spark_partition_id().alias("partition_id"),
-                       n_spans.alias("nsp"))
-               .groupBy("partition_id")
-               .agg(F.count("*").alias("docs"), F.sum("nsp").alias("spans"))
-               .select(F.lit(phase).alias("phase"), "partition_id", "docs",
-                       "spans", F.current_timestamp().alias("ts")))
-    metrics.write.mode("append").parquet(metrics_path(state_dir))
-
 
 def read_metrics(spark: SparkSession, state_dir: str) -> DataFrame:
-    return _read_or_empty(spark, metrics_path(state_dir), METRICS_SCHEMA)
+    """One row per commit: (phase, run_id, ts, docs, spans), a view of the
+    manifest.  ``current_timestamp()`` is fixed within one query, so every
+    row of a commit shares its ``ts`` and a commit stays one group even when
+    ``run_id`` is null.  After ``compact_manifest`` it counts only the
+    retained rows.  A ``metrics/`` directory left by older versions next to
+    the manifest is not read."""
+    return (read_manifest(spark, state_dir)
+            .groupBy("phase", "run_id", "ts")
+            .agg(F.count("*").alias("docs"),
+                 F.sum("n_spans").alias("spans")))
 
 
 def check_output_layout(output_dir: str) -> None:

@@ -18,7 +18,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-from ..datapipe.cache import release_cached
+from ..operators.fused import RUN_OUTPUT_SCHEMA
 from ..plans.extract import extract
 from ..state.manifest import check_output_layout, commit_phase, pending_docs
 
@@ -38,10 +38,9 @@ def run_incremental(spark: SparkSession, input_dir: str, output_dir: str,
     extract path, applied up front so no micro-batch ever appends a flat
     file into a directory partition discovery would then reject.
 
-    Each micro-batch runs :func:`extract`, so it pays that function's
-    mega-doc probe (one JVM-only scan) and, when a doc is over
-    ``FUSED_MAX_SPANS``, frees the declarative side's cache after the
-    batch's output is written."""
+    Each micro-batch writes its :func:`extract` output (building that plan
+    starts no Spark job), reads its own run back with the known output
+    schema (no footer-merge job) and commits the manifest in one job."""
     check_output_layout(output_dir)
 
     def process_batch(batch: DataFrame, batch_id: int) -> None:
@@ -56,13 +55,9 @@ def run_incremental(spark: SparkSession, input_dir: str, output_dir: str,
         run_id = new_run_id()
         # run_id as a normal column (one flat layout shared with legacy
         # outputs — see cli._run_extract)
-        extracted = extract(todo)
-        try:
-            extracted.withColumn("run_id", F.lit(run_id)) \
-                .write.mode("append").parquet(output_dir)
-        finally:
-            release_cached(extracted)
-        committed = (spark.read.option("mergeSchema", "true")
+        extract(todo).withColumn("run_id", F.lit(run_id)) \
+            .write.mode("append").parquet(output_dir)
+        committed = (spark.read.schema(RUN_OUTPUT_SCHEMA)
                      .parquet(output_dir)
                      .filter(F.col("run_id") == run_id).drop("run_id"))
         commit_phase(committed, spark, state_dir, "extract", run_id=run_id)
