@@ -295,6 +295,42 @@ def test_versioned_commit_one_row_per_processed_row(spark, tmp_path):
                    ("b", want["b"], 0)]
 
 
+def test_read_committed_view_starts_no_job(spark, corpus_path, tmp_path,
+                                          jobs_started):
+    """The committed view reads the output with its known schema: building
+    it starts no Spark job (no footer merge over a directory that grows
+    with every run).  Legacy files without ``run_id`` read it as null and
+    keep the doc_id-only check, alone in a directory or next to tagged
+    runs; an orphan run (written, never committed) stays out."""
+    import pyspark.sql.functions as F
+    state_dir = str(tmp_path / "state")
+    out_dir = str(tmp_path / "out")
+    docs, half, rest = _halves(spark, corpus_path)
+    n_half = half.count()
+
+    extract(half).write.mode("append").parquet(out_dir)      # legacy era
+    commit_phase(extract(half), spark, state_dir, "extract")
+    with jobs_started() as jobs:
+        legacy = read_committed(spark, out_dir, state_dir, "extract")
+    assert jobs == []
+    assert legacy.count() == n_half
+    assert legacy.filter(F.col("run_id").isNotNull()).count() == 0
+
+    for committed_run in (False, True):
+        run = new_run_id()
+        out = extract(rest).withColumn("run_id", F.lit(run))
+        out.write.mode("append").parquet(out_dir)
+        if committed_run:
+            commit_phase(out.drop("run_id"), spark, state_dir, "extract",
+                         run_id=run)
+    with jobs_started() as jobs:
+        committed = read_committed(spark, out_dir, state_dir, "extract")
+    assert jobs == []
+    assert committed.count() == docs.count()
+    assert committed.select("doc_id").distinct().count() == docs.count()
+    assert set(committed.columns) == {"doc_id", "spans", "run_id"}
+
+
 def test_commit_phase_runs_one_job(spark, tmp_path, jobs_started):
     """A commit is ONE Spark job, the manifest write: the per-commit
     counts are a view of the manifest (``read_metrics``), not a second

@@ -20,10 +20,13 @@ ALPHABET = list(
     "٣১"          # arabic-indic / bengali digits (must NOT be \d)
     "абв"
     "İ\u212a"      # lowers to 'i' + U+0307 / to ASCII 'k' (Kelvin sign)
+    "\u017f"       # long s: RE2's ignore_case folds it to 's'
+    "\u3002\uff01"  # ideographic full stop, fullwidth '!': no sentence end
+    "\uff5c\xa6"    # fullwidth '|', broken bar: no pipe
 ) + ["[[img_1]]", "[[tbl_", "]]", "@@bbox:", "@@bbox:1,2,3,4@@",
      "copyright", "all rights reserved", "|||", ". ",
      "COPYRIGHT", "Cookie", "PRIVACY POLİCY", "Coo\u212aie",
-     "BAC\u212a TO TOP"]
+     "BAC\u212a TO TOP", "terms of \u017fervice"]
 
 
 def _rows():

@@ -2152,20 +2152,6 @@ def _levels_docs(spark, sf_dir, lim: int = 200):
                 i.cast("int").alias("offset"))).alias("spans"))
 
 
-def q_levels_verify(spark, sf_dir):
-    """scan -> resolve -> verify over derived spans, classifying the corpus
-    ONCE via the persisted kept-frame hook — the same plan the CLI chain
-    runs (cli.py:_run_levels); without the persist each stage re-runs the
-    regex-heavy classify scan."""
-    from pyspark import StorageLevel
-
-    from .plans.levels import kept_text_spans, resolve, scan, verify
-    docs = _levels_docs(spark, sf_dir)
-    kept = kept_text_spans(docs).persist(StorageLevel.MEMORY_AND_DISK)
-    return verify(docs, resolve(docs, scan(docs, kept=kept), kept=kept),
-                  axes=(1, 3), kept=kept)
-
-
 def _oracle_levels_verify(lim: int = 200, n_axes: int = 2) -> str:
     """DuckDB mirror of scan->resolve->verify over the derived spans.
 
@@ -2218,24 +2204,6 @@ SELECT doc_id, page_num,
        '{n_axes}/{n_axes}' AS confidence
 FROM reg
 """
-
-
-def q_levels_verify_chunked(spark, sf_dir):
-    """verify with axis_mode='chunk': axis values (1,2,3) ARE context chunk
-    sizes (windows of 96/192/288 chars — the corpus's digit identifiers sit
-    at varying depths 100-450 chars in, so the window boundary lands before,
-    inside, or after the digits per doc), making the three samples genuinely
-    disagree and exercising the majority vote's k/N semantics end-to-end
-    (non-unanimous confidences appear in the output) — the reference's
-    axes-as-chunk-size behavior (core/reader.py:477-487, decision_002)."""
-    from pyspark import StorageLevel
-
-    from .plans.levels import kept_text_spans, resolve, scan, verify
-    docs = _levels_docs(spark, sf_dir)
-    kept = kept_text_spans(docs).persist(StorageLevel.MEMORY_AND_DISK)
-    return verify(docs, resolve(docs, scan(docs, kept=kept), kept=kept),
-                  axes=(1, 2, 3), kept=kept, axis_mode="chunk",
-                  axis_chunk_chars=96)
 
 
 def _oracle_levels_verify_chunked(lim: int = 200, chunk: int = 96) -> str:
@@ -2330,36 +2298,6 @@ def _duck_bucket(planes: list[list[float]], vec: str = "v") -> str:
         bits.append(f"(CASE WHEN list_inner_product({vec}, {lit}) >= 0 "
                     f"THEN {1 << p} ELSE 0 END)")
     return "(" + " + ".join(bits) + ")"
-
-
-def q_lsh_topk(spark, sf_dir):
-    """SRP-LSH bucketed ANN (scale path) with an exact DuckDB oracle over
-    the same seeded hyperplanes."""
-    from .datapipe.similarity import lsh_topk
-    e = load(spark, sf_dir, "embeddings", lift=True)
-    return lsh_topk(e, _PLANES_LSH, k=3)
-
-
-def _oracle_lsh_topk(k: int = 3, max_bucket: int = 1000) -> str:
-    bucket = _duck_bucket(_PLANES_LSH)
-    return f"""
-WITH e AS (SELECT vec_id AS id, CAST(embedding AS DOUBLE[]) AS v
-           FROM embeddings),
-b0 AS (SELECT id, v, {bucket} AS bucket FROM e),
-sized AS (SELECT bucket FROM b0 GROUP BY bucket
-          HAVING count(*) > 1 AND count(*) <= {max_bucket}),
-b AS (SELECT b0.* FROM b0 JOIN sized USING (bucket)),
-cand AS (
-  SELECT a.id AS qid, c.id AS nbr_id,
-         list_cosine_similarity(a.v, c.v) AS cos
-  FROM b a JOIN b c ON a.bucket = c.bucket AND a.id <> c.id
-), ranked AS (
-  SELECT *, row_number() OVER (PARTITION BY qid
-            ORDER BY cos DESC, nbr_id ASC) AS rank FROM cand
-)
-SELECT qid, nbr_id, CAST(rank AS INTEGER) AS rank, round(cos, 6) AS cosine
-FROM ranked WHERE rank <= {k}
-"""
 
 
 # two independent 8-plane bands for the multiband recall variant

@@ -25,7 +25,6 @@ path) or inside pandas/Arrow UDFs (layout ordering only).
 
 from __future__ import annotations
 
-import hashlib
 import re
 from typing import List, Optional, Sequence, Tuple
 
@@ -141,13 +140,20 @@ def classify_keep(kind: str, cleaned: str, media_ref: Optional[str]) -> bool:
     """Return True when the span survives boilerplate removal.
 
     Rules (mirrored 1:1 by Catalyst expressions in
-    ``operators/classify.py`` — keep both in sync!):
+    ``operators/classify.py`` and by the Arrow kernel in
+    ``operators/fused.py`` — keep all three in sync!):
       * boilerplate / link kinds are dropped outright,
       * image/table spans are kept iff they carry a media_ref,
       * heading spans are kept iff non-empty after cleaning,
       * text spans are kept iff non-empty, not nav-like (NAV_PATTERNS),
         not pipe-menu-like (PIPE_RATIO), and either >= MIN_WORDS words or
         ending in sentence punctuation.
+
+    The kernel counts words (spaces + 1) and pipes and tests the sentence
+    end (the last byte) on the UTF-8 bytes.  That equals the code-point
+    tests here because an ASCII byte never occurs inside a multi-byte
+    UTF-8 sequence, so ' ', '|' and every SENTENCE_END mark must stay
+    ASCII (``fused._SENTENCE_END`` refuses anything else at import).
     """
     if kind in ("boilerplate", "link"):
         return False
@@ -218,7 +224,7 @@ def xy_cut_order(boxes: Sequence[Tuple[int, int, int, int]]) -> List[int]:
 
 
 # ---------------------------------------------------------------------------
-# Vote normalization (F7) / entity ids (F4) / digit normalization (F8)
+# Vote normalization (F7) / digit normalization (F8)
 # ---------------------------------------------------------------------------
 
 def normalize_for_vote(value: Optional[str]) -> str:
@@ -256,12 +262,6 @@ def normalize_ocr_digits(value: Optional[str],
     if expected_len is not None and len(digits) != expected_len:
         return None
     return digits or None
-
-
-def synth_entity_id(page_num: int, prompt: str) -> str:
-    """``scan_{page}_{sha256(prompt)[:8]}`` — scan.py:159-166."""
-    h = hashlib.sha256(prompt.encode("utf-8")).hexdigest()[:8]
-    return f"scan_{page_num}_{h}"
 
 
 # ---------------------------------------------------------------------------

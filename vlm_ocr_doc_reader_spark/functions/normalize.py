@@ -31,11 +31,6 @@ def strip_json_fence_col(col: Column) -> Column:
     return F.when(extracted != "", extracted).otherwise(F.trim(col))
 
 
-def content_hash_col(col: Column) -> Column:
-    """F10 (core/state.py:225-241): SHA-256 identity of the payload."""
-    return F.sha2(col, 256)
-
-
 def sanitize_filename_col(col: Column) -> Column:
     """F11 (core/state.py:244-259): replace filesystem-unsafe chars."""
     return F.regexp_replace(col, r'[\\/:*?"<>|]', "_")

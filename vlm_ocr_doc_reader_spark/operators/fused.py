@@ -9,12 +9,13 @@ Each row is one document, so the grouping the declarative pipeline
 (`operators/ordering` + `reconcile` + `assemble`) rebuilds with joins,
 windows and exchanges is free here.  The kernel runs the per-span stage
 (quarantine, bbox strip, cleaning, keep classification) in Arrow C++
-kernels; only documents that need reading-order work (media claims, full
-bbox cover for XY-cut) go through the shared pure-Python rules
-(`spec.xy_cut_order`, ``oracle.order_kept``).  Golden, adversarial and
-strategy-equality tests hold it to the oracle.  A mega doc is one row of
-one Arrow batch, as it is one row of the scan; ``plans.extract.extract`` is
-this map for every document, whatever its size.
+kernels and numpy byte tests over the UTF-8 buffers; only documents that
+need reading-order work (media claims, full bbox cover for XY-cut) go
+through the shared pure-Python rules (`spec.xy_cut_order`,
+``oracle.order_kept``).  Golden, adversarial and strategy-equality tests
+hold it to the oracle.  A mega doc is one row of one Arrow batch, as it
+is one row of the scan; ``plans.extract.extract`` is this map for every
+document, whatever its size.
 """
 
 from __future__ import annotations
@@ -51,6 +52,105 @@ _NAV_RE2 = spec.NAV_RE                # escaped ASCII literals
 _WS_RE2 = r"[\t\n\r\f\v][ \t\n\r\f\v]*| [ \t\n\r\f\v]+"
 
 
+# --- Byte-level tests on the UTF-8 buffers.  UTF-8 encodes every code
+# --- point above U+007F as bytes >= 0x80 only, so an ASCII byte (space,
+# --- '|', '.', '[', '@', a whitespace control) in a string's UTF-8 is that
+# --- character and never part of another one: counting, finding or
+# --- testing ASCII bytes is exact on the code-point string.  A multi-byte
+# --- code point is found the same way by its whole byte sequence (C4 B0 is
+# --- U+0130), since a lead byte starts a sequence and nothing else.
+_SENTENCE_END = "".join(spec.SENTENCE_END).encode("ascii")
+# the code points where RE2's ignore_case and str.lower() disagree on an
+# ASCII letter: RE2 folds U+017F 'ſ' to 's', str.lower() maps U+0130 'İ'
+# to 'i' + U+0307 (both 2-byte sequences, C5 BF and C4 B0)
+_FOLD_DIFFERS = "\u0130\u017f"
+
+
+def _utf8(arr):
+    """(offsets, data) of a null-free string array as numpy arrays: the
+    ``len(arr) + 1`` string boundaries, relative to the first string, and a
+    view of exactly those strings' bytes.  Honours ``arr.offset``
+    (flattened children of sliced lists are windows into their buffers);
+    ``large_string`` has 64-bit offsets."""
+    import numpy as np
+    import pyarrow as pa
+
+    if pa.types.is_string(arr.type):
+        width = np.int32
+    elif pa.types.is_large_string(arr.type):
+        width = np.int64
+    else:
+        raise TypeError(f"expected a string array, got {arr.type}")
+    if len(arr) == 0:
+        return np.zeros(1, dtype=np.int64), np.zeros(0, dtype=np.uint8)
+    _, obuf, dbuf = arr.buffers()
+    offs = np.frombuffer(obuf, dtype=width, count=len(arr) + 1,
+                         offset=arr.offset * np.dtype(width).itemsize)
+    data = (np.frombuffer(dbuf, dtype=np.uint8) if dbuf is not None
+            else np.zeros(0, dtype=np.uint8))
+    return offs.astype(np.int64) - offs[0], data[offs[0]:offs[-1]]
+
+
+def _byte_counts(offs, data, byte):
+    """Occurrences of ``byte`` in each string."""
+    import numpy as np
+    return np.diff(np.searchsorted(np.flatnonzero(data == byte), offs))
+
+
+def _rows_at(offs, pos):
+    """The strings (ascending, once each) holding the byte positions
+    ``pos``."""
+    import numpy as np
+    return np.unique(np.searchsorted(offs, pos, side="right") - 1)
+
+
+def _pairs(data, first, second):
+    """Positions where byte ``first`` is followed by byte ``second``."""
+    import numpy as np
+    pos = np.flatnonzero(data[:-1] == first)
+    return pos[data[pos + 1] == second]
+
+
+def _ws_run_starts(data):
+    """Start positions of what ``_WS_RE2`` rewrites: a tab, newline, VT,
+    FF or CR byte, or a space followed by an ASCII whitespace byte."""
+    import numpy as np
+    ctl = (data >= 0x09) & (data <= 0x0D)
+    space = data == 0x20
+    run = space[:-1] & (space[1:] | ctl[1:])
+    return np.union1d(np.flatnonzero(ctl), np.flatnonzero(run))
+
+
+def _rows_starting_with(offs, data, prefix: bytes):
+    """The strings (ascending) that start with ``prefix``."""
+    import numpy as np
+    rows = np.flatnonzero(np.diff(offs) >= len(prefix))
+    for i, byte in enumerate(prefix):
+        rows = rows[data[offs[rows] + i] == byte]
+    return rows
+
+
+def _with_rows(arr, rows, new):
+    """``arr`` with its rows ``rows`` (ascending) replaced by ``new``."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    if len(rows) == len(arr):
+        return new
+    mask = np.zeros(len(arr), dtype=bool)
+    mask[rows] = True
+    return pc.replace_with_mask(arr, pa.array(mask), new)
+
+
+def _is_in(arr, values):
+    """``arr`` in ``values`` as a numpy bool array; null is False."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    return pc.fill_null(pc.is_in(arr, value_set=pa.array(values)),
+                        False).to_numpy(zero_copy_only=False)
+
+
 _OUT_STRUCT_FIELDS = [("kind", "string"), ("text", "string"),
                       ("media_ref", "string"), ("order", "int32")]
 
@@ -67,19 +167,31 @@ def _extract_arrow_batch(doc_ids, spans):
     row per input doc (empty list when nothing survives).
 
     The per-SPAN stage (quarantine, bbox parse/strip, cleaning, keep
-    classification) runs entirely in Arrow C++ kernels over the flattened
-    span table — no Python object materializes for a span that
-    classification drops.  The per-DOC stage is vectorized too: docs are
-    classified fast/slow with ``np.add.reduceat`` over the (parent,
-    offset)-sorted kept rows, FAST docs (no media span, no full bbox
-    cover — for them the order IS the offset order) never materialize a
-    Python object at all (their output columns are Arrow ``take``s of the
-    kept arrays), and only SLOW docs (media reconciliation / XY-cut)
-    convert to Python and run the shared ``oracle.order_kept`` — ordering
-    has exactly one implementation.  The two pools are interleaved back
-    to doc order with one computed ``take``; the old shape built a Python
-    tuple per span, then a dict per span, then re-parsed them with
-    ``pa.array`` — the dominant cost of the whole stage at bench scale."""
+    classification) runs over the flattened span table in Arrow C++
+    kernels and numpy — no Python object materializes for a span that
+    classification drops:
+
+    * each cleaning regex runs only on the rows holding a literal
+      trigger, found in the UTF-8 bytes: a ``@@bbox:`` prefix, ``[[``, or
+      the start of a whitespace run ``_WS_RE2`` rewrites.  On prose most
+      rows hold none and are passed through untouched;
+    * words (spaces + 1), pipes and the sentence end (the last byte is
+      ``.``, ``!`` or ``?``) are byte tests on the cleaned UTF-8 buffers:
+      an ASCII byte never occurs inside a multi-byte UTF-8 sequence, so
+      each equals its code-point form in ``spec.classify_keep``;
+    * NAV phrases match with RE2's ``ignore_case``, except on rows holding
+      U+0130 or U+017F, the two code points where RE2's case folding and
+      ``str.lower()`` disagree; those rows lowercase first.
+
+    The per-DOC stage is vectorized too: docs are classified fast/slow
+    with ``np.add.reduceat`` over the (parent, offset)-sorted kept rows.
+    FAST docs (no media span, no full bbox cover — for them the order IS
+    the offset order) never materialize a Python object (their output
+    columns are Arrow ``take``s of the span table), and only SLOW docs
+    (media reconciliation / XY-cut) convert to Python and run the shared
+    ``oracle.order_kept`` — ordering has exactly one implementation.  The
+    two pools are interleaved back to doc order with one computed
+    ``take``; a batch of fast docs only is already in doc order."""
     import numpy as np
     import pyarrow as pa
     import pyarrow.compute as pc
@@ -107,187 +219,191 @@ def _extract_arrow_batch(doc_ids, spans):
     mref = flat.field("media_ref")
     off = flat.field("offset")
 
-    # quarantine (P5: null kind/offset) + outright boiler/link drop
+    # quarantine (P5: null kind/offset) + outright boiler/link drop; rows
+    # below are rows of the surviving span table (``sel``), and only its
+    # text is copied: kind, media_ref and offset are read through ``sel``
     mask = pc.and_kleene(
         pc.and_kleene(pc.is_valid(kind), pc.is_valid(off)),
         pc.invert(pc.fill_null(
             pc.is_in(kind, value_set=pa.array(["boilerplate", "link"])),
             True)))
-    mask = pc.fill_null(mask, False)
-    sel = np.flatnonzero(mask.to_numpy(zero_copy_only=False))
+    sel = np.flatnonzero(pc.fill_null(mask, False).to_numpy(
+        zero_copy_only=False))
     if len(sel) == 0:
         return _empty_all()
-    idx = pa.array(sel)
-    kind, text, mref, off = (c.take(idx) for c in (kind, text, mref, off))
     parent = parent[sel]
+    offset = pc.fill_null(off, 0).to_numpy(zero_copy_only=False)[sel] \
+        .astype(np.int64)
+    t = pc.coalesce(text.take(pa.array(sel)), "")
+    n = len(t)
 
-    t = pc.coalesce(text, "")
-    bbox_grp = pc.extract_regex(t, _BBOX_RE2)
-    wo = pc.replace_substring_regex(t, _BBOX_RE2_SUB, "")
-    cleaned = pc.utf8_trim(
-        pc.replace_substring_regex(
-            pc.replace_substring_regex(wo, _ANCHOR_RE2, " "),
-            _WS_RE2, " "),
-        spec._ASCII_WS)
+    # Cleaning (bbox parse and strip, anchor removal, whitespace collapse)
+    # changes only the rows holding one of its literal triggers, found in
+    # the UTF-8 bytes: a '@@bbox:' prefix, '[[', or the start of a run
+    # _WS_RE2 rewrites.  The regexes run on those rows alone (a false
+    # positive costs time, never output).
+    t_offs, t_data = _utf8(t)
+    dirty = np.union1d(
+        np.union1d(_rows_starting_with(t_offs, t_data, b"@@bbox:"),
+                   _rows_at(t_offs, _pairs(t_data, 0x5B, 0x5B))),
+        _rows_at(t_offs, _ws_run_starts(t_data)))
+    fold_rows = np.unique(np.concatenate([
+        _rows_at(t_offs, _pairs(t_data, *ch.encode()))
+        for ch in _FOLD_DIFFERS]))
+    bb_valid = np.zeros(n, dtype=bool)
+    dirty_at = np.full(n, -1, dtype=np.int64)   # row -> position in dirty
+    cleaned, dirty_wo = t, pa.array([], pa.string())
+    if len(dirty):
+        dirty_t = t.take(pa.array(dirty))
+        bbox_grp = pc.extract_regex(dirty_t, _BBOX_RE2)
+        bb_valid[dirty] = pc.is_valid(bbox_grp).to_numpy(
+            zero_copy_only=False)
+        dirty_at[dirty] = np.arange(len(dirty))
+        dirty_wo = pc.replace_substring_regex(dirty_t, _BBOX_RE2_SUB, "")
+        cleaned = _with_rows(t, dirty, pc.replace_substring_regex(
+            pc.replace_substring_regex(dirty_wo, _ANCHOR_RE2, " "),
+            _WS_RE2, " "))
+    cleaned = pc.utf8_trim(cleaned, spec._ASCII_WS)
 
-    # classification (spec.classify_keep, kernel form)
-    nonempty = pc.not_equal(cleaned, "")
-    mref_ok = pc.fill_null(pc.not_equal(mref, ""), False)
-    is_media = pc.is_in(kind, value_set=pa.array(["image", "table"]))
-    keep = pc.and_(is_media, mref_ok)
-    keep = pc.or_(keep, pc.and_(pc.equal(kind, "heading"), nonempty))
-    # U+0130 'İ' is the one code point str.lower() and utf8_lower disagree
-    # on: 'i' + U+0307 against a bare 'i', which can complete a NAV phrase.
-    low = pc.utf8_lower(pc.replace_substring(cleaned, "\u0130", "i\u0307"))
-    nav = pc.match_substring_regex(low, _NAV_RE2)
-    nwords = pc.add(pc.count_substring(cleaned, " "), 1)
-    pipes = pc.count_substring(cleaned, "|")
-    ends = pc.is_in(pc.utf8_slice_codeunits(cleaned, start=-1, stop=2**30),
-                    value_set=pa.array(list(spec.SENTENCE_END)))
-    text_keep = pc.and_(pc.and_(pc.equal(kind, "text"), nonempty),
-                        pc.and_(pc.invert(nav), pc.and_(
-                            pc.invert(pc.greater(
-                                pc.cast(pipes, "double"),
-                                pc.multiply(pc.cast(nwords, "double"),
-                                            spec.PIPE_RATIO))),
-                            pc.or_(pc.greater_equal(nwords,
-                                                    spec.MIN_WORDS),
-                                   ends))))
-    keep = pc.or_(keep, text_keep)
+    # classification (spec.classify_keep, kernel form); words, pipes and
+    # the sentence end are ASCII-byte tests on the cleaned UTF-8
+    c_offs, c_data = _utf8(cleaned)
+    nonempty = np.diff(c_offs) > 0
+    nwords = _byte_counts(c_offs, c_data, 0x20) + 1
+    pipes = _byte_counts(c_offs, c_data, 0x7C)
+    ends = np.zeros(n, dtype=bool)
+    ends[nonempty] = np.isin(c_data[c_offs[1:][nonempty] - 1],
+                             np.frombuffer(_SENTENCE_END, np.uint8))
+    # NAV phrases (spec: str.lower(), then search) match with RE2's
+    # ignore_case, except on rows holding a _FOLD_DIFFERS code point: those
+    # lowercase first.  utf8_lower maps 'İ' to a bare 'i', not 'i' + U+0307
+    # as str.lower() does (a bare 'i' can complete a NAV phrase), so that
+    # rewrite is spelled out.
+    nav = np.array(pc.match_substring_regex(
+        cleaned, _NAV_RE2, ignore_case=True).to_numpy(zero_copy_only=False))
+    if len(fold_rows):
+        low = pc.utf8_lower(pc.replace_substring(
+            cleaned.take(pa.array(fold_rows)), "\u0130", "i\u0307"))
+        nav[fold_rows] = pc.match_substring_regex(low, _NAV_RE2).to_numpy(
+            zero_copy_only=False)
+    is_media = _is_in(kind, ("image", "table"))[sel]
+    mref_ok = pc.fill_null(pc.not_equal(mref, ""), False).to_numpy(
+        zero_copy_only=False)[sel]
+    text_keep = (_is_in(kind, ("text",))[sel] & nonempty & ~nav
+                 & ~(pipes > nwords * spec.PIPE_RATIO)
+                 & ((nwords >= spec.MIN_WORDS) | ends))
+    keep = ((is_media & mref_ok)
+            | (_is_in(kind, ("heading",))[sel] & nonempty) | text_keep)
 
-    kept = np.flatnonzero(pc.fill_null(keep, False).to_numpy(
-        zero_copy_only=False))
+    kept = np.flatnonzero(keep)
     if len(kept) == 0:
         return _empty_all()
-    kidx = pa.array(kept)
-
-    # kept columns stay Arrow arrays (fast docs never touch Python)
-    kind_k = kind.take(kidx)
-    clean_k = cleaned.take(kidx)
-    mref_k = mref.take(kidx)
-    # output media_ref normalization: '' -> null (null cond propagates null)
-    mref_out = pc.if_else(pc.equal(mref_k, ""),
-                          pa.scalar(None, pa.string()), mref_k)
-    k_off = off.take(kidx).to_numpy(zero_copy_only=False).astype("int64")
-    k_parent = parent[kept]
-    bb = bbox_grp.take(kidx)
-    bb_valid = pc.is_valid(bb).to_numpy(zero_copy_only=False)
-    is_media_k = pc.is_in(kind_k, value_set=pa.array(["image", "table"])) \
-        .to_numpy(zero_copy_only=False)
 
     # group by doc: (parent, offset)-sorted kept rows, one segment per doc
-    order = np.lexsort((k_off, k_parent))
-    sorted_parent = k_parent[order]
+    order = kept[np.lexsort((offset[kept], parent[kept]))]
+    sorted_parent = parent[order]
     starts = np.concatenate(
         ([0], np.flatnonzero(np.diff(sorted_parent)) + 1))
     lens = np.diff(np.concatenate((starts, [len(order)])))
     gdoc = sorted_parent[starts].astype(np.int64)
-    has_media = np.add.reduceat(
-        is_media_k[order].astype(np.int8), starts) > 0
+    has_media = np.add.reduceat(is_media[order].astype(np.int8), starts) > 0
     all_bbox = np.add.reduceat(
         bb_valid[order].astype(np.int8), starts) == lens
     slow = has_media | all_bbox
 
     # FAST pool: kept rows of fast docs in segment order; output order is
-    # the within-segment position (rank == offset order by construction)
-    fast_rows = np.repeat(~slow, lens)
-    fast_idx = order[fast_rows]
+    # the within-segment position (rank == offset order by construction).
+    # Its columns are Arrow takes: fast docs never touch Python.
+    f_rows = order[np.repeat(~slow, lens)]
     fast_lens = lens[~slow]
-    if len(fast_idx):
-        fstarts = np.concatenate(
-            ([0], np.cumsum(fast_lens[:-1], dtype=np.int64)))
-        forder = (np.arange(len(fast_idx), dtype=np.int64)
-                  - np.repeat(fstarts, fast_lens)).astype(np.int32)
-    else:
-        fstarts = np.zeros(0, dtype=np.int64)
-        forder = np.zeros(0, dtype=np.int32)
-    fidx = pa.array(fast_idx)
-    kind_f, text_f, mref_f = (c.take(fidx)
-                              for c in (kind_k, clean_k, mref_out))
+    fstarts = np.concatenate(
+        ([0], np.cumsum(fast_lens[:-1], dtype=np.int64)))[:len(fast_lens)]
+    forder = (np.arange(len(f_rows), dtype=np.int64)
+              - np.repeat(fstarts, fast_lens)).astype(np.int32)
+    fidx = pa.array(sel[f_rows])
+    mref_f = mref.take(fidx)
+    # output media_ref normalization: '' -> null (null cond propagates null)
+    pools = [kind.take(fidx), cleaned.take(pa.array(f_rows)),
+             pc.if_else(pc.equal(mref_f, ""), pa.scalar(None, mref_f.type),
+                        mref_f),
+             pa.array(forder)]
+    fields = list(out_struct)
+    pools = [p.cast(f.type) for p, f in zip(pools, fields)]
+    counts = np.zeros(n_docs, dtype=np.int64)
+    counts[gdoc[~slow]] = fast_lens
+    if not slow.any():
+        # fast docs only: the pool is already in doc order
+        offsets = np.concatenate(([0], np.cumsum(counts))).astype(np.int32)
+        child = pa.StructArray.from_arrays(pools, fields=fields)
+        return pa.ListArray.from_arrays(pa.array(offsets), child)
 
     # SLOW pool (media claims / XY-cut): Python objects for exactly these
     # rows; bbox numeric casts and anchor findall run on the slow subset
     # only
+    s_rows = order[np.repeat(slow, lens)]
+    slow_lens = lens[slow]
+    sidx = pa.array(sel[s_rows])
+    sk_kind = kind.take(sidx).to_pylist()
+    sk_clean = cleaned.take(pa.array(s_rows)).to_pylist()
+    sk_mref = mref.take(sidx).to_pylist()
+    sk_off = offset[s_rows]
+    sk_bb_valid = bb_valid[s_rows]
+    bb_f = np.zeros((4, len(s_rows)), dtype=np.int64)
+    bbox_pos = np.flatnonzero(sk_bb_valid)
+    if len(bbox_pos):
+        grp = bbox_grp.take(pa.array(dirty_at[s_rows[bbox_pos]]))
+        for g, name in enumerate(("x0", "y0", "x1", "y1")):
+            bb_f[g, bbox_pos] = pc.cast(grp.field(name), "int64") \
+                .to_numpy(zero_copy_only=False)
+    # anchors exist only in dirty rows holding '[[' — materialize Python
+    # strings for exactly those spans
+    anch_pos = np.flatnonzero(dirty_at[s_rows] >= 0)
+    anch_wo = dirty_wo.take(pa.array(dirty_at[s_rows[anch_pos]]))
+    has_anch = pc.match_substring(anch_wo, "[[")
+    anch_map = dict(zip(
+        anch_pos[has_anch.to_numpy(zero_copy_only=False)].tolist(),
+        map(spec._anchor_c.findall, anch_wo.filter(has_anch).to_pylist())))
     s_kind_l, s_text_l, s_mref_l, s_order_l = [], [], [], []
-    slow_out_lens = np.zeros(int(slow.sum()), dtype=np.int64)
-    if slow.any():
-        slow_rows = np.repeat(slow, lens)
-        slow_idx = order[slow_rows]
-        slow_lens = lens[slow]
-        sl = pa.array(slow_idx)
-        sk_kind = kind_k.take(sl).to_pylist()
-        sk_clean = clean_k.take(sl).to_pylist()
-        sk_mref = mref_k.take(sl).to_pylist()
-        sk_off = k_off[slow_idx]
-        sk_bb_valid = bb_valid[slow_idx]
-        bb_s = bb.take(sl)
-        bb_valid_a = pc.is_valid(bb_s)
-        # (non-matching rows are struct-null but their CHILD slots hold ""
-        # — mask to a parseable sentinel before the cast)
-        bb_f = [pc.cast(pc.if_else(bb_valid_a, bb_s.field(g), "-1"),
-                        "int64").to_numpy(zero_copy_only=False)
-                for g in ("x0", "y0", "x1", "y1")]
-        # anchors exist only where the pre-bbox-stripped text contains
-        # '[[' — materialize Python strings for exactly those spans
-        k_wo_arr = wo.take(kidx).take(sl)
-        anch_mask = pc.match_substring(k_wo_arr, "[[").to_numpy(
-            zero_copy_only=False)
-        anch_rows = np.flatnonzero(anch_mask)
-        anch_map = {int(i): spec._anchor_c.findall(s) for i, s in zip(
-            anch_rows, k_wo_arr.take(pa.array(anch_rows)).to_pylist())} \
-            if len(anch_rows) else {}
-        pos0 = 0
-        for gi, glen in enumerate(map(int, slow_lens)):
-            group = []
-            for pos in range(pos0, pos0 + glen):
-                m = sk_mref[pos]
-                group.append({
-                    "kind": sk_kind[pos],
-                    "text": sk_clean[pos],
-                    "media_ref": m if m else None,
-                    "offset": int(sk_off[pos]),
-                    "bbox": ((int(bb_f[0][pos]), int(bb_f[1][pos]),
-                              int(bb_f[2][pos]), int(bb_f[3][pos]))
-                             if sk_bb_valid[pos] else None),
-                    "anchors": anch_map.get(pos, []),
-                })
-            pos0 += glen
-            res = order_kept(group)
-            slow_out_lens[gi] = len(res)
-            for k, tx, m, o in res:
-                s_kind_l.append(k)
-                s_text_l.append(tx)
-                s_mref_l.append(m)
-                s_order_l.append(o)
+    slow_out_lens = np.zeros(len(slow_lens), dtype=np.int64)
+    pos0 = 0
+    for gi, glen in enumerate(map(int, slow_lens)):
+        group = []
+        for pos in range(pos0, pos0 + glen):
+            m = sk_mref[pos]
+            group.append({
+                "kind": sk_kind[pos],
+                "text": sk_clean[pos],
+                "media_ref": m if m else None,
+                "offset": int(sk_off[pos]),
+                "bbox": ((int(bb_f[0][pos]), int(bb_f[1][pos]),
+                          int(bb_f[2][pos]), int(bb_f[3][pos]))
+                         if sk_bb_valid[pos] else None),
+                "anchors": anch_map.get(pos, []),
+            })
+        pos0 += glen
+        res = order_kept(group)
+        slow_out_lens[gi] = len(res)
+        for k, tx, m, o in res:
+            s_kind_l.append(k)
+            s_text_l.append(tx)
+            s_mref_l.append(m)
+            s_order_l.append(o)
 
     # interleave the two pools back to doc order with ONE computed take
-    counts = np.zeros(n_docs, dtype=np.int64)
-    counts[gdoc[~slow]] = fast_lens
     counts[gdoc[slow]] = slow_out_lens
     src_start = np.zeros(n_docs, dtype=np.int64)
     src_start[gdoc[~slow]] = fstarts
-    if slow.any():
-        sstarts = np.concatenate(
-            ([0], np.cumsum(slow_out_lens[:-1], dtype=np.int64)))
-        src_start[gdoc[slow]] = len(fast_idx) + sstarts
+    src_start[gdoc[slow]] = len(f_rows) + np.concatenate(
+        ([0], np.cumsum(slow_out_lens[:-1], dtype=np.int64)))
     offsets = np.concatenate(
         ([0], np.cumsum(counts, dtype=np.int64))).astype(np.int32)
     take_idx = (np.arange(int(offsets[-1]), dtype=np.int64)
                 - np.repeat(offsets[:-1].astype(np.int64), counts)
                 + np.repeat(src_start, counts))
-    kind_pool = pa.concat_arrays(
-        [kind_f.cast(pa.string()), pa.array(s_kind_l, type=pa.string())])
-    text_pool = pa.concat_arrays(
-        [text_f.cast(pa.string()), pa.array(s_text_l, type=pa.string())])
-    mref_pool = pa.concat_arrays(
-        [mref_f.cast(pa.string()), pa.array(s_mref_l, type=pa.string())])
-    order_pool = pa.concat_arrays(
-        [pa.array(forder, type=pa.int32()),
-         pa.array(s_order_l, type=pa.int32())])
-    struct_pool = pa.StructArray.from_arrays(
-        [kind_pool, text_pool, mref_pool, order_pool],
-        names=[n for n, _ in _OUT_STRUCT_FIELDS])
-    child = struct_pool.take(pa.array(take_idx))
+    pools = [pa.concat_arrays([p, pa.array(s, type=p.type)]) for p, s in zip(
+        pools, (s_kind_l, s_text_l, s_mref_l, s_order_l))]
+    child = pa.StructArray.from_arrays(pools, fields=fields) \
+        .take(pa.array(take_idx))
     return pa.ListArray.from_arrays(pa.array(offsets), child)
 
 

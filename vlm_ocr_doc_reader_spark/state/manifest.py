@@ -30,6 +30,8 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..operators.fused import RUN_OUTPUT_SCHEMA
+
 MANIFEST_SCHEMA = ("doc_id string, phase string, content_hash string, "
                    "n_spans long, ts timestamp, run_id string")
 
@@ -186,14 +188,14 @@ def read_committed(spark: SparkSession, output_dir: str, state_dir: str,
     the docs get reprocessed by the next run's anti-join, because the
     manifest never saw them).
 
-    Legacy outputs written before run tagging share the directory (one flat
-    layout): mergeSchema surfaces their rows with a null run_id, and they
-    fall back to doc_id-only committed filtering — committed legacy docs are
-    never dropped for lacking a run tag."""
-    out = spark.read.option("mergeSchema", "true").parquet(output_dir)
+    The output is read with its known schema (``RUN_OUTPUT_SCHEMA``), so
+    building this view starts no Spark job: no footer-merge over a
+    directory that grows with every run.  Legacy outputs written before run
+    tagging share the directory (one flat layout) and read ``run_id`` as
+    null; they fall back to doc_id-only committed filtering — committed
+    legacy docs are never dropped for lacking a run tag."""
+    out = spark.read.schema(RUN_OUTPUT_SCHEMA).parquet(output_dir)
     m = read_manifest(spark, state_dir, phase)
-    if "run_id" not in out.columns:
-        return out.join(m.select("doc_id"), "doc_id", "left_semi")
     tagged = (out.filter(F.col("run_id").isNotNull())
               .join(m.select("doc_id", "run_id"), ["doc_id", "run_id"],
                     "left_semi"))
