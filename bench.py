@@ -302,21 +302,6 @@ def main() -> None:
         docs_per_sec = n_docs / t_full
     extras["docs_per_sec"] = round(docs_per_sec, 1)
 
-    # --- declarative-strategy reference point (x1 corpus, one run) ---
-    spark = get_spark(master=full_master, app_name="bench-declarative",
-                      shuffle_partitions=2 * CPUS,
-                      extra_conf={"spark.ui.enabled": "false"})
-    try:
-        from vlm_ocr_doc_reader_spark.plans.extract import extract_declarative
-        df = spark.read.parquet(path)
-        n1 = df.count()
-        t0 = time.time()
-        extract_declarative(df).write.format("noop") \
-            .mode("overwrite").save()
-        extras["declarative_docs_per_sec"] = round(n1 / (time.time() - t0), 1)
-    finally:
-        spark.stop()
-
     # --- contract queries at SF_DIR ---
     spark = get_spark(master=full_master, app_name="bench-queries",
                       shuffle_partitions=2 * CPUS,
@@ -334,7 +319,7 @@ def main() -> None:
                 lookup[name](spark, SF_DIR).write.format("noop") \
                     .mode("overwrite").save()
                 all_times[name].append(time.time() - t0)
-                # persisting operators (curation, full_description) attach
+                # persisting operators (curation, levels_suite) attach
                 # handles; free them so pass k+1 measures the same work
                 release_all_cached()
         import statistics as _st

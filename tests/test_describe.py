@@ -5,10 +5,10 @@ import pyspark.sql.functions as F
 import pytest
 
 from vlm_ocr_doc_reader_spark.extraction import spec
-from vlm_ocr_doc_reader_spark.operators.classify import (heading_level_col,
-                                                         heading_title_col)
 from vlm_ocr_doc_reader_spark.plans.describe import (document_structure,
-                                                     full_description)
+                                                     full_description,
+                                                     heading_level_col,
+                                                     heading_title_col)
 from vlm_ocr_doc_reader_spark.sources.readers import DOCUMENTS_SCHEMA
 
 

@@ -59,23 +59,6 @@ def test_empty_and_edge_docs_present(spark, corpus):
     assert orders == [0, 1]
 
 
-def test_mega_doc_salting_path(spark, corpus):
-    """Mega docs (> threshold) must survive salted two-phase assembly
-    with identical ordering."""
-    docs, path = corpus
-    from vlm_ocr_doc_reader_spark.plans.extract import extract_flat
-    from vlm_ocr_doc_reader_spark.operators.assemble import assemble_spans
-
-    df = spark.read.parquet(path)
-    flat = extract_flat(df)
-    # force the salted path for everything
-    salted = assemble_spans(flat, mega_threshold=10, salt_buckets=7)
-    normal = assemble_spans(flat, mega_threshold=10**9)
-    a = {r["doc_id"]: r["spans"] for r in salted.collect()}
-    b = {r["doc_id"]: r["spans"] for r in normal.collect()}
-    assert a == b
-
-
 def _media_mega(spans):
     """Every 50th span becomes a media span whose anchor sits 30 spans
     earlier, so the doc needs media reconciliation: the kernel's slow pool

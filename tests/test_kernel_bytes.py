@@ -184,6 +184,22 @@ def test_gated_batches_match_oracle(gates):
     assert _kernel(docs) == _oracle(docs)
 
 
+@pytest.mark.parametrize("coords", [
+    "99999999999999999999,0,5,1", "0,0,5,99999999999999999999",
+    "9223372036854775807,0,5,1", "9223372036854775808,0,5,1",
+    "000000000000000000000000001,0,5,1"])
+def test_bbox_coordinates_above_int64_match_oracle(coords):
+    """A layout doc (every kept span boxed) with a coordinate at or above
+    the int64 limit is ordered as the oracle orders it, alone and in a
+    batch with ordinary layout docs."""
+    doc = [("text", f"@@bbox:{coords}@@Far right box text here.", None, 0),
+           ("text", "@@bbox:0,0,5,1@@Left box text comes first here.",
+            None, 1)]
+    assert _kernel([doc]) == _oracle([doc])
+    docs = [GATES["bbox"](d) for d in range(6)] + [doc]
+    assert _kernel(docs) == _oracle(docs)
+
+
 def test_sliced_list_array_matches_oracle():
     """A batch whose spans column is a window of a larger list array (a
     non-zero offset into the flattened children) extracts its own docs."""

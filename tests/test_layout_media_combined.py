@@ -6,8 +6,7 @@ span must land after its host in READING order, not offset order."""
 import pytest
 
 from vlm_ocr_doc_reader_spark.extraction.oracle import extract_doc
-from vlm_ocr_doc_reader_spark.plans.extract import (extract,
-                                                    extract_declarative)
+from vlm_ocr_doc_reader_spark.plans.extract import extract
 from vlm_ocr_doc_reader_spark.sources.readers import DOCUMENTS_SCHEMA
 
 
@@ -30,9 +29,7 @@ def _doc():
     return [("lm1", spans)]
 
 
-@pytest.mark.parametrize("run", [
-    pytest.param(extract, id="fused"),
-    pytest.param(extract_declarative, id="declarative")])
+@pytest.mark.parametrize("run", [pytest.param(extract, id="fused")])
 def test_layout_media_reconciliation_in_reading_order(spark, run):
     docs = _doc()
     golden = [tuple(s) for s in extract_doc(docs[0][1])]

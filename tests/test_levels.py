@@ -10,7 +10,9 @@ from vlm_ocr_doc_reader_spark.fixtures.generate import (
 from vlm_ocr_doc_reader_spark.operators.registry import (
     REGISTRY_COLS, apply_ocr_result, pending_entities, upsert_entries,
     validate_entries)
-from vlm_ocr_doc_reader_spark.plans.levels import resolve, scan, verify
+from vlm_ocr_doc_reader_spark.plans.levels import (kept_text_spans, resolve,
+                                                   scan, verify)
+from vlm_ocr_doc_reader_spark.sources.readers import DOCUMENTS_SCHEMA
 
 REG_SCHEMA = ("doc_id string, page_num int, entity_id string, prompt string, "
               "resolution int, value string, context string, "
@@ -148,3 +150,29 @@ def test_resolve_page_filter(docs_df):
     assert d[2] == 0          # page 2 untouched, still pending
     left = pending_entities(reg1).filter(F.col("doc_id") == "doc_digits")
     assert left.count() == 2
+
+
+def test_kept_text_spans_is_one_map_and_starts_no_job(docs_df, jobs_started):
+    """The levels input is the kernel's flat kept-span map: building it
+    starts no Spark job, and its plan is MapInArrow with no Exchange."""
+    with jobs_started() as jobs:
+        kept = kept_text_spans(docs_df)
+    assert jobs == []
+    plan = kept._sc._jvm.PythonSQLUtils.explainString(
+        kept._jdf.queryExecution(), "formatted")
+    assert "MapInArrow" in plan
+    assert "Exchange" not in plan
+
+
+def test_null_offset_or_kind_span_gives_no_registry_row(spark):
+    """P5: a text span with a null offset or kind is quarantined by the
+    kernel, as in ``extract``, so its digit runs give no registry row."""
+    df = spark.createDataFrame([("d1", [
+        ("text", "The contract number is 7704123456 as filed.", None, 0),
+        ("text", "Orphan offset holds 1234567890 here.", None, None),
+        (None, "Kindless span holds 5556667778 here.", None, 1)])],
+        DOCUMENTS_SCHEMA)
+    assert [r["offset"] for r in kept_text_spans(df).collect()] == [0]
+    reg = resolve(df, scan(df))
+    assert [(r["page_num"], r["value"]) for r in reg.collect()] == [
+        (1, "7704123456")]

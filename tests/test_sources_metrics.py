@@ -110,20 +110,17 @@ def test_consistency_vs_baseline(spark):
 
 
 def test_malformed_spans_dropped_consistently(spark):
-    """Null offset/kind spans drop in BOTH strategies (defensive P5)."""
-    from vlm_ocr_doc_reader_spark.plans.extract import (
-        extract, extract_declarative)
+    """Null offset/kind spans drop (defensive P5)."""
+    from vlm_ocr_doc_reader_spark.plans.extract import extract
     rows = [("d1", [("text", "Good first sentence here today.", None, 0),
                     ("text", "orphan offset", None, None),
                     (None, "orphan kind", None, 1),
                     ("text", "Good second sentence here today.", None, 2)])]
     df = spark.createDataFrame(rows, DOCUMENTS_SCHEMA)
-    for run in (extract, extract_declarative):
-        out = {r["doc_id"]: [(s["text"], s["order"]) for s in r["spans"]]
-               for r in run(df).collect()}
-        assert out["d1"] == [("Good first sentence here today.", 0),
-                             ("Good second sentence here today.", 1)], \
-            run.__name__
+    out = {r["doc_id"]: [(s["text"], s["order"]) for s in r["spans"]]
+           for r in extract(df).collect()}
+    assert out["d1"] == [("Good first sentence here today.", 0),
+                         ("Good second sentence here today.", 1)]
 
 
 def test_binary_landing_and_guarded_pdf_parser(spark, tmp_path):

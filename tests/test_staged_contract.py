@@ -45,9 +45,10 @@ R7_NEW_OR_CHANGED = [
 # the registry window is "the complement of last round's driver rows plus
 # every changed/new entry" (ARCHITECTURE.md, Rotation-window algebra), so
 # the pin follows the last recorded round.  extract_strategies
-# runs plans.extract.extract / extract_flat (and operators/fused.py), both
-# rewritten after r08; doc_structure and full_description run through
-# plans/describe.py, which builds on plans/extract.py.  Source of the
+# runs plans.extract.extract (and operators/fused.py), rewritten after
+# r08, and holds only the fused rows since the declarative plan was
+# deleted; doc_structure and full_description run through
+# plans/describe.py, which reads the kernel (operators/fused.py).  Source of the
 # list: `git diff 05c4ebd HEAD -- vlm_ocr_doc_reader_spark` (05c4ebd is
 # the round-8 commit).
 NEW_OR_CHANGED_SINCE_LAST_ROUND = [

@@ -1,15 +1,11 @@
-"""The Arrow kernel (``extract``) and the declarative plan
-(``extract_declarative``: joins+windows) must produce byte-identical output
-— they share the spec but not the physical plan, so this is the drift
-guard; the kernel is also held to the scalar oracle document by document."""
+"""``extract`` (the Arrow kernel) is held to the scalar oracle document
+by document, and its plan is the zero-shuffle map that starts no job."""
 
 import pytest
 
-from vlm_ocr_doc_reader_spark.datapipe.cache import release_cached
 from vlm_ocr_doc_reader_spark.fixtures.generate import (
     generate_documents, write_documents_parquet)
-from vlm_ocr_doc_reader_spark.plans.extract import (extract,
-                                                    extract_declarative)
+from vlm_ocr_doc_reader_spark.plans.extract import extract
 
 
 @pytest.fixture(scope="module")
@@ -18,17 +14,6 @@ def corpus_df(spark, tmp_path_factory):
     p = str(tmp_path_factory.mktemp("se") / "docs.parquet")
     write_documents_parquet(docs, p)
     return spark.read.parquet(p)
-
-
-def test_fused_equals_declarative(corpus_df):
-    a = {r["doc_id"]: r["spans"]
-         for r in extract(corpus_df).collect()}
-    declarative = extract_declarative(corpus_df)
-    b = {r["doc_id"]: r["spans"] for r in declarative.collect()}
-    release_cached(declarative)
-    assert set(a) == set(b)
-    diff = [d for d in a if a[d] != b[d]]
-    assert not diff, f"{len(diff)} docs differ; first: {diff[0]}"
 
 
 def test_extract_starts_no_spark_job(corpus_df, jobs_started):
@@ -77,19 +62,15 @@ def test_vectorized_fused_equals_scalar_oracle_form(corpus_df):
 
 def test_fused_raw_keeps_all_pruned_docs(spark):
     """A doc whose spans are ALL boilerplate/link must still emit its row
-    with an empty spans array, on both remaining paths: the kernel maps
-    rows 1:1, the declarative plan repairs the row with ``with_empty_docs``
-    after the keep filter drops every span.  (The name predates the removal
-    of the ``fused_raw`` strategy, whose prefilter first raised the case.)"""
+    with an empty spans array: the kernel maps rows 1:1.  (The name
+    predates the removal of the ``fused_raw`` strategy, whose prefilter
+    first raised the case.)"""
     rows = [("bp_only", [("boilerplate", "Copyright 2026.", None, 0),
                          ("link", "home", None, 1)]),
             ("normal", [("text", "A good long sentence right here.", None,
                          0)])]
     from vlm_ocr_doc_reader_spark.sources.readers import DOCUMENTS_SCHEMA
     df = spark.createDataFrame(rows, DOCUMENTS_SCHEMA)
-    declarative = extract_declarative(df)
-    for frame in (extract(df), declarative):
-        out = {r["doc_id"]: r["spans"] for r in frame.collect()}
-        assert out["bp_only"] == []
-        assert len(out["normal"]) == 1
-    release_cached(declarative)
+    out = {r["doc_id"]: r["spans"] for r in extract(df).collect()}
+    assert out["bp_only"] == []
+    assert len(out["normal"]) == 1

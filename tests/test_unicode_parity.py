@@ -1,17 +1,18 @@
 """Adversarial parity fuzz: random strings over a hostile alphabet (unicode
 whitespace, unicode digits, case-folding traps, partial markers) must
-classify and clean identically in the pure-Python spec, the Catalyst mirror
-and the fused Arrow kernel — this is what makes the oracle a valid golden
-reference beyond the generator's dialect."""
+classify and clean identically in the pure-Python spec and the fused Arrow
+kernel, both its per-span stage and the whole extraction — this is what
+makes the oracle a valid golden reference beyond the generator's
+dialect."""
 
 import random
 
-import pyspark.sql.functions as F
+import numpy as np
+import pyarrow as pa
 
 from vlm_ocr_doc_reader_spark.extraction import spec
 from vlm_ocr_doc_reader_spark.extraction.oracle import extract_doc
-from vlm_ocr_doc_reader_spark.operators.classify import classify
-from vlm_ocr_doc_reader_spark.operators.fused import extract_batch
+from vlm_ocr_doc_reader_spark.operators import fused
 
 ALPHABET = list(
     "ab z.|!?-0159"
@@ -28,6 +29,9 @@ ALPHABET = list(
      "COPYRIGHT", "Cookie", "PRIVACY POLİCY", "Coo\u212aie",
      "BAC\u212a TO TOP", "terms of \u017fervice"]
 
+SPAN_TYPE = pa.struct([("kind", pa.string()), ("text", pa.string()),
+                       ("media_ref", pa.string()), ("offset", pa.int64())])
+
 
 def _rows():
     rng = random.Random(1234)
@@ -41,33 +45,46 @@ def _rows():
     return rows
 
 
-def test_unicode_fuzz_parity(spark):
+def test_unicode_fuzz_parity():
+    """The kernel's per-span stage (cleaned text, anchors, keep, bbox) and
+    its flat kept-span batch agree with the spec on every fuzzed span."""
     rows = _rows()
-    df = spark.createDataFrame(
-        rows,
-        "doc_id string, kind string, text string, media_ref string, offset long")
-    got = classify(df).select("kind", "text", "media_ref", "cleaned",
-                              "anchors", "keep", "has_bbox").collect()
-    bad = []
-    for r in got:
-        wo = spec.strip_bbox(r["text"])
+    ids = [f"d{d}" for d in range(10)]
+    flat = [r for d in ids for r in rows if r[0] == d]
+    spans = pa.array(
+        [[dict(zip(("kind", "text", "media_ref", "offset"), r[1:]))
+          for r in rows if r[0] == d] for d in ids],
+        type=pa.list_(SPAN_TYPE))
+    st = fused._span_stage(spans)
+    every = np.arange(len(st.sel))
+    anchors, boxes = st.anchors(every), st.bboxes(every)
+    bad, want_kept = [], set()
+    for i, j in enumerate(st.sel.tolist()):
+        doc_id, kind, text, mref, off = flat[j]
+        wo = spec.strip_bbox(text)
         cleaned = spec.clean_text(wo)
-        anchors = spec.extract_anchors(wo)
-        mref = r["media_ref"] if r["media_ref"] else None
-        keep = spec.classify_keep(r["kind"], cleaned, mref)
-        if (r["cleaned"], list(r["anchors"]), r["keep"],
-                r["has_bbox"]) != (cleaned, anchors, keep,
-                                   spec.parse_bbox(r["text"]) is not None):
-            bad.append((r["kind"], r["text"], r["cleaned"], cleaned,
-                        r["keep"], keep))
+        keep = spec.classify_keep(kind, cleaned, mref if mref else None)
+        if keep:
+            want_kept.add((doc_id, off, cleaned))
+        if (st.cleaned[i].as_py(), anchors.get(i, []), bool(st.keep[i]),
+                boxes[i]) != (cleaned, spec.extract_anchors(wo), keep,
+                              spec.parse_bbox(text)):
+            bad.append((kind, text, st.cleaned[i].as_py(), cleaned,
+                        bool(st.keep[i]), keep))
     assert not bad, f"{len(bad)} divergences; first: {bad[0]!r}"
+    got = fused._kept_spans_batch(pa.array(ids), spans).to_pylist()
+    assert {(r["doc_id"], r["offset"], r["cleaned"]) for r in got} \
+        == want_kept and len(got) == len(want_kept)
 
 
 def test_unicode_fuzz_fused_kernel_parity():
     """The fused kernel, run over each fuzzed span as a one-span document,
     keeps and cleans exactly what the spec-built oracle does."""
     spans = [(kind, text, mref, 0) for _, kind, text, mref, _ in _rows()]
-    got = extract_batch([[dict(zip(("kind", "text", "media_ref", "offset"),
-                                   sp))] for sp in spans])
+    out = fused._extract_arrow_batch(pa.array(range(len(spans))), pa.array(
+        [[dict(zip(("kind", "text", "media_ref", "offset"), sp))]
+         for sp in spans], type=pa.list_(SPAN_TYPE)))
+    got = [[(d["kind"], d["text"], d["media_ref"], d["order"]) for d in row]
+           for row in out.to_pylist()]
     bad = [(sp, g) for sp, g in zip(spans, got) if g != extract_doc([sp])]
     assert not bad, f"{len(bad)} divergences; first: {bad[0]!r}"

@@ -35,8 +35,8 @@ def main():
     sf = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
     from vlm_ocr_doc_reader_spark.contract import QUERIES, STAGED_QUERIES
     from vlm_ocr_doc_reader_spark.sources.session import get_spark
-    from vlm_ocr_doc_reader_spark.plans.extract import (
-        extract, extract_declarative)
+    from vlm_ocr_doc_reader_spark.operators.fused import fused_kept_spans
+    from vlm_ocr_doc_reader_spark.plans.extract import extract
     from vlm_ocr_doc_reader_spark.fixtures.generate import (
         generate_documents, write_documents_parquet)
     import tempfile, os
@@ -57,7 +57,7 @@ def main():
     write_documents_parquet(generate_documents(5, seed=1, mega_spans=50,
                                                include_edge=False), p)
     df = spark.read.parquet(p)
-    for run in (extract, extract_declarative):
+    for run in (extract, fused_kept_spans):
         out += [f"## {run.__name__}", "", "```",
                 plan(run(df)).rstrip(), "```", ""]
     with open("PLANS.md", "w") as f:

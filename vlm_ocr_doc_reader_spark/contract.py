@@ -1890,31 +1890,6 @@ def _derived_spans(spark, sf_dir):
                 i.cast("int").alias("offset"))).alias("spans")))
 
 
-def q_extract_pipeline(spark, sf_dir):
-    """Full nested extraction pipeline (``extract``, the Arrow kernel:
-    classify+order+assemble in one Arrow stage), flattened via posexplode so
-    the gate canonicalizer can hash it; oracle = the same extract_flat SQL
-    (empty docs contribute zero exploded rows on both sides)."""
-    from .plans.extract import extract
-    out = extract(_derived_spans(spark, sf_dir))
-    return (out.select("doc_id", F.explode("spans").alias("s"))
-            .select("doc_id",
-                    F.col("s.kind").alias("kind"),
-                    F.col("s.text").alias("span_text"),
-                    F.col("s.media_ref").alias("media_ref"),
-                    F.col("s.order").alias("ord")))
-
-
-def q_extract_flat(spark, sf_dir):
-    """Declarative flat extraction over derived spans, with a full SQL
-    oracle (derived spans carry no bbox/media, so the whole declarative
-    path is SQL-expressible here)."""
-    from .plans.extract import extract_flat
-    out = extract_flat(_derived_spans(spark, sf_dir))
-    return out.select("doc_id", "kind", F.col("text").alias("span_text"),
-                      "media_ref", F.col("order").alias("ord"))
-
-
 def _derived_spans_structured(spark, sf_dir):
     """Derived spans with synthetic heading spans: a sentence is a heading
     when (offset % 7 == 3) or when it's the first span of every third doc
@@ -2652,7 +2627,7 @@ FROM m
 """
 
 
-def oracle_extract_flat() -> str:
+def oracle_extract_pipeline() -> str:
     nav = spec.NAV_RE
     return f"""
 WITH sp AS (
@@ -3424,22 +3399,25 @@ SELECT 'chunk' AS mode, * FROM ({_oracle_levels_verify_chunked()}) t2
 
 
 def q_extract_strategies(spark, sf_dir):
-    """Merged extraction-strategy suite: the fused zero-shuffle Arrow
-    pipeline (extract_pipeline) and the declarative Catalyst path
-    (extract_flat) over the same derived spans, strategy-tagged — the
-    gate form of tests/test_strategies_equal's bit-identity claim."""
-    a = q_extract_pipeline(spark, sf_dir).select(
-        F.lit("fused").alias("strategy"), "*")
-    b = q_extract_flat(spark, sf_dir).select(
-        F.lit("declarative").alias("strategy"), "*")
-    return a.unionByName(b)
+    """The extraction suite: ``extract`` (the Arrow kernel) over the derived
+    spans, flattened via explode so the gate canonicalizer can hash it
+    (empty docs contribute zero rows on both sides), strategy-tagged.  The
+    declarative strategy's rows left with the declarative plan, so every
+    row is tagged 'fused'; oracle = ``oracle_extract_pipeline``."""
+    from .plans.extract import extract
+    out = extract(_derived_spans(spark, sf_dir))
+    return (out.select(F.lit("fused").alias("strategy"), "doc_id",
+                       F.explode("spans").alias("s"))
+            .select("strategy", "doc_id",
+                    F.col("s.kind").alias("kind"),
+                    F.col("s.text").alias("span_text"),
+                    F.col("s.media_ref").alias("media_ref"),
+                    F.col("s.order").alias("ord")))
 
 
 def _oracle_extract_strategies() -> str:
     return f"""
-SELECT 'fused' AS strategy, * FROM ({oracle_extract_flat()}) t1
-UNION ALL
-SELECT 'declarative' AS strategy, * FROM ({oracle_extract_flat()}) t2
+SELECT 'fused' AS strategy, * FROM ({oracle_extract_pipeline()}) t1
 """
 
 
@@ -4590,8 +4568,8 @@ QUERIES = {
     "full_description": q_full_description,
     "pii_redact": q_pii_redact,
     "repetition": q_repetition,
-    # (2) changed since r08: q_extract_pipeline / q_extract_flat run
-    # plans.extract.extract / extract_flat, both rewritten after r08
+    # (2) changed since r08: runs plans.extract.extract (rewritten after
+    # r08); the declarative rows left with their plan
     "extract_strategies": q_extract_strategies,
     # (3) slack: the flagship (free re-validation), the Levels suite
     # (plans/levels.py builds on plans/extract.py) and the judged

@@ -18,9 +18,9 @@ constants and pure functions below, so there is exactly one definition of:
   * value normalization for majority voting
     (/root/reference/02_src/vlm_ocr_doc_reader/core/voting.py:30-41).
 
-Everything here is pure Python/stdlib so the oracle stays Spark-free and the
-Spark side can mirror each rule either as Catalyst column expressions (fast
-path) or inside pandas/Arrow UDFs (layout ordering only).
+Everything here is pure Python/stdlib so the oracle stays Spark-free.  The
+Spark side mirrors the per-span rules in the Arrow kernel
+(``operators/fused.py``) and calls the ordering rules directly from it.
 """
 
 from __future__ import annotations
@@ -60,10 +60,6 @@ NAV_RE = "(" + "|".join(re.escape(p) for p in NAV_PATTERNS) + ")"
 MIN_WORDS = 3          # text spans shorter than this need closing punctuation
 PIPE_RATIO = 0.2       # '|' per word above this ratio == nav menu
 SENTENCE_END = (".", "!", "?")
-
-# Salting of mega documents for the final per-doc assembly (SURVEY §4.3).
-MEGA_DOC_SPAN_THRESHOLD = 4096   # spans per doc above which assembly is salted
-SALT_BUCKETS = 16
 
 NO_DATA_SENTINEL = "__NO_DATA__"  # voting.py:30-41 sentinel
 
@@ -139,9 +135,9 @@ def clean_text(text_wo_bbox: str) -> str:
 def classify_keep(kind: str, cleaned: str, media_ref: Optional[str]) -> bool:
     """Return True when the span survives boilerplate removal.
 
-    Rules (mirrored 1:1 by Catalyst expressions in
-    ``operators/classify.py`` and by the Arrow kernel in
-    ``operators/fused.py`` — keep all three in sync!):
+    Rules (mirrored 1:1 by the Arrow kernel in ``operators/fused.py`` and
+    by the Catalyst ``keep_expr`` in ``operators/classify.py`` — keep all
+    three in sync!):
       * boilerplate / link kinds are dropped outright,
       * image/table spans are kept iff they carry a media_ref,
       * heading spans are kept iff non-empty after cleaning,
@@ -272,7 +268,7 @@ def normalize_ocr_digits(value: Optional[str],
 # validated at operations/full_description.py:333-341).  Deterministic
 # analog: a markdown '#'-run when present, else a word-count heuristic
 # (short headings are higher-level).  Mirrored 1:1 by Catalyst expressions
-# in operators/classify.py — parity-tested.
+# in plans/describe.py — parity-tested.
 
 MAX_HEADING_LEVEL = 6
 

@@ -1,15 +1,15 @@
-"""Boilerplate classification (M1) as pure Catalyst column expressions.
+"""Keep classification as Catalyst column expressions.
 
-Deterministic replacement for the reference's VLM "scan" pass
-(/root/reference/02_src/vlm_ocr_doc_reader/operations/scan.py:22-67 +
-core/reader.py:128-215): instead of asking a model which blocks are main
-content, we compute text-density/nav features per span and apply the shared
-rules from ``extraction.spec`` — every rule here mirrors
-``spec.classify_keep`` 1:1 and is covered by a parity test.
+The engine's span classifier is the Arrow kernel (``operators.fused``):
+``extract``, the levels' scan/resolve/verify and ``describe`` all read its
+kept spans.  Two Catalyst classifiers stay for the queries that compose
+classification with other Catalyst operators:
 
-Everything is JVM-side (whole-stage codegen): regexp/length/when — no Python
-in this hot path, so the classify stage costs one narrow projection over the
-exploded span table at any scale.
+* ``keep_expr``: a mirror of ``spec.classify_keep`` over already-cleaned
+  text, used by the registered ``extract_text`` query on sentence spans it
+  splits in Catalyst (parity-tested against the spec);
+* ``density_classify``: the Boilerpipe-style density classifier, a second
+  keep signal with its own DuckDB oracle.
 """
 
 from __future__ import annotations
@@ -18,34 +18,6 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..extraction import spec
-
-_WS = r"\s+"
-
-
-def parse_span_columns(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """Add bbox/anchor/cleaned columns derived from the raw span text.
-
-    Input: exploded span table (doc_id, kind, text, media_ref, offset).
-    Adds: has_bbox, bx0..by1 (int, null when absent), anchors (array<string>),
-    cleaned (anchor-stripped, whitespace-collapsed text, never null).
-    """
-    t = F.coalesce(F.col(text_col), F.lit(""))
-    has_bbox = t.rlike(spec.BBOX_RE)
-    wo_bbox = F.regexp_replace(t, spec.BBOX_RE, "")
-    cleaned = F.trim(F.regexp_replace(
-        F.regexp_replace(wo_bbox, spec.ANCHOR_RE, " "), _WS, " "))
-
-    def coord(i: int) -> Column:
-        c = F.regexp_extract(t, spec.BBOX_RE, i)
-        return F.when(has_bbox, c.cast("int"))
-
-    return (df
-            .withColumn("has_bbox", has_bbox)
-            .withColumn("bx0", coord(1)).withColumn("by0", coord(2))
-            .withColumn("bx1", coord(3)).withColumn("by1", coord(4))
-            .withColumn("anchors",
-                        F.regexp_extract_all(wo_bbox, F.lit(spec.ANCHOR_RE), 1))
-            .withColumn("cleaned", cleaned))
 
 
 def keep_expr(kind: Column, cleaned: Column, media_ref: Column) -> Column:
@@ -78,36 +50,6 @@ def keep_expr(kind: Column, cleaned: Column, media_ref: Column) -> Column:
              .when(kind == "heading", cleaned != "")
              .when(kind == "text", text_keep)
              .otherwise(F.lit(False)))
-
-
-def classify(df: DataFrame) -> DataFrame:
-    """parse + keep flag. Input: exploded spans; output adds ``keep``."""
-    out = parse_span_columns(df)
-    return out.withColumn(
-        "keep", keep_expr(F.col("kind"), F.col("cleaned"),
-                          F.col("media_ref")))
-
-
-def heading_level_col(cleaned: Column) -> Column:
-    """Catalyst mirror of ``spec.heading_level`` (parity-tested): '#'-run
-    when present, else word-count heuristic."""
-    hashes = F.length(F.regexp_extract(cleaned, r"^#+", 0))
-    spaces = F.length(cleaned) - F.length(
-        F.replace(cleaned, F.lit(" "), F.lit("")))
-    nwords = F.when(cleaned == "", F.lit(0)).otherwise(spaces + 1)
-    by_len = (F.when(nwords <= 2, F.lit(1))
-               .when(nwords <= 4, F.lit(2))
-               .otherwise(F.lit(3)))
-    return F.when(hashes > 0,
-                  F.least(hashes, F.lit(spec.MAX_HEADING_LEVEL))) \
-            .otherwise(by_len).cast("int")
-
-
-def heading_title_col(cleaned: Column) -> Column:
-    """Catalyst mirror of ``spec.heading_title``."""
-    return F.when(cleaned.startswith("#"),
-                  F.trim(F.regexp_replace(cleaned, r"^#+", ""))) \
-            .otherwise(cleaned)
 
 
 def density_classify(spans: DataFrame, id_col: str = "doc_id",

@@ -1,21 +1,23 @@
-"""Fused per-document extraction: the Arrow kernel.
+"""Per-document extraction: the Arrow kernel, the engine's one
+implementation of span classification, cleaning and ordering.
 
 ``fused_extract_rows`` is a zero-shuffle ``mapInArrow`` over the
 whole-document rows the input table already holds:
 
     scan -> Arrow batch -> _extract_arrow_batch (Arrow kernel) -> write
 
-Each row is one document, so the grouping the declarative pipeline
-(`operators/ordering` + `reconcile` + `assemble`) rebuilds with joins,
-windows and exchanges is free here.  The kernel runs the per-span stage
-(quarantine, bbox strip, cleaning, keep classification) in Arrow C++
-kernels and numpy byte tests over the UTF-8 buffers; only documents that
-need reading-order work (media claims, full bbox cover for XY-cut) go
-through the shared pure-Python rules (`spec.xy_cut_order`,
-``oracle.order_kept``).  Golden, adversarial and strategy-equality tests
-hold it to the oracle.  A mega doc is one row of one Arrow batch, as it
-is one row of the scan; ``plans.extract.extract`` is this map for every
-document, whatever its size.
+Each row is one document, so the per-document grouping is free.  The
+kernel's per-span stage (``_span_stage``: quarantine, bbox strip, cleaning,
+keep classification) runs in Arrow C++ kernels and numpy byte tests over
+the UTF-8 buffers; only documents that need reading-order work (media
+claims, full bbox cover for XY-cut) go through the shared pure-Python rules
+(`spec.xy_cut_order`, ``oracle.order_kept``).  ``fused_kept_spans`` is the
+same per-span stage as a flat map, one row per kept span, for the
+consumers that need classified spans instead of ordered documents (the
+levels plane and ``describe``).  Golden, adversarial and kernel-parity
+tests hold both to the oracle.  A mega doc is one row of one Arrow batch,
+as it is one row of the scan; ``plans.extract.extract`` is this map for
+every document, whatever its size.
 """
 
 from __future__ import annotations
@@ -161,15 +163,69 @@ def _out_struct_type():
                       for n, t in _OUT_STRUCT_FIELDS])
 
 
-def _extract_arrow_batch(doc_ids, spans):
-    """One Arrow RecordBatch column pair -> the OUTPUT spans column: a
-    ``pa.ListArray`` with one ``list<struct<kind,text,media_ref,order>>``
-    row per input doc (empty list when nothing survives).
+class _Spans:
+    """The per-span stage's result over one batch's flattened span table
+    (``_span_stage``).
 
-    The per-SPAN stage (quarantine, bbox parse/strip, cleaning, keep
-    classification) runs over the flattened span table in Arrow C++
-    kernels and numpy — no Python object materializes for a span that
-    classification drops:
+    Its rows are the spans that survive the quarantine and the
+    boilerplate/link drop: row ``i`` is span ``sel[i]`` of the flattened
+    input and belongs to doc ``parent[i]`` of the batch.  ``kind`` and
+    ``mref`` are the flattened input columns, read through ``sel``;
+    ``offset``, ``cleaned``, ``keep``, ``is_media`` and ``bb_valid`` are
+    per row.  Bbox coordinates and anchors are materialized only for the
+    rows that need them (``bboxes``, ``anchors``)."""
+
+    __slots__ = ("parent", "sel", "kind", "mref", "offset", "cleaned",
+                 "keep", "is_media", "bb_valid", "bbox_grp", "dirty_at",
+                 "dirty_wo")
+
+    def bboxes(self, rows):
+        """``spec.parse_bbox`` of each row in ``rows``: an (x0, y0, x1, y1)
+        tuple of Python ints, or None.  ``spec.BBOX_RE`` bounds no
+        coordinate, so a group that does not fit int64 goes through
+        ``int()``."""
+        import numpy as np
+        import pyarrow as pa
+        import pyarrow.compute as pc
+
+        out = [None] * len(rows)
+        pos = np.flatnonzero(self.bb_valid[rows])
+        if len(pos):
+            grp = self.bbox_grp.take(pa.array(self.dirty_at[rows[pos]]))
+            coords = []
+            for name in ("x0", "y0", "x1", "y1"):
+                digits = grp.field(name)
+                try:
+                    coords.append(pc.cast(digits, "int64").to_numpy(
+                        zero_copy_only=False).tolist())
+                except pa.ArrowInvalid:
+                    coords.append([int(d) for d in digits.to_pylist()])
+            for p, box in zip(pos.tolist(), zip(*coords)):
+                out[p] = box
+        return out
+
+    def anchors(self, rows):
+        """``{i: spec.extract_anchors(...)}`` for the positions ``i`` in
+        ``rows`` whose span holds an anchor.  Anchors exist only in dirty
+        rows holding '[[', so Python strings materialize for those alone."""
+        import numpy as np
+        import pyarrow as pa
+        import pyarrow.compute as pc
+
+        pos = np.flatnonzero(self.dirty_at[rows] >= 0)
+        wo = self.dirty_wo.take(pa.array(self.dirty_at[rows[pos]]))
+        has = pc.match_substring(wo, "[[")
+        return dict(zip(
+            pos[has.to_numpy(zero_copy_only=False)].tolist(),
+            map(spec._anchor_c.findall, wo.filter(has).to_pylist())))
+
+
+def _span_stage(spans):
+    """The kernel's per-SPAN stage over one batch's ``spans`` list array:
+    quarantine (P5: null kind or offset), the boilerplate/link drop, bbox
+    detection and strip, cleaning and keep classification, in Arrow C++
+    kernels and numpy.  No Python object materializes for a span.  Returns
+    a ``_Spans``, or None when no span survives the quarantine.
 
     * each cleaning regex runs only on the rows holding a literal
       trigger, found in the UTF-8 bytes: a ``@@bbox:`` prefix, ``[[``, or
@@ -181,39 +237,17 @@ def _extract_arrow_batch(doc_ids, spans):
       each equals its code-point form in ``spec.classify_keep``;
     * NAV phrases match with RE2's ``ignore_case``, except on rows holding
       U+0130 or U+017F, the two code points where RE2's case folding and
-      ``str.lower()`` disagree; those rows lowercase first.
-
-    The per-DOC stage is vectorized too: docs are classified fast/slow
-    with ``np.add.reduceat`` over the (parent, offset)-sorted kept rows.
-    FAST docs (no media span, no full bbox cover — for them the order IS
-    the offset order) never materialize a Python object (their output
-    columns are Arrow ``take``s of the span table), and only SLOW docs
-    (media reconciliation / XY-cut) convert to Python and run the shared
-    ``oracle.order_kept`` — ordering has exactly one implementation.  The
-    two pools are interleaved back to doc order with one computed
-    ``take``; a batch of fast docs only is already in doc order."""
+      ``str.lower()`` disagree; those rows lowercase first."""
     import numpy as np
     import pyarrow as pa
     import pyarrow.compute as pc
 
-    from ..extraction.oracle import order_kept
-
-    n_docs = len(doc_ids)
-    out_struct = _out_struct_type()
-
-    def _empty_all():
-        return pa.ListArray.from_arrays(
-            pa.array(np.zeros(n_docs + 1, dtype=np.int32)),
-            pa.array([], type=out_struct))
-
-    if n_docs == 0:
-        return _empty_all()
     if isinstance(spans, pa.ChunkedArray):
         spans = spans.combine_chunks()
     parent = pc.list_parent_indices(spans).to_numpy(zero_copy_only=False)
     flat = spans.flatten()
     if len(flat) == 0:
-        return _empty_all()
+        return None
     kind = flat.field("kind")
     text = flat.field("text")
     mref = flat.field("media_ref")
@@ -230,10 +264,7 @@ def _extract_arrow_batch(doc_ids, spans):
     sel = np.flatnonzero(pc.fill_null(mask, False).to_numpy(
         zero_copy_only=False))
     if len(sel) == 0:
-        return _empty_all()
-    parent = parent[sel]
-    offset = pc.fill_null(off, 0).to_numpy(zero_copy_only=False)[sel] \
-        .astype(np.int64)
+        return None
     t = pc.coalesce(text.take(pa.array(sel)), "")
     n = len(t)
 
@@ -250,18 +281,20 @@ def _extract_arrow_batch(doc_ids, spans):
     fold_rows = np.unique(np.concatenate([
         _rows_at(t_offs, _pairs(t_data, *ch.encode()))
         for ch in _FOLD_DIFFERS]))
-    bb_valid = np.zeros(n, dtype=bool)
-    dirty_at = np.full(n, -1, dtype=np.int64)   # row -> position in dirty
-    cleaned, dirty_wo = t, pa.array([], pa.string())
+    st = _Spans()
+    st.bb_valid = np.zeros(n, dtype=bool)
+    st.dirty_at = np.full(n, -1, dtype=np.int64)  # row -> position in dirty
+    st.bbox_grp, st.dirty_wo = None, pa.array([], pa.string())
+    cleaned = t
     if len(dirty):
         dirty_t = t.take(pa.array(dirty))
-        bbox_grp = pc.extract_regex(dirty_t, _BBOX_RE2)
-        bb_valid[dirty] = pc.is_valid(bbox_grp).to_numpy(
+        st.bbox_grp = pc.extract_regex(dirty_t, _BBOX_RE2)
+        st.bb_valid[dirty] = pc.is_valid(st.bbox_grp).to_numpy(
             zero_copy_only=False)
-        dirty_at[dirty] = np.arange(len(dirty))
-        dirty_wo = pc.replace_substring_regex(dirty_t, _BBOX_RE2_SUB, "")
+        st.dirty_at[dirty] = np.arange(len(dirty))
+        st.dirty_wo = pc.replace_substring_regex(dirty_t, _BBOX_RE2_SUB, "")
         cleaned = _with_rows(t, dirty, pc.replace_substring_regex(
-            pc.replace_substring_regex(dirty_wo, _ANCHOR_RE2, " "),
+            pc.replace_substring_regex(st.dirty_wo, _ANCHOR_RE2, " "),
             _WS_RE2, " "))
     cleaned = pc.utf8_trim(cleaned, spec._ASCII_WS)
 
@@ -292,12 +325,55 @@ def _extract_arrow_batch(doc_ids, spans):
     text_keep = (_is_in(kind, ("text",))[sel] & nonempty & ~nav
                  & ~(pipes > nwords * spec.PIPE_RATIO)
                  & ((nwords >= spec.MIN_WORDS) | ends))
-    keep = ((is_media & mref_ok)
-            | (_is_in(kind, ("heading",))[sel] & nonempty) | text_keep)
 
-    kept = np.flatnonzero(keep)
+    st.parent, st.sel, st.kind, st.mref = parent[sel], sel, kind, mref
+    st.offset = pc.fill_null(off, 0).to_numpy(zero_copy_only=False)[sel] \
+        .astype(np.int64)
+    st.cleaned, st.is_media = cleaned, is_media
+    st.keep = ((is_media & mref_ok)
+               | (_is_in(kind, ("heading",))[sel] & nonempty) | text_keep)
+    return st
+
+
+def _extract_arrow_batch(doc_ids, spans):
+    """One Arrow RecordBatch column pair -> the OUTPUT spans column: a
+    ``pa.ListArray`` with one ``list<struct<kind,text,media_ref,order>>``
+    row per input doc (empty list when nothing survives).
+
+    The per-SPAN stage is ``_span_stage``.  The per-DOC stage is
+    vectorized too: docs are classified fast/slow with ``np.add.reduceat``
+    over the (parent, offset)-sorted kept rows.  FAST docs (no media span,
+    no full bbox cover — for them the order IS the offset order) never
+    materialize a Python object (their output columns are Arrow ``take``s
+    of the span table), and only SLOW docs (media reconciliation / XY-cut)
+    convert to Python and run the shared ``oracle.order_kept`` — ordering
+    has exactly one implementation.  The two pools are interleaved back to
+    doc order with one computed ``take``; a batch of fast docs only is
+    already in doc order."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    from ..extraction.oracle import order_kept
+
+    n_docs = len(doc_ids)
+    out_struct = _out_struct_type()
+
+    def _empty_all():
+        return pa.ListArray.from_arrays(
+            pa.array(np.zeros(n_docs + 1, dtype=np.int32)),
+            pa.array([], type=out_struct))
+
+    if n_docs == 0:
+        return _empty_all()
+    st = _span_stage(spans)
+    if st is None:
+        return _empty_all()
+    kept = np.flatnonzero(st.keep)
     if len(kept) == 0:
         return _empty_all()
+    parent, offset, sel = st.parent, st.offset, st.sel
+    kind, mref, cleaned = st.kind, st.mref, st.cleaned
 
     # group by doc: (parent, offset)-sorted kept rows, one segment per doc
     order = kept[np.lexsort((offset[kept], parent[kept]))]
@@ -306,9 +382,10 @@ def _extract_arrow_batch(doc_ids, spans):
         ([0], np.flatnonzero(np.diff(sorted_parent)) + 1))
     lens = np.diff(np.concatenate((starts, [len(order)])))
     gdoc = sorted_parent[starts].astype(np.int64)
-    has_media = np.add.reduceat(is_media[order].astype(np.int8), starts) > 0
+    has_media = np.add.reduceat(
+        st.is_media[order].astype(np.int8), starts) > 0
     all_bbox = np.add.reduceat(
-        bb_valid[order].astype(np.int8), starts) == lens
+        st.bb_valid[order].astype(np.int8), starts) == lens
     slow = has_media | all_bbox
 
     # FAST pool: kept rows of fast docs in segment order; output order is
@@ -338,31 +415,16 @@ def _extract_arrow_batch(doc_ids, spans):
         return pa.ListArray.from_arrays(pa.array(offsets), child)
 
     # SLOW pool (media claims / XY-cut): Python objects for exactly these
-    # rows; bbox numeric casts and anchor findall run on the slow subset
-    # only
+    # rows; bbox coordinates and anchors are parsed for this subset only
     s_rows = order[np.repeat(slow, lens)]
     slow_lens = lens[slow]
     sidx = pa.array(sel[s_rows])
     sk_kind = kind.take(sidx).to_pylist()
     sk_clean = cleaned.take(pa.array(s_rows)).to_pylist()
     sk_mref = mref.take(sidx).to_pylist()
-    sk_off = offset[s_rows]
-    sk_bb_valid = bb_valid[s_rows]
-    bb_f = np.zeros((4, len(s_rows)), dtype=np.int64)
-    bbox_pos = np.flatnonzero(sk_bb_valid)
-    if len(bbox_pos):
-        grp = bbox_grp.take(pa.array(dirty_at[s_rows[bbox_pos]]))
-        for g, name in enumerate(("x0", "y0", "x1", "y1")):
-            bb_f[g, bbox_pos] = pc.cast(grp.field(name), "int64") \
-                .to_numpy(zero_copy_only=False)
-    # anchors exist only in dirty rows holding '[[' — materialize Python
-    # strings for exactly those spans
-    anch_pos = np.flatnonzero(dirty_at[s_rows] >= 0)
-    anch_wo = dirty_wo.take(pa.array(dirty_at[s_rows[anch_pos]]))
-    has_anch = pc.match_substring(anch_wo, "[[")
-    anch_map = dict(zip(
-        anch_pos[has_anch.to_numpy(zero_copy_only=False)].tolist(),
-        map(spec._anchor_c.findall, anch_wo.filter(has_anch).to_pylist())))
+    sk_off = offset[s_rows].tolist()
+    sk_bbox = st.bboxes(s_rows)
+    anch_map = st.anchors(s_rows)
     s_kind_l, s_text_l, s_mref_l, s_order_l = [], [], [], []
     slow_out_lens = np.zeros(len(slow_lens), dtype=np.int64)
     pos0 = 0
@@ -374,10 +436,8 @@ def _extract_arrow_batch(doc_ids, spans):
                 "kind": sk_kind[pos],
                 "text": sk_clean[pos],
                 "media_ref": m if m else None,
-                "offset": int(sk_off[pos]),
-                "bbox": ((int(bb_f[0][pos]), int(bb_f[1][pos]),
-                          int(bb_f[2][pos]), int(bb_f[3][pos]))
-                         if sk_bb_valid[pos] else None),
+                "offset": sk_off[pos],
+                "bbox": sk_bbox[pos],
                 "anchors": anch_map.get(pos, []),
             })
         pos0 += glen
@@ -407,32 +467,11 @@ def _extract_arrow_batch(doc_ids, spans):
     return pa.ListArray.from_arrays(pa.array(offsets), child)
 
 
-def extract_batch(spans_lists: list) -> list:
-    """Vectorized batch extraction over plain Python span lists (one per
-    doc) — converts to Arrow once and runs ``_extract_arrow_batch``.
-    Returns a list of OutSpan-tuple lists.  Kept as the Python-side entry
-    for tests; the Spark path feeds Arrow batches directly (zero object
-    churn for dropped spans)."""
-    import pyarrow as pa
-    lt = pa.list_(pa.struct([("kind", pa.string()), ("text", pa.string()),
-                             ("media_ref", pa.string()),
-                             ("offset", pa.int64())]))
-    spans = pa.array(
-        [None if sp is None else
-         [{"kind": s["kind"], "text": s["text"],
-           "media_ref": s["media_ref"], "offset": s["offset"]} for s in sp]
-         for sp in spans_lists], type=lt)
-    out = _extract_arrow_batch(list(range(len(spans_lists))), spans)
-    return [[(d["kind"], d["text"], d["media_ref"], d["order"])
-             for d in row] for row in out.to_pylist()]
-
-
 def fused_extract_rows(documents: DataFrame) -> DataFrame:
     """(doc_id, spans) -> (doc_id, spans) with ZERO shuffle.
 
-    The input table already co-locates each document's spans in one row —
-    the grouping the declarative path reconstructs with an exchange is free
-    here.  So the scale plan is a pure ``mapInArrow`` map: scan -> Arrow
+    The input table already co-locates each document's spans in one row, so
+    grouping spans by document needs no exchange.  The scale plan is a pure ``mapInArrow`` map: scan -> Arrow
     batch -> kernel-vectorized batch extraction (``_extract_arrow_batch``)
     -> write.  Embarrassingly parallel, no exchange, no skew (a mega doc is
     one row; Arrow batch size bounds worker memory).  Rows map 1:1, so
@@ -450,3 +489,51 @@ def fused_extract_rows(documents: DataFrame) -> DataFrame:
 
     return documents.select("doc_id", "spans").mapInArrow(
         batches, schema=_NESTED_SCHEMA)
+
+
+_KEPT_COLUMNS = ("doc_id", "kind", "cleaned", "media_ref", "offset")
+_KEPT_SCHEMA = ("doc_id string, kind string, cleaned string, "
+                "media_ref string, offset long")
+
+
+def _kept_spans_batch(doc_ids, spans):
+    """One Arrow RecordBatch column pair -> a RecordBatch with one row per
+    KEPT span, in span-table order: (doc_id, kind, cleaned, media_ref,
+    offset).  ``_span_stage`` decides what is kept and how it is cleaned,
+    so a span is kept here exactly when ``extract`` keeps it; media_ref
+    ``''`` is null, as in ``extract``'s output."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    schema = pa.schema([(n, pa.int64() if n == "offset" else pa.string())
+                        for n in _KEPT_COLUMNS])
+    st = _span_stage(spans) if len(doc_ids) else None
+    if st is None:
+        return pa.RecordBatch.from_pylist([], schema=schema)
+    rows = np.flatnonzero(st.keep)
+    src = pa.array(st.sel[rows])
+    mref = st.mref.take(src)
+    cols = [doc_ids.take(pa.array(st.parent[rows])), st.kind.take(src),
+            st.cleaned.take(pa.array(rows)),
+            pc.if_else(pc.equal(mref, ""), pa.scalar(None, mref.type), mref),
+            pa.array(st.offset[rows])]
+    return pa.RecordBatch.from_arrays(
+        [c.cast(f.type) for c, f in zip(cols, schema)], schema=schema)
+
+
+def fused_kept_spans(documents: DataFrame) -> DataFrame:
+    """(doc_id, spans) -> one row per kept span: (doc_id, kind, cleaned,
+    media_ref, offset), with ZERO shuffle.
+
+    The flat form of the kernel's per-span stage, for the consumers that
+    need classified spans rather than ordered documents (the levels'
+    scan/resolve/verify and ``describe``'s headers): one ``mapInArrow``
+    over the whole-document rows, like ``fused_extract_rows``.  A span with
+    a null kind or offset is quarantined (P5), as in ``extract``."""
+    def batches(it):
+        for rb in it:
+            yield _kept_spans_batch(rb.column(0), rb.column(1))
+
+    return documents.select("doc_id", "spans").mapInArrow(
+        batches, schema=_KEPT_SCHEMA)

@@ -5,8 +5,9 @@ AQE's skew-join splitting handles most cases at runtime
 (spark.sql.adaptive.skewJoin.enabled, on by default in our sessions); this
 utility is for the case AQE cannot fix: a broadcast-ineligible join where ONE
 hot key dominates a partition beyond what post-shuffle splitting amortizes,
-or a grouped aggregation (AQE never splits a single group — the same reason
-``operators/assemble.py`` salts mega-document assembly).
+or a grouped aggregation (AQE never splits a single group).  Extraction
+needs neither: ``extract`` maps each document row whole, with no exchange,
+so a mega document is one row of one task and not a hot key.
 
 Pattern: replicate the small side R times with an explicit salt column,
 scatter the big side's rows uniformly over the same salt range, join on

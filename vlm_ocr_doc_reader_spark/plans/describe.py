@@ -12,33 +12,52 @@ user keeps their front door:
    tables array<string>)            -- tables always empty (README_EN.md:88)
 
 ``document_structure`` is the flat headers view (D6 parity: HeaderInfo.level
-recovered deterministically via spec.heading_level).
+recovered deterministically via spec.heading_level).  Both read the Arrow
+kernel: the headers come from its flat kept-span map
+(``operators.fused.fused_kept_spans``), the text from ``extract``.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..operators.classify import heading_level_col, heading_title_col
-from .extract import classified_spans, extract_flat
+from ..extraction import spec
+from ..operators.fused import fused_kept_spans
+from .extract import extract
 
 
-def document_structure(documents: DataFrame,
-                       classified: DataFrame | None = None) -> DataFrame:
+def heading_level_col(cleaned: Column) -> Column:
+    """Catalyst mirror of ``spec.heading_level`` (parity-tested): '#'-run
+    when present, else word-count heuristic."""
+    hashes = F.length(F.regexp_extract(cleaned, r"^#+", 0))
+    spaces = F.length(cleaned) - F.length(
+        F.replace(cleaned, F.lit(" "), F.lit("")))
+    nwords = F.when(cleaned == "", F.lit(0)).otherwise(spaces + 1)
+    by_len = (F.when(nwords <= 2, F.lit(1))
+               .when(nwords <= 4, F.lit(2))
+               .otherwise(F.lit(3)))
+    return F.when(hashes > 0,
+                  F.least(hashes, F.lit(spec.MAX_HEADING_LEVEL))) \
+            .otherwise(by_len).cast("int")
+
+
+def heading_title_col(cleaned: Column) -> Column:
+    """Catalyst mirror of ``spec.heading_title``."""
+    return F.when(cleaned.startswith("#"),
+                  F.trim(F.regexp_replace(cleaned, r"^#+", ""))) \
+            .otherwise(cleaned)
+
+
+def document_structure(documents: DataFrame) -> DataFrame:
     """D6 headers table: (doc_id, level, title, page_num) for kept heading
     spans.  page_num is 1-based = offset + 1 (renderer.py:89-90 convention).
 
-    Pure Catalyst (one narrow projection over the classified span table) —
-    no shuffle at all.  ``classified``: a precomputed ``classified_spans``
-    frame to branch from (skips the classify scan here).  Both paths go
-    through ``classified_spans``' null-guard (a span with a null offset or
-    kind is invalid input everywhere else in the engine — P5 quarantine),
-    so the default and precomputed paths return identical rows.
+    The kept headings of the kernel's flat map (``fused_kept_spans``; a
+    span with a null offset or kind is quarantined, P5) and one narrow
+    projection: no shuffle at all.
     """
-    base = classified if classified is not None \
-        else classified_spans(documents)
-    kept = base.filter(F.col("keep") & (F.col("kind") == "heading"))
+    kept = fused_kept_spans(documents).filter(F.col("kind") == "heading")
     return kept.select(
         "doc_id",
         heading_level_col(F.col("cleaned")).alias("level"),
@@ -48,28 +67,25 @@ def document_structure(documents: DataFrame,
 
 def full_description(documents: DataFrame) -> DataFrame:
     """One row per doc: (doc_id, text, headers, tables) — the DocumentData
-    analog.  Text is the '\\n\\n' join of kept text spans in reading order
-    (XY-cut for layout docs via extract_flat); headers carry recovered
-    levels; tables is the reference's always-empty list.
+    analog.  Text is the '\\n\\n' join of the text spans of ``extract``'s
+    output in reading order (``order``: XY-cut for layout docs, media
+    claims applied); headers carry recovered levels; tables is the
+    reference's always-empty list.
 
-    Scale shape: ONE classify scan (the persisted ``classified_spans``
-    frame feeds both the text and header branches — r3 classified twice) +
-    extract_flat's plan + two hash aggregations on doc_id
-    (sort_array(collect_list) keeps concat/header order deterministic, A4)
-    + one join on doc_id to stitch text and headers.
+    Scale shape: the text side is ``extract``'s zero-shuffle map, one row
+    per input doc, sorted by ``order`` inside each row; the headers side
+    is ``document_structure`` plus one hash aggregation on doc_id
+    (sort_array(collect_list) keeps header order deterministic, A4); one
+    join on doc_id stitches them.
     """
-    from pyspark import StorageLevel
-    parsed = classified_spans(documents).persist(StorageLevel.MEMORY_AND_DISK)
-    text_df = (extract_flat(documents, classified=parsed)
-               .filter(F.col("kind") == "text")
-               .groupBy("doc_id")
-               .agg(F.array_join(
-                   F.transform(
-                       F.sort_array(F.collect_list(
-                           F.struct(F.col("order").alias("o"),
-                                    F.col("text").alias("t")))),
-                       lambda s: s.t), "\n\n").alias("text")))
-    hdr_df = (document_structure(documents, classified=parsed)
+    ordered = F.sort_array(F.transform(
+        F.filter("spans", lambda s: s["kind"] == "text"),
+        lambda s: F.struct(s["order"].alias("o"), s["text"].alias("t"))))
+    text_df = extract(documents).select(
+        "doc_id",
+        F.array_join(F.transform(ordered, lambda s: s["t"]), "\n\n")
+         .alias("text"))
+    hdr_df = (document_structure(documents)
               .groupBy("doc_id")
               .agg(F.transform(
                   F.sort_array(F.collect_list(
@@ -80,15 +96,9 @@ def full_description(documents: DataFrame) -> DataFrame:
                   lambda s: s.h).alias("headers")))
     empty_headers = F.array().cast(
         "array<struct<level:int,title:string,page:int>>")
-    out = (documents.select("doc_id")
-           .join(text_df, "doc_id", "left")
-           .join(hdr_df, "doc_id", "left")
-           .select("doc_id",
-                   F.coalesce(F.col("text"), F.lit("")).alias("text"),
-                   F.coalesce(F.col("headers"), empty_headers)
-                    .alias("headers"),
-                   F.array().cast("array<string>").alias("tables")))
-    # the classified frame is persisted for the two branches above; hand
-    # its handle to the caller (datapipe.cache.release_cached(result))
-    from ..datapipe.cache import attach_cached_deps
-    return attach_cached_deps(out, parsed)
+    return (text_df
+            .join(hdr_df, "doc_id", "left")
+            .select("doc_id", "text",
+                    F.coalesce(F.col("headers"), empty_headers)
+                     .alias("headers"),
+                    F.array().cast("array<string>").alias("tables")))
