@@ -137,6 +137,23 @@ def test_null_kind_or_offset_spans_give_no_kept_row():
     assert _kernel_kept(doc_ids, spans) == _spec_kept(flat)
 
 
+def test_unknown_null_kind_and_null_offset_spans_are_quarantined():
+    """P5: an unknown kind ("blob"), a NULL kind and a NULL offset are
+    quarantined by the kernel, whatever their text, and the valid span
+    beside them is kept."""
+    rows = [("d1", "text", "Good sentence here today.", None, 0),
+            ("d1", "blob", "???", None, 1),
+            ("d1", "blob", "A blob span with plenty of words here.", None,
+             2),
+            ("d1", "text", "x", None, None),
+            ("d2", "text", "Good sentence here today.", None, 0),
+            ("d2", None, "null kind span", None, 1)]
+    doc_ids, spans, flat = _batch(rows)
+    want = {(d, 0): ("text", "Good sentence here today.", None)
+            for d in ("d1", "d2")}
+    assert _kernel_kept(doc_ids, spans) == want == _spec_kept(flat)
+
+
 def test_empty_batches_give_typed_empty_output():
     for doc_ids, spans in (
             (pa.array([], pa.string()), pa.array([], pa.list_(SPAN_TYPE))),

@@ -9,7 +9,7 @@ from vlm_ocr_doc_reader_spark.datapipe.dedup import (
 from vlm_ocr_doc_reader_spark.datapipe.multimodal import (
     decode_image, extract_media_features, frame_sample_plan, MEDIA_SCHEMA)
 from vlm_ocr_doc_reader_spark.datapipe.similarity import (
-    brute_force_topk, embedding_near_dups, lsh_topk)
+    brute_force_topk, embedding_near_dups, lsh_topk_multiprobe)
 from vlm_ocr_doc_reader_spark.datapipe.textstats import (
     fingerprint, lang_id, quality_features)
 
@@ -282,7 +282,7 @@ def test_lsh_topk_agrees_on_top1(spark, emb):
     import numpy as np
     rng = np.random.default_rng(0)
     planes = rng.normal(size=(4, 3)).tolist()
-    out = lsh_topk(emb, planes, k=1).collect()
+    out = lsh_topk_multiprobe(emb, planes, k=1, n_flip=0).collect()
     top = {r["qid"]: r["nbr_id"] for r in out}
     assert top.get(0) == 1 and top.get(1) == 0
 
@@ -305,7 +305,7 @@ def test_srp_bucket_cap_bounds_degenerate_cluster(spark):
     srp_dropped_buckets, and untouched when under the cap."""
     import numpy as np
     from vlm_ocr_doc_reader_spark.datapipe.similarity import (
-        embedding_near_dups, lsh_topk, srp_dropped_buckets)
+        embedding_near_dups, srp_dropped_buckets)
     rng = np.random.default_rng(3)
     base = rng.normal(size=8)
     rows = [(i, (base + rng.normal(scale=1e-3, size=8)).tolist())
@@ -314,7 +314,7 @@ def test_srp_bucket_cap_bounds_degenerate_cluster(spark):
     e = spark.createDataFrame(rows, "vec_id int, embedding array<float>")
     planes = rng.normal(size=(5, 8)).tolist()
 
-    capped = lsh_topk(e, planes, k=3, max_bucket=50)
+    capped = lsh_topk_multiprobe(e, planes, k=3, n_flip=0, max_bucket=50)
     # the 60-row cluster's bucket is dropped: no qid from it survives
     assert capped.filter(F.col("qid") < 100).count() == 0
     dropped = srp_dropped_buckets(e, planes, max_bucket=50).collect()
@@ -325,7 +325,8 @@ def test_srp_bucket_cap_bounds_degenerate_cluster(spark):
     assert pairs <= 66 * 65 / 2 - 60 * 59 / 2  # cluster pairs never form
 
     # under a generous cap the cluster is kept (no silent behavior change)
-    uncapped = lsh_topk(e, planes, k=3, max_bucket=1000)
+    uncapped = lsh_topk_multiprobe(e, planes, k=3, n_flip=0,
+                                   max_bucket=1000)
     assert uncapped.filter(F.col("qid") < 100).count() > 0
 
 
@@ -335,7 +336,7 @@ def test_lsh_topk_has_no_id_self_join(spark, emb):
     import numpy as np
     import re
     planes = np.random.default_rng(0).normal(size=(4, 3)).tolist()
-    q = lsh_topk(emb, planes, k=1)
+    q = lsh_topk_multiprobe(emb, planes, k=1, n_flip=0)
     plan = q._sc._jvm.PythonSQLUtils.explainString(
         q._jdf.queryExecution(), "formatted")
     assert not re.search(r"hashpartitioning\(id#", plan)

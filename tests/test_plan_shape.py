@@ -98,6 +98,17 @@ def test_ivf_assignment_has_no_window(spark):
     assert "TakeOrderedAndProject" in p
 
 
+def test_ivf_topk_broadcasts_cells_into_the_kernel_at_sf01(spark):
+    """At sf0.1 (2000 vectors) the cells' member arrays still broadcast
+    into the ``_pair_scan`` Arrow kernel."""
+    import os
+    from vlm_ocr_doc_reader_spark.datapipe.similarity import ivf_topk
+    sf01 = os.path.join(os.path.dirname(SF), "sf0.1")
+    p = plan(ivf_topk(spark.read.parquet(f"{sf01}/embeddings.parquet")))
+    assert "BroadcastHashJoin" in p
+    assert "MapInArrow" in p
+
+
 def test_tfidf_dfreq_broadcasts(spark):
     """The document-frequency join key (token) is power-law skewed; the
     vocabulary-sized dfreq side must broadcast so the tf side never

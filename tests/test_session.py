@@ -91,6 +91,18 @@ def test_caller_worker_pythonpath_is_kept(tmp_path):
     assert conf["spark.executorEnv.PYTHONPATH"] == mine
 
 
+def test_ansi_is_pinned_on_and_a_caller_value_wins(tmp_path, spark):
+    """ANSI mode is an explicit default (Spark 4's own), so an environment
+    that turns it off cannot change the operators' arithmetic; a caller's
+    value still wins, as for every other setting."""
+    info = _meminfo(tmp_path, 15 * 1024 * 1024)
+    assert session_conf(meminfo=info)["spark.sql.ansi.enabled"] == "true"
+    conf = session_conf(extra_conf={"spark.sql.ansi.enabled": "false"},
+                        meminfo=info)
+    assert conf["spark.sql.ansi.enabled"] == "false"
+    assert spark.conf.get("spark.sql.ansi.enabled") == "true"
+
+
 def test_resolve_master_follows_the_builder():
     # the builder applies extra_conf after .master(), so spark.master wins
     assert resolve_master("local[2]", {"spark.master": "yarn"}) == "yarn"
@@ -101,7 +113,8 @@ def test_resolve_master_follows_the_builder():
 def test_no_master_session_starts_workers_through_pydaemon():
     """``cli`` passes no master unless ``--master`` is given; spark-submit
     then runs ``local[*]``, so a fresh process's session must still start
-    its workers through the daemon module and import compiled pyspark."""
+    its workers through the daemon module and import compiled pyspark (and
+    runs with ANSI on)."""
     script = textwrap.dedent("""
         import json
         import pyarrow as pa
@@ -119,7 +132,8 @@ def test_no_master_session_starts_workers_through_pydaemon():
         files = sorted({r["file"] for r in spark.range(2, numPartitions=1)
                         .mapInArrow(where, "file string").collect()})
         print(json.dumps([spark.sparkContext.master,
-                          conf.get("spark.python.daemon.module"), files]))
+                          conf.get("spark.python.daemon.module"), files,
+                          spark.conf.get("spark.sql.ansi.enabled")]))
         spark.stop()
     """)
     env = {k: v for k, v in os.environ.items()
@@ -128,8 +142,9 @@ def test_no_master_session_starts_workers_through_pydaemon():
                          env=env, capture_output=True, text=True,
                          timeout=300)
     assert out.returncode == 0, out.stderr[-2000:]
-    master, module, files = json.loads(
+    master, module, files, ansi = json.loads(
         out.stdout.strip().splitlines()[-1])
+    assert ansi == "true"
     assert master == "local[*]"
     assert module == _pydaemon.__name__
     assert files and not any(".zip" in f for f in files), files

@@ -1,14 +1,16 @@
-"""Sources (enforced schema, quarantine, content hash) + A8 consistency."""
+"""Sources (enforced schema, quarantine, content hash) + A8 consistency.
+The P5 quarantine of malformed spans is the kernel's; its Spark-free
+parity cases are in tests/test_classify_parity.py."""
 
 import pyspark.sql.functions as F
 
 from vlm_ocr_doc_reader_spark.fixtures.generate import (
     generate_documents, write_documents_parquet)
+from vlm_ocr_doc_reader_spark.operators.fused import fused_kept_spans
 from vlm_ocr_doc_reader_spark.operators.metrics import consistency_vs_baseline
-from vlm_ocr_doc_reader_spark.plans.extract import explode_spans
 from vlm_ocr_doc_reader_spark.sources.readers import (
-    DOCUMENTS_SCHEMA, quarantine_invalid_spans, read_documents,
-    register_memory_views, with_content_hash)
+    DOCUMENTS_SCHEMA, read_documents, register_memory_views,
+    with_content_hash)
 
 
 def test_read_documents_enforced_schema(spark, tmp_path):
@@ -60,24 +62,32 @@ def test_ensure_min_partitions_lifts_small_inputs_only(spark, tmp_path):
     assert ensure_min_partitions(wide, 8) is wide
 
 
+def _kept_and_quarantined(df):
+    """(kept span rows, number of input spans the kernel quarantined)."""
+    kept = fused_kept_spans(df).collect()
+    n_in = df.select(F.sum(F.size("spans"))).first()[0]
+    return kept, n_in - len(kept)
+
+
 def test_quarantine_unknown_kinds(spark):
     rows = [("d1", [("text", "Good sentence here today.", None, 0),
                     ("blob", "???", None, 1),
                     ("text", "x", None, None)])]
     df = spark.createDataFrame(rows, DOCUMENTS_SCHEMA)
-    good, bad = quarantine_invalid_spans(explode_spans(df))
-    assert good.count() == 1
-    assert bad.count() == 2
+    good, n_bad = _kept_and_quarantined(df)
+    assert [(r["kind"], r["offset"]) for r in good] == [("text", 0)]
+    assert n_bad == 2
 
 
 def test_quarantine_is_lossless_on_null_kind(spark):
-    """NULL kind must land in quarantine, not vanish (null-safe split)."""
+    """NULL kind must land in quarantine, not in the kept output, and must
+    not take its valid neighbour with it (null-safe split)."""
     rows = [("d1", [("text", "Good sentence here today.", None, 0),
                     (None, "null kind span", None, 1)])]
     df = spark.createDataFrame(rows, DOCUMENTS_SCHEMA)
-    good, bad = quarantine_invalid_spans(explode_spans(df))
-    assert good.count() == 1
-    assert bad.count() == 1           # the null-kind row is retained
+    good, n_bad = _kept_and_quarantined(df)
+    assert [(r["kind"], r["offset"]) for r in good] == [("text", 0)]
+    assert n_bad == 1                 # the null-kind row is quarantined
 
 
 def test_content_hash_changes_with_content(spark):

@@ -44,6 +44,9 @@ def load(spark: SparkSession, sf_dir: str, name: str,
     # the plan suffices.  tests/test_tz_independence.py proves the gate
     # queries are byte-identical under America/New_York.
     spark.conf.set("spark.sql.session.timeZone", "UTC")
+    # ANSI on (Spark 4's default) for the same reason: the gate's outputs
+    # are certified under it, whatever session the caller passes in
+    spark.conf.set("spark.sql.ansi.enabled", "true")
     df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
     if LOAD_REPARTITION:
         return df.repartition(LOAD_REPARTITION)

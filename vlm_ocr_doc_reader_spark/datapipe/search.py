@@ -209,10 +209,10 @@ def hybrid_search_rrf(docs: DataFrame, emb: DataFrame, terms: list[str],
     Scale shape: each branch reduces to <= ``k_each`` rows BEFORE
     fusion (BM25's posting-sized shuffles; the semantic side is the
     broadcast-query corpus scan of ``brute_force_topk`` — swap in
-    ``lsh_topk`` for a bucketed corpus-side at extreme scale); the
-    fusion join and the final rank run on <= 2*k_each rows, so the
-    single-partition windows here are k_each-sized by construction,
-    never corpus-sized.  Determinism: ranks are integers; each rrf is a
+    ``lsh_topk_multiprobe`` for a bucketed corpus-side at extreme
+    scale); the fusion join and the final rank run on <= 2*k_each rows,
+    so the single-partition windows here are k_each-sized by
+    construction, never corpus-sized.  Determinism: ranks are integers; each rrf is a
     fixed-order sum of two exact divisions — identical cross-engine;
     final round(6)."""
     from pyspark.sql import Window

@@ -37,8 +37,9 @@ Scale shape (the 100-TB contract for each):
 Reference parity: the reference engine has no selection layer (its
 corpus is the operator's input); these extend the training-data
 pipeline the brief requires.  Clustering reuses the deterministic
-md5-seeded centroid rule of ``similarity.ivf_topk`` so the whole
-operator stays oracle-able.
+md5-seeded centroid pick and the cell scorer of ``similarity``
+(``_centroid_array``, ``_nearest_cells``) so the whole operator stays
+oracle-able.
 """
 
 from __future__ import annotations
@@ -46,56 +47,25 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from .similarity import _dot, _norm2
-
-
-def _centroid_array(emb: DataFrame, n_clusters: int, id_col: str,
-                    vec_col: str, refine_iters: int = 0) -> DataFrame:
-    """One-row frame holding all centroids as an array of structs
-    (cid, cvec, cnorm).  Centroid ids are the ``n_clusters`` lowest
-    md5(id) rows — a seeded sample with no content bias, portable to
-    SQL; sorting ONLY (id, md5) keeps the pick TakeOrderedAndProject
-    (see ivf_topk's centroid note).  ``refine_iters`` > 0 runs Lloyd
-    rounds (``similarity.refine_centroids``) on the seeded pick —
-    data-adapted cells as in the SemDeDup paper's k-means; NOT
-    SQL-oracled (the gate entry runs 0), covered by pytest."""
-    ckeys = (emb.select(F.col(id_col).alias("cid"),
-                        F.md5(F.col(id_col).cast("string")).alias("_k"))
-             .orderBy("_k").limit(n_clusters).select("cid"))
-    cents = (emb.join(F.broadcast(ckeys), F.col(id_col) == F.col("cid"))
-             .select("cid",
-                     F.transform(F.col(vec_col),
-                                 lambda x: x.cast("double")).alias("cvec")))
-    if refine_iters > 0:
-        from .similarity import refine_centroids
-        cents = refine_centroids(emb, cents, iters=refine_iters,
-                                 id_col=id_col, vec_col=vec_col)
-    cents = cents.select("cid", "cvec", _norm2(F.col("cvec")).alias("cnorm"))
-    return cents.agg(
-        F.collect_list(F.struct("cid", "cvec", "cnorm")).alias("cents"))
+from .similarity import (_as_double, _centroid_array, _cosine, _dot,
+                         _nearest_cells, _norm2)
 
 
 def _assign_clusters(emb: DataFrame, n_clusters: int, id_col: str,
                      vec_col: str, refine_iters: int = 0) -> DataFrame:
     """(id, cid, cent_cos, vd, vnorm): every vector in its nearest
     (max-cosine, ties min cid) cluster.  Narrow: the centroid array is a
-    single broadcast row; scoring is a per-row array_sort.  A zero-norm
-    vector scores null against every centroid — it is pinned to the
-    min-cid cluster with a NULL cent_cos (the SQL twin's NULLS-LAST
-    DESC ordering lands on the same row)."""
+    single broadcast row (``similarity._centroid_array``); scoring is the
+    per-row ``similarity._nearest_cells``.  A vector with no cosine to any
+    centroid (zero, NULL or ragged) ranks every cluster last — it is
+    pinned to the min-cid cluster with a NULL cent_cos (the SQL twin's
+    NULLS-LAST DESC ordering lands on the same row)."""
     cent_arr = _centroid_array(emb, n_clusters, id_col, vec_col,
                                refine_iters)
     e = emb.select(F.col(id_col).alias("id"),
-                   F.transform(F.col(vec_col),
-                               lambda x: x.cast("double")).alias("vd"))
-
-    def _score(c):
-        cos = _dot(F.col("vd"), c["cvec"]) / (F.col("vnorm") * c["cnorm"])
-        ncos = F.coalesce(-cos, F.lit(float("inf")))
-        return F.struct(ncos.alias("ncos"), c["cid"].alias("cid"))
-
-    best = F.element_at(
-        F.array_sort(F.transform(F.col("cents"), _score)), 1)
+                   _as_double(F.col(vec_col)).alias("vd"))
+    best = F.element_at(_nearest_cells(F.col("vd"), F.col("vnorm"),
+                                       F.col("cents"), 1), 1)
     return (e.join(F.broadcast(cent_arr))
             .withColumn("vnorm", _norm2(F.col("vd")))
             .withColumn("_best", best)
@@ -150,9 +120,10 @@ def semdedup(emb: DataFrame, n_clusters: int = 16, threshold: float = 0.8,
                           F.col("vd").alias("vb"),
                           F.col("vnorm").alias("nnorm"),
                           F.col("cent_cos").alias("cc_b"))
-    pair_cos = F.round((_dot(F.col("va"), F.col("vb"))
-                        / (F.col("qnorm") * F.col("nnorm"))).cast("double"),
-                       6)
+    # a NULL pair cosine never passes the threshold: a zero, NULL or
+    # ragged vector is never dropped
+    pair_cos = F.round(_cosine(_dot(F.col("va"), F.col("vb")),
+                               F.col("qnorm"), F.col("nnorm")), 6)
     # id_a is dropped when a strictly-better survivor id_b exists: lower
     # rounded centroid-cos, ties broken on min id (total order -> exactly
     # one survivor per duplicate group, matching the SQL EXISTS twin)

@@ -5,6 +5,22 @@ Baseline: brute-force cosine top-k with built-in higher-order functions
 (sign-random-projection) search that prunes the candidate set to matching
 buckets before the exact re-rank, so the cross product never materializes.
 
+One similarity core serves every operator here and in ``select.py``:
+  * ``_cosine`` is THE cosine: ``try_divide(dot, na * nb)``, NULL when the
+    divisor is 0 or NULL (a zero or NULL vector has no direction) and when
+    the dot is NULL (a NULL vector, a NULL element, or a ragged pair that
+    zip_with pads with NULL).  ``_cosine_arrow`` is its numpy twin for the
+    Arrow kernels: the same float64 operations, NULL on the same rows.  It
+    never raises under ANSI mode, so a degenerate vector cannot fail a task;
+  * a NULL cosine never ranks and never pairs: ``_topk`` filters it before
+    every top-k window, and pair outputs compare it with a threshold (never
+    true for NULL);
+  * in cell assignment a NULL cosine ranks last, ties on the smallest cid
+    (``_nearest_cells``), so every vector still lands in a cell;
+  * ``_centroid_array`` is the one md5-seeded centroid pick and
+    ``_member_arrays`` makes every cell's member array (with its loud
+    ``_MAX_CELL`` cap).
+
 Scale shape of the SRP paths:
   * the bucket is an inline per-row expression (``srp_bucket_expr``) — no
     self-join of the vector table to its own bucket projection, so the only
@@ -17,7 +33,8 @@ Scale shape of the SRP paths:
   * with P planes there are only 2^P buckets, so P must grow with corpus
     size (buckets ~ n/2^P rows each); ``lsh_topk_multiband`` recovers the
     recall lost to finer buckets by unioning candidates over B independent
-    plane sets at the same per-band cost.
+    plane sets at the same per-band cost, and ``lsh_topk_multiprobe`` by
+    probing flipped buckets (``n_flip=0`` is plain single-probe SRP top-k).
 
 At 100 TB the brute-force path is only for small query sets against a
 broadcastable corpus sample; the bucketed paths shuffle once on the bucket
@@ -28,6 +45,15 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+
+# a cell's members travel as ONE array row (the IVF kernels score whole
+# cells per probing row), so a cell larger than this fails loudly, naming
+# the knob that shrinks cells, instead of outgrowing a row
+_MAX_CELL = 100_000
+
+
+def _as_double(vec: Column) -> Column:
+    return F.transform(vec, lambda x: x.cast("double"))
 
 
 def _dot(a, b):
@@ -40,32 +66,120 @@ def _norm2(a):
                               F.lit(0.0), lambda acc, x: acc + x))
 
 
-def with_cosine(pairs: DataFrame, a_col: str = "va",
-                b_col: str = "vb") -> DataFrame:
-    a = F.transform(F.col(a_col), lambda x: x.cast("double"))
-    b = F.transform(F.col(b_col), lambda x: x.cast("double"))
-    return pairs.withColumn(
-        "cosine", (_dot(a, b) / (_norm2(a) * _norm2(b))).cast("double"))
+def _cosine(dot: Column, na: Column, nb: Column) -> Column:
+    """dot / (na * nb); NULL when the divisor is 0 or NULL, or the dot is
+    NULL.  ``try_divide`` is the same IEEE divide as ``/`` on every other
+    row, so outputs on non-degenerate vectors are unchanged."""
+    return F.try_divide(dot, na * nb)
+
+
+def _cosine_arrow(dot, na, nb, null=None):
+    """numpy twin of ``_cosine`` for the Arrow kernels: ``dot / (na * nb)``
+    on float64 arrays, returned as an Arrow float64 array that is NULL
+    where the divisor is 0 or ``null`` (a boolean mask) marks a NULL dot or
+    norm — never the NaN/inf a bare numpy divide gives."""
+    import numpy as np
+    import pyarrow as pa
+    den = na * nb
+    mask = den == 0 if null is None else null | (den == 0)
+    with np.errstate(divide="ignore", invalid="ignore"):
+        cos = dot / den
+    return pa.array(cos, type=pa.float64(), mask=mask)
 
 
 def _with_vec_norm(df: DataFrame, vec_col: str = "v") -> DataFrame:
     """Attach (vd: vector cast to double ONCE, vnorm) to a frame of raw
     vectors.  Candidate-pair operators carry both through their joins so
     scoring a pair is a single dot fold + one divide — re-deriving the
-    cast and norms per PAIR (with_cosine) costs 3 array folds + 2 casts
-    per candidate, and each vector lands in many candidates (measured:
-    ivf_topk 13.7s -> 3.2s at sf0.1 from this change alone).  Values are
-    bit-identical: the same operations on the same inputs, just cached."""
-    vd = F.transform(F.col(vec_col), lambda x: x.cast("double"))
-    return (df.withColumn("vd", vd)
+    cast and norms per PAIR costs 3 array folds + 2 casts per candidate,
+    and each vector lands in many candidates (measured: ivf_topk 13.7s ->
+    3.2s at sf0.1 from this change alone).  Values are bit-identical: the
+    same operations on the same inputs, just cached."""
+    return (df.withColumn("vd", _as_double(F.col(vec_col)))
             .withColumn("vnorm", _norm2(F.col("vd")))
             .drop(vec_col))
 
 
 def _carried_cosine():
     """Pair cosine from carried columns (va, vb, qnorm, nnorm)."""
-    return (_dot(F.col("va"), F.col("vb"))
-            / (F.col("qnorm") * F.col("nnorm"))).cast("double")
+    return _cosine(_dot(F.col("va"), F.col("vb")), F.col("qnorm"),
+                   F.col("nnorm"))
+
+
+def _topk(scored: DataFrame, k: int, score: str = "cosine") -> DataFrame:
+    """Per-qid top-``k`` of (qid, nbr_id, ``score``): row_number over
+    (score desc, nbr_id asc), ``score`` rounded to 6 dp.  A NULL score
+    never ranks: it is filtered out before the window."""
+    w = Window.partitionBy("qid").orderBy(F.desc(score), F.asc("nbr_id"))
+    return (scored.filter(F.col(score).isNotNull())
+            .withColumn("rank", F.row_number().over(w))
+            .filter(F.col("rank") <= k)
+            .select("qid", "nbr_id", "rank",
+                    F.round(score, 6).alias(score)))
+
+
+def _nearest_cells(vd: Column, vnorm: Column, cents: Column,
+                   n: int) -> Column:
+    """The ``n`` nearest cells of one vector: the broadcast centroid array
+    ``cents`` (cid, cvec, cnorm) scored and sorted ascending on the struct
+    (ncos = -cosine, cid), so ties go to the smallest cid.  A NULL cosine
+    (zero, NULL or ragged vector or centroid) ranks LAST (+inf):
+    array_sort is NULLS FIRST, which would hand degenerate rows the best
+    cell.  A narrow per-row expression — no shuffle, no window."""
+    def score(c):
+        cos = _cosine(_dot(vd, c["cvec"]), vnorm, c["cnorm"])
+        ncos = F.coalesce(-cos, F.lit(float("inf")))
+        return F.struct(ncos.alias("ncos"), c["cid"].alias("cid"))
+    return F.slice(F.array_sort(F.transform(cents, score)), 1, n)
+
+
+def _collect_centroids(cents: DataFrame) -> DataFrame:
+    """(cid, cvec) -> ONE row ``cents`` = array<struct<cid, cvec, cnorm>>,
+    the broadcast form every cell scorer reads."""
+    return (cents.select("cid", "cvec", _norm2(F.col("cvec")).alias("cnorm"))
+            .agg(F.collect_list(F.struct("cid", "cvec", "cnorm"))
+                 .alias("cents")))
+
+
+def _centroid_array(emb: DataFrame, n_centroids: int, id_col: str,
+                    vec_col: str, refine_iters: int = 0) -> DataFrame:
+    """The one-row centroid array of the ``n_centroids`` lowest md5(id)
+    vectors — a seeded sample with no content/id bias, portable to the SQL
+    oracles.  Sorting ONLY (id, md5) keeps the embedding payload out of the
+    ordered-limit input, so Spark picks TakeOrderedAndProject (per-partition
+    top-n + driver merge) instead of a range exchange of the corpus; the
+    vectors are then fetched by a broadcast semi-join on the id.
+    ``refine_iters`` > 0 runs Lloyd rounds (``refine_centroids``) on the
+    seeded pick — data-adapted cells, NOT SQL-oracled (the gate entries
+    run 0)."""
+    ckeys = (emb.select(F.col(id_col).alias("cid"),
+                        F.md5(F.col(id_col).cast("string")).alias("_k"))
+             .orderBy("_k").limit(n_centroids).select("cid"))
+    cents = (emb.join(F.broadcast(ckeys), F.col(id_col) == F.col("cid"))
+             .select("cid", _as_double(F.col(vec_col)).alias("cvec")))
+    if refine_iters > 0:
+        cents = refine_centroids(emb, cents, iters=refine_iters,
+                                 id_col=id_col, vec_col=vec_col)
+    return _collect_centroids(cents)
+
+
+def _member_arrays(df: DataFrame, op: str, *fields: str) -> DataFrame:
+    """ONE nbr_id-sorted member-array row per cell: (cid, members
+    array<struct<fields>>).  A cell over ``_MAX_CELL`` members raises,
+    naming n_centroids (the knob that shrinks cells), instead of silently
+    dropping its members from every probing query's candidates; the check
+    folds to a no-op on every in-bound cell."""
+    members = (df.groupBy("cid")
+               .agg(F.array_sort(F.collect_list(F.struct(*fields)))
+                    .alias("members")))
+    return members.withColumn("members", F.when(
+        F.size("members") > _MAX_CELL,
+        F.raise_error(F.concat(
+            F.lit(f"{op}: cell "), F.col("cid").cast("string"),
+            F.lit(f" holds more than max_cell={_MAX_CELL} vectors ("),
+            F.size("members").cast("string"),
+            F.lit(") - raise n_centroids so cells stay row-sized"))))
+        .otherwise(F.col("members")))
 
 
 def brute_force_topk(emb: DataFrame, queries: DataFrame, k: int = 5,
@@ -80,24 +194,14 @@ def brute_force_topk(emb: DataFrame, queries: DataFrame, k: int = 5,
     Each side's double-cast and norm are computed ONCE per row and carried
     through the join (the ``_with_vec_norm`` pattern): every vector lands
     in many pairs, and re-deriving cast + both norms per PAIR tripled the
-    per-pair fold count.  Values are bit-identical — the same operations
-    on the same inputs in the same order (dot / (qnorm * nnorm)), just
-    cached per side instead of re-run per pair."""
+    per-pair fold count."""
     corpus = (emb.select(F.col(id_col).alias("nbr_id"),
-                         F.transform(F.col(vec_col),
-                                     lambda x: x.cast("double")).alias("vb"))
+                         _as_double(F.col(vec_col)).alias("vb"))
               .withColumn("nnorm", _norm2(F.col("vb"))))
-    qs = (queries.select("qid",
-                         F.transform(F.col("qvec"),
-                                     lambda x: x.cast("double")).alias("va"))
+    qs = (queries.select("qid", _as_double(F.col("qvec")).alias("va"))
           .withColumn("qnorm", _norm2(F.col("va"))))
     crossed = F.broadcast(qs).join(corpus, F.col("qid") != F.col("nbr_id"))
-    scored = crossed.withColumn("cosine", _carried_cosine())
-    w = Window.partitionBy("qid").orderBy(F.desc("cosine"), F.asc("nbr_id"))
-    return (scored.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select("qid", "nbr_id", "rank",
-                    F.round("cosine", 6).alias("cosine")))
+    return _topk(crossed.withColumn("cosine", _carried_cosine()), k)
 
 
 def srp_bucket_expr(vec_col: str, planes: list[list[float]]) -> Column:
@@ -105,7 +209,7 @@ def srp_bucket_expr(vec_col: str, planes: list[list[float]]) -> Column:
     A narrow per-row expression — add it to a projection instead of joining
     a separate bucket frame (the r2 plan paid an avoidable exchange of the
     full vector column for that self-join)."""
-    v = F.transform(F.col(vec_col), lambda x: x.cast("double"))
+    v = _as_double(F.col(vec_col))
     bucket = None
     for p, plane in enumerate(planes):
         d = _dot(v, F.array(*[F.lit(float(x)) for x in plane]))
@@ -136,136 +240,91 @@ def _cap_buckets(e: DataFrame, max_bucket: int,
     return e.join(F.broadcast(sized.select(*cols)), cols)
 
 
-def _pair_scan(left: DataFrame, right: DataFrame, keys: list[str],
-               id_dt: str, cmp: str = "ne",
-               broadcast_members: bool = False) -> DataFrame:
-    """Score every same-key (left x right) vector pair in a vectorized
-    Arrow kernel over per-key member arrays — the shared pair stage of
-    the bucketed/celled ANN operators.
+def _pair_scan(left: DataFrame, right: DataFrame, id_dt: str) -> DataFrame:
+    """Score every same-cell (left x right) vector pair in a vectorized
+    Arrow kernel over per-cell member arrays — ``ivf_topk``'s pair stage.
 
-    ``left``: ``keys`` + (qid, va, qnorm); ``right``: ``keys`` +
-    (nbr_id, vb, nnorm) — both sides carrying the once-computed double
-    cast and norm (``_with_vec_norm``).  The right side collapses to ONE
-    member-array row per key, the left side joins those rows (broadcast
-    when the key count is tiny, e.g. IVF cells), and the kernel scores a
-    whole member array per left row.  Output: (qid, nbr_id, cosine) for
-    pairs passing ``cmp`` ("ne": qid != nbr_id, "lt": qid < nbr_id).
+    ``left``: (cid, qid, va, qnorm); ``right``: (cid, nbr_id, vb, nnorm) —
+    both sides carrying the once-computed double cast and norm
+    (``_with_vec_norm``).  The right side collapses to ONE member-array row
+    per cell (``_member_arrays``, with its loud cell cap), the left side
+    broadcast-joins those n_centroids rows, and the kernel scores a whole
+    member array per left row.  Output: (qid, nbr_id, cosine) for every
+    pair with qid != nbr_id.
 
-    Bit-exact vs the expression form it replaces
-    (``_carried_cosine()`` = aggregate(zip_with) fold): dot is an
-    elementwise left fold from 0.0 in index order (never np.sum, whose
-    pairwise blocking changes addition order), cosine = dot /
-    (qnorm * nnorm) on the same carried norms, and EVERY pair is
-    emitted — no in-kernel top-k — so downstream windows/aggregates
-    keep Spark ordering/tie/NaN semantics unchanged.  Rows with
-    null/ragged vectors take a per-row fallback that mirrors
-    zip_with+aggregate null algebra (any null element -> null dot).
-    Scale bound: one key's members must fit one row — cap or grow the
-    key count with the corpus (max_bucket / n_centroids), exactly as
-    every bucketed caller already does.
+    Bit-exact vs the expression form (``_carried_cosine()`` =
+    aggregate(zip_with) fold): dot is an elementwise left fold from 0.0 in
+    index order (never np.sum, whose pairwise blocking changes addition
+    order), cosine is ``_cosine_arrow`` on the same carried norms, and
+    EVERY pair is emitted — no in-kernel top-k — so ``_topk`` keeps Spark
+    ordering/tie semantics unchanged.  Batches holding a NULL vector, a
+    NULL element or ragged lengths take a per-pair fallback that mirrors
+    zip_with+aggregate null algebra (any of them -> NULL dot).
 
     WHEN TO USE (measured): wins when keys are FEW and member arrays
     LARGE (IVF cells: 16 keys x ~125 members at sf0.1 — ivf_topk
     4.22 -> 2.25 s same-window), because each left row amortizes the
     Arrow boundary over a whole cell of folds.  LOSES on many-small-
     bucket keys (SRP buckets: lsh_multiprobe 2.78 -> 3.10 s,
-    near_dup_lsh 1.57 -> 1.98 s same-window at sf0.1) — with ~10-member
-    buckets the per-row member-array serialization outweighs the few
-    folds it replaces, so the LSH callers keep the JVM fold join."""
-    members = (right.groupBy(*keys)
-               .agg(F.collect_list(
-                   F.struct("nbr_id", "vb", "nnorm")).alias("members")))
-    if broadcast_members:
-        members = F.broadcast(members)
+    near_dup_lsh 1.57 -> 1.98 s same-window at sf0.1), so the LSH callers
+    keep the JVM fold join."""
+    members = _member_arrays(right, "ivf_topk", "nbr_id", "vb", "nnorm")
 
     def _pair_batches(it):
         import numpy as np
         import pyarrow as pa
         import pyarrow.compute as pc
-        cmp_fn = pc.not_equal if cmp == "ne" else pc.less
         for rb in it:
-            qid_a, va_a, qn_a, mem_a = (rb.column(i) for i in range(4))
-            n_rows = len(qid_a)
-            out_empty = pa.RecordBatch.from_arrays(
-                [qid_a.slice(0, 0), qid_a.slice(0, 0),
-                 pa.array([], type=pa.float64())],
-                names=["qid", "nbr_id", "cosine"])
-            if n_rows == 0:
-                yield out_empty
-                continue
-            if isinstance(mem_a, pa.ChunkedArray):
-                mem_a = mem_a.combine_chunks()
-            if isinstance(va_a, pa.ChunkedArray):
-                va_a = va_a.combine_chunks()
-            p = pc.list_parent_indices(mem_a).to_numpy(zero_copy_only=False)
+            qid_a, va_a, qn_a, mem_a = rb.columns
             flat = mem_a.flatten()
+            p = pc.list_parent_indices(mem_a).to_numpy(zero_copy_only=False)
+            nbr, vb_a, nn_a = (flat.field(f)
+                               for f in ("nbr_id", "vb", "nnorm"))
+            va_f, vb_f = va_a.flatten(), vb_a.flatten()
+            lens = np.concatenate((
+                pc.list_value_length(va_a).to_numpy(zero_copy_only=False),
+                pc.list_value_length(vb_a).to_numpy(zero_copy_only=False)))
+            qn = qn_a.to_numpy(zero_copy_only=False)[p]
+            nn = nn_a.to_numpy(zero_copy_only=False)
             if len(flat) == 0:
-                yield out_empty
-                continue
-            nbr = flat.field("nbr_id")
-            vb_a = flat.field("vb")
-            nn = flat.field("nnorm").to_numpy(zero_copy_only=False)
-            qn = qn_a.to_numpy(zero_copy_only=False)
-            qlen = pc.list_value_length(va_a).to_numpy(zero_copy_only=False)
-            blen = pc.list_value_length(vb_a).to_numpy(zero_copy_only=False)
-            uniform = (
-                va_a.null_count == 0 and vb_a.null_count == 0
-                and va_a.values.null_count == 0
-                and vb_a.values.null_count == 0
-                and len(set(qlen.tolist())) == 1
-                and len(set(blen.tolist())) == 1
-                and qlen[0] == blen[0])
-            if uniform:
-                d = int(qlen[0])
-                VA = np.asarray(va_a.flatten()).reshape(n_rows, d)
-                VB = np.asarray(vb_a.flatten()).reshape(len(flat), d)
-                VAp = VA[p]
-                adot = np.zeros(len(flat), dtype=np.float64)
+                null = None
+                dot = np.zeros(0)
+            elif (va_a.null_count == vb_a.null_count == 0
+                    and va_f.null_count == vb_f.null_count == 0
+                    and lens.min() == lens.max()):
+                d = int(lens[0])
+                VAp = np.asarray(va_f).reshape(len(va_a), d)[p]
+                VB = np.asarray(vb_f).reshape(len(flat), d)
+                dot = np.zeros(len(flat), dtype=np.float64)
                 for j in range(d):
-                    adot = adot + VAp[:, j] * VB[:, j]
-                with np.errstate(divide="ignore", invalid="ignore"):
-                    cos = adot / (qn[p] * nn)
-                cos_arr = pa.array(cos, type=pa.float64())
+                    dot = dot + VAp[:, j] * VB[:, j]
+                null = None
             else:
-                # mirror zip_with+aggregate null algebra exactly:
-                # null vector / null element / length mismatch -> null
-                va_py = va_a.to_pylist()
-                vb_py = vb_a.to_pylist()
-                qn_py = qn_a.to_pylist()
-                nn_py = flat.field("nnorm").to_pylist()
-                vals = []
+                va_py, vb_py = va_a.to_pylist(), vb_a.to_pylist()
+                dot = np.zeros(len(flat), dtype=np.float64)
+                null = np.zeros(len(flat), dtype=bool)
                 for i in range(len(flat)):
                     a, b = va_py[p[i]], vb_py[i]
                     if (a is None or b is None or len(a) != len(b)
-                            or any(x is None for x in a)
-                            or any(x is None for x in b)):
-                        vals.append(None)
+                            or None in a or None in b):
+                        null[i] = True
                         continue
                     acc = 0.0
                     for x, y in zip(a, b):
                         acc = acc + x * y
-                    q, n_ = qn_py[p[i]], nn_py[i]
-                    if q is None or n_ is None:
-                        vals.append(None)
-                        continue
-                    with np.errstate(divide="ignore", invalid="ignore"):
-                        vals.append(float(np.float64(acc)
-                                          / (np.float64(q)
-                                             * np.float64(n_))))
-                cos_arr = pa.array(vals, type=pa.float64())
-            ql = qid_a.take(pa.array(p))
-            keep = np.flatnonzero(
-                cmp_fn(ql, nbr).to_numpy(zero_copy_only=False))
-            if len(keep) == 0:
-                yield out_empty
-                continue
-            sel = pa.array(keep)
+                    dot[i] = acc
+                null |= (qn_a.is_null().to_numpy(zero_copy_only=False)[p]
+                         | nn_a.is_null().to_numpy(zero_copy_only=False))
+            cos = _cosine_arrow(dot, qn, nn, null)
+            ql = qid_a.take(pa.array(p, type=pa.int64()))
+            keep = pa.array(np.flatnonzero(
+                pc.not_equal(ql, nbr).to_numpy(zero_copy_only=False)),
+                type=pa.int64())
             yield pa.RecordBatch.from_arrays(
-                [qid_a.take(pa.array(p[keep])), nbr.take(sel),
-                 cos_arr.take(sel)],
+                [ql.take(keep), nbr.take(keep), cos.take(keep)],
                 names=["qid", "nbr_id", "cosine"])
 
-    return (left.join(members, keys)
+    return (left.join(F.broadcast(members), "cid")
             .select("qid", "va", "qnorm", "members")
             .mapInArrow(_pair_batches,
                         schema=f"qid {id_dt}, nbr_id {id_dt}, "
@@ -281,33 +340,6 @@ def srp_dropped_buckets(emb: DataFrame, planes: list[list[float]],
     return (srp_buckets(emb, planes, id_col, vec_col)
             .groupBy("bucket").agg(F.count("*").alias("sz"))
             .filter(F.col("sz") > max_bucket))
-
-
-def lsh_topk(emb: DataFrame, planes: list[list[float]], k: int = 5,
-             id_col: str = "vec_id", vec_col: str = "embedding",
-             max_bucket: int = 1000) -> DataFrame:
-    """Approximate top-k: candidates share an SRP bucket, exact cosine
-    re-rank within bucket.  One shuffle on the bucket key.
-
-    Buckets larger than ``max_bucket`` are dropped before the pair join
-    (same guard as ``dedup.minhash_candidate_pairs``): one dense cluster
-    cannot go quadratic.  Queries living in a dropped bucket return no
-    neighbors — use ``srp_dropped_buckets`` to surface them, and more
-    planes / ``lsh_topk_multiband`` to shrink buckets below the cap."""
-    e = emb.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v"),
-                   srp_bucket_expr(vec_col, planes).alias("bucket"))
-    e = _with_vec_norm(_cap_buckets(e, max_bucket))
-    left = e.select(F.col("id").alias("qid"), F.col("vd").alias("va"),
-                    F.col("vnorm").alias("qnorm"), "bucket")
-    right = e.select(F.col("id").alias("nbr_id"), F.col("vd").alias("vb"),
-                     F.col("vnorm").alias("nnorm"), "bucket")
-    cand = left.join(right, "bucket").filter(F.col("qid") != F.col("nbr_id"))
-    scored = cand.withColumn("cosine", _carried_cosine())
-    w = Window.partitionBy("qid").orderBy(F.desc("cosine"), F.asc("nbr_id"))
-    return (scored.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select("qid", "nbr_id", "rank",
-                    F.round("cosine", 6).alias("cosine")))
 
 
 def lsh_topk_multiband(emb: DataFrame,
@@ -338,11 +370,7 @@ def lsh_topk_multiband(emb: DataFrame,
     scored = (cand.withColumn("cosine", _carried_cosine())
               .groupBy("qid", "nbr_id")
               .agg(F.max("cosine").alias("cosine")))
-    w = Window.partitionBy("qid").orderBy(F.desc("cosine"), F.asc("nbr_id"))
-    return (scored.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select("qid", "nbr_id", "rank",
-                    F.round("cosine", 6).alias("cosine")))
+    return _topk(scored, k)
 
 
 def refine_centroids(emb: DataFrame, cents: DataFrame, iters: int = 2,
@@ -355,32 +383,21 @@ def refine_centroids(emb: DataFrame, cents: DataFrame, iters: int = 2,
     (tighter cells -> better recall at the same n_probe).
 
     Scale shape per round: assignment is the same zero-shuffle broadcast-
-    array argmax as ``ivf_topk`` (the centroid table collapses to ONE
-    broadcast row); the mean recompute explodes (cid, pos, val) and hash-
-    aggregates on (cid, pos) — map-side partial sums mean the shuffle
-    carries n_centroids x dim x partitions rows, never the corpus.  Cells
-    that lose all members keep their previous centroid (classic empty-cell
-    rule).  Deterministic: no RNG anywhere, ties break on min cid."""
+    array argmax as ``ivf_topk`` (``_nearest_cells``: a vector with no
+    cosine to any centroid goes to the smallest cid); the mean recompute
+    explodes (cid, pos, val) and hash-aggregates on (cid, pos) — map-side
+    partial sums mean the shuffle carries n_centroids x dim x partitions
+    rows, never the corpus.  Cells that lose all members keep their
+    previous centroid (classic empty-cell rule).  Deterministic: no RNG
+    anywhere, ties break on min cid."""
+    e = emb.select(F.col(id_col).alias("id"),
+                   _as_double(F.col(vec_col)).alias("vd"))
     for _ in range(iters):
-        base = cents.select(
-            "cid", F.col("cvec").alias("cvec"),
-            _norm2(F.col("cvec")).alias("cnorm"))
-        cent_arr = base.agg(
-            F.collect_list(F.struct("cid", "cvec", "cnorm")).alias("cents"))
-        e = emb.select(F.col(id_col).alias("id"),
-                       F.transform(F.col(vec_col),
-                                   lambda x: x.cast("double")).alias("vd"))
-
-        def _score(c):
-            cos = _dot(F.col("vd"), c["cvec"]) / (F.col("vnorm") * c["cnorm"])
-            return F.struct((-cos).alias("ncos"), c["cid"].alias("cid"))
-
-        assigned = (e.join(F.broadcast(cent_arr))
+        best = F.element_at(_nearest_cells(
+            F.col("vd"), F.col("vnorm"), F.col("cents"), 1), 1)
+        assigned = (e.join(F.broadcast(_collect_centroids(cents)))
                     .withColumn("vnorm", _norm2(F.col("vd")))
-                    .withColumn(
-                        "cid",
-                        F.element_at(F.array_sort(
-                            F.transform(F.col("cents"), _score)), 1)["cid"])
+                    .withColumn("cid", best["cid"])
                     .select("cid", F.posexplode("vd").alias("pos", "val")))
         means = (assigned.groupBy("cid", "pos")
                  .agg(F.avg("val").alias("m"))
@@ -405,105 +422,51 @@ def ivf_topk(emb: DataFrame, n_centroids: int = 16, n_probe: int = 4,
              vec_col: str = "embedding",
              refine_iters: int = 0) -> DataFrame:
     """IVF-style approximate top-k: deterministic pseudo-random centroids
-    (the ``n_centroids`` lowest md5(id) vectors — a seeded sample with no
-    content/id bias, portable to the SQL oracle), every vector assigned to
-    its nearest centroid (one broadcast pass), queries probe the ``n_probe``
-    nearest cells and re-rank exactly within them.
+    (``_centroid_array``: the ``n_centroids`` lowest md5(id) vectors), every
+    vector assigned to its nearest centroid (one broadcast pass), queries
+    probe the ``n_probe`` nearest cells and re-rank exactly within them.
 
-    Scale shape: the centroid pick compiles to TakeOrderedAndProject
-    (per-partition top-n + driver merge of n_centroids rows — NOT a global
-    sort); the n_centroids centroids collapse into ONE broadcast array row,
-    so cell assignment and probe-cell selection are a narrow per-row
-    array_sort over the scored centroid array — zero shuffle, no window,
-    and the n x n_centroids scored frame of round 3 (which exchanged every
-    full vector 16x through a row_number window) never exists.  The only
-    exchange over corpus-sized data is the candidate join on the small cell
-    id — the cross product never materializes.  Output:
+    Scale shape: the centroid pick compiles to TakeOrderedAndProject; the
+    n_centroids centroids collapse into ONE broadcast array row, so cell
+    assignment and probe-cell selection are a narrow per-row array_sort
+    (``_nearest_cells``) — zero shuffle, no window.  Cells collapse to ONE
+    member-array row each and the exact-cosine scan of a whole cell runs
+    in the ``_pair_scan`` Arrow kernel: the old pair join materialized
+    queries x probes x cell-members rows each paying an interpreted
+    64-element HOF dot fold (~6 us/pair — the measured bulk of ivf_topk's
+    wall).  The n_centroids member rows broadcast; every pair is emitted,
+    so the top-k window keeps Spark semantics exactly.  Scale bound: a
+    cell's members must fit one row (``_MAX_CELL`` raises past it), so
+    n_centroids must grow with the corpus.  Output:
     (qid, nbr_id, rank, cosine).
+
+    ``refine_iters`` > 0: Lloyd rounds tighten the md5-seeded pick so the
+    same n_probe covers more true neighbors.  NOT SQL-oracled (the gate
+    entry runs refine_iters=0); covered by the recall test instead.
     """
-    # centroid ids: sort ONLY (id, md5) — keeping the embedding payload out
-    # of the ordered-limit input is what lets Spark pick
-    # TakeOrderedAndProject (per-partition top-n) instead of a full
-    # range-exchange of the corpus with vectors attached; the 16 vectors
-    # are then fetched by a broadcast semi-join on the id
-    ckeys = (emb.select(F.col(id_col).alias("cid"),
-                        F.md5(F.col(id_col).cast("string")).alias("_k"))
-             .orderBy("_k").limit(n_centroids).select("cid"))
-    cents = (emb.join(F.broadcast(ckeys), F.col(id_col) == F.col("cid"))
-             .select("cid",
-                     F.transform(F.col(vec_col),
-                                 lambda x: x.cast("double")).alias("cvec")))
-    if refine_iters > 0:
-        # data-adapted cells: Lloyd rounds tighten the md5-seeded pick so
-        # the same n_probe covers more true neighbors.  NOT SQL-oracled
-        # (the gate entry runs refine_iters=0); covered by the recall
-        # test instead.
-        cents = refine_centroids(emb, cents, iters=refine_iters,
-                                 id_col=id_col, vec_col=vec_col)
-    cents = cents.select("cid", "cvec", _norm2(F.col("cvec")).alias("cnorm"))
-    cent_arr = cents.agg(
-        F.collect_list(F.struct("cid", "cvec", "cnorm")).alias("cents"))
-
-    e = emb.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v"))
-    vd = F.transform(F.col("v"), lambda x: x.cast("double"))
-
-    # per-row: score every centroid, sort by (cos desc, cid asc) via an
-    # ascending struct sort on (-cos, cid), keep the n_probe best cells
-    def _cell_score(c):
-        # reads the materialized "vd" column (cast done once upstream)
-        cos = _dot(F.col("vd"), c["cvec"]) / (F.col("vnorm") * c["cnorm"])
-        # a zero-norm vector/centroid scores null; array_sort is ASC =
-        # NULLS FIRST, which would hand degenerate rows the BEST cell —
-        # pin them LAST (+inf) to keep the old desc-window semantics
-        ncos = F.coalesce(-cos, F.lit(float("inf")))
-        return F.struct(ncos.alias("ncos"), c["cid"].alias("cid"))
-
-    # pre-cast the vector and compute its norm ONCE per row, then carry
-    # both through the candidate join: each vector lands in ~(n_probe x
-    # cell-size) pairs, and re-deriving cast+norm per PAIR tripled the
-    # per-pair fold count (dot + 2 norms) — the pair stage now does a
-    # single dot fold and a divide by the carried norms (identical IEEE
-    # values: the same operations on the same inputs, just cached)
-    tagged = (e.join(F.broadcast(cent_arr))
-              .withColumn("vd", vd)
+    cents = _centroid_array(emb, n_centroids, id_col, vec_col, refine_iters)
+    # the cast and norm are computed ONCE per row and carried through the
+    # candidate join: each vector lands in ~(n_probe x cell-size) pairs
+    tagged = (emb.select(F.col(id_col).alias("id"),
+                         _as_double(F.col(vec_col)).alias("vd"))
+              .join(F.broadcast(cents))
               .withColumn("vnorm", _norm2(F.col("vd")))
-              .withColumn("cells", F.slice(
-                  F.array_sort(F.transform(F.col("cents"), _cell_score)),
-                  1, n_probe))
-              .drop("cents", "v"))
-
+              .withColumn("cells", _nearest_cells(
+                  F.col("vd"), F.col("vnorm"), F.col("cents"), n_probe))
+              .drop("cents"))
     # data side: each vector lives in its single nearest cell
     assign = tagged.select(
-        "id", "vd", "vnorm", F.element_at("cells", 1)["cid"].alias("cid"))
+        F.element_at("cells", 1)["cid"].alias("cid"),
+        F.col("id").alias("nbr_id"), F.col("vd").alias("vb"),
+        F.col("vnorm").alias("nnorm"))
     # query side: probe the n_probe nearest cells
     probes = tagged.select(
         F.col("id").alias("qid"), F.col("vd").alias("va"),
         F.col("vnorm").alias("qnorm"),
         F.explode(F.transform("cells", lambda s: s["cid"])).alias("cid"))
-
-    # Cells collapse to ONE member-array row each and the exact-cosine
-    # scan of a whole cell runs in the shared _pair_scan Arrow kernel —
-    # the member-array shape ivf_pq_topk proved (its ADC stage), applied
-    # to the exact-vector path: the old pair join materialized queries x
-    # probes x cell-members rows each paying an interpreted 64-element
-    # HOF dot fold (~6 us/pair — the measured bulk of ivf_topk's wall).
-    # The n_centroids member rows broadcast; every pair is emitted so
-    # the unchanged top-k window keeps Spark semantics exactly.  Scale
-    # bound: a cell's members must fit one row — n_centroids must grow
-    # with the corpus (same rule as ivf_pq_topk, whose docstring
-    # documents it; exact-vector member rows are ~25x the PQ codes).
-    scored = _pair_scan(
-        probes,
-        assign.select("cid", F.col("id").alias("nbr_id"),
-                      F.col("vd").alias("vb"),
-                      F.col("vnorm").alias("nnorm")),
-        ["cid"], emb.schema[id_col].dataType.simpleString(),
-        broadcast_members=True)
-    wq = Window.partitionBy("qid").orderBy(F.desc("cosine"), F.asc("nbr_id"))
-    return (scored.withColumn("rank", F.row_number().over(wq))
-            .filter(F.col("rank") <= k)
-            .select("qid", "nbr_id", "rank",
-                    F.round("cosine", 6).alias("cosine")))
+    scored = _pair_scan(probes, assign,
+                        emb.schema[id_col].dataType.simpleString())
+    return _topk(scored, k)
 
 
 def embedding_near_dups(emb: DataFrame, threshold: float = 0.95,
@@ -521,7 +484,8 @@ def embedding_near_dups(emb: DataFrame, threshold: float = 0.95,
     (``srp_dropped_buckets`` reports what the cap removed).  The exact
     all-pairs crossJoin is a verification tool for small inputs and requires
     an explicit ``exact=True`` opt-in so the quadratic path can never be
-    reached by default-argument accident."""
+    reached by default-argument accident.  A NULL cosine never passes the
+    threshold, so a degenerate vector never pairs."""
     if planes is None and not exact:
         raise ValueError(
             "embedding_near_dups: pass `planes` for the LSH-bucketed scale "
@@ -563,6 +527,8 @@ def lsh_topk_multiprobe(emb: DataFrame, planes: list[list[float]],
     bits — the planes with the smallest |dot|, where the true neighbor
     most plausibly landed on the other side.  Same recall lever at
     1/B-th the index size: the data side stays ONE bucket per vector.
+    ``n_flip=0`` is plain single-probe SRP top-k: candidates share a
+    bucket, exact cosine re-rank within it.
 
     Shape: per-row plane dots are computed once into an array (narrow);
     the flip choice is a per-row array_sort over (|dot|, plane) — no
@@ -571,7 +537,8 @@ def lsh_topk_multiprobe(emb: DataFrame, planes: list[list[float]],
     the bucket key with the same per-bucket cap as every other bucketed
     path; cross-probe duplicate pairs collapse in the scoring
     aggregate.  Ties on |dot| break on plane index (deterministic, and
-    mirrored by the SQL twin)."""
+    mirrored by the SQL twin).  Queries living only in dropped buckets
+    return no neighbors — ``srp_dropped_buckets`` surfaces them."""
     n_planes = len(planes)
     if n_planes > 30:
         # bucket and probe flips live in a signed 32-bit int (1 << p and
@@ -581,8 +548,8 @@ def lsh_topk_multiprobe(emb: DataFrame, planes: list[list[float]],
             f"lsh_topk_multiprobe supports at most 30 planes (int bucket "
             f"bits); got {n_planes} — use lsh_topk_multiband to add "
             f"recall beyond that")
-    vd = F.transform(F.col(vec_col), lambda x: x.cast("double"))
-    e0 = (emb.select(F.col(id_col).alias("id"), vd.alias("vd"))
+    e0 = (emb.select(F.col(id_col).alias("id"),
+                     _as_double(F.col(vec_col)).alias("vd"))
           .withColumn("vnorm", _norm2(F.col("vd")))
           .withColumn("dots", F.array(*[
               _dot(F.col("vd"),
@@ -628,11 +595,7 @@ def lsh_topk_multiprobe(emb: DataFrame, planes: list[list[float]],
     scored = (cand.withColumn("cosine", _carried_cosine())
               .groupBy("qid", "nbr_id")
               .agg(F.max("cosine").alias("cosine")))
-    w = Window.partitionBy("qid").orderBy(F.desc("cosine"), F.asc("nbr_id"))
-    return (scored.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select("qid", "nbr_id", "rank",
-                    F.round("cosine", 6).alias("cosine")))
+    return _topk(scored, k)
 
 
 def ivf_pq_topk(emb: DataFrame, n_centroids: int = 16, n_probe: int = 4,
@@ -647,15 +610,21 @@ def ivf_pq_topk(emb: DataFrame, n_centroids: int = 16, n_probe: int = 4,
     vector instead of the raw vector.
 
     Index layout: the coarse stage is the ``ivf_topk`` cell structure
-    (md5-seeded centroids, vectors live in their nearest cell, queries
-    probe the ``n_probe`` nearest).  Within cells, each vector is encoded
-    once: its ``m_sub`` equal subvectors each map to the nearest of
-    ``n_codes`` codewords (codebook per subquantizer = the subvector
-    slices of a per-subquantizer md5-seeded sample; L2 argmin computed
-    as ``||c||^2 - 2<x,c>`` with codeword-index tie-break).  Queries
-    carry an ADC lookup table — dot(q_m, codeword) for all m x j — so
-    scoring a candidate is ``m_sub`` table lookups, never a full-dim
-    dot: approx_cos = sum_m lut[m][code_m] / (|q| * |reconstruction|).
+    (``_centroid_array`` + ``_nearest_cells``: vectors live in their
+    nearest cell, queries probe the ``n_probe`` nearest).  Within cells,
+    each vector is encoded once: its ``m_sub`` equal subvectors each map
+    to the nearest of ``n_codes`` codewords (codebook per subquantizer =
+    the subvector slices of a per-subquantizer md5-seeded sample; L2
+    argmin computed as ``||c||^2 - 2<x,c>`` with codeword-index
+    tie-break, a NULL score — a degenerate codeword — ranking last).
+    Queries carry an ADC lookup table — dot(q_m, codeword) for all
+    m x j — so scoring a candidate is ``m_sub`` table lookups, never a
+    full-dim dot: approx_cos = sum_m lut[m][code_m] / (|q| *
+    |reconstruction|), through ``_cosine_arrow``.  A vector with no
+    cosine of its own (zero or NULL norm) or a subvector that matched no
+    codeword (a NULL element, a ragged length) has a NULL
+    reconstruction norm, and a NULL lookup makes the sum NULL, so
+    neither ever ranks.
 
     Scale shape: codebooks collapse to ONE broadcast row (m_sub x
     n_codes codewords); encoding and the per-query LUT are narrow
@@ -682,19 +651,8 @@ def ivf_pq_topk(emb: DataFrame, n_centroids: int = 16, n_probe: int = 4,
     Requires len(vec) divisible by ``m_sub``.
     """
     e = emb.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v"))
-    vd = F.transform(F.col("v"), lambda x: x.cast("double"))
-
-    # ---- coarse IVF cells (identical structure to ivf_topk) ----
-    ckeys = (emb.select(F.col(id_col).alias("cid"),
-                        F.md5(F.col(id_col).cast("string")).alias("_k"))
-             .orderBy("_k").limit(n_centroids).select("cid"))
-    cents = (emb.join(F.broadcast(ckeys), F.col(id_col) == F.col("cid"))
-             .select("cid",
-                     F.transform(F.col(vec_col),
-                                 lambda x: x.cast("double")).alias("cvec")))
-    cents = cents.select("cid", "cvec", _norm2(F.col("cvec")).alias("cnorm"))
-    cent_arr = cents.agg(
-        F.collect_list(F.struct("cid", "cvec", "cnorm")).alias("cents"))
+    vd = _as_double(F.col("v"))
+    cent_arr = _centroid_array(emb, n_centroids, id_col, vec_col)
 
     # ---- product codebooks: one md5-seeded sample per subquantizer;
     # the m-th codebook is the m-th subvector slice of sample m.
@@ -733,8 +691,7 @@ def ivf_pq_topk(emb: DataFrame, n_centroids: int = 16, n_probe: int = 4,
             .select("m", (F.col("j0") + 1).cast("int").alias("j"),
                     F.col("s.kid").alias("kid")))
     cbs = (emb.join(F.broadcast(keys), F.col(id_col) == F.col("kid"))
-           .withColumn("vd", F.transform(
-               F.col(vec_col), lambda x: x.cast("double")))
+           .withColumn("vd", _as_double(F.col(vec_col)))
            .select("m", "j",
                    F.slice(F.col("vd"),
                            F.col("m") * (F.size("vd") / m_sub)
@@ -759,11 +716,6 @@ def ivf_pq_topk(emb: DataFrame, n_centroids: int = 16, n_probe: int = 4,
             .withColumn("vd", vd)
             .withColumn("vnorm", _norm2(F.col("vd"))))
 
-    def _cell_score(c):
-        cos = _dot(F.col("vd"), c["cvec"]) / (F.col("vnorm") * c["cnorm"])
-        ncos = F.coalesce(-cos, F.lit(float("inf")))
-        return F.struct(ncos.alias("ncos"), c["cid"].alias("cid"))
-
     def _guarded(vec):
         # a dimension not divisible by m_sub would silently drop the
         # trailing dims from every subvector — fail loudly per row
@@ -772,9 +724,10 @@ def ivf_pq_topk(emb: DataFrame, n_centroids: int = 16, n_probe: int = 4,
         # rebuilt this guard inside every per-m slice, 16x per row of
         # pure plan-construction overhead (py4j round trips dominate the
         # bench's per-call cost — the whole query tree was measured at
-        # ~3.4 s of driver-side Python before any job ran).
+        # ~3.4 s of driver-side Python before any job ran).  A NULL
+        # vector passes (with ANSI off, size(NULL) is -1).
         return F.when(
-            F.size(vec) % m_sub != 0,
+            vec.isNotNull() & (F.size(vec) % m_sub != 0),
             F.raise_error(F.concat(
                 F.lit("ivf_pq_topk: vector dim "),
                 F.size(vec).cast("string"),
@@ -785,26 +738,27 @@ def ivf_pq_topk(emb: DataFrame, n_centroids: int = 16, n_probe: int = 4,
         return F.slice(F.col("vdg"), m * d_sub + 1, d_sub)
 
     # encode: per m, argmin_j of ||c||^2 - 2<x_m, c> via struct-min
-    # (lexicographic (score, j) — deterministic tie-break); the selected
+    # (lexicographic (score, j) — deterministic tie-break; a NULL score
+    # ranks last, +inf, exactly like a NULL cell cosine); the selected
     # struct carries j and ||c||^2 for the reconstruction norm.  ONE
     # transform-over-sequence expression instead of a python loop over
     # m (16x smaller tree, same per-row arithmetic in the same order —
     # the HOF lambda is per ROW, not per candidate pair, so interpreted
     # dispatch here is negligible).
+    inf = F.lit(float("inf"))
     enc = F.transform(
         F.sequence(F.lit(0), F.lit(m_sub - 1)),
         lambda m: F.array_min(F.transform(
             F.slice(F.col("cb_s"), m * n_codes + 1, n_codes),
             lambda t: F.struct(
-                (t["c2"] - F.lit(2.0) * _dot(_sub(m), t["cw"]))
-                .alias("score"),
+                F.coalesce(t["c2"] - F.lit(2.0) * _dot(_sub(m), t["cw"]),
+                           inf).alias("score"),
                 t["j"].alias("j"), t["c2"].alias("c2")))))
 
     tagged = (base
               .withColumn("vdg", _guarded(F.col("vd")))
-              .withColumn("cells", F.slice(
-                  F.array_sort(F.transform(F.col("cents"), _cell_score)),
-                  1, n_probe))
+              .withColumn("cells", _nearest_cells(
+                  F.col("vd"), F.col("vnorm"), F.col("cents"), n_probe))
               .withColumn("enc", enc))
     # NOTE: tagged feeds both sides of the candidate join and is
     # recomputed per branch by design — persisting it was MEASURED
@@ -813,13 +767,18 @@ def ivf_pq_topk(emb: DataFrame, n_centroids: int = 16, n_probe: int = 4,
     # the per-row codebook copy below keeps the recompute cheap
     tagged = tagged.select("id", "vd", "vnorm", "cells", "enc")
 
-    # data side: cell + codes + reconstruction norm (m-ordered fold)
+    # data side: cell + codes + reconstruction norm (m-ordered fold),
+    # NULL when the vector has no cosine or a subvector matched no
+    # codeword
+    encoded = ((F.col("vnorm") > 0)
+               & F.forall("enc", lambda s: s["score"] < inf))
     assign = tagged.select(
         F.col("id").alias("nbr_id"),
         F.element_at("cells", 1)["cid"].alias("cid"),
         F.transform("enc", lambda s: s["j"]).alias("codes"),
-        F.sqrt(F.aggregate(F.transform("enc", lambda s: s["c2"]),
-                           F.lit(0.0), lambda a, x: a + x)).alias("pqn"))
+        F.when(encoded, F.sqrt(F.aggregate(
+            F.transform("enc", lambda s: s["c2"]),
+            F.lit(0.0), lambda a, x: a + x))).alias("pqn"))
     # query side: probe cells + FLAT ADC lookup table — lut[m*K + j] =
     # dot(q_m, codeword_{m,j}), built once per QUERY row (m_sub x
     # n_codes lookups into the unordered cb array), so scoring a
@@ -841,52 +800,24 @@ def ivf_pq_topk(emb: DataFrame, n_centroids: int = 16, n_probe: int = 4,
                       F.explode(F.transform("cells", lambda s: s["cid"]))
                       .alias("cid")))
 
-    # Cells collapse to ONE member-array row each (nbr_id-sorted for
-    # determinism): the probe side broadcast-joins n_centroids rows and
-    # scores a whole cell INSIDE its row with narrow folds, exploding
-    # only the per-cell shortlist.  The first cut materialized a
-    # (query x candidate) pair row carrying the 2 KB query LUT — ~59M
-    # rows x 2 KB of row copies at sf0.1 (15 s); this shape never
-    # fans out past the shortlist (measured ~4 s, at exact-IVF parity).
-    # Same arithmetic in the same fold order, so results (and the
-    # DuckDB twin) are unchanged.  Scale bound: a cell's members must
-    # fit one row (max_cell cap; n_centroids must grow with the corpus
-    # exactly like ivf_topk's).
-    # Fail LOUDLY on an over-cap cell instead of silently dropping its
-    # members from every probing query's candidate pool (ADVICE r7: the
-    # old filter collapsed recall with no signal once any cell exceeded
-    # max_cell — with 16 default centroids that is a few million
-    # vectors).  Mirrors the m_sub raise_error guard: the message names
-    # the knob to turn (n_centroids), and the check folds to a no-op on
-    # every in-bound cell.
-    max_cell = 100_000
-    members = (assign.groupBy("cid")
-               .agg(F.array_sort(F.collect_list(
-                   F.struct("nbr_id", "codes", "pqn"))).alias("members"))
-               .withColumn("members", F.when(
-                   F.size("members") > max_cell,
-                   F.raise_error(F.concat(
-                       F.lit("ivf_pq_topk: cell "),
-                       F.col("cid").cast("string"),
-                       F.lit(f" holds more than max_cell={max_cell} "
-                             "vectors ("),
-                       F.size("members").cast("string"),
-                       F.lit(") - raise n_centroids so cells stay "
-                             "row-sized"))))
-                   .otherwise(F.col("members"))))
+    # Cells collapse to ONE member-array row each (``_member_arrays``,
+    # which raises on a cell over ``_MAX_CELL``): the probe side
+    # broadcast-joins n_centroids rows and scores a whole cell INSIDE its
+    # row, exploding only the per-cell shortlist.  The first cut
+    # materialized a (query x candidate) pair row carrying the 2 KB query
+    # LUT — ~59M rows x 2 KB of row copies at sf0.1 (15 s); this shape
+    # never fans out past the shortlist (measured ~4 s, at exact-IVF
+    # parity).
+    members = _member_arrays(assign, "ivf_pq_topk", "nbr_id", "codes", "pqn")
 
     # ADC scoring of whole cells runs in a vectorized Arrow kernel: the
-    # joined row already carries the query LUT and the broadcast cell
-    # member-array, and the per-member work (m_sub LUT gathers + a sort
-    # for the shortlist) was the innermost loop of the whole query —
-    # queries x probes x cell-members evaluations of interpreted HOF
-    # lambdas, measured as a 48 CPU-s stage (~20 ms per query row) at
-    # sf0.1.  numpy reproduces it bit-for-bit: the m-ordered gather sum
-    # is an elementwise left fold from 0.0 (never np.sum, whose pairwise
-    # blocking changes addition order), adc = adot / (qnorm * pqn) in
-    # the same order, and the (nadc, nbr_id) shortlist order is a stable
-    # lexsort — equal doubles (and NaNs) fall back to nbr_id exactly
-    # like array_sort on the (nadc, nbr_id) struct.
+    # per-member work (m_sub LUT gathers + a sort for the shortlist) was
+    # the innermost loop of the whole query — measured as a 48 CPU-s
+    # stage (~20 ms per query row) at sf0.1 as interpreted HOF lambdas.
+    # numpy reproduces it bit-for-bit: the m-ordered gather sum is an
+    # elementwise left fold from 0.0 (never np.sum, whose pairwise
+    # blocking changes addition order), the divide is ``_cosine_arrow``,
+    # and the (adc desc, nbr_id) shortlist order is a stable lexsort.
     r_short = max(rerank, k) if rerank else k
     id_dt = emb.schema[id_col].dataType.simpleString()
 
@@ -895,47 +826,39 @@ def ivf_pq_topk(emb: DataFrame, n_centroids: int = 16, n_probe: int = 4,
         import pyarrow as pa
         import pyarrow.compute as pc
         for rb in it:
-            qid_a, qnorm_a, lut_a, mem_a = (rb.column(i) for i in range(4))
-            n_rows = len(qid_a)
-            out_empty = pa.RecordBatch.from_arrays(
-                [qid_a.slice(0, 0), qid_a.slice(0, 0),
-                 pa.array([], type=pa.float64())],
-                names=["qid", "nbr_id", "adc_cos"])
-            if n_rows == 0:
-                yield out_empty
-                continue
-            if isinstance(mem_a, pa.ChunkedArray):
-                mem_a = mem_a.combine_chunks()
-            if isinstance(lut_a, pa.ChunkedArray):
-                lut_a = lut_a.combine_chunks()
-            p = pc.list_parent_indices(mem_a).to_numpy(
-                zero_copy_only=False)
+            qid_a, qnorm_a, lut_a, mem_a = rb.columns
             flat = mem_a.flatten()
-            if len(flat) == 0:
-                yield out_empty
-                continue
+            p = pc.list_parent_indices(mem_a).to_numpy(zero_copy_only=False)
             nbr = flat.field("nbr_id")
             codes = np.asarray(flat.field("codes").flatten()).reshape(
                 len(flat), m_sub)
-            pqn = flat.field("pqn").to_numpy(zero_copy_only=False)
-            lut = np.asarray(lut_a.flatten()).reshape(
-                n_rows, m_sub * n_codes)
-            qn = qnorm_a.to_numpy(zero_copy_only=False)
-            # m-ordered left fold of lut[m*K + codes[m]] (codes 1-based)
+            pqn_a = flat.field("pqn")
+            lut_f = lut_a.flatten()
+            lut = np.asarray(lut_f).reshape(len(lut_a), m_sub * n_codes)
+            # m-ordered left fold of lut[m*K + codes[m]] (codes 1-based);
+            # a NULL lookup, query norm or reconstruction norm -> NULL
             adot = np.zeros(len(flat), dtype=np.float64)
+            null = (qnorm_a.is_null().to_numpy(zero_copy_only=False)[p]
+                    | pqn_a.is_null().to_numpy(zero_copy_only=False))
+            lut_null = (lut_f.is_null().to_numpy(zero_copy_only=False)
+                        .reshape(lut.shape) if lut_f.null_count else None)
             for m in range(m_sub):
-                adot = adot + lut[p, m * n_codes + codes[:, m] - 1]
-            adc = adot / (qn[p] * pqn)
+                at = m * n_codes + codes[:, m] - 1
+                adot = adot + lut[p, at]
+                if lut_null is not None:
+                    null |= lut_null[p, at]
+            adc = _cosine_arrow(
+                adot, qnorm_a.to_numpy(zero_copy_only=False)[p],
+                pqn_a.to_numpy(zero_copy_only=False), null)
+            ql = qid_a.take(pa.array(p, type=pa.int64()))
             keep = np.flatnonzero(
-                pc.not_equal(nbr, qid_a.take(pa.array(p)))
+                pc.and_(pc.not_equal(nbr, ql), adc.is_valid())
                 .to_numpy(zero_copy_only=False))
-            if len(keep) == 0:
-                yield out_empty
-                continue
-            pk, nadck = p[keep], -adc[keep]
-            nbrk = nbr.take(pa.array(keep))
-            nbr_np = nbrk.to_numpy(zero_copy_only=False)
-            order = np.lexsort((nbr_np, nadck, pk))
+            pk = p[keep]
+            adck = adc.to_numpy(zero_copy_only=False)[keep]
+            nbrk = nbr.take(pa.array(keep, type=pa.int64()))
+            order = np.lexsort((nbrk.to_numpy(zero_copy_only=False),
+                                -adck, pk))
             ps = pk[order]
             starts = np.concatenate(
                 ([0], np.flatnonzero(np.diff(ps)) + 1))
@@ -943,10 +866,10 @@ def ivf_pq_topk(emb: DataFrame, n_centroids: int = 16, n_probe: int = 4,
                     - np.repeat(starts, np.diff(
                         np.concatenate((starts, [len(order)])))))
             top = order[rank < r_short]
-            sel = pa.array(top)
             yield pa.RecordBatch.from_arrays(
-                [qid_a.take(pa.array(pk[top])), nbrk.take(sel),
-                 pa.array(-nadck[top], type=pa.float64())],
+                [ql.take(pa.array(keep[top], type=pa.int64())),
+                 nbrk.take(pa.array(top, type=pa.int64())),
+                 pa.array(adck[top], type=pa.float64())],
                 names=["qid", "nbr_id", "adc_cos"])
 
     scored = (probes.join(F.broadcast(members), "cid")
@@ -954,34 +877,22 @@ def ivf_pq_topk(emb: DataFrame, n_centroids: int = 16, n_probe: int = 4,
               .mapInArrow(_score_batches,
                           schema=f"qid {id_dt}, nbr_id {id_dt}, "
                                  f"adc_cos double"))
-    wq = Window.partitionBy("qid").orderBy(F.desc("adc_cos"),
-                                           F.asc("nbr_id"))
     if not rerank:
-        return (scored.withColumn("rank", F.row_number().over(wq))
-                .filter(F.col("rank") <= k)
-                .select("qid", "nbr_id", "rank",
-                        F.round("adc_cos", 6).alias("adc_cos")))
+        return _topk(scored, k, "adc_cos")
     # IVFADC+R: ADC proposes top-R, original vectors are fetched for the
     # shortlist only (queries x R rows — never a corpus-wide vector
     # shuffle), exact cosine disposes
-    short = (scored.withColumn("arank", F.row_number().over(wq))
-             .filter(F.col("arank") <= max(rerank, k))
-             .select("qid", "nbr_id"))
+    short = _topk(scored, r_short, "adc_cos").select("qid", "nbr_id")
     nbrs = (e.withColumn("vb", vd)
             .select(F.col("id").alias("nbr_id"), "vb",
                     _norm2(F.col("vb")).alias("nnorm")))
     qs = (e.withColumn("va", vd)
           .select(F.col("id").alias("qid"), "va"))
     ex = (short.join(qs, "qid").join(nbrs, "nbr_id")
-          .withColumn("cosine", (_dot(F.col("va"), F.col("vb"))
-                                 / (_norm2(F.col("va")) * F.col("nnorm")))
-          .cast("double")))
-    we = Window.partitionBy("qid").orderBy(F.desc("cosine"),
-                                           F.asc("nbr_id"))
-    return (ex.withColumn("rank", F.row_number().over(we))
-            .filter(F.col("rank") <= k)
-            .select("qid", "nbr_id", "rank",
-                    F.round("cosine", 6).alias("cosine")))
+          .withColumn("cosine", _cosine(_dot(F.col("va"), F.col("vb")),
+                                        _norm2(F.col("va")),
+                                        F.col("nnorm"))))
+    return _topk(ex, k)
 
 
 def margin_pairs(emb_a: DataFrame, emb_b: DataFrame, k: int = 4,
@@ -998,11 +909,14 @@ def margin_pairs(emb_a: DataFrame, emb_b: DataFrame, k: int = 4,
     beat it to align.
 
     Composition: the neighbor scans ARE ``brute_force_topk`` (one
-    broadcast-side pass each way; swap in ``lsh_topk``/``ivf_pq_topk``
-    candidates upstream for corpus-scale sides), so cosines enter the
-    margin already round-6 — the penalty means fold those k values in
-    RANK order (deterministic), and ties in margin break on the partner
-    id.  Output: (a_id, b_id, cosine, margin), mutual-best pairs only.
+    broadcast-side pass each way; swap in ``lsh_topk_multiprobe``/
+    ``ivf_pq_topk`` candidates upstream for corpus-scale sides), so
+    cosines enter the margin already round-6 — the penalty means fold
+    those k values in RANK order (deterministic), and ties in margin
+    break on the partner id.  The margin divide is a ``try_divide``: a
+    zero penalty sum gives a NULL margin, which never pairs (a
+    degenerate vector has no neighbors, so it never reaches this stage).
+    Output: (a_id, b_id, cosine, margin), mutual-best pairs only.
 
     Scale shape: two top-k scans + three key joins on id-sized frames
     (pa/pb are one row per vector, broadcast-able); the pair frame
@@ -1029,9 +943,9 @@ def margin_pairs(emb_a: DataFrame, emb_b: DataFrame, k: int = 4,
     scored = (fwd.select(F.col("qid").alias("a_id"),
                          F.col("nbr_id").alias("b_id"), "cosine")
               .join(pa, "a_id").join(pb, "b_id")
-              .withColumn("margin",
-                          F.col("cosine")
-                          / ((F.col("pen_a") + F.col("pen_b")) / 2)))
+              .withColumn("margin", F.try_divide(
+                  F.col("cosine"), (F.col("pen_a") + F.col("pen_b")) / 2))
+              .filter(F.col("margin").isNotNull()))
     wa = Window.partitionBy("a_id").orderBy(F.desc("margin"),
                                             F.asc("b_id"))
     wb = Window.partitionBy("b_id").orderBy(F.desc("margin"),

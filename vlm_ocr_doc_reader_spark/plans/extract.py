@@ -10,20 +10,8 @@ The judged invariant: output spans equal the single-node oracle's
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 from ..operators.fused import fused_extract_rows
-
-
-def explode_spans(documents: DataFrame) -> DataFrame:
-    """documents(doc_id, spans) -> flat (doc_id, kind, text, media_ref, offset)."""
-    return (documents
-            .select("doc_id", F.explode("spans").alias("s"))
-            .select("doc_id",
-                    F.col("s.kind").alias("kind"),
-                    F.col("s.text").alias("text"),
-                    F.col("s.media_ref").alias("media_ref"),
-                    F.col("s.offset").alias("offset")))
 
 
 def extract(documents: DataFrame) -> DataFrame:

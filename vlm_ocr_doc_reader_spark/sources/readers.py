@@ -30,8 +30,6 @@ DOCUMENTS_SCHEMA = StructType([
     StructField("spans", ArrayType(SPAN_STRUCT)),
 ])
 
-VALID_KINDS = ("text", "heading", "image", "table", "boilerplate", "link")
-
 
 def ensure_min_partitions(df: DataFrame, n: int | None = None) -> DataFrame:
     """Guarantee at least ``n`` (default: the cluster's default parallelism)
@@ -95,19 +93,6 @@ def read_documents(spark: SparkSession, path: str,
     if enforce:
         df = df.filter(F.col("doc_id").isNotNull())
     return df
-
-
-def quarantine_invalid_spans(df: DataFrame) -> tuple[DataFrame, DataFrame]:
-    """Split exploded spans into (valid, quarantine): unknown/null kinds or
-    null offsets go to the side-output (P5 quarantine pattern).
-
-    The predicate is null-safe (coalesce to false): a NULL kind makes
-    ``isin`` NULL, and filter(~NULL) would drop the row from BOTH outputs —
-    the split must be lossless."""
-    good = F.coalesce(
-        F.col("kind").isin(*VALID_KINDS) & F.col("offset").isNotNull(),
-        F.lit(False))
-    return df.filter(good), df.filter(~good)
 
 
 def with_content_hash(df: DataFrame) -> DataFrame:

@@ -49,6 +49,11 @@ def session_conf(shuffle_partitions: int | None = None,
         "spark.sql.execution.arrow.pyspark.enabled": "true",
         "spark.sql.execution.arrow.maxRecordsPerBatch": "512",
         "spark.sql.session.timeZone": "UTC",
+        # ANSI SQL (Spark 4's default), pinned so an environment that turns
+        # it off cannot change arithmetic and casts: the operators are
+        # written to never raise under it (e.g. similarity's try_divide
+        # cosine), and their outputs are tested with it on
+        "spark.sql.ansi.enabled": "true",
         # X3 retry analog (ocr_client.py:261-345 3-attempt backoff): Spark
         # task-level retries replace app-level retry for deterministic UDFs
         "spark.task.maxFailures": "4",
