@@ -1,585 +1,131 @@
-"""Benchmark harness. Prints ONE JSON line:
-  {"metric": ..., "value": N, "unit": "sec", "queries": {...}, "sf": ...}
+"""Seconds per registered contract query.
 
-Headline: end-to-end extraction throughput (docs/sec, local[CPUS]) on the
-deterministic synthetic interleaved corpus (the north metric), plus
-per-query timings of the contract queries at $SPARK_GRAFT_SF_DIR, plus the
-north rule's two-cluster-size scaling evidence: the same extraction job at
-N and 4N cores on identical input (chosen so neither level oversubscribes
-the box — each task uses a JVM thread AND a Python worker), with scaling
-efficiency (also written to BENCH.md).
+Times every ``contract.QUERIES`` entry, or the names given on the command
+line, on the tables at $SPARK_GRAFT_SF_DIR.  Each pass runs every selected
+query once, in registry order, to a noop sink; passes are interleaved so a
+slow phase of the host spreads over all queries instead of landing on one.
+Each run has its own Spark job group, and straight after it the group's
+shuffle bytes and per-operator SQL time are read from Spark's status stores
+(``perfbench/sparkstats.py``), which keep only the last 1000 executions.
+Persisted intermediates are released after every run, so each pass does the
+same work.
 
-Env:
-  SPARK_GRAFT_SF_DIR   (default /root/testdata/sf0.1)
-  SPARK_GRAFT_CPUS     (default 32)
-  SPARK_GRAFT_SCALING  (default 1; set 0 to skip the scaling pass)
-  SPARK_GRAFT_BENCH_DOCS (default 20000)
+Prints ONE JSON line: {"metric": "query_sec_total", "value": sum of the
+per-query minimums, "unit": "sec", "sf", "cpus", "passes", "queries":
+{name: {"sec_min", "sec_median", "sec": per-pass seconds, "shuffle_bytes",
+"operators_ms": {SQL node: summed time metrics}}}}.
+
+Usage: python bench.py [query ...]
+Env:   SPARK_GRAFT_SF_DIR  tables to read (default /root/testdata/sf0.1)
+       SPARK_GRAFT_CPUS    local[N] master (default: this host's CPUs)
 """
 
 from __future__ import annotations
 
 import json
 import os
+import re
+import statistics
 import sys
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+sys.path.append(os.path.join(os.path.dirname(os.path.abspath(__file__)),
+                             "perfbench"))
 
+from sparkstats import SparkStats  # noqa: E402
+
+from vlm_ocr_doc_reader_spark.contract import QUERIES  # noqa: E402
+from vlm_ocr_doc_reader_spark.datapipe.cache import \
+    release_all_cached  # noqa: E402
 from vlm_ocr_doc_reader_spark.sources.session import get_spark  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-DO_SCALING = os.environ.get("SPARK_GRAFT_SCALING", "1") != "0"
-N_DOCS = int(os.environ.get("SPARK_GRAFT_BENCH_DOCS", "20000"))
-CACHE = os.path.join(os.path.dirname(os.path.abspath(__file__)), ".cache")
-
-BENCH_QUERIES = [
-    "extract_text", "pricing_summary", "top_order_per_cust",
-    "dim_join_rollup", "upsert_merge", "chunking", "vote", "dedup_exact",
-    "minhash_pairs", "cosine_topk", "quality", "lang_id", "fingerprint",
-    "dedup_pipeline", "dup_components", "lsh_topk_multiband",
-    "full_description",
-    "levels_suite", "sessionize", "asof_join",
-    "range_join", "range_join_left", "time_rollup", "pii_redact",
-    "repetition", "heavy_hitters", "tfidf", "sample_suite",
-    "event_percentiles", "event_pivot", "curation",
-    "kmv_distinct", "cms_counts", "hist_quantiles",
-    "decontam_overlap", "lm_score", "pack_sequences", "mixture_sample",
-    "corpus_report", "weighted_sample", "keyword_search", "robust_outliers",
-    "bm25", "domain_cap", "rolling_stats", "decayed_sum", "scd2",
-    "containment", "winsorize", "bigram_pmi", "bpe_pairs",
-    "incremental_dedup", "curriculum", "quality_clf", "corpus_diff",
-    "key_skew", "ivf_topk", "near_dup_lsh", "simhash", "windowed_counts",
-    "density_classify", "unicode_norm", "passage_dedup",
-    "truncate_chunk", "bigram_lm", "merge_shards",
-    # r7 consolidation suites (replace the merged-away single entries)
-    "scalar_suite", "agg_suite", "membership_joins", "norm_dedupe",
-    "extract_strategies",
-    # r6-staged composed entries, flipped into the registry in r7
-    "drift_report", "gopher_report", "url_report", "interleaved_report",
-    "substring_dedup", "semdedup", "dsir_select", "rake", "extract_diff",
-    "hybrid_search", "lsh_multiprobe",
-    # r8-staged entries (contract.STAGED_QUERIES): benched pre-flip so the
-    # next round starts with a measured baseline, not a guess
-    "pq_topk", "bloom_decontam", "margin_pairs",
-]
-# per-query timing protocol: QUERY_RUNS INTERLEAVED passes over the whole
-# query list (pass 1 runs every query once, then pass 2, ...), published
-# number = min per query, medians + spread alongside.  Back-to-back runs
-# of one query let a host-steal phase on this VM land on ALL of that
-# query's samples and masquerade as a regression (r4: lsh_topk_multiband
-# median doubled on one 16.5s outlier); interleaving spreads the drift
-# across the whole list, the same protocol the scaling levels use.
-QUERY_RUNS = int(os.environ.get("SPARK_GRAFT_BENCH_QUERY_RUNS", "4"))
+CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 1))
+PASSES = 3
+# "WholeStageCodegen (3)" and "WholeStageCodegen (7)" are one operator
+_CODEGEN_ID = re.compile(r"\s*\(\d+\)$")
 
 
-def corpus_path() -> str:
-    path = os.path.join(CACHE, f"bench_corpus_{N_DOCS}_s64")
-    marker = os.path.join(path, ".complete")
-    if not os.path.exists(marker):  # atomic-ish: marker written last
-        import shutil
-        shutil.rmtree(path, ignore_errors=True)
-        os.makedirs(CACHE, exist_ok=True)
-        from vlm_ocr_doc_reader_spark.fixtures.generate import (
-            generate_documents, write_documents_parquet)
-        docs = generate_documents(N_DOCS, seed=42, mega_spans=20000)
-        write_documents_parquet(docs, path, shards=64)
-        open(marker, "w").close()
-    return path
+def select(names: list[str]) -> list[str]:
+    """The queries to time: ``names`` in the order given, or the whole
+    registry when none are given."""
+    unknown = [n for n in names if n not in QUERIES]
+    if unknown:
+        raise SystemExit(f"bench.py: not in contract.QUERIES: {unknown}")
+    return list(names) or list(QUERIES)
 
 
-REPLICAS = int(os.environ.get("SPARK_GRAFT_BENCH_REPLICAS", "16"))
+def run_once(spark, stats: SparkStats, name: str, sf_dir: str,
+             group: str) -> dict:
+    """One timed run of one query under job group ``group``."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, name)
+    t0 = time.perf_counter()
+    QUERIES[name](spark, sf_dir).write.format("noop").mode("overwrite") \
+        .save()
+    sec = time.perf_counter() - t0
+    sc._jsc.clearJobGroup()
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    ops: dict[str, float] = {}
+    for e in stats.executions(group):
+        for node, metrics in e["nodes"]:
+            times = [v for k, v in metrics.items()
+                     if "time" in k or "duration" in k]
+            if times:
+                node = _CODEGEN_ID.sub("", node)
+                ops[node] = ops.get(node, 0.0) + sum(times)
+    shuffle = stats.stages(group)["shuffle_write_bytes"]
+    release_all_cached()
+    return {"sec": sec, "shuffle_bytes": shuffle, "operators_ms": ops}
 
 
-def replicated_path(base_path: str) -> str:
-    """Materialize the REPLICAS x corpus once (distinct doc_id prefixes) so
-    the scaling runs read real files instead of re-scanning the base corpus
-    REPLICAS times in-plan — the job under measurement is then scan ->
-    extract, as in production."""
-    out = os.path.join(CACHE, f"bench_corpus_{N_DOCS}_x{REPLICAS}")
-    if os.path.exists(os.path.join(out, "_SUCCESS")):
-        return out
-    spark = get_spark(master=f"local[{CPUS}]", app_name="bench-materialize",
-                      shuffle_partitions=2 * CPUS,
-                      extra_conf={"spark.ui.enabled": "false"})
-    try:
-        from pyspark.sql import functions as F
-        base = spark.read.parquet(base_path)
-        df = None
-        for i in range(REPLICAS):
-            p = base.select(
-                F.concat(F.lit(f"r{i}_"), F.col("doc_id")).alias("doc_id"),
-                "spans")
-            df = p if df is None else df.unionByName(p)
-        df.repartition(4 * CPUS).write.mode("overwrite").parquet(out)
-    finally:
-        spark.stop()
+def time_queries(spark, sf_dir: str, names: list[str],
+                 passes: int = PASSES) -> dict[str, dict]:
+    """{name: record} over ``passes`` interleaved passes.  Shuffle bytes
+    and each operator's time are medians over the passes."""
+    stats = SparkStats(spark)
+    runs: dict[str, list[dict]] = {n: [] for n in names}
+    for p in range(passes):
+        for n in names:
+            runs[n].append(run_once(spark, stats, n, sf_dir,
+                                    f"bench-{p}-{n}"))
+    out = {}
+    for n, rs in runs.items():
+        secs = [r["sec"] for r in rs]
+        nodes = sorted({k for r in rs for k in r["operators_ms"]})
+        out[n] = {
+            "sec_min": round(min(secs), 3),
+            "sec_median": round(statistics.median(secs), 3),
+            "sec": [round(s, 3) for s in secs],
+            "shuffle_bytes": int(statistics.median(
+                r["shuffle_bytes"] for r in rs)),
+            "operators_ms": {k: round(statistics.median(
+                r["operators_ms"].get(k, 0.0) for r in rs), 1)
+                for k in nodes},
+        }
     return out
 
 
-def run_extraction(master: str, path: str,
-                   runs: int = 2) -> tuple[float, int]:
-    """Run the full extraction pipeline on the materialized corpus;
-    return (best seconds over `runs`, docs)."""
-    spark = get_spark(master=master, app_name=f"bench-{master}",
-                      shuffle_partitions=max(
-                          16, 2 * int(master.split("[")[1].rstrip("]"))),
-                      extra_conf={"spark.ui.enabled": "false"})
+def main(argv: list[str]) -> None:
+    names = select(argv)
+    spark = get_spark(master=f"local[{CPUS}]", app_name="bench-queries",
+                      extra_conf={"spark.ui.enabled": "false",
+                                  "spark.ui.showConsoleProgress": "false"})
+    spark.sparkContext.setLogLevel("ERROR")
     try:
-        from vlm_ocr_doc_reader_spark.plans.extract import extract
-        df = spark.read.parquet(path)
-        n = df.count()
-        best = None
-        for _ in range(runs):  # timed runs, take min (GC/JIT noise control)
-            t0 = time.time()
-            extract(df).write.format("noop").mode("overwrite").save()
-            dt = time.time() - t0
-            best = dt if best is None else min(best, dt)
-        return best, n
+        queries = time_queries(spark, SF_DIR, names)
     finally:
         spark.stop()
-
-
-# 4 rounds (was 3): host steal on this VM can inflate a whole round ~1.5x;
-# with min-per-level over interleaved rounds, one extra round materially
-# cuts the odds that EVERY sample of some level lands in a slow phase
-SCALING_ROUNDS = int(os.environ.get("SPARK_GRAFT_SCALING_ROUNDS", "4"))
-
-
-def run_scaling_interleaved(masters: list[str], path: str,
-                            rounds: int = SCALING_ROUNDS
-                            ) -> tuple[dict, int]:
-    """INTERLEAVED scaling measurement: one timed run per level per round,
-    levels alternating, min per level across rounds.  This VM's wall clock
-    drifts over minutes (host CPU steal) — back-to-back per-level batches
-    let a slow phase land entirely on one level and masquerade as (anti-)
-    scaling; interleaving spreads the drift evenly.  Returns
-    ({master: {"times": [...], "sec": min}}, n_docs)."""
-    out = {m: {"times": []} for m in masters}
-    n = None
-    for _ in range(rounds):
-        for m in masters:
-            spark = get_spark(master=m, app_name=f"bench-{m}",
-                              shuffle_partitions=max(
-                                  16, 2 * int(m.split("[")[1].rstrip("]"))),
-                              extra_conf={"spark.ui.enabled": "false"})
-            try:
-                from vlm_ocr_doc_reader_spark.plans.extract import extract
-                df = spark.read.parquet(path)
-                if n is None:
-                    n = df.count()
-                t0 = time.time()
-                extract(df).write.format("noop").mode("overwrite").save()
-                out[m]["times"].append(round(time.time() - t0, 2))
-            finally:
-                spark.stop()
-    for m in masters:
-        out[m]["sec"] = min(out[m]["times"])
-    return out, n
-
-
-def main() -> None:
-    path = corpus_path()
-    timings: dict[str, float] = {}
-    extras: dict = {}
-
-    # --- scaling evidence: same job at N and 4N cores.  Each task uses
-    # ~2 cores (JVM scan/Arrow thread + Python worker), so on this
-    # 32-core box local[32] demands ~64 cores (oversubscribed 2x) while
-    # local[8] fits — comparing those two measures box saturation, not job
-    # scaling.  N=2 vs 4N=8 keeps BOTH levels unconstrained; the headline
-    # throughput is still measured at local[CPUS]. ---
-    n_lo = max(1, CPUS // 16)
-    n_hi = max(2, CPUS // 4)
-    lo_master, hi_master = f"local[{n_lo}]", f"local[{n_hi}]"
-    full_master = f"local[{CPUS}]"
-    if DO_SCALING:
-        rpath = replicated_path(path)
-        # env-ceiling probe CONTEMPORANEOUS with the scaling passes
-        # (VERDICT r6 item 2): one probe immediately before, one
-        # immediately after, both published in the parsed line — the
-        # judged number is engine-vs-probe, not engine-vs-constant,
-        # and a non-adjacent probe cannot exonerate (or convict) the
-        # engine when this VM's ceiling drifts mid-bench.
-        sys.path.insert(0, os.path.join(
-            os.path.dirname(os.path.abspath(__file__)), "tools"))
-        from env_ceiling import probe as env_probe
-        probe_rounds = int(os.environ.get("SPARK_GRAFT_PROBE_ROUNDS", "3"))
-        probe_before = env_probe(probe_rounds) if probe_rounds else None
-        # interleaved min-per-level over SCALING_ROUNDS rounds: a single
-        # back-to-back sample once read 0.757 efficiency where the
-        # interleaved protocol reads ~0.85 on the same build (host steal
-        # drift landing on one level)
-        levels, n_docs = run_scaling_interleaved(
-            [lo_master, hi_master, full_master], rpath)
-        probe_after = env_probe(probe_rounds) if probe_rounds else None
-        t_lo = levels[lo_master]["sec"]
-        t_hi = levels[hi_master]["sec"]
-        t_full = levels[full_master]["sec"]
-        thr_lo, thr_hi = n_docs / t_lo, n_docs / t_hi
-        thr_full = n_docs / t_full
-        eff = (thr_hi / thr_lo) / (n_hi / n_lo)
-        # the oversubscribed pair is reported in the headline too (hi ->
-        # full cores): on this box each task drives a JVM thread + an Arrow
-        # worker (~2 cores/task), so full==CPUS measures saturation — the
-        # number is published, not hidden in prose
-        eff_hi_full = (thr_full / thr_hi) / (CPUS / n_hi)
-        import statistics
-
-        def _level(master_key, t_min, thr_min):
-            med = statistics.median(levels[master_key]["times"])
-            return {"sec": round(t_min, 2),
-                    "docs_per_sec": round(thr_min, 1),
-                    "sec_median": round(med, 2),
-                    "docs_per_sec_median": round(n_docs / med, 1),
-                    "times": levels[master_key]["times"]}
-
-        # paired estimator alongside the min-based one: the min/min ratio
-        # is fragile to ONE lucky sample on ONE level (a single fast
-        # local[2] round lowers the published efficiency even though no
-        # round actually scaled worse).  Because rounds interleave the
-        # levels back-to-back, the per-round ratio t_lo_i/t_hi_i cancels
-        # whatever steal phase that round sat in; the median over rounds
-        # is the drift-robust readout.  Both are published — min-based
-        # keeps the historical series comparable.
-        eff_paired = statistics.median(
-            (tl / th) / (n_hi / n_lo)
-            for tl, th in zip(levels[lo_master]["times"],
-                              levels[hi_master]["times"]))
-
-        # pooled ceiling over BOTH adjacent probes (min-based pools the
-        # raw times; paired pools the per-round ratios) + the judged
-        # engine/probe ratios
-        probe_summary = None
-        if probe_before and probe_after:
-            import statistics as _st
-            lo = probe_before["lo_times"] + probe_after["lo_times"]
-            hi = probe_before["hi_times"] + probe_after["hi_times"]
-            pooled_min = round((min(lo) / min(hi)) / 4, 3)
-            pooled_paired = round(_st.median(
-                sorted((a / b) / 4 for a, b in zip(lo, hi))), 3)
-            probe_summary = {
-                "before": probe_before,
-                "after": probe_after,
-                "rounds_each": probe_rounds,
-                "efficiency_min": pooled_min,
-                "efficiency_paired_median": pooled_paired,
-                "engine_probe_ratio_min": round(eff / pooled_min, 3),
-                "engine_probe_ratio_paired": round(
-                    eff_paired / pooled_paired, 3),
-            }
-
-        extras["scaling"] = {
-            "input_docs": n_docs,
-            "rounds": SCALING_ROUNDS,
-            lo_master: _level(lo_master, t_lo, thr_lo),
-            hi_master: _level(hi_master, t_hi, thr_hi),
-            full_master: _level(full_master, t_full, thr_full),
-            "speedup": round(thr_hi / thr_lo, 3),
-            "efficiency": round(eff, 3),
-            "efficiency_paired_median": round(eff_paired, 3),
-            f"speedup_{n_hi}_to_{CPUS}": round(thr_full / thr_hi, 3),
-            f"efficiency_{n_hi}_to_{CPUS}": round(eff_hi_full, 3),
-            "env_probe": probe_summary,
-        }
-        timings["extract_corpus"] = round(t_full, 3)
-        # headline = the box's best measured throughput, level named: with
-        # the Arrow-vectorized map, local[CPUS] on a CPUS-core box is ~2x
-        # oversubscribed (JVM thread + Python worker per task) and now
-        # saturates BELOW local[CPUS/4] — reporting the saturated level as
-        # "the" throughput would understate the engine and overstate noise
-        best = max(levels, key=lambda m: n_docs / levels[m]["sec"])
-        docs_per_sec = n_docs / levels[best]["sec"]
-        extras["headline_level"] = best
-        # median-based headline published ALONGSIDE the min-based one (the
-        # min controls for GC/JIT/steal noise; the median is what a typical
-        # run sees — both per-round times are in scaling[level]["times"])
-        extras["docs_per_sec_median"] = round(
-            n_docs / statistics.median(levels[best]["times"]), 1)
-    else:
-        t_full, n_docs = run_extraction(full_master, path)
-        timings["extract_corpus"] = round(t_full, 3)
-        docs_per_sec = n_docs / t_full
-    extras["docs_per_sec"] = round(docs_per_sec, 1)
-
-    # --- contract queries at SF_DIR ---
-    spark = get_spark(master=full_master, app_name="bench-queries",
-                      shuffle_partitions=2 * CPUS,
-                      extra_conf={"spark.ui.enabled": "false"})
-    try:
-        from vlm_ocr_doc_reader_spark.contract import (QUERIES,
-                                                       STAGED_QUERIES)
-        from vlm_ocr_doc_reader_spark.datapipe.cache import \
-            release_all_cached
-        lookup = {**STAGED_QUERIES, **QUERIES}  # registry wins name clashes
-        all_times: dict[str, list[float]] = {n: [] for n in BENCH_QUERIES}
-        for _ in range(QUERY_RUNS):          # interleaved passes
-            for name in BENCH_QUERIES:
-                t0 = time.time()
-                lookup[name](spark, SF_DIR).write.format("noop") \
-                    .mode("overwrite").save()
-                all_times[name].append(time.time() - t0)
-                # persisting operators (curation, levels_suite) attach
-                # handles; free them so pass k+1 measures the same work
-                release_all_cached()
-        import statistics as _st
-        medians: dict[str, float] = {}
-        spread: dict[str, list[float]] = {}
-        for name, times in all_times.items():
-            timings[name] = round(min(times), 3)   # published number
-            medians[name] = round(_st.median(times), 3)
-            spread[name] = [round(t, 3) for t in sorted(times)]
-        extras["query_runs"] = QUERY_RUNS
-        extras["query_protocol"] = "interleaved_min"
-        extras["query_medians"] = medians
-        extras["query_spread"] = spread
-
-        # --- curation warm/cold split (r5 verdict item 5: at ~16 s cold
-        # it is ~18% of the gate bench and the r4->r5 delta confused the
-        # measurement's author).  COLD (the headline, and what `timings`
-        # publishes) = interleaved min with persisted deps released
-        # between passes — what a fresh job pays for the five composed
-        # operators.  WARM = an immediate re-run while the previous run's
-        # persisted intermediates are still attached: Spark's CacheManager
-        # matches the identical logical plans, so this is what a resident
-        # pipeline pays per refresh (and what r4 accidentally measured).
-        t0 = time.time()
-        QUERIES["curation"](spark, SF_DIR).write.format("noop") \
-            .mode("overwrite").save()
-        all_times["curation"].append(time.time() - t0)  # extra cold sample
-        t0 = time.time()
-        QUERIES["curation"](spark, SF_DIR).write.format("noop") \
-            .mode("overwrite").save()
-        extras["curation_warm_sec"] = round(time.time() - t0, 3)
-        release_all_cached()
-        # fold the extra cold sample into curation's published stats
-        timings["curation"] = round(min(all_times["curation"]), 3)
-        medians["curation"] = round(_st.median(all_times["curation"]), 3)
-        spread["curation"] = [round(t, 3)
-                              for t in sorted(all_times["curation"])]
-        extras["curation_cold_sec"] = timings["curation"]
-
-        # verify's sample fan-out is one corpus scan regardless of the axis
-        # count (explode over a persisted pass) — evidence: wall time must
-        # be ~flat in len(axes)
-        from pyspark.sql import functions as Fx
-        from vlm_ocr_doc_reader_spark.plans.levels import (kept_text_spans,
-                                                           resolve, scan,
-                                                           verify)
-        d = spark.read.parquet(f"{SF_DIR}/documents.parquet") \
-            .withColumn("text", Fx.concat(
-                Fx.col("text"), Fx.lit(" contract number "),
-                (Fx.col("doc_id") + 7700000000).cast("string"),
-                Fx.lit(" filed.")))
-        docs = d.select(
-            Fx.concat(Fx.lit("doc_"), Fx.col("doc_id").cast("string"))
-              .alias("doc_id"),
-            Fx.transform(
-                Fx.split(Fx.col("text"), r"\. "),
-                lambda x, i: Fx.struct(
-                    Fx.lit("text").alias("kind"), x.alias("text"),
-                    Fx.lit(None).cast("string").alias("media_ref"),
-                    i.cast("int").alias("offset"))).alias("spans"))
-        kept = kept_text_spans(docs).persist()
-        reg = resolve(docs, scan(docs, kept=kept), kept=kept)
-        for n_ax in (2, 8):
-            t0 = time.time()
-            verify(docs, reg, axes=tuple(range(1, n_ax + 1)), kept=kept) \
-                .write.format("noop").mode("overwrite").save()
-            timings[f"levels_verify_axes{n_ax}"] = round(time.time() - t0, 3)
-        kept.unpersist()
-    finally:
-        spark.stop()
-
-    total = round(sum(timings.values()), 3)
-    result = {
-        "metric": "extraction_docs_per_sec",
-        "value": round(docs_per_sec, 1),
-        "unit": "docs/sec",
-        "queries": timings,
+    print(json.dumps({
+        "metric": "query_sec_total",
+        "value": round(sum(q["sec_min"] for q in queries.values()), 3),
+        "unit": "sec",
         "sf": SF_DIR.rstrip("/").split("sf")[-1],
-        "bench_total_sec": total,
-        **extras,
-    }
-    print(json.dumps(result))
-
-    # The driver keeps only the LAST ~2000 chars of stdout and parses the
-    # first complete JSON line it finds there; the full dump above has
-    # outgrown that window (BENCH_r03/r04 recorded parsed: null and a
-    # front-truncated medians dict).  Emit a compact, schema-complete line
-    # LAST so a complete record always sits inside the tail window; the
-    # full dump is preserved in BENCH_full.json and BENCH.md.
-    compact = {
-        "metric": result["metric"],
-        "value": result["value"],
-        "unit": result["unit"],
-        "sf": result["sf"],
-        "queries": {k: round(v, 2) for k, v in timings.items()},
-        "bench_total_sec": total,
-        "query_runs": extras.get("query_runs"),
-        "query_protocol": extras.get("query_protocol"),
-        "curation_cold_sec": extras.get("curation_cold_sec"),
-        "curation_warm_sec": extras.get("curation_warm_sec"),
-    }
-    if DO_SCALING:
-        s = extras["scaling"]
-        compact["efficiency"] = s["efficiency"]
-        compact["efficiency_paired_median"] = s["efficiency_paired_median"]
-        compact["speedup"] = s["speedup"]
-        compact["headline_level"] = extras.get("headline_level")
-        compact["docs_per_sec_median"] = extras.get("docs_per_sec_median")
-        if s.get("env_probe"):
-            p = s["env_probe"]
-            # both adjacent probe samples + the judged engine/probe
-            # ratios live in the guaranteed-parseable line
-            compact["probe_efficiency_min"] = [
-                p["before"]["efficiency_min"], p["after"]["efficiency_min"]]
-            compact["probe_efficiency_paired"] = [
-                p["before"]["efficiency_paired_median"],
-                p["after"]["efficiency_paired_median"]]
-            compact["probe_efficiency_pooled"] = p["efficiency_min"]
-            compact["engine_probe_ratio_min"] = p["engine_probe_ratio_min"]
-            compact["engine_probe_ratio_paired"] = \
-                p["engine_probe_ratio_paired"]
-    line = json.dumps(compact)
-    if len(line) > 1800:  # keep the guaranteed-parseable line in-window
-        worst = sorted(timings, key=timings.get, reverse=True)[:25]
-        compact["queries"] = {k: round(timings[k], 2) for k in worst}
-        compact["queries_truncated_to_slowest"] = len(worst)
-        line = json.dumps(compact)
-    print(line)
-
-    with open(os.path.join(os.path.dirname(os.path.abspath(__file__)),
-                           "BENCH_full.json"), "w") as f:
-        json.dump(result, f, indent=1)
-    if DO_SCALING:
-        _write_bench_md(result)
-
-
-def _write_bench_md(r: dict) -> None:
-    s = r["scaling"]
-    keys = [k for k in s if k.startswith("local[")]
-    lines = [
-        "# BENCH — measured throughput and scaling\n",
-        f"Corpus: {s['input_docs']} synthetic interleaved docs "
-        f"(seed=42, FIXTURES.md profile incl. mega-doc skew), full "
-        f"extraction pipeline (classify + XY-cut + media reconciliation + "
-        f"ordered assembly; default zero-shuffle fused strategy — rows are "
-        f"whole documents, so extraction is a pure Arrow map), noop sink.\n",
-        "| parallelism | wall sec (min) | docs/sec | sec (median) | "
-        "docs/sec (median) | per-round times |",
-        "|---|---|---|---|---|---|",
-    ]
-    for k in keys:
-        lines.append(f"| {k} | {s[k]['sec']} | {s[k]['docs_per_sec']} | "
-                     f"{s[k].get('sec_median', '—')} | "
-                     f"{s[k].get('docs_per_sec_median', '—')} | "
-                     f"{s[k].get('times', '—')} |")
-    hi_full = [k for k in s if k.startswith("efficiency_") and "_to_" in k]
-    hi_full_line = ""
-    if hi_full:
-        k = hi_full[0]
-        pair = k.replace("efficiency_", "").replace("_to_", " -> ")
-        hi_full_line = (f"Oversubscribed pair {pair} cores: speedup "
-                        f"{s[k.replace('efficiency', 'speedup')]}x, "
-                        f"efficiency {s[k]} (saturation, see note below). ")
-    probe_line = ""
-    if s.get("env_probe"):
-        p = s["env_probe"]
-        probe_line = (
-            f"**Contemporaneous env ceiling** (tools/env_ceiling.py run "
-            f"immediately before AND after the scaling passes, "
-            f"{p['rounds_each']} rounds each): before "
-            f"{p['before']['efficiency_min']} min / "
-            f"{p['before']['efficiency_paired_median']} paired, after "
-            f"{p['after']['efficiency_min']} min / "
-            f"{p['after']['efficiency_paired_median']} paired; pooled "
-            f"{p['efficiency_min']} min / "
-            f"{p['efficiency_paired_median']} paired.  **Engine/probe "
-            f"ratio: {p['engine_probe_ratio_min']} (min-based), "
-            f"{p['engine_probe_ratio_paired']} (paired)** — the judged "
-            f"number (>= 0.95 means the engine sits at this host's own "
-            f"ceiling).")
-    lines += [
-        "",
-        f"**Speedup {keys[0]} -> {keys[1]}: {s['speedup']}x; "
-        f"scaling efficiency: {s['efficiency']}** "
-        f"(north rule target >= 0.8 at N -> 4N); paired per-round "
-        f"median efficiency {s.get('efficiency_paired_median', '—')} "
-        f"(each round's lo/hi ratio cancels that round's host-steal "
-        f"phase — robust to one lucky sample on one level).  "
-        + hi_full_line,
-        "",
-        probe_line,
-        "",
-        "The N/4N pair uses core counts that leave the box unconstrained: "
-        "every Spark task here drives a JVM thread AND an Arrow Python "
-        "worker (~2 cores/task), so local[32] on a 32-core host is ~2x "
-        "oversubscribed — it measures saturation, not scaling, which is "
-        "why its throughput can sit below local[8]'s.",
-        "",
-        "Measurement protocol: levels are INTERLEAVED (one run per level "
-        "per round, min per level) because this VM's wall clock drifts "
-        "over minutes — per-round efficiency swings ~0.70-0.91 on an "
-        "identical build.  Environment ceiling: `tools/env_ceiling.py` "
-        "(pure-CPU hashlib mapInPandas, no I/O, no engine code, same "
-        "interleaved protocol) bounds any job's 2->8-core scaling on "
-        "this host — run it NEXT TO every scaling measurement and judge "
-        "engine-vs-probe, not engine-vs-constant.  History: r5 probe "
-        "0.877 / engine 0.861; r6 probe 0.800 min-based, 0.830 "
-        "paired-median / engine 0.78-0.80 across four time-separated "
-        "samples while the box's absolute local[2] level drifted 59.3 "
-        "-> 76.5 s (+29%) — the HOST's ceiling moved, the engine sat at "
-        "it both rounds, and the extract path was byte-identical to r5 "
-        "(git-diff-verified).  r7 closed the question with ADJACENT "
-        "probes (the paragraph above): engine efficiency recovered to "
-        ">= 0.8 outright with engine/probe at or above 1x the host's "
-        "own ceiling — the r6 0.709 was the box.  The engine's own dataflow adds NO "
-        "cross-task dependency (the fused plan is a zero-shuffle map), "
-        "so executor counts on a real cluster scale it by construction.",
-        "",
-        "## Contract query timings (" + r["sf"] + ", min over "
-        + str(r.get("query_runs", 1)) + " INTERLEAVED passes; median and "
-        "sorted per-pass times alongside)",
-        "",
-        "| query | sec (min) | sec (median) | per-pass (sorted) |",
-        "|---|---|---|---|",
-    ]
-    sp = r.get("query_spread", {})
-    meds = r.get("query_medians", {})
-    for q, t in r["queries"].items():
-        s = sp.get(q)
-        lines.append(f"| {q} | {t} | {meds.get(q, '—')} | "
-                     f"{s if s else '—'} |")
-    if r.get("curation_warm_sec") is not None:
-        lines += [
-            "",
-            f"`curation` cold vs warm: **{r.get('curation_cold_sec')} s "
-            f"cold** (headline — persisted intermediates released between "
-            f"passes; the price of five composed operators on a fresh "
-            f"job) vs **{r.get('curation_warm_sec')} s warm** (immediate "
-            f"re-run with the previous pass's persisted intermediates "
-            f"attached — CacheManager matches the identical plans; what a "
-            f"resident pipeline pays per refresh).  r4 accidentally "
-            f"published warm numbers for persisting queries; from r6 both "
-            f"are explicit and COLD is the published column above."]
-    if "levels_verify_axes2" in r["queries"]:
-        lines += ["",
-                  "`levels_verify_axes2` vs `levels_verify_axes8`: verify "
-                  "derives its N vote samples from ONE corpus scan (the "
-                  "axis fan-out is a literal explode over a persisted "
-                  "pass), so wall time is ~flat in the axis count."]
-    med = r.get("docs_per_sec_median")
-    lines += ["", f"Headline: **{r['value']} docs/sec** end-to-end "
-              f"extraction at {r.get('headline_level', f'local[{CPUS}]')} "
-              f"(best measured level, min over rounds; see saturation note "
-              f"above)"
-              + (f"; median-of-rounds at the same level: "
-                 f"**{med} docs/sec**." if med else "."), ""]
-    with open(os.path.join(os.path.dirname(os.path.abspath(__file__)),
-                           "BENCH.md"), "w") as f:
-        f.write("\n".join(lines))
+        "cpus": CPUS,
+        "passes": PASSES,
+        "queries": queries,
+    }))
 
 
 if __name__ == "__main__":
-    main()
+    main(sys.argv[1:])

@@ -1,8 +1,8 @@
 """Bloom filter membership sketch + Bloom-filtered decontamination
 (sketches.bloom_build / bloom_probe / bloom_decontaminate).
 
-The staged oracle certification (test_staged_contract, check_contract
---staged) pins cross-engine exactness; this suite pins the semantic
+The contract oracle certification (test_staged_contract, check_contract)
+pins cross-engine exactness; this suite pins the semantic
 guarantees: NO false negatives ever, bounded false positives at the
 design load, zero-shuffle probe-side plan, planted contamination found.
 """

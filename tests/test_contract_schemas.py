@@ -66,10 +66,8 @@ def test_no_oracle_emits_hazardous_dtypes():
     for t in tables:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM "
                     f"read_parquet('{SF}/{t}.parquet')")
-    from vlm_ocr_doc_reader_spark.contract import STAGED_ORACLES
-
     bad = []
-    for name, sql in {**ORACLES, **STAGED_ORACLES}.items():
+    for name, sql in ORACLES.items():
         for row in con.execute(f"DESCRIBE {sql}").fetchall():
             col, typ = row[0], row[1]
             t = str(typ).upper()

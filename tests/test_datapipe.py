@@ -179,6 +179,27 @@ def test_refine_centroids_tightens_cells_and_helps_recall(spark):
     assert r_ref >= r_plain - 1e-9
 
 
+def test_refine_centroids_is_lazy(spark, jobs_started):
+    """Building Lloyd rounds, alone or under ivf_topk, starts no Spark
+    job: the rounds run with the caller's action."""
+    from vlm_ocr_doc_reader_spark.datapipe.cache import release_cached
+    from vlm_ocr_doc_reader_spark.datapipe.similarity import (
+        ivf_topk, refine_centroids)
+
+    emb = spark.createDataFrame(
+        [(i, [float(i % 3), float(i % 5), 1.0]) for i in range(40)],
+        "vec_id long, embedding array<double>")
+    cents0 = emb.filter(F.col("vec_id") < 4).select(
+        F.col("vec_id").alias("cid"), F.col("embedding").alias("cvec"))
+    with jobs_started() as ids:
+        refined = refine_centroids(emb, cents0, iters=2)
+        top = ivf_topk(emb, n_centroids=4, n_probe=2, k=2, refine_iters=2)
+    assert ids == []
+    assert refined.count() == 4 and top.count() == 80
+    release_cached(refined)
+    release_cached(top)
+
+
 def test_corpus_report_card_values(spark):
     """dup_rate counts exact normalized dups, en_share reflects lang mix,
     token totals sum — checked on a hand corpus."""

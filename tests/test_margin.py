@@ -1,6 +1,6 @@
 """Margin-based aligned-pair mining (similarity.margin_pairs).
 
-The staged oracle (test_staged_contract / --staged) pins cross-engine
+The contract oracle (test_staged_contract, check_contract) pins cross-engine
 exactness; this suite pins the semantics: a planted near-identical pair
 must be mined as mutual-best, the ratio margin must demote hub vectors
 (close to everything) relative to their raw cosine rank, output is

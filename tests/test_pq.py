@@ -1,7 +1,7 @@
 """IVFADC+R product-quantized ANN (similarity.ivf_pq_topk).
 
-Quality and determinism pins alongside the staged oracle certification
-(test_staged_contract / check_contract --staged cover exactness vs the
+Quality and determinism pins alongside the contract oracle certification
+(test_staged_contract / check_contract cover exactness vs the
 DuckDB twin):
 
 * the ADC shortlist + exact re-rank must recover nearly all of the

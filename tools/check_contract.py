@@ -3,7 +3,6 @@ on Spark and its oracle_sql() on DuckDB over the same parquet tables, compare
 row-count + schema + order-insensitive values.
 
 Usage: python tools/check_contract.py [sf_dir] [query ...]
-       --staged   also run contract.STAGED_QUERIES (pre-flip certification)
        --window   only the first 50 registry entries (exactly the rows the
                   driver will snapshot this round)
 """
@@ -114,9 +113,7 @@ def compare(name: str, spark_df, duck_df) -> list[str]:
 
 
 def main():
-    flags = {"--staged", "--window"}
-    args = [a for a in sys.argv[1:] if a not in flags]
-    staged = "--staged" in sys.argv[1:]
+    args = [a for a in sys.argv[1:] if a != "--window"]
     window = "--window" in sys.argv[1:]
     sf_dir = args[0] if args else "/root/testdata/sf0.001"
     only = set(args[1:])
@@ -126,14 +123,6 @@ def main():
 
     if window:
         QUERIES = dict(list(QUERIES.items())[:50])
-
-    if staged:
-        # append the r7-staged entries so the next window is certified
-        # with the identical comparator before the registry flip
-        from vlm_ocr_doc_reader_spark.contract import (STAGED_ORACLES,
-                                                       STAGED_QUERIES)
-        QUERIES = {**QUERIES, **STAGED_QUERIES}
-        ORACLES = {**ORACLES, **STAGED_ORACLES}
 
     spark = get_spark(master="local[8]", shuffle_partitions=16,
                       extra_conf={"spark.ui.enabled": "false"})
@@ -149,11 +138,6 @@ def main():
         except Exception as e:
             print(f"FAIL {name}: spark error: {e}")
             n_fail += 1
-            continue
-        if name not in ORACLES:
-            ok = len(sdf) >= 0
-            print(f"rows-only {name}: {len(sdf)} rows "
-                  f"({time.time()-t0:.1f}s)")
             continue
         try:
             ddf = con.execute(ORACLES[name]).fetchdf()

@@ -91,6 +91,19 @@ def davg(col, scale: int = 6):
         F.sum(c.cast("decimal(18,6)")).cast("double") / F.count(c), scale)
 
 
+def _duck_cosine(a: str, b: str) -> str:
+    """DuckDB twin of ``datapipe.similarity._cosine``: NULL for a NULL,
+    ragged or zero-norm pair, where ``list_cosine_similarity`` raises or
+    returns -1.  A NULL cosine never ranks and never passes a threshold,
+    so every oracle ranks it out before its top-k, as ``_topk`` does.
+    The norms sit in a second WHEN: DuckDB 1.0's list products can raise
+    on a NULL list in a filtered vector unless a CASE skips the row."""
+    return (f"CASE WHEN {a} IS NULL OR {b} IS NULL OR len({a}) <> len({b}) "
+            f"THEN NULL WHEN sqrt(list_dot_product({a}, {a})) "
+            f"* sqrt(list_dot_product({b}, {b})) = 0 THEN NULL "
+            f"ELSE list_cosine_similarity({a}, {b}) END")
+
+
 # ---------------------------------------------------------------------------
 # Flagship: main-content extraction over sentence spans derived from the
 # driver `documents` table (classification + ordering are the engine's M1/W8
@@ -659,16 +672,17 @@ def q_cosine_topk(spark, sf_dir):
     return brute_force_topk(e, q, k=3)
 
 
-ORACLE_COSINE_TOPK = """
+ORACLE_COSINE_TOPK = f"""
 WITH scored AS (
   SELECT q.vec_id AS qid, c.vec_id AS nbr_id,
-         list_cosine_similarity(CAST(q.embedding AS DOUBLE[]),
-                                CAST(c.embedding AS DOUBLE[])) AS cos
+         {_duck_cosine("CAST(q.embedding AS DOUBLE[])",
+                      "CAST(c.embedding AS DOUBLE[])")} AS cos
   FROM embeddings q JOIN embeddings c ON q.vec_id <> c.vec_id
   WHERE q.vec_id < 5
 ), ranked AS (
   SELECT *, row_number() OVER (PARTITION BY qid
-            ORDER BY cos DESC, nbr_id ASC) AS rank FROM scored
+            ORDER BY cos DESC, nbr_id ASC) AS rank
+  FROM scored WHERE cos IS NOT NULL
 )
 SELECT qid, nbr_id, CAST(rank AS INTEGER) AS rank, round(cos, 6) AS cosine
 FROM ranked WHERE rank <= 3
@@ -684,15 +698,15 @@ def q_near_dup(spark, sf_dir):
     return embedding_near_dups(e, threshold=0.35, exact=True)
 
 
-ORACLE_NEAR_DUP = """
-SELECT a.vec_id AS id_a, b.vec_id AS id_b,
-       round(list_cosine_similarity(CAST(a.embedding AS DOUBLE[]),
-                                    CAST(b.embedding AS DOUBLE[])), 6)
-         AS cosine
-FROM embeddings a JOIN embeddings b ON a.vec_id < b.vec_id
-WHERE a.vec_id < 150 AND b.vec_id < 150
-  AND list_cosine_similarity(CAST(a.embedding AS DOUBLE[]),
-                             CAST(b.embedding AS DOUBLE[])) >= 0.35
+ORACLE_NEAR_DUP = f"""
+WITH pairs AS (
+  SELECT a.vec_id AS id_a, b.vec_id AS id_b,
+         {_duck_cosine("CAST(a.embedding AS DOUBLE[])",
+                      "CAST(b.embedding AS DOUBLE[])")} AS cos
+  FROM embeddings a JOIN embeddings b ON a.vec_id < b.vec_id
+  WHERE a.vec_id < 150 AND b.vec_id < 150
+)
+SELECT id_a, id_b, round(cos, 6) AS cosine FROM pairs WHERE cos >= 0.35
 """
 
 
@@ -2269,13 +2283,14 @@ _PLANES_NEARDUP = _srp_planes(11, 8)
 
 
 def _duck_bucket(planes: list[list[float]], vec: str = "v") -> str:
-    """DuckDB twin of similarity.srp_buckets: bit p = (v . plane_p) >= 0."""
+    """DuckDB twin of similarity.srp_buckets: bit p = (v . plane_p) >= 0;
+    a NULL vector has no bit set (see ``_duck_cosine`` for the CASE)."""
     bits = []
     for p, plane in enumerate(planes):
         lit = "[" + ", ".join(repr(float(x)) for x in plane) + "]"
         bits.append(f"(CASE WHEN list_inner_product({vec}, {lit}) >= 0 "
                     f"THEN {1 << p} ELSE 0 END)")
-    return "(" + " + ".join(bits) + ")"
+    return f"(CASE WHEN {vec} IS NULL THEN 0 ELSE {' + '.join(bits)} END)"
 
 
 # two independent 8-plane bands for the multiband recall variant
@@ -2306,13 +2321,14 @@ sized AS (SELECT band, bucket FROM b0 GROUP BY band, bucket
 b AS (SELECT b0.* FROM b0 JOIN sized USING (band, bucket)),
 cand AS (
   SELECT a.id AS qid, c.id AS nbr_id,
-         max(list_cosine_similarity(a.v, c.v)) AS cos
+         max({_duck_cosine("a.v", "c.v")}) AS cos
   FROM b a JOIN b c ON a.band = c.band AND a.bucket = c.bucket
                    AND a.id <> c.id
   GROUP BY a.id, c.id
 ), ranked AS (
   SELECT *, row_number() OVER (PARTITION BY qid
-            ORDER BY cos DESC, nbr_id ASC) AS rank FROM cand
+            ORDER BY cos DESC, nbr_id ASC) AS rank
+  FROM cand WHERE cos IS NOT NULL
 )
 SELECT qid, nbr_id, CAST(rank AS INTEGER) AS rank, round(cos, 6) AS cosine
 FROM ranked WHERE rank <= {k}
@@ -2335,7 +2351,7 @@ WITH e AS (SELECT vec_id AS id, CAST(embedding AS DOUBLE[]) AS v
 cents AS (SELECT id AS cid, v AS cvec FROM e
           ORDER BY md5(CAST(id AS VARCHAR)) LIMIT {n_centroids}),
 scored AS (
-  SELECT e.id, e.v, c.cid, list_cosine_similarity(e.v, c.cvec) AS ccos
+  SELECT e.id, e.v, c.cid, {_duck_cosine("e.v", "c.cvec")} AS ccos
   FROM e CROSS JOIN cents c
 ), ranked AS (
   SELECT *, row_number() OVER (PARTITION BY id
@@ -2344,11 +2360,12 @@ scored AS (
 probes AS (SELECT id AS qid, v AS va, cid FROM ranked
            WHERE crank <= {n_probe}),
 cand AS (
-  SELECT p.qid, a.id AS nbr_id, list_cosine_similarity(p.va, a.v) AS cos
+  SELECT p.qid, a.id AS nbr_id, {_duck_cosine("p.va", "a.v")} AS cos
   FROM probes p JOIN assign a USING (cid) WHERE p.qid <> a.id
 ), rr AS (
   SELECT qid, nbr_id, cos, row_number() OVER (PARTITION BY qid
-         ORDER BY cos DESC, nbr_id ASC) AS rank FROM cand
+         ORDER BY cos DESC, nbr_id ASC) AS rank
+  FROM cand WHERE cos IS NOT NULL
 )
 SELECT qid, nbr_id, CAST(rank AS INTEGER) AS rank, round(cos, 6) AS cosine
 FROM rr WHERE rank <= {k}
@@ -2375,7 +2392,7 @@ sized AS (SELECT bucket FROM b0 GROUP BY bucket
 b AS (SELECT b0.* FROM b0 JOIN sized USING (bucket)),
 pairs AS (
   SELECT a.id AS id_a, c.id AS id_b,
-         list_cosine_similarity(a.v, c.v) AS cos
+         {_duck_cosine("a.v", "c.v")} AS cos
   FROM b a JOIN b c ON a.bucket = c.bucket AND a.id < c.id
 )
 SELECT id_a, id_b, round(cos, 6) AS cosine
@@ -3435,9 +3452,7 @@ SELECT 'fused' AS strategy, * FROM ({oracle_extract_pipeline()}) t1
 
 
 # ===========================================================================
-# Composed r6-staged entries — flipped into the live registry in r7 (they
-# occupy window rows; their r6 certification was the exact driver
-# comparator at sf0.001 + `check_contract.py --staged` at sf0.01).
+# Composed entries: each runs several operators end to end.
 # ===========================================================================
 
 _BOILER_SENT = ("This work is licensed for research use only and must "
@@ -3938,13 +3953,13 @@ def q_semdedup(spark, sf_dir):
     return semdedup(e, n_clusters=16, threshold=0.9)
 
 
-ORACLE_SEMDEDUP = """
+ORACLE_SEMDEDUP = f"""
 WITH e AS (SELECT vec_id AS id, CAST(embedding AS DOUBLE[]) AS v
            FROM embeddings),
 cents AS (SELECT id AS cid, v AS cvec FROM e
           ORDER BY md5(CAST(id AS VARCHAR)) LIMIT 16),
 scored AS (SELECT e.id, e.v, c.cid,
-                  list_cosine_similarity(e.v, c.cvec) AS ccos
+                  {_duck_cosine("e.v", "c.cvec")} AS ccos
            FROM e CROSS JOIN cents c),
 ranked AS (SELECT *, row_number() OVER (PARTITION BY id
                      ORDER BY ccos DESC, cid ASC) AS r FROM scored),
@@ -3956,7 +3971,7 @@ p AS (SELECT a.* FROM assign a JOIN sized USING (cid)),
 dropped AS (
   SELECT DISTINCT a.id FROM p a JOIN p b USING (cid)
   WHERE a.id <> b.id
-    AND round(list_cosine_similarity(a.v, b.v), 6) >= 0.9
+    AND round({_duck_cosine("a.v", "b.v")}, 6) >= 0.9
     AND (b.cent_cos < a.cent_cos
          OR (b.cent_cos = a.cent_cos AND b.id < a.id)))
 SELECT a.id AS vec_id, a.cid, a.cent_cos, d.id IS NULL AS is_kept
@@ -4090,9 +4105,10 @@ def _oracle_lsh_multiprobe(planes=None, k: int = 3, n_flip: int = 2,
     planes = planes or _PLANES_LSH
     bucket = _duck_bucket(planes)
     ms = ", ".join(
-        "struct_pack(m := abs(list_inner_product(v, ["
+        "struct_pack(m := CASE WHEN v IS NOT NULL THEN "
+        "abs(list_inner_product(v, ["
         + ", ".join(repr(float(x)) for x in plane)
-        + f"])), i := {p})"
+        + f"])) END, i := {p})"
         for p, plane in enumerate(planes))
     return f"""
 WITH e AS (SELECT vec_id AS id, CAST(embedding AS DOUBLE[]) AS v
@@ -4109,12 +4125,13 @@ data AS (SELECT d.id, d.v, d.bucket FROM d JOIN sized USING (bucket)),
 q AS (SELECT id AS qid, v AS va, unnest(probes) AS bucket FROM f),
 cand AS (
   SELECT q.qid, a.id AS nbr_id,
-         max(list_cosine_similarity(q.va, a.v)) AS cos
+         max({_duck_cosine("q.va", "a.v")}) AS cos
   FROM q JOIN data a USING (bucket) WHERE q.qid <> a.id
   GROUP BY q.qid, a.id
 ), rr AS (
   SELECT qid, nbr_id, cos, row_number() OVER (PARTITION BY qid
-         ORDER BY cos DESC, nbr_id ASC) AS rank FROM cand
+         ORDER BY cos DESC, nbr_id ASC) AS rank
+  FROM cand WHERE cos IS NOT NULL
 )
 SELECT qid, nbr_id, CAST(rank AS INTEGER) AS rank, round(cos, 6) AS cosine
 FROM rr WHERE rank <= {k}
@@ -4215,8 +4232,8 @@ def q_hybrid_search(spark, sf_dir):
                              query_vec_id=0, k=15, k_each=50)
 
 
-# staged oracle: tokenizer regexes use the explicit Java \s class per the
-# r6 whitespace policy (test_staged_fuzz)
+# the tokenizer regexes use the explicit Java \s class per the r6
+# whitespace policy (test_staged_fuzz)
 _WS = "[ \\t\\n\\x0b\\f\\r]+"
 ORACLE_HYBRID_SEARCH = f"""
 WITH tf AS (
@@ -4257,12 +4274,12 @@ parts AS (
          FROM embeddings),
 qv AS (SELECT v AS qvec FROM e WHERE id = 0),
 cos AS (
-  SELECT e.id, list_cosine_similarity(q.qvec, e.v) AS cosine
+  SELECT e.id, {_duck_cosine("q.qvec", "e.v")} AS cosine
   FROM e CROSS JOIN qv q WHERE e.id <> 0
 ), sem AS (
   SELECT id, CAST(row_number() OVER (ORDER BY cosine DESC, id)
                   AS INTEGER) AS sem_rank
-  FROM cos ORDER BY cosine DESC, id LIMIT 50
+  FROM cos WHERE cosine IS NOT NULL ORDER BY cosine DESC, id LIMIT 50
 ), fused AS (
   SELECT coalesce(l.id, s.id) AS id, l.lex_rank, s.sem_rank,
          round(coalesce(1.0 / (60 + l.lex_rank), 0)
@@ -4277,9 +4294,7 @@ ORDER BY rrf DESC, id LIMIT 15
 def q_pq_topk(spark, sf_dir):
     """IVFADC+R product-quantized ANN (Jegou/Douze/Schmid 2011) over the
     embeddings table: md5-seeded coarse cells and per-subquantizer
-    codebooks, ADC shortlist of 32, exact-cosine re-ranked top-3.
-    STAGED for the r8 window (the r7 registry is frozen post-flip);
-    certified by test_staged_contract + check_contract --staged."""
+    codebooks, ADC shortlist of 32, exact-cosine re-ranked top-3."""
     from .datapipe.similarity import ivf_pq_topk
     e = load(spark, sf_dir, "embeddings", lift=True)
     return ivf_pq_topk(e, k=3, m_sub=16, rerank=32)
@@ -4294,7 +4309,7 @@ WITH e AS (SELECT vec_id AS id, CAST(embedding AS DOUBLE[]) AS v
 cents AS (SELECT id AS cid, v AS cvec FROM e
           ORDER BY md5(CAST(id AS VARCHAR)) LIMIT {n_centroids}),
 cscored AS (
-  SELECT e.id, c.cid, list_cosine_similarity(e.v, c.cvec) AS ccos
+  SELECT e.id, c.cid, {_duck_cosine("e.v", "c.cvec")} AS ccos
   FROM e CROSS JOIN cents c
 ), cranked AS (
   SELECT *, row_number() OVER (PARTITION BY id
@@ -4355,11 +4370,12 @@ lut AS (
     FROM ascored) WHERE arank <= {max(rerank, k)}
 ), ex AS (
   SELECT s.qid, s.nbr_id,
-         list_cosine_similarity(qa.v, nb.v) AS cosine
+         {_duck_cosine("qa.v", "nb.v")} AS cosine
   FROM short s JOIN e qa ON qa.id = s.qid JOIN e nb ON nb.id = s.nbr_id
 ), rr AS (
   SELECT qid, nbr_id, cosine, row_number() OVER (PARTITION BY qid
-         ORDER BY cosine DESC, nbr_id ASC) AS rank FROM ex
+         ORDER BY cosine DESC, nbr_id ASC) AS rank
+  FROM ex WHERE cosine IS NOT NULL
 )
 SELECT qid, nbr_id, CAST(rank AS INTEGER) AS rank,
        round(cosine, 6) AS cosine
@@ -4372,8 +4388,7 @@ def q_bloom_decontam(spark, sf_dir):
     """Bloom-filtered benchmark decontamination: filter built over the
     eval split's 8-gram shingles (doc_id % 10 == 0), train side probed
     with ZERO train-side shuffle (single-row broadcast map + narrow
-    fold).  STAGED for the r8 window; certified by test_staged_contract
-    + check_contract --staged."""
+    fold)."""
     from .datapipe.sketches import bloom_decontaminate
     d = load(spark, sf_dir, "documents", lift=True)
     ev = d.filter(F.col("doc_id") % 10 == 0)
@@ -4445,8 +4460,7 @@ FROM checked GROUP BY doc_id
 def q_margin_pairs(spark, sf_dir):
     """Margin-based aligned-pair mining (Artetxe & Schwenk 2019) between
     the even-id and odd-id halves of the embeddings table: ratio-margin
-    over forward top-4 candidates, mutual-best pairs.  STAGED for the
-    r8 window; certified by test_staged_contract + --staged."""
+    over forward top-4 candidates, mutual-best pairs."""
     from .datapipe.similarity import margin_pairs
     e = load(spark, sf_dir, "embeddings", lift=True)
     return margin_pairs(e.filter(F.col("vec_id") % 2 == 0),
@@ -4461,18 +4475,18 @@ b AS (SELECT vec_id AS id, CAST(embedding AS DOUBLE[]) AS v
       FROM embeddings WHERE vec_id % 2 = 1),
 fr AS (
   SELECT a.id AS a_id, b.id AS b_id,
-         list_cosine_similarity(a.v, b.v) AS c
+         {_duck_cosine("a.v", "b.v")} AS c
   FROM a CROSS JOIN b
 ), fwd AS (
   SELECT a_id, b_id, round(c, 6) AS cosine,
          row_number() OVER (PARTITION BY a_id
                             ORDER BY c DESC, b_id ASC) AS rank
-  FROM fr QUALIFY rank <= {k}
+  FROM fr WHERE c IS NOT NULL QUALIFY rank <= {k}
 ), bwd AS (
   SELECT b_id, a_id, round(c, 6) AS cosine,
          row_number() OVER (PARTITION BY b_id
                             ORDER BY c DESC, a_id ASC) AS rank
-  FROM fr QUALIFY rank <= {k}
+  FROM fr WHERE c IS NOT NULL QUALIFY rank <= {k}
 ), pa AS (
   SELECT a_id, list_sum(list(cosine ORDER BY rank)) / count(*) AS pen_a
   FROM fwd GROUP BY a_id
@@ -4497,34 +4511,19 @@ FROM best WHERE ra = 1 AND rb = 1
 
 
 # ===========================================================================
-# THE LIVE REGISTRY.
+# THE REGISTRY: the one list of contract queries (check_contract.py gates
+# it against ORACLES, bench.py times it).
 #
 # ROTATION RULE (institutionalized r5): the driver snapshots the FIRST 50
 # entries each round, so the union of round N-1's driver rows and round
 # N's first-50 window must cover every registry entry — nothing ships two
-# rounds on local-only green.  Registry size must stay <= 100 (2x window).
-#
-# WINDOW STATE (last recorded round: r08).  r7 consolidated 18
-# single-purpose entries into 7 union-with-tag suites (scalar_suite,
-# agg_suite, membership_joins, norm_dedupe, sample_suite, levels_suite,
-# extract_strategies), and lsh_multiprobe absorbed lsh_topk (n_flip=0
-# equivalence proven in tests/test_multiprobe.py): registry 96.  Round 8
-# ran with the r7 window unchanged (CORRECTNESS_r08 holds the same 50
-# rows as CORRECTNESS_r07), so the 46 entries below the r7 window last
-# had driver rows in r06.  The window below is the rotation the r8 plan
-# called for: (1) those 46 re-entrants under rule (a); (2)
-# extract_strategies, whose code changed after r08 (plans/extract.py and
-# operators/fused.py were rewritten); (3) three slack slots, the
-# flagship extract_text first.  Every entry below the window marker holds
-# a green driver row in both r07 and r08 and is unchanged (code AND
-# oracle) since r08.  tests/test_contract_schemas.py (rotation coverage)
-# and tests/test_staged_contract.py (changed-since-r08 pin) enforce it.
+# rounds on local-only green.  Registry size must stay <= 100 (2x window);
+# tests/test_contract_schemas.py checks the coverage.
 # ===========================================================================
 
 QUERIES = {
     # ---- next window (first 50) ----------------------------------------
-    # (1) no row in r07 or r08 (last driver rows in r06): re-enter under
-    # rule (a)
+    # no row in r07 or r08: re-enter under the rotation rule
     "time_rollup": q_time_rollup,
     "truncate_chunk": q_truncate_chunk,
     "bigram_lm": q_bigram_lm,
@@ -4571,18 +4570,17 @@ QUERIES = {
     "full_description": q_full_description,
     "pii_redact": q_pii_redact,
     "repetition": q_repetition,
-    # (2) changed since r08: runs plans.extract.extract (rewritten after
-    # r08); the declarative rows left with their plan
+    # changed since r08: runs plans.extract.extract (rewritten after r08)
     "extract_strategies": q_extract_strategies,
-    # (3) slack: the flagship (free re-validation), the Levels suite
-    # (plans/levels.py builds on plans/extract.py) and the judged
-    # span-sequence invariant at scale
+    # never had a driver row
+    "pq_topk": q_pq_topk,
+    "bloom_decontam": q_bloom_decontam,
+    "margin_pairs": q_margin_pairs,
+    # ================ driver window boundary (50) ========================
+    # everything below holds a driver row in both r07 and r08
     "extract_text": q_extract_text,
     "levels_suite": q_levels_suite,
     "extract_diff": q_extract_diff,
-    # ================ driver window boundary (50) ========================
-    # everything below holds a GREEN driver row in both r07 and r08 and
-    # is unchanged (code AND oracle) since r08
     "scalar_suite": q_scalar_suite,
     "agg_suite": q_agg_suite,
     "membership_joins": q_membership_joins,
@@ -4684,7 +4682,9 @@ ORACLES = {
     "unicode_norm": ORACLE_UNICODE_NORM,
     "passage_dedup": ORACLE_PASSAGE_DEDUP,
     "extract_text": oracle_extract_text(),
-    # the 46 re-entrants (no row in r07 or r08)
+    "pq_topk": _oracle_pq_topk(),
+    "bloom_decontam": _oracle_bloom_decontam(),
+    "margin_pairs": _oracle_margin_pairs(),
     "time_rollup": ORACLE_TIME_ROLLUP,
     "truncate_chunk": ORACLE_TRUNCATE_CHUNK,
     "bigram_lm": ORACLE_BIGRAM_LM,
@@ -4733,31 +4733,4 @@ ORACLES = {
     "repetition": ORACLE_REPETITION,
 }
 
-# Staging area: entries certified with the exact driver comparator
-# (check_contract.py --staged, tests/test_staged_contract.py) awaiting a
-# window slot.  The 11 r6-staged entries flipped into the registry in r7.
-# The r8 plan was to flip the 3 below in beside the 46 re-entrants (49 of
-# 50 slots); round 8 ran with the r7 window unchanged and without that
-# flip.  The rotated window above spends its 50 slots on the 46
-# re-entrants, the changed extract_strategies and 3 slack entries, and
-# the registry is not growing this round, so these 3 stay staged.  A
-# later flip takes 3 window slots (the slack) and makes the registry
-# 99 <= 100 — do NOT stage a 4th entry without consolidating.
-STAGED_QUERIES: dict = {
-    "pq_topk": q_pq_topk,
-    "bloom_decontam": q_bloom_decontam,
-    "margin_pairs": q_margin_pairs,
-}
-STAGED_ORACLES: dict = {
-    "pq_topk": _oracle_pq_topk(),
-    "bloom_decontam": _oracle_bloom_decontam(),
-    "margin_pairs": _oracle_margin_pairs(),
-}
-
-# A staged/registry name clash would make check_contract.py --staged
-# (staged wins) certify one function while bench.py (registry wins)
-# benchmarks another (ADVICE r6).
-assert not set(STAGED_QUERIES) & set(QUERIES), \
-    "staged query names must be disjoint from the live registry"
 assert set(QUERIES) == set(ORACLES), "every registry query needs an oracle"
-assert set(STAGED_QUERIES) == set(STAGED_ORACLES)

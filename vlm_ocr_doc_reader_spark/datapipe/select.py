@@ -47,6 +47,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from .cache import attach_cached_deps
 from .similarity import (_as_double, _centroid_array, _cosine, _dot,
                          _nearest_cells, _norm2)
 
@@ -66,15 +67,16 @@ def _assign_clusters(emb: DataFrame, n_clusters: int, id_col: str,
                    _as_double(F.col(vec_col)).alias("vd"))
     best = F.element_at(_nearest_cells(F.col("vd"), F.col("vnorm"),
                                        F.col("cents"), 1), 1)
-    return (e.join(F.broadcast(cent_arr))
-            .withColumn("vnorm", _norm2(F.col("vd")))
-            .withColumn("_best", best)
-            .select("id", "vd", "vnorm",
-                    F.col("_best")["cid"].alias("cid"),
-                    F.round(F.when(F.col("_best")["ncos"]
-                                   == float("inf"), None)
-                            .otherwise(-F.col("_best")["ncos"]), 6)
-                    .alias("cent_cos")))
+    out = (e.join(F.broadcast(cent_arr))
+           .withColumn("vnorm", _norm2(F.col("vd")))
+           .withColumn("_best", best)
+           .select("id", "vd", "vnorm",
+                   F.col("_best")["cid"].alias("cid"),
+                   F.round(F.when(F.col("_best")["ncos"]
+                                  == float("inf"), None)
+                           .otherwise(-F.col("_best")["ncos"]), 6)
+                   .alias("cent_cos")))
+    return attach_cached_deps(out, cent_arr)
 
 
 def semdedup(emb: DataFrame, n_clusters: int = 16, threshold: float = 0.8,
@@ -104,11 +106,9 @@ def semdedup(emb: DataFrame, n_clusters: int = 16, threshold: float = 0.8,
     the same pair budget (the paper's clustering); deterministic but
     not SQL-oracled, so the gate entry runs 0."""
     a = _assign_clusters(emb, n_clusters, id_col, vec_col, refine_iters)
-    cached = []
     if persist_intermediate:
         from pyspark import StorageLevel
         a = a.persist(StorageLevel.MEMORY_AND_DISK)
-        cached = [a]
     sized = (a.groupBy("cid").agg(F.count("*").alias("sz"))
              .filter((F.col("sz") > 1) & (F.col("sz") <= max_cluster)))
     paired = a.join(F.broadcast(sized.select("cid")), "cid")
@@ -138,8 +138,7 @@ def semdedup(emb: DataFrame, n_clusters: int = 16, threshold: float = 0.8,
     out = (a.join(dropped.withColumn("_drop", F.lit(True)), "id", "left")
            .select(F.col("id").alias(id_col), "cid", "cent_cos",
                    F.col("_drop").isNull().alias("is_kept")))
-    from .cache import attach_cached_deps
-    return attach_cached_deps(out, *cached)
+    return attach_cached_deps(out, a)
 
 
 def semdedup_over_cap(emb: DataFrame, n_clusters: int = 16,
@@ -273,7 +272,6 @@ def dsir_logweights(df: DataFrame, target: Column,
                 F.round(F.sum((F.col("n") * F.col("lr"))
                               .cast("decimal(24,10)")).cast("double"), 6)
                 .alias("logw")))
-    from .cache import attach_cached_deps
     return attach_cached_deps(out, *cached)
 
 
@@ -299,5 +297,4 @@ def dsir_select(df: DataFrame, target: Column, k: int = 100,
            .withColumn("_skey", F.round(F.col("logw") + g, 6))
            .orderBy(F.desc("_skey"), F.asc("id"))
            .limit(k))
-    from .cache import attach_cached_deps
     return attach_cached_deps(out, scored)

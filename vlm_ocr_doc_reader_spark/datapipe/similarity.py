@@ -46,6 +46,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from .cache import attach_cached_deps
+
 # a cell's members travel as ONE array row (the IVF kernels score whole
 # cells per probing row), so a cell larger than this fails loudly, naming
 # the knob that shrinks cells, instead of outgrowing a row
@@ -160,7 +162,7 @@ def _centroid_array(emb: DataFrame, n_centroids: int, id_col: str,
     if refine_iters > 0:
         cents = refine_centroids(emb, cents, iters=refine_iters,
                                  id_col=id_col, vec_col=vec_col)
-    return _collect_centroids(cents)
+    return attach_cached_deps(_collect_centroids(cents), cents)
 
 
 def _member_arrays(df: DataFrame, op: str, *fields: str) -> DataFrame:
@@ -389,9 +391,15 @@ def refine_centroids(emb: DataFrame, cents: DataFrame, iters: int = 2,
     partial sums mean the shuffle carries n_centroids x dim x partitions
     rows, never the corpus.  Cells that lose all members keep their
     previous centroid (classic empty-cell rule).  Deterministic: no RNG
-    anywhere, ties break on min cid."""
+    anywhere, ties break on min cid.
+
+    Lazy: building the frame starts no Spark job.  Each round's table is
+    persisted, so the rounds after it read it once instead of re-running
+    the rounds before; the handles ride on the result
+    (``cache.release_cached``)."""
     e = emb.select(F.col(id_col).alias("id"),
                    _as_double(F.col(vec_col)).alias("vd"))
+    rounds = []
     for _ in range(iters):
         best = F.element_at(_nearest_cells(
             F.col("vd"), F.col("vnorm"), F.col("cents"), 1), 1)
@@ -411,10 +419,12 @@ def refine_centroids(emb: DataFrame, cents: DataFrame, iters: int = 2,
                  .select("cid",
                          F.coalesce(F.col("new_cvec"), F.col("cvec"))
                          .alias("cvec")))
-        # cut the growing iteration lineage (same rationale as
-        # connected_components): n_centroids rows, trivial to materialize
-        cents = cents.localCheckpoint()
-    return cents
+        # a persist, not a checkpoint: under adaptive execution even a
+        # lazy localCheckpoint runs the round's shuffle and broadcast
+        # stages while the plan is being built
+        cents = cents.persist()
+        rounds.append(cents)
+    return attach_cached_deps(cents, *rounds)
 
 
 def ivf_topk(emb: DataFrame, n_centroids: int = 16, n_probe: int = 4,
@@ -466,7 +476,7 @@ def ivf_topk(emb: DataFrame, n_centroids: int = 16, n_probe: int = 4,
         F.explode(F.transform("cells", lambda s: s["cid"])).alias("cid"))
     scored = _pair_scan(probes, assign,
                         emb.schema[id_col].dataType.simpleString())
-    return _topk(scored, k)
+    return attach_cached_deps(_topk(scored, k), cents)
 
 
 def embedding_near_dups(emb: DataFrame, threshold: float = 0.95,
