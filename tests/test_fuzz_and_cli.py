@@ -62,24 +62,83 @@ def test_cli_extract_mega_doc_route_releases_cache(spark, tmp_path):
     assert outstanding_cached() == []
 
 
-def test_cli_resumed_extract_runs_four_jobs(spark, tmp_path, jobs_started):
-    """A resumed CLI extract is 4 Spark jobs: the input's schema read, the
-    pending anti-join's manifest broadcast, the output write and the
-    manifest commit.  No probe of the input before the write, no
-    footer-merge read of the output dir, no metrics append."""
+def _resume(tmp_path):
+    """(full input, extract args) with the first half of a 40-doc corpus
+    committed by a CLI run."""
     docs = generate_documents(40, seed=6, mega_spans=200, include_edge=False)
     half, full = str(tmp_path / "half.parquet"), str(tmp_path / "in.parquet")
-    out, state = str(tmp_path / "out"), str(tmp_path / "state")
     write_documents_parquet(docs[:20], half)
     write_documents_parquet(docs, full)
-    assert cli_main(["extract", "--input", half, "--output", out,
-                     "--state", state]) == 0
+    args = ["extract", "--output", str(tmp_path / "out"),
+            "--state", str(tmp_path / "state")]
+    assert cli_main(args + ["--input", half]) == 0
+    return full, args
+
+
+def test_cli_resumed_extract_runs_three_jobs(spark, tmp_path, jobs_started):
+    """A resumed CLI extract is 3 Spark jobs: the pending anti-join's
+    manifest broadcast, the output write and the manifest commit.  No
+    schema-inference read of the input, no probe of the input before the
+    write, no footer-merge read of the output dir, no metrics append."""
+    full, args = _resume(tmp_path)
     with jobs_started() as jobs:
-        rc = cli_main(["extract", "--input", full, "--output", out,
-                       "--state", state])
+        rc = cli_main(args + ["--input", full])
     assert rc == 0
-    assert len(jobs) == 4
-    assert spark.read.parquet(out).count() == 40
+    assert len(jobs) == 3
+    assert spark.read.parquet(str(tmp_path / "out")).count() == 40
+
+
+def _executed_plans(spark, jobs):
+    """Physical plans of the SQL executions that ran ``jobs``."""
+    store = spark._jsparkSession.sharedState().statusStore()
+    execs = store.executionsList()
+    plans = []
+    for i in range(execs.size()):
+        e = execs.apply(i)
+        ran = {int(j) for j in str(e.jobs().keys().mkString(",")).split(",")
+               if j}
+        if ran & set(jobs):
+            plans.append(str(e.physicalPlanDescription()))
+    return plans
+
+
+def test_cli_run_commit_reads_only_ids_and_span_order(spark, tmp_path,
+                                                      jobs_started):
+    """The run commit scans the output once, reading only doc_id, run_id
+    and the spans' order leaf, and hashes nothing: no span text is decoded
+    or serialized to commit a run."""
+    import re
+    full, args = _resume(tmp_path)
+    with jobs_started() as jobs:
+        assert cli_main(args + ["--input", full]) == 0
+    manifest = os.path.join(str(tmp_path / "state"), "manifest")
+    commits = [p for p in _executed_plans(spark, jobs)
+               if re.search(r"Arguments: (file:)?" + re.escape(manifest) + ",",
+                            p)]
+    assert len(commits) == 1
+    plan = commits[0]
+    assert len(re.findall(r"^\(\d+\) Scan parquet", plan, re.M)) == 1
+    assert re.findall(r"ReadSchema: (.*)", plan) == [
+        "struct<doc_id:string,spans:array<struct<order:int>>,"
+        "run_id:string>"]
+    assert "to_json" not in plan and "sha2" not in plan
+
+
+def test_cli_null_doc_id_dropped_at_read(spark, tmp_path):
+    """An input row with a null doc_id is dropped when the input is read:
+    no resume extracts it, so it never reaches the output.  (An anti-join
+    never matches a null key, so a null id read through would be
+    re-extracted by every resume.)"""
+    docs = generate_documents(10, seed=8, mega_spans=100, include_edge=False)
+    inp = str(tmp_path / "in.parquet")
+    write_documents_parquet(docs + [(None, docs[0][1])], inp)
+    out = str(tmp_path / "out")
+    for _ in range(2):
+        assert cli_main(["extract", "--input", inp, "--output", out,
+                         "--state", str(tmp_path / "state")]) == 0
+    got = spark.read.parquet(out)
+    assert got.count() == 10
+    assert got.filter(got.doc_id.isNull()).count() == 0
 
 
 def test_cli_invalid_args_exit_code(tmp_path):

@@ -19,8 +19,9 @@ from pyspark.sql import SparkSession
 
 from .plans.extract import extract
 from .plans.levels import resolve, scan, verify
+from .sources.readers import read_documents
 from .sources.session import get_spark
-from .state.manifest import commit_phase, pending_docs
+from .state.manifest import check_output_layout, commit_run, pending_docs
 
 
 def parse_pages_arg(arg: str) -> list[int]:
@@ -66,37 +67,27 @@ def _run_extract(spark: SparkSession, args) -> None:
     the old partitioned layout is refused with a migration message rather
     than corrupted in place.
 
-    A resumed run is 4 Spark jobs: the input's schema read, the output write
-    (the pending anti-join's manifest broadcast, then the write) and the
-    manifest commit.  Building the ``extract`` plan runs none, and the
-    run's rows are read back for the commit with their known schema, so no
-    footer-merge job runs over the growing output directory."""
-    from pyspark.sql import functions as F
-
-    from .operators.fused import RUN_OUTPUT_SCHEMA
-    from .state.manifest import check_output_layout, new_run_id
+    A resumed run is 3 Spark jobs: the pending anti-join's manifest
+    broadcast, the output write and the manifest commit.  The input is read
+    with its pinned schema (``read_documents``: no schema-inference job,
+    null doc_ids dropped), building the ``extract`` plan runs none, and the
+    commit reads only the run's ``doc_id`` and ``spans.order`` back
+    (``commit_run``)."""
     try:
         check_output_layout(args.output)
     except ValueError as e:  # library raises; the CLI owns process exit
         raise SystemExit(str(e))
-    docs = spark.read.parquet(args.input)
+    docs = read_documents(spark, args.input)
     if args.state:
         docs = pending_docs(docs, spark, args.state, "extract")
-    run_id = new_run_id()
-    extract(docs).withColumn("run_id", F.lit(run_id)) \
-        .write.mode("append").parquet(args.output)
-    if args.state:
-        processed = (spark.read.schema(RUN_OUTPUT_SCHEMA)
-                     .parquet(args.output)
-                     .filter(F.col("run_id") == run_id).drop("run_id"))
-        commit_phase(processed, spark, args.state, "extract", run_id=run_id)
+    commit_run(extract(docs), spark, args.output, args.state, "extract")
 
 
 def _run_levels(spark: SparkSession, args) -> None:
     from pyspark import StorageLevel
 
     from .plans.levels import kept_text_spans
-    docs = spark.read.parquet(args.input)
+    docs = read_documents(spark, args.input)
     pages = parse_pages_arg(args.pages) if getattr(args, "pages", None) \
         else None
     # classify the corpus ONCE for the whole chain (scan/resolve/verify all
@@ -205,7 +196,7 @@ def main(argv: list[str] | None = None) -> int:
             _run_extract(spark, args)
         elif args.command == "describe":
             from .plans.describe import full_description
-            full_description(spark.read.parquet(args.input)) \
+            full_description(read_documents(spark, args.input)) \
                 .write.mode("overwrite").parquet(args.output)
         elif args.command == "diff":
             _run_diff(spark, args)

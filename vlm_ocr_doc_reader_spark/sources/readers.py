@@ -161,8 +161,6 @@ def pdf_to_spans(binary_docs: DataFrame,
         raise ImportError(
             "pdf_to_spans requires PyMuPDF (fitz); this environment has no "
             "PDF library — consume the span table directly instead")
-    from ..streaming.incremental import DOCS_SCHEMA  # canonical span schema
-
     def parse(batches):
         import fitz
         import pandas as pd
@@ -185,7 +183,7 @@ def pdf_to_spans(binary_docs: DataFrame,
             yield pd.DataFrame(out, columns=["doc_id", "spans"])
 
     return binary_docs.select("path", "content").mapInPandas(
-        parse, schema=DOCS_SCHEMA)
+        parse, schema=DOCUMENTS_SCHEMA)
 
 
 def register_memory_views(spark: SparkSession, frames: dict) -> None:
@@ -216,8 +214,6 @@ def html_to_spans(html_docs: DataFrame, id_col: str = "doc_id",
     design, and a totally unparseable payload yields an empty span list,
     the P5 quarantine shape).  Deterministic: output depends only on the
     input bytes."""
-    from ..streaming.incremental import DOCS_SCHEMA  # canonical span schema
-
     def parse(batches):
         import pandas as pd
         from html.parser import HTMLParser
@@ -320,4 +316,4 @@ def html_to_spans(html_docs: DataFrame, id_col: str = "doc_id",
                 "spans": [doc_spans(h) for h in pdf[html_col]],
             })
 
-    return html_docs.mapInPandas(parse, schema=DOCS_SCHEMA)
+    return html_docs.mapInPandas(parse, schema=DOCUMENTS_SCHEMA)

@@ -13,8 +13,16 @@ The table is its own changelog: each commit's rows share one ``run_id`` and
 one ``ts``, so per-commit lineage and throughput (``read_metrics``) are a
 grouping of it, not a second table written by a second job.  A restarted
 job anti-joins its input against the manifest (J7 — the backbone of
-resumability) and processes only the remainder; outputs are written
-partitioned, so completed work is never recomputed or rewritten.
+resumability) and processes only the remainder; outputs are appended, so
+completed work is never recomputed or rewritten.
+
+A run commit (``commit_run``, the CLI's and the streaming runner's one
+write-then-commit) leaves ``content_hash`` NULL: the run's output row,
+keyed ``(doc_id, run_id)``, is the record, and a doc_id-keyed resume reads
+only ``doc_id``.  ``commit_phase`` is the frame-level commit; with
+``input_docs`` it records the input version hash that
+``pending_docs(by_version=True)`` compares, and without it a hash of the
+processed row, as manifests written before run commits hold.
 
 Plain parquet directories stand in for Iceberg tables in this sandbox (same
 append/anti-join pattern; MERGE-based dedup would replace the anti-join on a
@@ -105,6 +113,19 @@ def new_run_id() -> str:
     return uuid.uuid4().hex
 
 
+def _append(entries: DataFrame, state_dir: str, phase: str,
+            run_id: str | None) -> None:
+    """Append (doc_id, content_hash, n_spans) rows as one commit: ONE Spark
+    job, the manifest write.  Every row shares ``phase``, ``run_id`` and
+    the query's ``current_timestamp()``."""
+    entries.select("doc_id", F.lit(phase).alias("phase"),
+                   F.col("content_hash").cast("string"),
+                   F.col("n_spans").cast("long"),
+                   F.current_timestamp().alias("ts"),
+                   F.lit(run_id).cast("string").alias("run_id")) \
+        .write.mode("append").parquet(manifest_path(state_dir))
+
+
 def commit_phase(processed: DataFrame, spark: SparkSession, state_dir: str,
                  phase: str, input_docs: DataFrame | None = None,
                  run_id: str | None = None) -> None:
@@ -115,33 +136,54 @@ def commit_phase(processed: DataFrame, spark: SparkSession, state_dir: str,
     per-commit counts from these rows.
 
     Manifest rows come from ONE projection of ``processed`` — one row per
-    processed row, one scan of the run's output, no self-join on doc_id.
+    processed row, no self-join on doc_id.
 
     ``input_docs`` (when given) supplies the version hash from the INPUT
     spans so a later ``pending_docs(by_version=True)`` can detect changed
     documents — ``processed`` is joined to those hashes once; without it the
-    hash is of the processed row (sufficient for doc_id-keyed resume).
-
-    Commit ORDER is the atomicity protocol (write outputs first, commit the
-    manifest referencing ``run_id`` last): a crash between the two leaves
-    orphan output rows that ``read_committed`` filters out, and the next run
-    reprocesses those docs — no duplicates, no loss."""
-    n_spans = (F.size(F.col("spans")).cast("long")
-               if "spans" in processed.columns else F.lit(0).cast("long"))
+    hash is of the processed row (sufficient for doc_id-keyed resume)."""
+    n_spans = (F.size(F.col("spans")) if "spans" in processed.columns
+               else F.lit(0)).alias("n_spans")
     if input_docs is not None:
-        entries = (processed.select("doc_id", n_spans.alias("n_spans"))
+        entries = (processed.select("doc_id", n_spans)
                    .join(input_hash(input_docs), "doc_id"))
     else:
         entries = processed.select(
             "doc_id",
             F.sha2(F.to_json(F.struct("*")), 256).alias("content_hash"),
-            n_spans.alias("n_spans"))
-    entries = entries.select("doc_id",
-                             F.lit(phase).alias("phase"),
-                             "content_hash", "n_spans",
-                             F.current_timestamp().alias("ts"),
-                             F.lit(run_id).cast("string").alias("run_id"))
-    entries.write.mode("append").parquet(manifest_path(state_dir))
+            n_spans)
+    _append(entries, state_dir, phase, run_id)
+
+
+def commit_run(processed: DataFrame, spark: SparkSession, output_dir: str,
+               state_dir: str | None, phase: str) -> str:
+    """Append ``processed`` to ``output_dir`` tagged with a new ``run_id``
+    column, then (with a ``state_dir``) commit that run.  Returns the
+    run_id.
+
+    Commit ORDER is the atomicity protocol (write outputs first, commit the
+    manifest referencing ``run_id`` last): a crash between the two leaves
+    orphan output rows that ``read_committed`` filters out, and the next run
+    reprocesses those docs — no duplicates, no loss.
+
+    The commit reads the run's rows back with their known schema
+    (``RUN_OUTPUT_SCHEMA``, so no footer-merge job over the growing output
+    directory), filtered on ``run_id``, and projects only ``doc_id`` and
+    ``size(spans.order)``: nested-schema pruning then reads the ``order``
+    leaf alone, and no span text is decoded or serialized.  One manifest
+    row per output row, ``content_hash`` NULL — the output row is the
+    record.  Two Spark jobs: the output write, the manifest write."""
+    run_id = new_run_id()
+    processed.withColumn("run_id", F.lit(run_id)) \
+        .write.mode("append").parquet(output_dir)
+    if state_dir is not None:
+        rows = (spark.read.schema(RUN_OUTPUT_SCHEMA).parquet(output_dir)
+                .filter(F.col("run_id") == run_id))
+        _append(rows.select("doc_id",
+                            F.lit(None).alias("content_hash"),
+                            F.size("spans.order").alias("n_spans")),
+                state_dir, phase, run_id)
+    return run_id
 
 
 def read_metrics(spark: SparkSession, state_dir: str) -> DataFrame:

@@ -17,13 +17,11 @@ guards against replays across the two.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
-from ..operators.fused import RUN_OUTPUT_SCHEMA
 from ..plans.extract import extract
-from ..state.manifest import check_output_layout, commit_phase, pending_docs
-
-DOCS_SCHEMA = ("doc_id string, spans array<struct<kind:string,text:string,"
-               "media_ref:string,offset:int>>")
+from ..sources.readers import DOCUMENTS_SCHEMA
+from ..state.manifest import check_output_layout, commit_run, pending_docs
 
 
 def run_incremental(spark: SparkSession, input_dir: str, output_dir: str,
@@ -38,33 +36,22 @@ def run_incremental(spark: SparkSession, input_dir: str, output_dir: str,
     extract path, applied up front so no micro-batch ever appends a flat
     file into a directory partition discovery would then reject.
 
-    Each micro-batch writes its :func:`extract` output (building that plan
-    starts no Spark job), reads its own run back with the known output
-    schema (no footer-merge job) and commits the manifest in one job."""
+    The stream reads the documents' pinned schema and drops null doc_ids,
+    as ``read_documents`` does.  Each micro-batch is the CLI's run:
+    anti-join against the manifest, then ``commit_run`` (write the
+    :func:`extract` output, commit the run).  Spark's checkpoint may replay
+    a batch; the pending anti-join makes the replay a no-op for committed
+    docs."""
     check_output_layout(output_dir)
 
     def process_batch(batch: DataFrame, batch_id: int) -> None:
-        from pyspark.sql import functions as F
-
-        from ..state.manifest import new_run_id
         todo = pending_docs(batch, spark, state_dir, "extract")
-        # atomic-in-effect commit: output tagged+written first, manifest
-        # referencing the run last (read_committed drops orphans of a crash
-        # between the two; Spark's checkpoint may replay the batch, and the
-        # pending anti-join makes the replay a no-op for committed docs)
-        run_id = new_run_id()
-        # run_id as a normal column (one flat layout shared with legacy
-        # outputs — see cli._run_extract)
-        extract(todo).withColumn("run_id", F.lit(run_id)) \
-            .write.mode("append").parquet(output_dir)
-        committed = (spark.read.schema(RUN_OUTPUT_SCHEMA)
-                     .parquet(output_dir)
-                     .filter(F.col("run_id") == run_id).drop("run_id"))
-        commit_phase(committed, spark, state_dir, "extract", run_id=run_id)
+        commit_run(extract(todo), spark, output_dir, state_dir, "extract")
 
     stream = (spark.readStream
-              .schema(DOCS_SCHEMA)
-              .parquet(input_dir))
+              .schema(DOCUMENTS_SCHEMA)
+              .parquet(input_dir)
+              .filter(F.col("doc_id").isNotNull()))
     writer = (stream.writeStream
               .foreachBatch(process_batch)
               .option("checkpointLocation", checkpoint_dir))
