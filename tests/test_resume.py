@@ -413,3 +413,40 @@ def test_legacy_metrics_dir_changes_nothing(spark, corpus_path, tmp_path):
     assert sorted(r["docs"] for r in read_metrics(spark, state_dir)
                   .collect()) == sorted([n_half, n - n_half])
     assert sorted(os.listdir(legacy)) == legacy_files
+
+
+def test_legacy_hashed_state_then_run_commit(spark, corpus_path, tmp_path):
+    """A state dir whose first commit hashed every row (``commit_phase``
+    over the run read back, as CLI runs did before ``commit_run``), then a
+    CLI run commit: the next resume recomputes nothing, no doc is
+    committed twice, ``read_metrics`` counts both commits and compaction
+    keeps one row per doc."""
+    import pyspark.sql.functions as F
+
+    from vlm_ocr_doc_reader_spark.cli import main
+    from vlm_ocr_doc_reader_spark.operators.fused import RUN_OUTPUT_SCHEMA
+    docs, half, rest = _halves(spark, corpus_path)
+    n, n_half = docs.count(), half.count()
+    out_dir, state_dir = str(tmp_path / "out"), str(tmp_path / "state")
+    run = new_run_id()
+    extract(half).withColumn("run_id", F.lit(run)) \
+        .write.mode("append").parquet(out_dir)
+    commit_phase(spark.read.schema(RUN_OUTPUT_SCHEMA).parquet(out_dir)
+                 .filter(F.col("run_id") == run).drop("run_id"),
+                 spark, state_dir, "extract", run_id=run)
+    args = ["extract", "--input", corpus_path, "--output", out_dir,
+            "--state", state_dir]
+    assert main(args) == 0
+    m = read_manifest(spark, state_dir)
+    assert m.filter(F.col("content_hash").isNotNull()).count() == n_half
+    assert m.filter(F.col("content_hash").isNull()).count() == n - n_half
+    assert main(args) == 0                       # nothing left to do
+    assert spark.read.parquet(out_dir).count() == n
+    committed = read_committed(spark, out_dir, state_dir, "extract")
+    assert committed.count() == n
+    assert committed.select("doc_id").distinct().count() == n
+    assert pending_docs(docs, spark, state_dir, "extract").count() == 0
+    assert sorted(r["docs"] for r in read_metrics(spark, state_dir)
+                  .collect()) == sorted([n_half, n - n_half])
+    assert compact_manifest(spark, state_dir) == n
+    assert pending_docs(docs, spark, state_dir, "extract").count() == 0
