@@ -242,12 +242,7 @@ def test_null_vector_passes_pq_dim_guard_with_ansi_off(spark):
 VECTOR_QUERIES = [
     "cosine_topk", "near_dup", "lsh_topk_multiband", "ivf_topk",
     "near_dup_lsh", "semdedup", "lsh_multiprobe", "hybrid_search",
-    # the oracle's PQ encoding takes list products of a NULL vector's
-    # sub-vectors, which DuckDB 1.0 rejects; the Spark side never ranks
-    # the degenerate vectors
-    pytest.param("pq_topk", marks=pytest.mark.xfail(
-        strict=True, reason="PQ oracle has no NULL-vector rule")),
-    "margin_pairs"]
+    "pq_topk", "margin_pairs"]
 
 
 @pytest.fixture(scope="module")

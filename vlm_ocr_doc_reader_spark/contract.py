@@ -4328,7 +4328,12 @@ ckeys AS (
          array_slice(e.v, ck.m * (len(e.v) // {m_sub}) + 1,
                      (ck.m + 1) * (len(e.v) // {m_sub})) AS cw
   FROM ckeys ck JOIN e USING (id) WHERE ck.j <= {n_codes}
-), cb2 AS (SELECT m, j, cw, list_inner_product(cw, cw) AS c2 FROM cb),
+), cb2 AS (
+  SELECT m, j, cw,
+         CASE WHEN cw IS NULL THEN NULL ELSE list_inner_product(cw, cw) END
+           AS c2
+  FROM cb
+),
 subs AS (
   SELECT e.id, m.m,
          array_slice(e.v, m.m * (len(e.v) // {m_sub}) + 1,
@@ -4336,38 +4341,50 @@ subs AS (
   FROM e CROSS JOIN ms m
 ), escore AS (
   SELECT s.id, s.m, cb2.j, cb2.c2,
-         cb2.c2 - 2 * list_inner_product(s.sub, cb2.cw) AS score
+         CASE WHEN s.sub IS NULL OR cb2.cw IS NULL THEN NULL
+              ELSE cb2.c2 - 2 * list_inner_product(s.sub, cb2.cw) END
+           AS score
   FROM subs s JOIN cb2 USING (m)
 ), codes AS (
-  SELECT id, m, j, c2 FROM (
+  SELECT id, m, j, c2, score FROM (
     SELECT *, row_number() OVER (PARTITION BY id, m
-              ORDER BY score ASC, j ASC) AS rn FROM escore) WHERE rn = 1
+              ORDER BY score ASC NULLS LAST, j ASC) AS rn FROM escore)
+  WHERE rn = 1
+), qn AS (
+  SELECT id, CASE WHEN v IS NULL THEN NULL
+                  ELSE sqrt(list_inner_product(v, v)) END AS qn
+  FROM e
 ), pqn AS (
-  SELECT id, sqrt(list_sum(list(c2 ORDER BY m))) AS pqn FROM codes
-  GROUP BY id
-), qn AS (SELECT id, sqrt(list_inner_product(v, v)) AS qn FROM e),
+  SELECT c.id,
+         CASE WHEN bool_or(c.score IS NULL) OR any_value(q.qn) IS NULL
+                   OR any_value(q.qn) = 0 THEN NULL
+              ELSE sqrt(list_sum(list(c.c2 ORDER BY c.m))) END AS pqn
+  FROM codes c JOIN qn q USING (id) GROUP BY c.id
+),
 lut AS (
   SELECT s.id AS qid, s.m, cb2.j,
-         list_inner_product(s.sub, cb2.cw) AS val
+         CASE WHEN s.sub IS NULL OR cb2.cw IS NULL THEN NULL
+              ELSE list_inner_product(s.sub, cb2.cw) END AS val
   FROM subs s JOIN cb2 USING (m)
 ), cand AS (
   SELECT p.qid, a.id AS nbr_id
   FROM probes p JOIN assign a USING (cid) WHERE p.qid <> a.id
 ), adc AS (
   SELECT c.qid, c.nbr_id,
-         list_sum(list(l.val ORDER BY l.m)) AS adot
+         CASE WHEN bool_or(l.val IS NULL) THEN NULL
+              ELSE list_sum(list(l.val ORDER BY l.m)) END AS adot
   FROM cand c
   JOIN codes cd ON cd.id = c.nbr_id
   JOIN lut l ON l.qid = c.qid AND l.m = cd.m AND l.j = cd.j
   GROUP BY c.qid, c.nbr_id
 ), ascored AS (
-  SELECT a.qid, a.nbr_id, a.adot / (q.qn * p.pqn) AS adc_cos
+  SELECT a.qid, a.nbr_id, a.adot / nullif(q.qn * p.pqn, 0) AS adc_cos
   FROM adc a JOIN qn q ON q.id = a.qid JOIN pqn p ON p.id = a.nbr_id
 ), short AS (
   SELECT qid, nbr_id FROM (
     SELECT *, row_number() OVER (PARTITION BY qid
               ORDER BY adc_cos DESC, nbr_id ASC) AS arank
-    FROM ascored) WHERE arank <= {max(rerank, k)}
+    FROM ascored WHERE adc_cos IS NOT NULL) WHERE arank <= {max(rerank, k)}
 ), ex AS (
   SELECT s.qid, s.nbr_id,
          {_duck_cosine("qa.v", "nb.v")} AS cosine
