@@ -4,8 +4,7 @@ input — this parity is what makes the oracle a valid golden reference.
 Spark-free: ``fused._span_stage`` (cleaning, keep, bbox, anchors) and the
 flat kept-span batch ``fused._kept_spans_batch`` are held to
 ``spec.strip_bbox``/``clean_text``/``classify_keep``/``parse_bbox``/
-``extract_anchors``.  The Catalyst ``keep_expr`` (the ``extract_text``
-query's classifier) keeps its own parity check on spec-cleaned text."""
+``extract_anchors``."""
 
 import random
 
@@ -162,21 +161,3 @@ def test_empty_batches_give_typed_empty_output():
         out = fused._kept_spans_batch(doc_ids, spans)
         assert out.num_rows == 0
         assert out.schema.names == list(fused._KEPT_COLUMNS)
-
-
-def test_keep_expr_parity_on_spec_cleaned_text(spark):
-    """``keep_expr`` over text the spec has already cleaned (as the
-    ``extract_text`` query feeds it) agrees with ``spec.classify_keep``."""
-    import pyspark.sql.functions as F
-
-    from vlm_ocr_doc_reader_spark.operators.classify import keep_expr
-    rows = [(kind, _spec_cleaned(text), mref, off)
-            for _, kind, text, mref, off in _pool_rows()]
-    df = spark.createDataFrame(
-        rows, "kind string, cleaned string, media_ref string, offset long")
-    got = df.select("offset", keep_expr(
-        F.col("kind"), F.col("cleaned"), F.col("media_ref")).alias("keep"))
-    keep = {r["offset"]: r["keep"] for r in got.collect()}
-    for kind, cleaned, mref, off in rows:
-        assert keep[off] == spec.classify_keep(
-            kind, cleaned, mref if mref else None), (kind, cleaned, mref)

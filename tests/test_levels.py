@@ -1,6 +1,6 @@
 """Resolution Levels pipeline tests: scan -> resolve -> verify state machine
 parity with the reference (core/reader.py:128-532), plus registry operator
-unit tests (upsert J1, pending P2, apply P6/P7, validate P5)."""
+unit tests (upsert J1, validate P5)."""
 
 import pyspark.sql.functions as F
 import pytest
@@ -8,8 +8,7 @@ import pytest
 from vlm_ocr_doc_reader_spark.fixtures.generate import (
     generate_documents, write_documents_parquet)
 from vlm_ocr_doc_reader_spark.operators.registry import (
-    REGISTRY_COLS, apply_ocr_result, pending_entities, upsert_entries,
-    validate_entries)
+    REGISTRY_COLS, upsert_entries, validate_entries)
 from vlm_ocr_doc_reader_spark.plans.levels import (kept_text_spans, resolve,
                                                    scan, verify)
 from vlm_ocr_doc_reader_spark.sources.readers import DOCUMENTS_SCHEMA
@@ -57,7 +56,7 @@ def test_resolve_is_incremental(docs_df):
     """Second resolve finds nothing pending — the reference's 'does only what
     is not yet done' (decision_001:48)."""
     reg1 = resolve(docs_df, scan(docs_df))
-    assert pending_entities(reg1).count() == 0
+    assert reg1.filter(F.col("resolution") < 1).count() == 0
     reg2 = resolve(docs_df, reg1)
     a = sorted(map(tuple, reg1.collect()))
     b = sorted(map(tuple, reg2.collect()))
@@ -112,22 +111,6 @@ def test_upsert_updates_and_appends(spark):
     assert list(upsert_entries(reg, upd).columns) == list(REGISTRY_COLS)
 
 
-def test_apply_ocr_result_error_keeps_pending(spark):
-    entries = spark.createDataFrame(
-        [("d1", 1, "e1", "p", 0, None, None, False, None),
-         ("d1", 1, "e2", "p", 0, None, None, False, None),
-         ("d1", 1, "e3", "p", 0, None, None, False, None)], REG_SCHEMA)
-    results = spark.createDataFrame(
-        [("d1", "e1", "val", "ctx", "ok"),
-         ("d1", "e2", None, "expl", "no_data")],
-        "doc_id string, entity_id string, value string, context string, status string")
-    out = {r["entity_id"]: r
-           for r in apply_ocr_result(entries, results).collect()}
-    assert out["e1"]["resolution"] == 1 and out["e1"]["value"] == "val"
-    assert out["e2"]["resolution"] == 1 and out["e2"]["value"] == ""  # no_data -> ''
-    assert out["e3"]["resolution"] == 0 and out["e3"]["value"] is None  # missing -> error -> pending
-
-
 def test_validate_entries_quarantine(spark):
     raw = spark.createDataFrame(
         [("d1", 1, "e1", "p", 0, None, None, False, None),
@@ -148,7 +131,8 @@ def test_resolve_page_filter(docs_df):
          for r in reg1.filter(F.col("doc_id") == "doc_digits").collect()}
     assert d[1] == 1          # page 1 resolved
     assert d[2] == 0          # page 2 untouched, still pending
-    left = pending_entities(reg1).filter(F.col("doc_id") == "doc_digits")
+    left = reg1.filter((F.col("doc_id") == "doc_digits")
+                       & (F.col("resolution") < 1))
     assert left.count() == 2
 
 
@@ -176,3 +160,91 @@ def test_null_offset_or_kind_span_gives_no_registry_row(spark):
     reg = resolve(df, scan(df))
     assert [(r["page_num"], r["value"]) for r in reg.collect()] == [
         (1, "7704123456")]
+
+
+def _two_spans_at_one_offset(spark):
+    return spark.createDataFrame([("d1", [
+        ("text", "The contract number is 7704123456 as filed.", None, 0),
+        ("text", "A second span at that offset holds 5556667778.", None, 0),
+        ("text", "Page two holds the id 1234567890 today.", None, 1)])],
+        DOCUMENTS_SCHEMA)
+
+
+def test_duplicate_offsets_give_one_row_per_scan_row(spark):
+    """Two text spans at one offset are one page: scan's keys stay unique,
+    and resolve and verify return exactly one row per scan row, each
+    voted unanimously by its own axes."""
+    df = _two_spans_at_one_offset(spark)
+    reg = scan(df)
+    keys = [(r["doc_id"], r["entity_id"]) for r in reg.collect()]
+    assert len(keys) == 3 and len(set(keys)) == 3
+    res = resolve(df, reg).collect()
+    assert sorted((r["page_num"], r["value"]) for r in res) == [
+        (1, "5556667778"), (1, "7704123456"), (2, "1234567890")]
+    ver = verify(df, reg).collect()
+    assert sorted((r["doc_id"], r["entity_id"]) for r in ver) == sorted(keys)
+    assert {(r["resolution"], r["confidence"], r["verified"])
+            for r in ver} == {(2, "3/3", True)}
+
+
+def _executed_joins(df) -> list[str]:
+    """The join operators of ``df``'s executed (AQE-final) plan."""
+    import re
+    df.collect()
+    ep = df._jdf.queryExecution().executedPlan()
+    if ep.nodeName() == "AdaptiveSparkPlan":
+        ep = ep.executedPlan()
+    return re.findall(
+        r"^[\s:+\-]*(?:\*\(\d+\)\s*)?((?:\w*Join|CartesianProduct)\b.*)$",
+        ep.toString(), re.M)
+
+
+def test_resolve_and_verify_each_run_one_join(spark):
+    """One join per level: the page texts are bound to the registry once,
+    no result joins back, and nothing merges by a full outer join."""
+    df = _two_spans_at_one_offset(spark)
+    reg = scan(df)
+    for out in (resolve(df, reg), verify(df, reg),
+                verify(df, reg, axes=(1, 2), axis_mode="chunk")):
+        joins = _executed_joins(out)
+        assert len(joins) == 1, joins
+        assert "FullOuter" not in joins[0]
+
+
+def test_resolve_and_verify_keep_other_rows(spark):
+    """Rows outside ``pages``, resolved rows and rows without an
+    entity_id pass through resolve unchanged; verify rewrites only rows
+    with an entity_id on ``pages``."""
+    df = _two_spans_at_one_offset(spark)
+    extra = spark.createDataFrame(
+        [("d1", 2, "", "digits run 0 on page 2", 0, None, None, False, None),
+         ("d1", 1, None, "digits run 0 on page 1", 0, "x", None, False,
+          None)], REG_SCHEMA)
+    reg = scan(df).unionByName(extra)
+    res = {(r["page_num"], r["entity_id"]): r
+           for r in resolve(df, reg, pages=[1]).collect()}
+    assert len(res) == 5
+    assert res[(2, "")]["resolution"] == 0
+    assert res[(1, None)]["value"] == "x"
+    assert {r["resolution"] for (p, e), r in res.items() if e} == {0, 1}
+    assert all(r["resolution"] == (1 if p == 1 else 0)
+               for (p, e), r in res.items() if e)
+    ver = {(r["page_num"], r["entity_id"]): r
+           for r in verify(df, reg, pages=[2]).collect()}
+    assert len(ver) == 5
+    assert {k: r["resolution"] for k, r in ver.items() if r["resolution"]} \
+        == {k: 2 for k in ver if k[0] == 2 and k[1]}
+
+
+def test_cli_verify_leaves_no_cache_in_a_joined_session(spark, tmp_path):
+    """CLI verify in a session it joins persists nothing it leaves behind:
+    no registry pin outlives the command."""
+    from vlm_ocr_doc_reader_spark.cli import main as cli_main
+    from vlm_ocr_doc_reader_spark.datapipe.cache import outstanding_cached
+    inp = str(tmp_path / "in.parquet")
+    write_documents_parquet(generate_documents(6, seed=3, mega_spans=20),
+                            inp)
+    before = {id(h) for h in outstanding_cached()}
+    assert cli_main(["verify", "--input", inp,
+                     "--registry", str(tmp_path / "registry")]) == 0
+    assert [h for h in outstanding_cached() if id(h) not in before] == []

@@ -279,8 +279,8 @@ def test_duplicated_doc_id_one_manifest_row_per_processed_row(spark,
 def test_versioned_commit_one_row_per_processed_row(spark, tmp_path):
     """With ``input_docs`` the hash is the INPUT version hash, joined once:
     still one manifest row per processed row, each with its own count."""
-    from vlm_ocr_doc_reader_spark.sources.readers import DOCUMENTS_SCHEMA
-    from vlm_ocr_doc_reader_spark.state.manifest import input_hash
+    from vlm_ocr_doc_reader_spark.sources.readers import (DOCUMENTS_SCHEMA,
+                                                          with_content_hash)
     state_dir = str(tmp_path / "state")
     inp = spark.createDataFrame(
         [("a", [("text", "First kept sentence here.", None, 0)]),
@@ -288,7 +288,7 @@ def test_versioned_commit_one_row_per_processed_row(spark, tmp_path):
     commit_phase(_processed_with_duplicate(spark), spark, state_dir,
                  "extract", input_docs=inp)
     want = {r["doc_id"]: r["content_hash"]
-            for r in input_hash(inp).collect()}
+            for r in with_content_hash(inp).collect()}
     got = sorted((r["doc_id"], r["content_hash"], r["n_spans"])
                  for r in read_manifest(spark, state_dir).collect())
     assert got == [("a", want["a"], 1), ("a", want["a"], 2),

@@ -103,6 +103,34 @@ def test_ansi_is_pinned_on_and_a_caller_value_wins(tmp_path, spark):
     assert spark.conf.get("spark.sql.ansi.enabled") == "true"
 
 
+def test_write_after_a_persisted_aggregate_follows_the_data(tmp_path,
+                                                           spark):
+    """A persisted frame's partitioning is AQE's to size: at the default
+    200 shuffle partitions, a write downstream of a persisted aggregate
+    of 1000 groups makes at most one file per core, not one per shuffle
+    partition."""
+    key = "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning"
+    info = _meminfo(tmp_path, 15 * 1024 * 1024)
+    assert session_conf(meminfo=info)[key] == "true"
+    assert spark.conf.get(key) == "true"
+    import pyspark.sql.functions as F
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", "200")
+    agg = None
+    try:
+        agg = (spark.range(0, 20000)
+               .groupBy((F.col("id") % 1000).alias("k")).count().persist())
+        assert agg.count() == 1000
+        out = str(tmp_path / "out")
+        agg.write.parquet(out)
+    finally:
+        if agg is not None:
+            agg.unpersist()
+        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    files = [f for f in os.listdir(out) if f.endswith(".parquet")]
+    assert 1 <= len(files) <= spark.sparkContext.defaultParallelism
+
+
 def test_resolve_master_follows_the_builder():
     # the builder applies extra_conf after .master(), so spark.master wins
     assert resolve_master("local[2]", {"spark.master": "yarn"}) == "yarn"

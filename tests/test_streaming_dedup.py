@@ -5,8 +5,7 @@ watermark drop, state stays bounded, restart does not re-emit."""
 import pyspark.sql.functions as F
 
 from vlm_ocr_doc_reader_spark.streaming.dedup import (dedup_stream,
-                                                      run_dedup_stream,
-                                                      with_content_key)
+                                                      run_dedup_stream)
 
 SCHEMA = "event_id long, ts timestamp, digest string"
 
@@ -53,12 +52,19 @@ def test_dedup_stream_exact_mode_is_opt_in_batch_semantics(spark):
     assert sorted(r["digest"] for r in out) == ["a", "b"]
 
 
-def test_with_content_key_matches_manifest_identity(spark):
-    from vlm_ocr_doc_reader_spark.state.manifest import input_hash
+def test_with_content_key_matches_manifest_identity(spark, tmp_path):
+    """The streaming dedup key is the manifest's version identity: the
+    ``content_hash`` of ``with_content_hash`` is what a versioned commit
+    records for the same input."""
+    from vlm_ocr_doc_reader_spark.sources.readers import with_content_hash
+    from vlm_ocr_doc_reader_spark.state.manifest import (commit_phase,
+                                                         read_manifest)
     docs = spark.createDataFrame(
         [("d1", [("text", "Hello there friend.", None, 0)])],
         "doc_id string, spans array<struct<kind:string,text:string,"
         "media_ref:string,offset:int>>")
-    a = with_content_key(docs).select("doc_id", "content_hash").collect()
-    b = input_hash(docs).collect()
-    assert a[0]["content_hash"] == b[0]["content_hash"]
+    state = str(tmp_path / "state")
+    commit_phase(docs, spark, state, "extract", input_docs=docs)
+    a = with_content_hash(docs).select("doc_id", "content_hash").collect()
+    b = read_manifest(spark, state).select("doc_id", "content_hash").collect()
+    assert a == b and len(a[0]["content_hash"]) == 64

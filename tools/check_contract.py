@@ -124,7 +124,7 @@ def main():
     if window:
         QUERIES = dict(list(QUERIES.items())[:50])
 
-    spark = get_spark(master="local[8]", shuffle_partitions=16,
+    spark = get_spark(master="local[8]",
                       extra_conf={"spark.ui.enabled": "false"})
     con = duck_conn(sf_dir)
 

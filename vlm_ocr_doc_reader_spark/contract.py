@@ -112,22 +112,18 @@ def _duck_cosine(a: str, b: str) -> str:
 # ---------------------------------------------------------------------------
 
 def q_extract_text(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .operators.classify import keep_expr
+    """``extract`` (the Arrow kernel, the engine's one keep classifier)
+    over the documents split into sentence spans, flattened to
+    (doc_id, ord, span_text); doc_id is a string for the kernel and is
+    cast back to the table's type."""
+    from .plans.extract import extract
     docs = load(spark, sf_dir, "documents", lift=True)
-    spans = (docs.select(
-        "doc_id",
-        F.posexplode(F.split(F.col("text"), r"\. ")).alias("offset", "raw")))
-    cleaned = F.trim(F.regexp_replace(F.col("raw"), r"\s+", " "))
-    # kind as a real column (not F.lit) so keep_expr's `kind == "text"`
-    # doesn't degenerate into a trivially-true literal comparison (warning)
-    kept = (spans.withColumn("text", cleaned)
-            .withColumn("kind", F.lit("text").cast("string"))
-            .withColumn("keep", keep_expr(F.col("kind"), F.col("text"),
-                                          F.lit(None).cast("string")))
-            .filter(F.col("keep")))
-    w = Window.partitionBy("doc_id").orderBy("offset")
-    return (kept.withColumn("ord", (F.row_number().over(w) - 1).cast("int"))
-            .select("doc_id", "ord", F.col("text").alias("span_text")))
+    out = extract(docs.select(F.col("doc_id").cast("string").alias("doc_id"),
+                              _sentence_spans(F.col("text")).alias("spans")))
+    return out.select(
+        F.col("doc_id").cast(docs.schema["doc_id"].dataType).alias("doc_id"),
+        F.inline("spans")).select("doc_id", F.col("order").alias("ord"),
+                                  F.col("text").alias("span_text"))
 
 
 def oracle_extract_text() -> str:
@@ -1895,16 +1891,21 @@ FROM documents
 def _derived_spans(spark, sf_dir):
     """Span table derived from the flat driver documents table."""
     docs = load(spark, sf_dir, "documents", lift=True)
-    return (docs.select(
+    return docs.select(
         F.concat(F.lit("doc_"), F.col("doc_id").cast("string"))
          .alias("doc_id"),
-        F.transform(
-            F.split(F.col("text"), r"\. "),
-            lambda x, i: F.struct(
-                F.lit("text").alias("kind"),
-                x.alias("text"),
-                F.lit(None).cast("string").alias("media_ref"),
-                i.cast("int").alias("offset"))).alias("spans")))
+        _sentence_spans(F.col("text")).alias("spans"))
+
+
+def _sentence_spans(text):
+    """``text`` split on '. ' into text spans, offset = sentence index."""
+    return F.transform(
+        F.split(text, r"\. "),
+        lambda x, i: F.struct(
+            F.lit("text").alias("kind"),
+            x.alias("text"),
+            F.lit(None).cast("string").alias("media_ref"),
+            i.cast("int").alias("offset")))
 
 
 def _derived_spans_structured(spark, sf_dir):

@@ -135,9 +135,8 @@ def clean_text(text_wo_bbox: str) -> str:
 def classify_keep(kind: str, cleaned: str, media_ref: Optional[str]) -> bool:
     """Return True when the span survives boilerplate removal.
 
-    Rules (mirrored 1:1 by the Arrow kernel in ``operators/fused.py`` and
-    by the Catalyst ``keep_expr`` in ``operators/classify.py`` — keep all
-    three in sync!):
+    Rules (mirrored 1:1 by the Arrow kernel in ``operators/fused.py`` —
+    keep both in sync!):
       * boilerplate / link kinds are dropped outright,
       * image/table spans are kept iff they carry a media_ref,
       * heading spans are kept iff non-empty after cleaning,

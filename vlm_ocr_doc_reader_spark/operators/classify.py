@@ -1,55 +1,15 @@
-"""Keep classification as Catalyst column expressions.
+"""The density classifier, a second keep signal as Catalyst expressions.
 
 The engine's span classifier is the Arrow kernel (``operators.fused``):
-``extract``, the levels' scan/resolve/verify and ``describe`` all read its
-kept spans.  Two Catalyst classifiers stay for the queries that compose
-classification with other Catalyst operators:
-
-* ``keep_expr``: a mirror of ``spec.classify_keep`` over already-cleaned
-  text, used by the registered ``extract_text`` query on sentence spans it
-  splits in Catalyst (parity-tested against the spec);
-* ``density_classify``: the Boilerpipe-style density classifier, a second
-  keep signal with its own DuckDB oracle.
+``extract``, the ``extract_text`` query, the levels' scan/resolve/verify
+and ``describe`` all read its kept spans.  ``density_classify`` is the
+Boilerpipe-style density classifier, with its own DuckDB oracle.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-from ..extraction import spec
-
-
-def keep_expr(kind: Column, cleaned: Column, media_ref: Column) -> Column:
-    """Catalyst mirror of ``spec.classify_keep`` (parity-tested).
-
-    ``cleaned`` is whitespace-collapsed and trimmed, so word count is
-    space-count + 1 and the nav patterns are plain literals — everything
-    here is length/replace/contains (no regex, no array allocation in the
-    hot path; profiled 10s -> ~1s at bench scale vs split()+rlike).
-    """
-    spaces = F.length(cleaned) - F.length(
-        F.replace(cleaned, F.lit(" "), F.lit("")))
-    nwords = F.when(cleaned == "", F.lit(0)).otherwise(spaces + 1)
-    pipes = F.length(cleaned) - F.length(F.replace(cleaned, F.lit("|"), F.lit("")))
-    low = F.lower(cleaned)
-    is_nav = None
-    for pat in spec.NAV_PATTERNS:  # literal substring ORs == NAV_RE search
-        c = F.contains(low, F.lit(pat))
-        is_nav = c if is_nav is None else (is_nav | c)
-    last = F.substring(cleaned, -1, 1)
-    text_keep = (
-        (cleaned != "")
-        & ~is_nav
-        & (pipes.cast("double") <= F.lit(spec.PIPE_RATIO) * nwords.cast("double"))
-        & ((nwords >= spec.MIN_WORDS) | last.isin(*spec.SENTENCE_END))
-    )
-    media_ok = media_ref.isNotNull() & (media_ref != "")
-    return (F.when(kind.isin("boilerplate", "link"), F.lit(False))
-             .when(kind.isin("image", "table"), media_ok)
-             .when(kind == "heading", cleaned != "")
-             .when(kind == "text", text_keep)
-             .otherwise(F.lit(False)))
 
 
 def density_classify(spans: DataFrame, id_col: str = "doc_id",
@@ -59,8 +19,8 @@ def density_classify(spans: DataFrame, id_col: str = "doc_id",
     (Kohlschuetter et al., "Boilerplate Detection using Shallow Text
     Features", WSDM 2010 — the published NumWordsRulesClassifier decision
     tree), as a second, density-based keep signal alongside the engine's
-    pattern classifier (``keep_expr``): the pattern rules know the
-    corpus's navigation idioms; the density rules need none.
+    pattern classifier (``spec.classify_keep``): the pattern rules know
+    the corpus's navigation idioms; the density rules need none.
 
     Block link density is 1.0 for ``kind='link'`` blocks (html_to_spans
     collapses link-dominated blocks to that kind) and 0.0 otherwise;

@@ -12,11 +12,6 @@ Operators:
   * ``upsert_entries`` — merge-by-key (J1, core/state.py:795-822): the
     Iceberg equivalent is ``MERGE INTO``; the engine-agnostic form here is a
     full-outer join + coalesce, updates win.  Empty entity_id rows skipped.
-  * ``pending_entities`` — P2, core/state.py:824-840: resolution < 1 is the
-    engine's incremental-work predicate.
-  * ``apply_ocr_result`` — P7, core/state.py:96-122: project new
-    value/context/resolution, preserving identity + verify fields; only
-    ok/no_data results apply (P6, core/reader.py:358-363).
   * ``validate_entries`` — P5, operations/scan.py:144-156 +
     core/state.py:156-175: coerce + quarantine side-output instead of
     per-field isinstance checks.
@@ -54,40 +49,6 @@ def upsert_entries(registry: DataFrame, updates: DataFrame) -> DataFrame:
               for c in vals]
     return joined.select(*[F.col(k) for k in _KEY], *merged) \
                  .select(*REGISTRY_COLS)
-
-
-def pending_entities(registry: DataFrame,
-                     page_num: int | None = None) -> DataFrame:
-    out = registry.filter(F.col("resolution") < 1)
-    if page_num is not None:
-        out = out.filter(F.col("page_num") == page_num)
-    return out
-
-
-def apply_ocr_result(entries: DataFrame, results: DataFrame,
-                     resolution: int = 1) -> DataFrame:
-    """Left-join OCR results onto pending entries and project the updated
-    registry rows (J2 + P6 + P7).
-
-    ``results`` schema: (doc_id, entity_id, value, context, status).
-    Missing results default to status='error' (core/reader.py:310-313);
-    error rows keep their previous value/resolution (stay pending, T4).
-    """
-    res = results.select("doc_id", "entity_id",
-                         F.col("value").alias("_v"),
-                         F.col("context").alias("_c"),
-                         F.col("status").alias("_s"))
-    j = entries.join(res, _KEY, "left") \
-               .withColumn("_s", F.coalesce(F.col("_s"), F.lit("error")))
-    ok = F.col("_s").isin("ok", "no_data")
-    return (j.select(
-        "doc_id", "page_num", "entity_id", "prompt",
-        F.when(ok, F.lit(resolution)).otherwise(F.col("resolution"))
-         .alias("resolution"),
-        F.when(ok, F.coalesce(F.col("_v"), F.lit(""))).otherwise(F.col("value"))
-         .alias("value"),
-        F.when(ok, F.col("_c")).otherwise(F.col("context")).alias("context"),
-        "verified", "confidence"))
 
 
 def validate_entries(raw: DataFrame) -> tuple[DataFrame, DataFrame]:

@@ -31,7 +31,7 @@ skew (each entity has only N_axes samples).
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..extraction import spec

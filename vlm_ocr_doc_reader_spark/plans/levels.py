@@ -4,15 +4,14 @@ Set-at-a-time mirror of the reference's three entry points
 (core/reader.py:128-215, 237-408, 427-532) with the model channel replaced
 by deterministic operators:
 
-  * scan: derive the precision-target registry from the kept text spans
-    of the Arrow kernel (``operators.fused.fused_kept_spans``, the same
-    per-span stage ``extract`` runs).  Every digit run of >= MIN_DIGITS
-    digits in a kept text span becomes a registry entry (the reference's
-    VLM emits "atomic, concrete" targets like ИНН/ОГРН numbers —
-    scan.py:22-67; our deterministic analog targets exactly those digit
-    identifiers).  entity_id = F4 hash synth.
-  * resolve: re-extract each target's value from its span (M2), normalize
-    digits (F8), status ok/no_data; resolution 0 -> 1 (P6/P7).
+  * scan: derive the precision-target registry from the page texts.  Every
+    digit run of >= MIN_DIGITS digits in a page's text becomes a registry
+    entry (the reference's VLM emits "atomic, concrete" targets like
+    ИНН/ОГРН numbers — scan.py:22-67; our deterministic analog targets
+    exactly those digit identifiers).  entity_id = F4 hash synth.
+  * resolve: re-extract each pending target's value from its page text
+    (M2), normalize digits (F8), status ok/no_data; resolution 0 -> 1
+    (P6/P7).
   * verify: N independent resolve axes -> majority vote (A2) -> resolution 2
     with confidence 'k/N'.  The engine is deterministic, so verify is
     idempotent and votes are unanimous — strictly stronger than the
@@ -20,20 +19,32 @@ by deterministic operators:
     (decision_002_verify.md:44); the vote operator's tie/error semantics are
     covered by the ported unit suite instead.
 
-All stages are DataFrame ops; the kept-span input is a zero-shuffle map, and
-the only shuffles are the groupBys/joins on (doc_id[, entity_id]) —
-well-distributed keys.
+Page texts.  The kept text spans of the Arrow kernel
+(``operators.fused.fused_kept_spans``, the same per-span stage ``extract``
+runs) are grouped into one row per (doc_id, page_num), page_num = offset
++ 1.  A page's text is its spans' cleaned texts, sorted and joined by a
+space, so a page that holds one span keeps that span's text, and a
+page's run indices — and so its (doc_id, entity_id) keys — are unique
+however many spans share its offset.  scan, resolve and verify all read
+this frame.
+
+One join per level.  resolve is one left join of the registry to the
+page texts: pending rows are rewritten, every other row passes through
+in the same projection.  verify is one left join of the targeted rows to
+the page texts, the axis fan-out and ``majority_vote``, whose key is the
+whole registry row, so no result is joined back; untargeted rows pass
+through by a filter.  No stage persists the registry or merges by a
+full outer join.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.normalize import normalize_ocr_digits_col
 from ..operators.fused import fused_kept_spans
-from ..operators.registry import (apply_ocr_result, pending_entities,
-                                  synth_entity_id_col, upsert_entries)
+from ..operators.registry import REGISTRY_COLS, synth_entity_id_col
 from ..operators.vote import majority_vote
 
 MIN_DIGITS = 6
@@ -53,20 +64,28 @@ def kept_text_spans(documents: DataFrame) -> DataFrame:
     return fused_kept_spans(documents).filter(F.col("kind") == "text")
 
 
+def _page_texts(kept: DataFrame) -> DataFrame:
+    """(doc_id, page_num, page_text): one row per page of the kept text
+    spans, the page's cleaned texts sorted and joined by a space."""
+    return (kept.groupBy("doc_id",
+                         (F.col("offset") + 1).cast("int").alias("page_num"))
+            .agg(F.array_join(F.array_sort(F.collect_list("cleaned")), " ")
+                  .alias("page_text")))
+
+
 def scan(documents: DataFrame, kept: DataFrame | None = None) -> DataFrame:
     """L0: build the registry (doc_id, page_num, entity_id, prompt,
-    resolution=0, ...) from digit-run targets in kept text spans.
+    resolution=0, ...) from digit-run targets in the page texts.
 
     page_num is 1-based like the reference (renderer.py:89-90):
-    page_num = offset + 1.  prompt encodes (span offset, run index) so
-    resolve can re-locate the target without re-scanning.
+    page_num = offset + 1.  prompt encodes (run index, page) so resolve
+    can re-locate the target in the page text without re-scanning.
     """
     kept = kept if kept is not None else kept_text_spans(documents)
-    runs = (kept
-            .select("doc_id",
-                    (F.col("offset") + 1).cast("int").alias("page_num"),
+    runs = (_page_texts(kept)
+            .select("doc_id", "page_num",
                     F.posexplode(
-                        F.regexp_extract_all(F.col("cleaned"),
+                        F.regexp_extract_all(F.col("page_text"),
                                              F.lit(_DIGIT_RUN), 0))
                      .alias("run_idx", "raw_value")))
     return (runs
@@ -82,94 +101,56 @@ def scan(documents: DataFrame, kept: DataFrame | None = None) -> DataFrame:
                     F.lit(None).cast("string").alias("confidence")))
 
 
-def _with_run_idx(registry: DataFrame) -> DataFrame:
-    """Recover the digit-run index from the prompt (the prompt is the
-    machine-readable task description, as in the reference where resolve
-    re-reads the prompt text — reader.py:307-313)."""
-    return registry.withColumn(
-        "run_idx",
-        F.regexp_extract(F.col("prompt"), r"digits run (\d+)", 1).cast("int"))
+def _targeted(pages: list[int] | None) -> Column:
+    """Rows a stage may rewrite: a non-empty entity_id (the merge key,
+    core/state.py:810-812), on one of ``pages`` when given (P3/P4).
+    Never null, so its negation selects exactly the other rows."""
+    cond = F.col("entity_id").isNotNull() & (F.col("entity_id") != "")
+    if pages:
+        cond = cond & F.col("page_num").isin(pages)
+    return F.coalesce(cond, F.lit(False))
 
 
-def _ocr_pass(kept_spans: DataFrame, targets: DataFrame,
-              axes: tuple[int, ...] | None = None,
-              chunk_chars: int = AXIS_CHUNK_CHARS) -> DataFrame:
-    """Shared resolve machinery (core/reader.py:277-377): bind each target
-    back to its span (broadcast-friendly equi-join on doc_id+page) and
-    extract + digit-normalize its value; empty -> no_data (F5 semantics,
-    ocr_client.py:121-127).  ``kept_spans`` is the kept-text frame
-    (``kept_text_spans``) so callers control how often the corpus is
-    scanned.
-
-    ``axes``: axis-as-chunk-size sampling, one output row per axis
-    (``axis_idx``): axis value ``a`` reads only the first
-    ``a * chunk_chars`` characters of the target's span — the reference's
-    per-axis context variation (axes are different chunk sizes producing
-    genuinely different samples, core/reader.py:477-487 / decision_002), so
-    votes can truly disagree (an axis whose window cuts the digit run off
-    sees no_data or a truncated value).  Same scale shape either way: ONE
-    equi-join, then a narrow explode by axis — never a per-axis corpus
-    rescan."""
-    kept = kept_spans.select(
-        "doc_id", (F.col("offset") + 1).alias("page_num"), "cleaned")
-    t = targets.select("doc_id", "page_num", "entity_id", "run_idx")
-    j = t.join(kept, ["doc_id", "page_num"], "left")
-    text = F.coalesce(F.col("cleaned"), F.lit(""))
-    axis_cols = []
-    if axes is not None:
-        j = j.select("*", F.posexplode(F.array(*[F.lit(int(a)) for a in axes]))
-                     .alias("axis_idx", "_axis_val"))
-        text = text.substr(
-            F.lit(1), (F.col("_axis_val") * chunk_chars).cast("int"))
-        axis_cols = ["axis_idx"]
-    runs = F.regexp_extract_all(text, F.lit(_DIGIT_RUN), 0)
-    raw = F.get(runs, F.col("run_idx"))
+def _read_target(text: Column) -> tuple[Column, Column, Column]:
+    """(value, context, status) of the prompt's digit run in ``text``
+    (core/reader.py:277-377): the run is re-located by the run index the
+    prompt carries (the reference re-reads the prompt text,
+    reader.py:307-313) and digit-normalized; no run or no digits ->
+    no_data (F5 semantics, ocr_client.py:121-127)."""
+    run_idx = F.regexp_extract(F.col("prompt"), r"digits run (\d+)", 1) \
+        .cast("int")
+    raw = F.get(F.regexp_extract_all(text, F.lit(_DIGIT_RUN), 0), run_idx)
     value = normalize_ocr_digits_col(raw)
-    context = F.substring(text, 1, 64)
-    return j.select(
-        "doc_id", "entity_id", *axis_cols,
-        F.when(raw.isNotNull() & value.isNotNull(), value)
-         .otherwise(F.lit(None).cast("string")).alias("value"),
-        F.when(raw.isNotNull(), context).otherwise(F.lit(None).cast("string"))
-         .alias("context"),
-        F.when(raw.isNull() | value.isNull(), F.lit("no_data"))
-         .otherwise(F.lit("ok")).alias("status"))
+    found = raw.isNotNull() & value.isNotNull()
+    return (F.when(found, value),
+            F.when(raw.isNotNull(), F.substring(text, 1, 64)),
+            F.when(found, F.lit("ok")).otherwise(F.lit("no_data")))
+
+
+def _with_page_text(registry: DataFrame, kept: DataFrame) -> DataFrame:
+    return registry.join(_page_texts(kept), ["doc_id", "page_num"], "left")
 
 
 def resolve(documents: DataFrame, registry: DataFrame,
             pages: list[int] | None = None,
             kept: DataFrame | None = None) -> DataFrame:
-    """L1: resolve pending entities; returns the upserted registry.
+    """L1: resolve pending entities (P2: resolution < 1); returns the whole
+    registry, every other row unchanged.
 
     ``pages`` restricts work to those page numbers (P3,
     core/reader.py:267-268)."""
-    registry = _pin_multi_ref(registry)
-    pending = _with_run_idx(pending_entities(registry))
-    if pages:
-        pending = pending.filter(F.col("page_num").isin(pages))
     kept = kept if kept is not None else kept_text_spans(documents)
-    results = _ocr_pass(kept, pending)
-    updated = apply_ocr_result(pending.drop("run_idx"), results, resolution=1)
-    out = upsert_entries(registry, updated)
-    from ..datapipe.cache import attach_cached_deps
-    return attach_cached_deps(out, registry)
-
-
-def _pin_multi_ref(registry: DataFrame) -> DataFrame:
-    """Persist a registry frame that the caller is about to reference
-    several times (resolve reads it twice, verify three times): without
-    the pin Catalyst inlines the registry's WHOLE upstream DAG — for
-    verify-after-resolve that is two extra executions of the resolve
-    join/upsert chain per run, measured as ~30 mostly-idle sequential
-    stages (2.4 CPU-s over a 2.7 s wall at sf0.1).  No-op when the
-    caller already persisted it.  The handle is attached to the result
-    via ``attach_cached_deps`` (the package-wide cache lifecycle), so
-    ``release_cached``/``release_all_cached`` free it."""
-    from ..datapipe.cache import _is_persisted
-    if _is_persisted(registry):
-        return registry
-    from pyspark import StorageLevel
-    return registry.persist(StorageLevel.MEMORY_AND_DISK)
+    pending = _targeted(pages) & (F.col("resolution") < 1)
+    value, context, _ = _read_target(
+        F.coalesce(F.col("page_text"), F.lit("")))
+    return _with_page_text(registry, kept).select(
+        "doc_id", "page_num", "entity_id", "prompt",
+        F.when(pending, F.lit(1)).otherwise(F.col("resolution"))
+         .alias("resolution"),
+        F.when(pending, F.coalesce(value, F.lit("")))
+         .otherwise(F.col("value")).alias("value"),
+        F.when(pending, context).otherwise(F.col("context")).alias("context"),
+        "verified", "confidence")
 
 
 def verify(documents: DataFrame, registry: DataFrame,
@@ -178,9 +159,10 @@ def verify(documents: DataFrame, registry: DataFrame,
            kept: DataFrame | None = None,
            axis_mode: str = "fanout",
            axis_chunk_chars: int = AXIS_CHUNK_CHARS) -> DataFrame:
-    """L2: N independent passes (J5 unionByName + axis tag) -> majority vote
-    (A2) -> resolution=2 rewrite (P8) guarded by the all-errors filter (P9).
-    ``pages`` restricts verify targets (P4, core/reader.py:465-466).
+    """L2: N independent passes (J5 axis tag) -> majority vote (A2) ->
+    resolution=2 rewrite (P8) guarded by the all-errors filter (P9: such
+    rows keep their old values).  ``pages`` restricts verify targets (P4,
+    core/reader.py:465-466).
 
     ``axis_mode='fanout'`` (default): the reference runs N genuinely
     independent OCR passes (core/reader.py:477-487) because its model
@@ -189,33 +171,48 @@ def verify(documents: DataFrame, registry: DataFrame,
     bit-identical output to N passes, N-1 fewer corpus scans.
 
     ``axis_mode='chunk'``: axis values ARE chunk sizes (the reference's
-    axes=[1,3,5] semantics) — each axis reads a different-length context
-    window, so samples genuinely disagree and the vote exercises its k/N
-    semantics end-to-end (see ``_ocr_pass``)."""
+    axes=[1,3,5] semantics) — axis value ``a`` reads only the first
+    ``a * axis_chunk_chars`` characters of the target's page text, so
+    samples genuinely disagree (a window that cuts the digit run off sees
+    no_data or a truncated value) and the vote exercises its k/N semantics
+    end-to-end.  Either way: one join, then a narrow explode by axis."""
     if axis_mode not in ("fanout", "chunk"):
         raise ValueError(f"verify: unknown axis_mode {axis_mode!r}")
-    registry = _pin_multi_ref(registry)
-    targets = _with_run_idx(registry)
-    if pages:
-        targets = targets.filter(F.col("page_num").isin(pages))
     kept = kept if kept is not None else kept_text_spans(documents)
+    targeted = _targeted(pages)
+    j = _with_page_text(
+        registry.filter(targeted).select(
+            "doc_id", "page_num", "prompt",
+            F.struct(*REGISTRY_COLS).alias("_reg")),
+        kept)
+    text = F.coalesce(F.col("page_text"), F.lit(""))
+    axis_cols = []
     if axis_mode == "chunk":
-        samples = _ocr_pass(kept, targets, axes, axis_chunk_chars)
-    else:
-        samples = (_ocr_pass(kept, targets)
-                   .withColumn("axis_idx",
-                               F.explode(F.array(*[F.lit(i)
-                                                   for i in
-                                                   range(len(axes))]))))
+        j = j.select("*", F.posexplode(F.array(*[F.lit(int(a)) for a in axes]))
+                     .alias("axis_idx", "_axis_val"))
+        text = text.substr(
+            F.lit(1), (F.col("_axis_val") * axis_chunk_chars).cast("int"))
+        axis_cols = ["axis_idx"]
+    value, context, status = _read_target(text)
+    samples = j.select("_reg", *axis_cols, value.alias("value"),
+                       context.alias("context"), status.alias("status"))
+    if axis_mode == "fanout":
+        samples = samples.withColumn(
+            "axis_idx", F.explode(F.array(*[F.lit(i)
+                                            for i in range(len(axes))])))
 
-    voted = majority_vote(samples, key_cols=("doc_id", "entity_id"))
-    voted = voted.filter(~F.col("confidence").startswith("0/"))  # P9
-    updates = (registry.drop("value", "context", "verified", "confidence")
-               .join(voted, ["doc_id", "entity_id"])
-               .select("doc_id", "page_num", "entity_id", "prompt",
-                       F.lit(2).alias("resolution"),
-                       "value", "context",
-                       "verified", "confidence"))
-    out = upsert_entries(registry, updates)
-    from ..datapipe.cache import attach_cached_deps
-    return attach_cached_deps(out, registry)
+    voted = majority_vote(samples, key_cols=("_reg",))
+    all_errors = F.col("confidence").startswith("0/")  # P9
+
+    def new(col: Column, old: str) -> Column:
+        return F.when(all_errors, F.col(f"_reg.{old}")).otherwise(col) \
+            .alias(old)
+
+    updated = voted.select(
+        *[F.col(f"_reg.{c}").alias(c)
+          for c in ("doc_id", "page_num", "entity_id", "prompt")],
+        new(F.lit(2), "resolution"),
+        *[new(F.col(c), c)
+          for c in ("value", "context", "verified", "confidence")])
+    return updated.unionByName(
+        registry.filter(~targeted).select(*REGISTRY_COLS))

@@ -46,6 +46,11 @@ def session_conf(shuffle_partitions: int | None = None,
         "spark.sql.adaptive.enabled": "true",
         "spark.sql.adaptive.coalescePartitions.enabled": "true",
         "spark.sql.adaptive.skewJoin.enabled": "true",
+        # let AQE size the partitions of a persisted frame from its data:
+        # otherwise a cached plan keeps spark.sql.shuffle.partitions (200)
+        # output partitions, and every stage and write downstream of a
+        # persist runs that many tasks whatever the data's size
+        "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning": "true",
         "spark.sql.execution.arrow.pyspark.enabled": "true",
         "spark.sql.execution.arrow.maxRecordsPerBatch": "512",
         "spark.sql.session.timeZone": "UTC",

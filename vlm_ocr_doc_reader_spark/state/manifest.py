@@ -39,6 +39,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..operators.fused import RUN_OUTPUT_SCHEMA
+from ..sources.readers import with_content_hash
 
 MANIFEST_SCHEMA = ("doc_id string, phase string, content_hash string, "
                    "n_spans long, ts timestamp, run_id string")
@@ -78,15 +79,6 @@ def read_manifest(spark: SparkSession, state_dir: str,
     return m
 
 
-def input_hash(documents: DataFrame) -> DataFrame:
-    """(doc_id, content_hash) of the INPUT spans — the document version
-    identity (T5: changed content = new identity, decision_001:149-156)."""
-    return documents.select(
-        "doc_id",
-        F.sha2(F.to_json(F.struct("doc_id", "spans")), 256)
-         .alias("content_hash"))
-
-
 def pending_docs(documents: DataFrame, spark: SparkSession, state_dir: str,
                  phase: str, by_version: bool = False) -> DataFrame:
     """Input docs not yet completed for ``phase`` (left-anti join, J7).
@@ -98,9 +90,9 @@ def pending_docs(documents: DataFrame, spark: SparkSession, state_dir: str,
     if by_version:
         done = read_manifest(spark, state_dir, phase) \
             .select("doc_id", "content_hash")
-        keyed = documents.join(input_hash(documents), "doc_id")
-        return keyed.join(done, ["doc_id", "content_hash"], "left_anti") \
-                    .drop("content_hash")
+        return with_content_hash(documents) \
+            .join(done, ["doc_id", "content_hash"], "left_anti") \
+            .drop("content_hash")
     done = read_manifest(spark, state_dir, phase).select("doc_id")
     return documents.join(done, "doc_id", "left_anti")
 
@@ -146,7 +138,8 @@ def commit_phase(processed: DataFrame, spark: SparkSession, state_dir: str,
                else F.lit(0)).alias("n_spans")
     if input_docs is not None:
         entries = (processed.select("doc_id", n_spans)
-                   .join(input_hash(input_docs), "doc_id"))
+                   .join(with_content_hash(input_docs)
+                         .select("doc_id", "content_hash"), "doc_id"))
     else:
         entries = processed.select(
             "doc_id",

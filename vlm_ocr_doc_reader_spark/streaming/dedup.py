@@ -16,9 +16,9 @@ dedup operators — no custom state code:
   * ``dropDuplicates(keys)`` (exact mode): keeps state for every key ever
     seen — exact forever, unbounded state.  Only for bounded backfills.
 
-The dedup key defaults to a content hash computed with the same
-sha2(to_json(struct(...))) identity the checkpoint manifest uses
-(state/manifest.py:input_hash), so "same doc" means the same thing in
+The file runner's default key is ``content_hash``: key documents with
+``sources.readers.with_content_hash``, the version identity the
+checkpoint manifest records, so "same doc" means the same thing in
 flight and at rest.
 """
 
@@ -26,15 +26,6 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-
-
-def with_content_key(docs: DataFrame, cols: tuple[str, ...] = ("doc_id",
-                                                               "spans"),
-                     out_col: str = "content_hash") -> DataFrame:
-    """Content identity column — same formula as the manifest's
-    ``input_hash`` so streaming and batch agree on document identity."""
-    return docs.withColumn(
-        out_col, F.sha2(F.to_json(F.struct(*cols)), 256))
 
 
 def dedup_stream(stream: DataFrame, key_cols: tuple[str, ...],
